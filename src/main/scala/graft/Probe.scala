@@ -10,6 +10,19 @@ import org.apache.spark.sql.SparkSession
   * environment approaches.
   */
 object Probe {
+  /** Pairs of `GRAFT_PROBE_CONF="k=v;k=v"`: empty segments are skipped and
+    * a segment without `=` fails by name. */
+  def confPairs(spec: String): Seq[(String, String)] =
+    spec.split(';').toSeq.filter(_.nonEmpty).map(kv => kv.split("=", 2) match {
+      case Array(k, v) => k -> v
+      case _ => sys.error(s"bad conf pair: $kv")
+    })
+
+  /** Applies the ad-hoc conf experiments (dev-only) in GRAFT_PROBE_CONF. */
+  def withProbeConf(b: SparkSession.Builder): SparkSession.Builder =
+    sys.env.get("GRAFT_PROBE_CONF").toSeq.flatMap(confPairs)
+      .foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
+
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val names = args(0).split(',').toSeq
@@ -17,19 +30,13 @@ object Probe {
     val doExplain = args.length <= 2 || args(2) == "explain"
     val reps = if (args.length > 3) args(3).toInt else 1
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    var bld = SparkSession.builder()
+    val spark = withProbeConf(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-    // ad-hoc conf experiments (dev-only): GRAFT_PROBE_CONF="k=v;k=v"
-    sys.env.get("GRAFT_PROBE_CONF").foreach(_.split(';').foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      bld = bld.config(k, v)
-    })
-    val spark = bld.getOrCreate()
+      .config("spark.sql.adaptive.enabled", "true")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm-up like Bench: JVM/codegen/FS-cache costs land here (tolerant
     // of partial fixture dirs — the GenScale sf1 ladder ships only the

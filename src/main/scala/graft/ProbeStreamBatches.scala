@@ -18,19 +18,13 @@ object ProbeStreamBatches {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 1
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    var b = SparkSession.builder()
+    val spark = Probe.withProbeConf(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-    // ad-hoc conf experiments: GRAFT_PROBE_CONF="k=v;k=v"
-    sys.env.get("GRAFT_PROBE_CONF").foreach(_.split(';').foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      b = b.config(k, v)
-    })
-    val spark = b.getOrCreate()
+      .config("spark.sql.adaptive.enabled", "true")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.streams.addListener(new StreamingQueryListener {
       override def onQueryStarted(

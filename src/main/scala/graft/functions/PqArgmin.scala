@@ -32,8 +32,9 @@ import org.apache.spark.sql.types._
   *
   * Null/shape semantics (the graft_jl convention): NULL when the codebook
   * is empty or ragged (row length ≠ dims, row count not a multiple of the
-  * derived sub), when the vec length is not a multiple of the row length,
-  * or when any element is null — malformed inputs poison visibly. */
+  * derived sub), when the vec is empty or its length is not a multiple of
+  * the row length, or when any element is null — malformed inputs poison
+  * visibly. */
 case class PqArgmin(left: Expression, right: Expression)
     extends BinaryExpression {
 
@@ -93,7 +94,7 @@ object PqArgmin {
     // derive (sub, k, dims) from the operands; reject ragged layouts
     if (cb.isNullAt(0)) return null
     val dims = cb.getArray(0).numElements()
-    if (dims == 0 || vlen % dims != 0) return null
+    if (dims == 0 || vlen == 0 || vlen % dims != 0) return null
     val sub = vlen / dims
     if (rows % sub != 0) return null
     val k = rows / sub

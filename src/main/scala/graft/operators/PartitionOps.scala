@@ -137,9 +137,9 @@ object PartitionOps {
     finally spark.conf.set(key, prev)
   }
 
-  // memoized fixture row counts (parquet metadata-only count; keyed on the
-  // file's mtime:size stamp so an in-place regeneration re-probes) backing
-  // derivedShufflePartitions — one tiny job per (fixture, table) per JVM
+  // memoized fixture row counts (metadata-only count through Tables.load;
+  // keyed on the file's mtime:size stamp so an in-place regeneration
+  // re-probes) backing derivedShufflePartitions — one job per table per JVM
   private val rowCountCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
@@ -149,7 +149,7 @@ object PartitionOps {
     val p = new org.apache.hadoop.fs.Path(dir, table + ".parquet")
     val key = dir + "#" + table + "#" + graft.sources.StagingFs.fileStamp(spark, p)
     rowCountCache.computeIfAbsent(key,
-      _ => spark.read.parquet(p.toString).count()).longValue()
+      _ => graft.Tables.load(spark, dir, table).count()).longValue()
   }
 
   /** Scale-adaptive shuffle sizing for the corpus-keyed batch stages
@@ -168,7 +168,10 @@ object PartitionOps {
                                dir: String, table: String = "documents",
                                rowsPer: Long = 6250L, floor: Int = 8): Int = {
     val cores = spark.sparkContext.defaultParallelism.toLong
-    val rows = fixtureRows(spark, dir, table)
+    // a partial fixture dir without the probe table sizes to the floor
+    val probe = new org.apache.hadoop.fs.Path(dir, table + ".parquet")
+    val rows = if (!graft.sources.StagingFs.exists(spark, probe)) 0L
+      else fixtureRows(spark, dir, table)
     // deployment/probe override for the density (rows per reducer)
     val per = spark.conf.getOption("spark.graft.shuffle.rowsPer")
       .map(_.toLong).getOrElse(rowsPer)

@@ -39,22 +39,6 @@ object EventStream {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** The fixture's physical `ts` type, from the parquet footer — same
-    * detection as the batch loader (`Tables.normalizeEvents`). LongType
-    * for legacy INT64-nanos files (via nanosAsLong); Timestamp(NTZ)Type
-    * for native timestamp[us]. Memoized per (dir, mtime/size stamp): the
-    * footer parse + file listing would otherwise repeat for every one of
-    * the ~20 streaming queries in a bench run, and the stamp key means an
-    * in-place fixture regeneration still re-probes. */
-  private val tsTypeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataType]()
-  private def fixtureTsType(spark: SparkSession, dir: String): DataType = {
-    val src = new Path(dir, "events.parquet")
-    val key = dir + "|" + StagingFs.fileStamp(spark, src)
-    tsTypeCache.computeIfAbsent(key, _ =>
-      spark.read.parquet(src.toString).schema("ts").dataType)
-  }
-
   /** Streaming view of `events` with a µs `ts` of TimestampType (LTZ) —
     * normalized per the fixture's ACTUAL physical type: LongType nanos →
     * integer ns→µs division; native timestamp → pass-through/cast. The
@@ -68,7 +52,9 @@ object EventStream {
     * copy works across schemes: local fixture → cluster staging root). */
   def read(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftExtensions.install(spark)
-    val tsType = fixtureTsType(spark, dir)
+    // physical `ts` type from the memoized fixture schema, as the batch
+    // loader (`Tables.normalizeEvents`) detects it
+    val tsType = graft.Tables.schema(spark, dir, "events")("ts").dataType
     val df = spark.readStream.schema(rawSchema(tsType))
       .parquet(stageDir(spark, dir))
     tsType match {

@@ -187,4 +187,16 @@ class PartitionOpsSpec extends SparkSpecBase {
       .collect().sum
     assert(violations == 0)
   }
+
+  test("derivedShufflePartitions: a fixture dir without the probe table sizes to the floor") {
+    // graph_cc_bipartite reads only customer, but its superstep sizing
+    // probes documents by default
+    val dir = java.nio.file.Files.createTempDirectory("graft-partial-fixture")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sfDir/customer.parquet"),
+      dir.resolve("customer.parquet"))
+    assert(PartitionOps.derivedShufflePartitions(spark, dir.toString) == 8)
+    val q = SparkEntry.queries("graph_cc_bipartite")
+    def rows(d: String) = q(spark, d).collect().map(_.toString).toSeq.sorted
+    assert(rows(dir.toString) == rows(sfDir))
+  }
 }

@@ -62,4 +62,15 @@ class PqArgminSpec extends SparkSpecBase {
         s"native mins diverge from the interpreted form")
     }
   }
+
+  test("graft_pqmin on a length-0 vector is NULL, not a crash") {
+    graft.functions.GraftExtensions.install(spark)
+    import spark.implicits._
+    val df = Seq((Seq.empty[Double], Seq(Seq(1.0, 2.0), Seq(3.0, 4.0))))
+      .toDF("v", "cbm")
+    val out = df.select(pqArgmin(col("v"), col("cbm")).as("m")).collect()
+    assert(out.length == 1 && out.head.isNullAt(0))
+    assert(spark.sql("SELECT graft_pqmin(CAST(array() AS array<double>), " +
+      "array(array(1.0D, 2.0D))) AS m").collect().head.isNullAt(0))
+  }
 }
