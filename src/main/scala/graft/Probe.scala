@@ -8,6 +8,10 @@ import org.apache.spark.sql.SparkSession
   * With `reps` > 1 each query re-runs on the warm session — separates
   * first-run (codegen/JIT) cost from steady state, the number the bench
   * environment approaches.
+  *
+  * `build=` is construction time. It includes the eager collects some
+  * operators run while building their plan (e.g. `knnDistOutlierScores`
+  * collects its seeds and per-cell stats), so that work is not in `count=`.
   */
 object Probe {
   /** Pairs of `GRAFT_PROBE_CONF="k=v;k=v"`: empty segments are skipped and

@@ -392,7 +392,11 @@ object MLOps {
     //     every candidate at-or-below the bound is in a kept cell.
     val seeds = cand.orderBy(col("nid")).limit(cells).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).sortBy(_._1)
-    require(seeds.nonEmpty, "knnDistOutlierScores: empty candidate set")
+    // an empty candidate set has no neighbors: the same output projection
+    // over the (empty) pair set, so the schema equals the non-empty result
+    if (seeds.isEmpty)
+      return queries.crossJoin(cand)
+        .select(col("id").as(idCol), lld2(col("qv"), col("nv")).as("knn_d2"))
     val nCells = seeds.length // corpus smaller than `cells` degrades cleanly
     val matrix = typedLit(seeds.map(_._2.toSeq).toSeq)
     val assigned = cand

@@ -22,6 +22,76 @@ object SimilarityOps {
   val LshBits = 8
   val Dim = 64
 
+  // ---- shared top-k core ---------------------------------------------------
+  //
+  // Every top-k member is filter-and-refine: a candidate generator of its
+  // own, then one shared refine. Generators that score pairs in place end
+  // in [[topKPer]]; the shortlist members cut a slim top-m with [[topKPer]]
+  // and refine it through [[rerankExact]]; the IVF members pick the cells
+  // they scan with [[probeCells]].
+
+  /** The rank step: `row_number` per `keys`, ordered by `score` (a sort
+    * expression such as `col("cos").desc`) then ascending `nid`, keeping
+    * rank ≤ k. Rows through this window must stay SLIM (ids + score):
+    * Spark's WindowGroupLimit prune fires only after the per-partition
+    * sort, so sort-input row width is the scale knob. A first projected
+    * shortlist draft carried both 64-double vectors through its n×q top-m
+    * sort and filled the disk at 200k×2k; shortlists therefore keep
+    * (qid, nid, score) and re-attach vectors in [[rerankExact]]. */
+  private def topKPer(scored: DataFrame, k: Int, score: Column,
+                      keys: Seq[Column] = Seq(col("qid"))): DataFrame =
+    scored.withColumn("rank", row_number().over(
+        Window.partitionBy(keys: _*).orderBy(score, col("nid"))))
+      .filter(col("rank") <= k)
+
+  /** Each query's `nprobe` nearest seeds by quantized-integer [[lld2]],
+    * (d2, cid) ties, so cell choice is cross-engine exact. `queries` holds
+    * (idCol, vecCol); `carry` columns are evaluated on it before the probe.
+    * Output: (qid, qq quantized vector, carry…, qcell), nprobe rows per
+    * query. The seed set is cells-sized and broadcasts, so the probe never
+    * shuffles the corpus. */
+  private def probeCells(queries: DataFrame, seeds: DataFrame, nprobe: Int,
+                         vecCol: String, idCol: String,
+                         carry: Column*): DataFrame = {
+    val seedRows = seeds.select(col(idCol).as("cid"),
+      quantize(col(vecCol)).as("cv"))
+    queries.select(
+        (col(idCol).as("qid") +: quantize(col(vecCol)).as("qq") +: carry): _*)
+      .crossJoin(broadcast(seedRows))
+      .withColumn("d2", lld2(col("qq"), col("cv")))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(col("qid")).orderBy(col("d2"), col("cid"))))
+      .filter(col("rk") <= nprobe)
+      .drop("cv", "d2", "rk")
+      .withColumnRenamed("cid", "qcell")
+  }
+
+  /** Exact refine of a slim (qid, nid) shortlist: re-attach the full
+    * vectors with one candidate-bounded join per side (the query side
+    * broadcasts), score the 6-dp cosine, rank with [[topKPer]]. Output
+    * (qid, nid, cos, rank). */
+  private def rerankExact(shortlist: DataFrame, corpus: DataFrame,
+                          queries: DataFrame, k: Int, vecCol: String,
+                          idCol: String): DataFrame = {
+    val cv = corpus.select(col(idCol).as("nid"), col(vecCol).as("v"),
+      l2norm(col(vecCol)).as("nrm"))
+    val qv = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"),
+      l2norm(col(vecCol)).as("qn"))
+    topKPer(shortlist.select(col("qid"), col("nid"))
+        .join(cv, "nid").join(broadcast(qv), "qid")
+        .select(col("qid"), col("nid"), cosine("qv", "qn", "v", "nrm")),
+      k, col("cos").desc)
+  }
+
+  /** The exact score every dense member ranks by: ordered-fold dot over the
+    * product of the two norms, rounded to 6 dp. Norms are per-vector
+    * columns computed BEFORE the pair join: the higher-order folds are
+    * CodegenFallback (interpreted), so inside the pair loop they cost three
+    * folds per PAIR where one per vector suffices (measured 25.8 s at sf1
+    * inline vs hoisted). */
+  private def cosine(qv: String, qn: String, v: String, n: String): Column =
+    round(dot(col(qv), col(v)) / (col(qn) * col(n)), 6).as("cos")
+
   /** Brute-force cosine top-k: every query row against the full corpus.
     * `queries` is expected to be small — it is broadcast, making the join a
     * map-side nested loop over corpus partitions (no corpus shuffle; the only
@@ -38,12 +108,9 @@ object SimilarityOps {
     val q = queries.select(col(idCol).as("qid"),
       col(vecCol).cast("array<double>").as("qv"),
       l2norm(col(vecCol)).as("qn"))
-    val scored = c.join(broadcast(q), col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6).as("cos"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("nid"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topKPer(c.join(broadcast(q), col("qid") =!= col("nid"))
+        .select(col("qid"), col("nid"), cosine("qv", "qn", "cv", "cn")),
+      k, col("cos").desc)
   }
 
   /** Deterministic pseudo-random hyperplane weight for (plane, dim):
@@ -108,13 +175,11 @@ object SimilarityOps {
     val q = queries.select(col(idCol).as("qid"),
       col(vecCol).cast("array<double>").as("qv"),
       l2norm(col(vecCol)).as("qn"), lshBucket(col(vecCol)).as("qbucket"))
-    val scored = c.join(broadcast(q),
-        col("bucket") === col("qbucket") && col("qid") =!= col("nid"))
-      .select(col("qid"), col("qbucket").as("bucket"), col("nid"),
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6).as("cos"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("nid"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topKPer(c.join(broadcast(q),
+          col("bucket") === col("qbucket") && col("qid") =!= col("nid"))
+        .select(col("qid"), col("qbucket").as("bucket"), col("nid"),
+          cosine("qv", "qn", "cv", "cn")),
+      k, col("cos").desc)
   }
 
   /** IVF-style partitioned ANN: assign every vector to its nearest "coarse
@@ -244,13 +309,11 @@ object SimilarityOps {
     val q = ivfAssign(queries, seeds, vecCol, idCol)
       .select(col("nid").as("qid"), col("v").as("qv"),
         col("nrm").as("qn"), col("cell").as("qcell"))
-    val scored = c.join(broadcast(q),
-        col("cell") === col("qcell") && col("qid") =!= col("nid"))
-      .select(col("qid"), col("cell"), col("nid"),
-        round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topKPer(c.join(broadcast(q),
+          col("cell") === col("qcell") && col("qid") =!= col("nid"))
+        .select(col("qid"), col("cell"), col("nid"),
+          cosine("qv", "qn", "v", "nrm")),
+      k, col("cos").desc)
   }
 
   /** IVF multi-probe top-k — the `nprobe` recall knob of a production IVF
@@ -258,71 +321,43 @@ object SimilarityOps {
     * candidates re-rank by EXACT cosine. Cost scales with nprobe/cells of
     * the corpus; recall approaches brute force as nprobe → cells. Each
     * corpus vector lives in exactly one cell, so no candidate dedup is
-    * needed. */
+    * needed.
+    *
+    * `sprobe = Some(s)` places the corpus with [[ivfAssignPruned]]
+    * (assignment sublinear in `cells` — the build-time term that dominates
+    * a production IVF index build); queries keep the exact nprobe probe
+    * over all seeds (they are few). Recall then differs only where a
+    * corpus vector's pruned cell diverges from its true nearest cell — at
+    * s = ⌈√cells⌉ the index IS the exact one. */
   def topKIvfProbe(corpus: DataFrame, queries: DataFrame, k: Int, cells: Int,
                    nprobe: Int, vecCol: String = "embedding",
                    idCol: String = "vec_id",
-                   centroids: Option[DataFrame] = None): DataFrame = {
+                   centroids: Option[DataFrame] = None,
+                   sprobe: Option[Int] = None): DataFrame = {
     val seeds = centroids.getOrElse(corpus.filter(col(idCol) < cells))
-    val c = ivfAssign(corpus, seeds, vecCol, idCol)
-    val seedRows = seeds.select(col(idCol).as("cid"),
-      quantize(col(vecCol)).as("cv"))
-    val qcells = queries
-      .select(col(idCol).as("qid"), col(vecCol).as("qvec"),
-        quantize(col(vecCol)).as("qq"))
-      .crossJoin(broadcast(seedRows))
-      .withColumn("d2", lld2(col("qq"), col("cv")))
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("qid")).orderBy(col("d2"), col("cid"))))
-      .filter(col("rk") <= nprobe)
-      .select(col("qid"), col("qvec"), l2norm(col("qvec")).as("qn"),
-        col("cid").as("qcell"))
-    val scored = c.join(broadcast(qcells),
-        col("cell") === col("qcell") && col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        round(dot(col("qvec"), col("v")) / (col("qn") * col("nrm")), 6).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    val c = sprobe
+      .map(sp => ivfAssignPruned(corpus, seeds, sp, vecCol, idCol))
+      .getOrElse(ivfAssign(corpus, seeds, vecCol, idCol))
+    ivfProbeScan(c, queries, seeds, k, nprobe, vecCol, idCol, Nil)
   }
 
-  /** [[topKIvfProbe]] over a PRUNED-assigned index: the corpus side is
-    * placed by [[ivfAssignPruned]] (assignment sublinear in `cells` — the
-    * build-time term that dominates a production IVF index build), while
-    * the query side keeps the exact nprobe shortlist over all seeds
-    * (queries are few; their assignment cost is irrelevant). Candidate
-    * generation and exact-cosine rerank are identical to the exact-index
-    * probe; recall differs only where a corpus vector's pruned cell
-    * diverges from its true nearest cell (the `sprobe` knob — at
-    * sprobe = ⌈√cells⌉ the index IS the exact one). */
-  def topKIvfPruned(corpus: DataFrame, queries: DataFrame, k: Int, cells: Int,
-                    nprobe: Int, sprobe: Int = 2,
-                    vecCol: String = "embedding",
-                    idCol: String = "vec_id",
-                    centroids: Option[DataFrame] = None): DataFrame = {
-    val seeds = centroids.getOrElse(corpus.filter(col(idCol) < cells))
-    val c = ivfAssignPruned(corpus, seeds, sprobe, vecCol, idCol)
-    val seedRows = seeds.select(col(idCol).as("cid"),
-      quantize(col(vecCol)).as("cv"))
-    val qcells = queries
-      .select(col(idCol).as("qid"), col(vecCol).as("qvec"),
-        quantize(col(vecCol)).as("qq"))
-      .crossJoin(broadcast(seedRows))
-      .withColumn("d2", lld2(col("qq"), col("cv")))
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("qid")).orderBy(col("d2"), col("cid"))))
-      .filter(col("rk") <= nprobe)
+  /** The probe-and-score body shared by [[topKIvfProbe]] and
+    * [[topKIvfFiltered]]: `assigned` is an (nid, v, nrm, cell, carry…)
+    * corpus placement; every query scores the exact cosine against the
+    * members of its `nprobe` cells. */
+  private def ivfProbeScan(assigned: DataFrame, queries: DataFrame,
+                           seeds: DataFrame, k: Int, nprobe: Int,
+                           vecCol: String, idCol: String,
+                           carry: Seq[String]): DataFrame = {
+    val qcells = probeCells(queries, seeds, nprobe, vecCol, idCol,
+        col(vecCol).as("qvec"))
       .select(col("qid"), col("qvec"), l2norm(col("qvec")).as("qn"),
-        col("cid").as("qcell"))
-    val scored = c.join(broadcast(qcells),
-        col("cell") === col("qcell") && col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        round(dot(col("qvec"), col("v")) / (col("qn") * col("nrm")), 6).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+        col("qcell"))
+    topKPer(assigned.join(broadcast(qcells),
+          col("cell") === col("qcell") && col("qid") =!= col("nid"))
+        .select((col("qid") +: col("nid") +:
+          cosine("qvec", "qn", "v", "nrm") +: carry.map(col)): _*),
+      k, col("cos").desc)
   }
 
   /** INCREMENTAL IVF ingest — the index-maintenance half of the trained
@@ -476,24 +511,22 @@ object SimilarityOps {
     (placed, subs)
   }
 
-  /** Projection-inside-IVF top-k — [[topKIvfPruned]] with the JL shortlist
-    * of [[topKProjected]] applied WITHIN the probed cells (project-then-
-    * probe). Completes the ANN family lattice's IVF×JL member: IVF bounds
-    * WHICH vectors are candidates (nprobe/cells of the corpus), the 16-dim
-    * projected dot bounds what scoring a candidate COSTS (¼ the memory
-    * traffic of the 64-dim exact cosine — the same 4× the flat projected
-    * scan measured), and only the m shortlist survivors pay the full-space
-    * rerank. At 100 TB both knobs compound: candidate volume shrinks with
-    * cells, per-candidate cost with outDims/dims.
+  /** Projection-inside-IVF top-k — pruned-index [[topKIvfProbe]] with the
+    * JL shortlist of [[topKProjected]] applied WITHIN the probed cells
+    * (project-then-probe). Completes the ANN family lattice's IVF×JL
+    * member: IVF bounds WHICH vectors are candidates (nprobe/cells of the
+    * corpus), the 16-dim projected dot bounds what scoring a candidate
+    * COSTS (¼ the memory traffic of the 64-dim exact cosine — the same 4×
+    * the flat projected scan measured), and only the m shortlist survivors
+    * pay the full-space rerank. At 100 TB both knobs compound: candidate
+    * volume shrinks with cells, per-candidate cost with outDims/dims.
     *
     * Determinism: cells and shortlist ranks are exact-integer (quantized
     * d2 / BIGINT projected dots with 6-dp rounded projected cosine,
     * (pcos desc, nid) ties), rerank is the usual 6-dp cosine. With
     * m ≥ every probed candidate count the shortlist passes everything
-    * through and the result degenerates to [[topKIvfPruned]] with the same
-    * (cells, nprobe, sprobe) — the spec pins that. Rows through the
-    * shortlist window are SLIM (qid, nid, pcos) — the topKProjected sf10
-    * lesson: sort-input row width is the scale knob.
+    * through and the result degenerates to [[topKIvfProbe]] with the same
+    * (cells, nprobe, sprobe) — the spec pins that.
     *
     * `centroids` (default None = smallest-id seeds) runs the composed
     * member over a TRAINED centroid set ([[graft.ml.MLOps
@@ -509,39 +542,16 @@ object SimilarityOps {
     val c = ivfAssignPruned(corpus, seeds, sprobe, vecCol, idCol)
     val cSlim = c.select(col("nid"), col("cell"),
         projectArr(quantize(col("v")), outDims).as("pc"))
-      .withColumn("pcn", sqrt(lldot(col("pc"), col("pc")).cast("double")))
-    val seedRows = seeds.select(col(idCol).as("cid"),
-      quantize(col(vecCol)).as("cv"))
-    val qcells = queries
-      .select(col(idCol).as("qid"), quantize(col(vecCol)).as("qq"))
-      .crossJoin(broadcast(seedRows))
-      .withColumn("d2", lld2(col("qq"), col("cv")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("d2"), col("cid"))))
-      .filter(col("rk") <= nprobe)
-      .select(col("qid"),
-        projectArr(col("qq"), outDims).as("pq"),
-        col("cid").as("qcell"))
-      .withColumn("pqn", sqrt(lldot(col("pq"), col("pq")).cast("double")))
+      .withColumn("pcn", intNorm(col("pc")))
+    val qcells = probeCells(queries, seeds, nprobe, vecCol, idCol)
+      .select(col("qid"), projectArr(col("qq"), outDims).as("pq"),
+        col("qcell"))
+      .withColumn("pqn", intNorm(col("pq")))
     val cand = cSlim.join(broadcast(qcells),
         col("cell") === col("qcell") && col("qid") =!= col("nid"))
-      .withColumn("pcos",
-        round(lldot(col("pq"), col("pc")).cast("double") /
-          (col("pqn") * col("pcn")), 6))
-      .select(col("qid"), col("nid"), col("pcos"))
-      .withColumn("prank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("pcos").desc, col("nid"))))
-      .filter(col("prank") <= m)
-    val cv = corpus.select(col(idCol).as("nid"), col(vecCol).as("v"),
-      l2norm(col(vecCol)).as("nrm"))
-    val qv = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"),
-      l2norm(col(vecCol)).as("qn"))
-    cand.join(cv, "nid").join(broadcast(qv), "qid")
-      .select(col("qid"), col("nid"),
-        round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6).as("cos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))))
-      .filter(col("rank") <= k)
+      .select(col("qid"), col("nid"), intCosine("pq", "pqn", "pc", "pcn"))
+    rerankExact(topKPer(cand, m, col("pcos").desc), corpus, queries, k,
+      vecCol, idCol)
   }
 
   /** Metadata-FILTERED IVF top-k — the filtered-vector-search shape every
@@ -563,28 +573,8 @@ object SimilarityOps {
                       idCol: String = "vec_id",
                       centroids: Option[DataFrame] = None): DataFrame = {
     val seeds = centroids.getOrElse(corpus.filter(col(idCol) < cells))
-    val c = ivfAssign(corpus, seeds, vecCol, idCol, carry).filter(candPred)
-    val seedRows = seeds.select(col(idCol).as("cid"),
-      quantize(col(vecCol)).as("cv"))
-    val qcells = queries
-      .select(col(idCol).as("qid"), col(vecCol).as("qvec"),
-        quantize(col(vecCol)).as("qq"))
-      .crossJoin(broadcast(seedRows))
-      .withColumn("d2", lld2(col("qq"), col("cv")))
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("qid")).orderBy(col("d2"), col("cid"))))
-      .filter(col("rk") <= nprobe)
-      .select(col("qid"), col("qvec"), l2norm(col("qvec")).as("qn"),
-        col("cid").as("qcell"))
-    val scored = c.join(broadcast(qcells),
-        col("cell") === col("qcell") && col("qid") =!= col("nid"))
-      .select((col("qid") +: col("nid") +:
-        round(dot(col("qvec"), col("v")) / (col("qn") * col("nrm")), 6)
-          .as("cos") +: carry.map(col)): _*)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    ivfProbeScan(ivfAssign(corpus, seeds, vecCol, idCol, carry).filter(candPred),
+      queries, seeds, k, nprobe, vecCol, idCol, carry)
   }
 
   /** Cluster-balanced corpus resampling — the coverage-preserving
@@ -662,6 +652,35 @@ object SimilarityOps {
     graft.functions.GraftFunctions.jlproject(q,
       typedLit((0 until outDims).map(j => (0 until 64).map(i => jlSign(i, j)))))
 
+  /** Norm of an integer code vector from its exact BIGINT self-dot. */
+  private def intNorm(c: Column): Column = sqrt(lldot(c, c).cast("double"))
+
+  /** Shortlist score of the code members: exact BIGINT code dot over the
+    * hoisted code norms, rounded to 6 dp. The dot is the native codegen'd
+    * graft_lldot kernel; the interpreted HOF fold it replaced ran 400M
+    * times per sf10 pass (the pair scan IS this expression). */
+  private def intCosine(q: String, qn: String, c: String, cn: String): Column =
+    round(lldot(col(q), col(c)).cast("double") / (col(qn) * col(cn)), 6)
+      .as("pcos")
+
+  /** Flat top-`m` shortlist of [[topKProjected]] and [[topKPrefix]]: both
+    * sides map to the integer `code` of their quantized vector, every
+    * (query, corpus) pair scores [[intCosine]], and the slim
+    * (qid, nid, pcos) rows go through [[topKPer]]. */
+  private def codeShortlist(corpus: DataFrame, queries: DataFrame, m: Int,
+                            vecCol: String, idCol: String)
+                           (code: Column => Column): DataFrame = {
+    def slim(df: DataFrame, idAs: String, pAs: String, nAs: String) =
+      df.select(col(idCol).as(idAs), code(quantize(col(vecCol))).as(pAs))
+        .withColumn(nAs, intNorm(col(pAs)))
+    val c = slim(corpus, "nid", "pc", "pcn").repartition(col("nid"))
+    val qs = slim(queries, "qid", "pq", "pqn")
+    topKPer(c.crossJoin(broadcast(qs))
+        .filter(col("qid") =!= col("nid"))
+        .select(col("qid"), col("nid"), intCosine("pq", "pqn", "pc", "pcn")),
+      m, col("pcos").desc)
+  }
+
   /** Projected-space top-k with exact rerank — the USE of
     * [[randomProject]]: candidates are the top-m neighbors by cosine in
     * the 16-dim projected space (JL preserves angles in expectation, and a
@@ -675,52 +694,13 @@ object SimilarityOps {
   def topKProjected(corpus: DataFrame, queries: DataFrame, k: Int = 3,
                     m: Int = 10, outDims: Int = 16,
                     vecCol: String = "embedding",
-                    idCol: String = "vec_id"): DataFrame = {
-    // SLIM rows through the prefilter window (the mmrRerank sf10 lesson,
-    // re-confirmed here: the first draft carried both 64-double vectors
-    // through the n×q top-m sort and FILLED THE DISK at 200k×2k — the
-    // WindowGroupLimit prune fires only after the per-partition sort, so
-    // sort-input row WIDTH is the scale knob). The window sees only
-    // (qid, nid, pcos); the m survivors re-attach vectors via one
-    // candidate-bounded join per side.
-    // per-vector norms are hoisted OUT of the pair loop: the higher-order
-    // aggregates are CodegenFallback (interpreted), so leaving them inside
-    // the n×q crossJoin costs three interpreted folds per PAIR where one
-    // suffices (measured 25.8 s at sf1 inline vs the hoisted form below)
-    def slim(df: DataFrame, idAs: String, pAs: String, nAs: String) = {
-      // native graft_jl: ONE kernel call per row — the unrolled 16×64
-      // element_at tree dropped this stage out of codegen (r12 bench:
-      // the projection rows were the slowest in the run from plan
-      // overhead alone, not data)
-      val pa = projectArr(quantize(col(vecCol)), outDims)
-      df.select(col(idCol).as(idAs), pa.as(pAs))
-        .withColumn(nAs, sqrt(lldot(col(pAs), col(pAs)).cast("double")))
-    }
-    val c = slim(corpus, "nid", "pc", "pcn").repartition(col("nid"))
-    val qs = slim(queries, "qid", "pq", "pqn")
-    // native codegen'd long dot (graft_lldot) — the HOF fold here is
-    // CodegenFallback and ran 400M times per sf10 pass (the pair scan IS
-    // this expression)
-    val pdot = lldot(col("pq"), col("pc"))
-    val cand = c.crossJoin(broadcast(qs))
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("pcos",
-        round(pdot.cast("double") / (col("pqn") * col("pcn")), 6))
-      .select(col("qid"), col("nid"), col("pcos"))
-      .withColumn("prank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("pcos").desc, col("nid"))))
-      .filter(col("prank") <= m)
-    val cv = corpus.select(col(idCol).as("nid"), col(vecCol).as("v"),
-      l2norm(col(vecCol)).as("nrm"))
-    val qv = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"),
-      l2norm(col(vecCol)).as("qn"))
-    cand.join(cv, "nid").join(broadcast(qv), "qid")
-      .select(col("qid"), col("nid"),
-        round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6).as("cos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))))
-      .filter(col("rank") <= k)
-  }
+                    idCol: String = "vec_id"): DataFrame =
+    // native graft_jl: ONE kernel call per row — the unrolled 16×64
+    // element_at tree dropped this stage out of codegen (r12 bench: the
+    // projection rows were the slowest in the run from plan overhead alone)
+    rerankExact(codeShortlist(corpus, queries, m, vecCol, idCol)(
+        projectArr(_, outDims)),
+      corpus, queries, k, vecCol, idCol)
 
   /** Matryoshka / PREFIX-dimension ANN (MRL-style: embeddings trained so
     * leading dimensions carry the coarse signal — Kusupati et al. 2022):
@@ -731,39 +711,16 @@ object SimilarityOps {
     * narrower ints): a prefix slice costs NO transform at all — at 100 TB
     * the index stores the prefix column and the shortlist reads ¼ of the
     * bytes, with recall tracking how front-loaded the embedding actually
-    * is. Same slim-row/window shape as [[topKProjected]] (the sf10
-    * row-width lesson); deterministic: BIGINT prefix dots, 6-dp rounded
-    * prefix cosine, (pcos desc, nid) ties. */
+    * is. Same shortlist shape as [[topKProjected]]; deterministic: BIGINT
+    * prefix dots, 6-dp rounded prefix cosine, (pcos desc, nid) ties. */
   def topKPrefix(corpus: DataFrame, queries: DataFrame, k: Int = 3,
                  m: Int = 10, prefixDims: Int = 16,
                  vecCol: String = "embedding",
                  idCol: String = "vec_id"): DataFrame = {
     require(prefixDims >= 1, s"prefixDims must be >= 1: $prefixDims")
-    def slim(df: DataFrame, idAs: String, pAs: String, nAs: String) =
-      df.select(col(idCol).as(idAs),
-          slice(quantize(col(vecCol)), 1, prefixDims).as(pAs))
-        .withColumn(nAs, sqrt(lldot(col(pAs), col(pAs)).cast("double")))
-    val c = slim(corpus, "nid", "pc", "pcn").repartition(col("nid"))
-    val qs = slim(queries, "qid", "pq", "pqn")
-    val cand = c.crossJoin(broadcast(qs))
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("pcos",
-        round(lldot(col("pq"), col("pc")).cast("double") /
-          (col("pqn") * col("pcn")), 6))
-      .select(col("qid"), col("nid"), col("pcos"))
-      .withColumn("prank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("pcos").desc, col("nid"))))
-      .filter(col("prank") <= m)
-    val cv = corpus.select(col(idCol).as("nid"), col(vecCol).as("v"),
-      l2norm(col(vecCol)).as("nrm"))
-    val qv = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"),
-      l2norm(col(vecCol)).as("qn"))
-    cand.join(cv, "nid").join(broadcast(qv), "qid")
-      .select(col("qid"), col("nid"),
-        round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6).as("cos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))))
-      .filter(col("rank") <= k)
+    rerankExact(codeShortlist(corpus, queries, m, vecCol, idCol)(
+        slice(_, 1, prefixDims)),
+      corpus, queries, k, vecCol, idCol)
   }
 
   /** HARD-NEGATIVE mining for contrastive training: for each anchor, the
@@ -791,14 +748,12 @@ object SimilarityOps {
       col(vecCol).cast("array<double>").as("qv"),
       l2norm(col(vecCol)).as("qn"), lshBucket(col(vecCol)).as("qbucket"),
       col(labelCol).as("anchor_label"))
-    val scored = c.join(broadcast(q),
-        col("bucket") === col("qbucket") && col("qid") =!= col("nid") &&
-          col("neg_label") =!= col("anchor_label"))
-      .select(col("qid"), col("anchor_label"), col("nid"), col("neg_label"),
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6).as("cos"))
-    scored.withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))))
-      .filter(col("rank") <= k)
+    topKPer(c.join(broadcast(q),
+          col("bucket") === col("qbucket") && col("qid") =!= col("nid") &&
+            col("neg_label") =!= col("anchor_label"))
+        .select(col("qid"), col("anchor_label"), col("nid"), col("neg_label"),
+          cosine("qv", "qn", "cv", "cn")),
+      k, col("cos").desc)
   }
 
   /** L2-normalize + int8-quantize an embedding column — the storage/compute
@@ -991,10 +946,7 @@ object SimilarityOps {
       .filter(col("qid") =!= col("vec_id"))
       .select(col("qid"), col("vec_id").as("nid"),
         adcSum(col("codes"), col("qd2s")).as("adc_micro"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("adc_micro").asc, col("nid").asc)
-    adc.withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
+    topKPer(adc, k, col("adc_micro").asc)
   }
 
   /** Per-query ADC distance table, shaped as qd2s[s][cid] (nested arrays in
@@ -1036,8 +988,8 @@ object SimilarityOps {
     *
     * Composition is by construction: corpus cells from [[ivfAssign]]
     * (swap [[ivfAssignPruned]] past fixture scale), codes from
-    * [[pqMins]], the query's cell shortlist from the same quantized-int
-    * argmin as [[topKIvfProbe]], distance tables from the shared
+    * [[pqMins]], the query's cells from the shared [[probeCells]],
+    * distance tables from the shared
     * [[pqQueryTable]]. Everything query-sided broadcasts; the only
     * shuffle is the final per-query top-k window. Approximation is the
     * product of the two knobs — nprobe (recall of the candidate set) and
@@ -1067,18 +1019,9 @@ object SimilarityOps {
     val codesWide = pqMins(embs, vecCol, idCol, Some(cb))
       .select(col("vec_id"), expr("transform(mins, m -> m.cid)").as("codes"))
       .join(assigned, "vec_id")
-    // query side: nprobe-cell shortlist (quantized-int argmin over seeds,
-    // the topKIvfProbe shape) + the ADC distance table — both broadcast
-    val seedRows = seeds.select(col(idCol).as("cid"),
-      quantize(col(vecCol)).as("cv"))
-    val qprobe = embs.filter(queryPred)
-      .select(col(idCol).cast("long").as("qid"), quantize(col(vecCol)).as("qq"))
-      .crossJoin(broadcast(seedRows))
-      .withColumn("d2", lld2(col("qq"), col("cv")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("d2"), col("cid"))))
-      .filter(col("rk") <= nprobe)
-      .select(col("qid"), col("cid").as("qcell"))
+    // query side: nprobe-cell probe + the ADC distance table — both broadcast
+    val qprobe = probeCells(embs.filter(queryPred), seeds, nprobe, vecCol, idCol)
+      .select(col("qid").cast("long").as("qid"), col("qcell"))
     val qtable = pqQueryTable(embs, queryPred, cb, vecCol, idCol)
     val adc = codesWide
       .join(broadcast(qprobe), col("cell") === col("qcell"))
@@ -1086,10 +1029,7 @@ object SimilarityOps {
       .join(broadcast(qtable), "qid")
       .select(col("qid"), col("vec_id").as("nid"),
         adcSum(col("codes"), col("qd2s")).as("adc_micro"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("adc_micro").asc, col("nid").asc)
-    adc.withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
+    topKPer(adc, k, col("adc_micro").asc)
   }
 
   /** Sparse TF-IDF document similarity — the lexical counterpart of the
@@ -1153,7 +1093,7 @@ object SimilarityOps {
     val w = precomputedWeights.getOrElse(tfidfWeights(docs, maxDfPct, scale))
     w.withColumn("rank", row_number().over(
         Window.partitionBy(col("doc_id"))
-          .orderBy(col("w").desc, col("tok").asc)).cast("int"))
+          .orderBy(col("w").desc, col("tok").asc)))
       .filter(col("rank") <= k)
   }
 
@@ -1204,10 +1144,7 @@ object SimilarityOps {
         round(col("dot").cast("double") /
           (sqrt(col("nq").cast("double")) * sqrt(col("nn").cast("double"))),
           6).as("cos"))
-    val win = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("nid").asc)
-    scored.withColumn("rank", row_number().over(win).cast("int"))
-      .filter(col("rank") <= k)
+    topKPer(scored, k, col("cos").desc)
   }
 
   /** Raw bigram term-frequency postings (doc_id, tok, tf) — the shared
@@ -1369,10 +1306,7 @@ object SimilarityOps {
       .filter(col("qid") =!= col("nid"))
       .groupBy(col("qid"), col("nid"))
       .agg(sum(col("w")).as("score_i"))
-    val win = Window.partitionBy(col("qid"))
-      .orderBy(col("score_i").desc, col("nid").asc)
-    scores.withColumn("rank", row_number().over(win).cast("int"))
-      .filter(col("rank") <= k)
+    topKPer(scores, k, col("score_i").desc)
   }
 
   /** BM25 with pseudo-relevance feedback (RM3-style query expansion,
@@ -1420,10 +1354,7 @@ object SimilarityOps {
       .filter(col("qid") =!= col("nid"))
       .groupBy(col("qid"), col("nid"))
       .agg(sum(col("w")).as("score_i"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid"))
-          .orderBy(col("score_i").desc, col("nid"))))
-    val feedback = pass1.filter(col("rank") <= feedbackDocs)
+    val feedback = topKPer(pass1, feedbackDocs, col("score_i").desc)
       .select(col("qid"), col("nid"))
     // expansion terms: top-e by summed weight across the feedback docs,
     // excluding terms the query already carries
@@ -1439,15 +1370,12 @@ object SimilarityOps {
     val terms = qTerms.select(col("qid"), col("tok"),
       lit(lambdaPct.toLong).as("mixw")).unionByName(expansion)
     // pass 2: expanded scoring
-    gatedBroadcast(terms, (1L + expandTerms) * qUb)
+    val pass2 = gatedBroadcast(terms, (1L + expandTerms) * qUb)
       .join(post.select(col("doc_id").as("nid"), col("tok"), col("w")), "tok")
       .filter(col("qid") =!= col("nid"))
       .groupBy(col("qid"), col("nid"))
       .agg(sum(col("mixw") * col("w")).as("score_i"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid"))
-          .orderBy(col("score_i").desc, col("nid"))).cast("int"))
-      .filter(col("rank") <= k)
+    topKPer(pass2, k, col("score_i").desc)
   }
 
   /** Hybrid lexical + dense retrieval with reciprocal-rank fusion
@@ -1473,7 +1401,7 @@ object SimilarityOps {
         precomputedTf = precomputedTf)
       .select(col("qid"), col("nid"), col("rank").as("lex_rank"))
     val den = topKBruteForce(embs, embs.filter(col("vec_id") % queryMod === 0), k)
-      .select(col("qid"), col("nid"), col("rank").cast("int").as("dense_rank"))
+      .select(col("qid"), col("nid"), col("rank").as("dense_rank"))
     lex.join(den, Seq("qid", "nid"), "full_outer")
       .select(col("qid"), col("nid"), col("lex_rank"), col("dense_rank"),
         (coalesce(expr(s"1000000 DIV ($rrfK + lex_rank)"), lit(0L)) +
@@ -1481,7 +1409,7 @@ object SimilarityOps {
           .as("rrf_micro"))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("qid"))
-          .orderBy(col("rrf_micro").desc, col("nid"))).cast("int"))
+          .orderBy(col("rrf_micro").desc, col("nid"))))
   }
 
   /** Contrastive pair mining over the embedding corpus: for each query
@@ -1517,12 +1445,8 @@ object SimilarityOps {
       .select(col("qid"), col("nid"), col("q_label"), col("n_label"),
         when(col("q_label") === col("n_label"), "pos").otherwise("neg")
           .as("pair_type"),
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6)
-          .as("cos"))
-    val w = Window.partitionBy(col("qid"), col("pair_type"))
-      .orderBy(col("cos").desc, col("nid").asc)
-    scored.withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
+        cosine("qv", "qn", "cv", "cn"))
+    topKPer(scored, k, col("cos").desc, Seq(col("qid"), col("pair_type")))
       .select(col("qid"), col("pair_type"), col("nid"), col("n_label"),
         col("rank"), col("cos"))
   }
@@ -1615,25 +1539,17 @@ object SimilarityOps {
       .select(col(idCol).as("qid"),
         col(vecCol).cast("array<double>").as("qv"),
         l2norm(col(vecCol)).as("qn"))
-    val relWin = Window.partitionBy(col("qid"))
-      .orderBy(col("relq").desc, col("nid").asc)
-    // top-m candidates, micro-cosine relevance. The window input is SLIM
-    // (qid, nid, relq) — the round-10 sf10 ladder caught the first draft
-    // carrying the 64-double vectors through the top-m sort: the
-    // WindowGroupLimit prune only fires AFTER the per-partition sort, so
-    // at 200k corpus × 2k queries the sort spilled ~240 GB of vector
-    // payload and filled the disk. Vectors re-attach AFTER the prune via
-    // one broadcast join against the q·m-row survivor set (the corpus
-    // side streams; nothing corpus-sized is ever sorted wide).
-    val candIds = c.join(broadcast(q), col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")) * 1e6)
-          .cast("long").as("relq"))
-      .withColumn("rn", row_number().over(relWin))
-      .filter(col("rn") <= m)
+    // top-m candidates by micro-cosine relevance through the slim rank
+    // step; vectors re-attach after the prune via one broadcast join
+    // against the q·m-row survivor set
+    val candIds = topKPer(c.join(broadcast(q), col("qid") =!= col("nid"))
+        .select(col("qid"), col("nid"),
+          round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")) * 1e6)
+            .cast("long").as("relq")),
+      m, col("relq").desc)
     val cand = c.join(broadcast(candIds), Seq("nid"))
       .select(col("qid"), col("nid"), col("cv"), col("cn"), col("relq"),
-        col("rn"))
+        col("rank"))
       .localCheckpoint()
     // within-query candidate pairwise sims: m² rows per query, constant
     val a = cand.select(col("qid"), col("nid").as("aid"),
@@ -1647,9 +1563,7 @@ object SimilarityOps {
       .localCheckpoint()
     val slim = cand.select(col("qid"), col("nid"), col("relq"))
     // greedy: k rounds of (remaining ⟕ maxsim-to-selected) → per-query argmax
-    val pickWin = Window.partitionBy(col("qid"))
-      .orderBy(col("sc").desc, col("nid").asc)
-    var selected = cand.filter(col("rn") === 1)
+    var selected = cand.filter(col("rank") === 1)
       .select(col("qid"), col("nid"), lit(1).as("mmr_rank"),
         (lit(lambdaPct.toLong) * col("relq")).as("score_i"))
       .localCheckpoint()
@@ -1659,19 +1573,18 @@ object SimilarityOps {
       val simToSel = pw.join(selIds.withColumnRenamed("nid", "bid"),
           Seq("qid", "bid"))
         .groupBy(col("qid"), col("aid")).agg(max(col("sim")).as("maxsim"))
-      val pick = remaining
-        .join(simToSel.withColumnRenamed("aid", "nid"), Seq("qid", "nid"),
-          "left")
-        .select(col("qid"), col("nid"),
-          (lit(lambdaPct.toLong) * col("relq") -
-            lit(mu.toLong) * coalesce(col("maxsim"), lit(0L))).as("sc"))
-        .withColumn("rn", row_number().over(pickWin))
-        .filter(col("rn") === 1)
+      val pick = topKPer(remaining
+          .join(simToSel.withColumnRenamed("aid", "nid"), Seq("qid", "nid"),
+            "left")
+          .select(col("qid"), col("nid"),
+            (lit(lambdaPct.toLong) * col("relq") -
+              lit(mu.toLong) * coalesce(col("maxsim"), lit(0L))).as("sc")),
+        1, col("sc").desc)
         .select(col("qid"), col("nid"), lit(r).as("mmr_rank"),
           col("sc").as("score_i"))
       selected = selected.unionByName(pick).localCheckpoint()
     }
-    selected.withColumn("mmr_rank", col("mmr_rank").cast("int"))
+    selected
   }
 
   /** Per-label centroids in exact integer arithmetic: dims are quantized
@@ -1707,10 +1620,9 @@ object SimilarityOps {
     * and the top-`m` survivors get an exact full-precision rerank to
     * top-`k` — the SQ-then-rerank ladder every quantized index ships.
     *
-    * Scale shape = [[topKProjected]]'s: SLIM rows through the top-m window
-    * (qid, nid, iscore only — the sf10 disk-fill lesson), the pair dot on
-    * the native codegen'd `graft_lldot` kernel, vectors re-attached only for
-    * the q·m-row survivor set. The corpus never shuffles; the queries
+    * Scale shape = [[topKProjected]]'s: the pair dot on the native
+    * codegen'd `graft_lldot` kernel, vectors re-attached only for the
+    * q·m-row survivor set. The corpus never shuffles; the queries
     * broadcast. */
   def sq8TopK(corpus: DataFrame, queries: DataFrame, k: Int = 3,
               m: Int = 10, vecCol: String = "embedding",
@@ -1724,21 +1636,8 @@ object SimilarityOps {
     val cand = c.crossJoin(broadcast(qs))
       .filter(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"), lldot(col("qc"), col("cc")).as("iscore"))
-      .withColumn("prank", row_number().over(
-        Window.partitionBy(col("qid"))
-          .orderBy(col("iscore").desc, col("nid"))))
-      .filter(col("prank") <= m)
-    val cv = corpus.select(col(idCol).as("nid"), col(vecCol).as("v"),
-      l2norm(col(vecCol)).as("nrm"))
-    val qv = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"),
-      l2norm(col(vecCol)).as("qn"))
-    cand.join(cv, "nid").join(broadcast(qv), "qid")
-      .select(col("qid"), col("nid"), col("iscore"),
-        round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6).as("cos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("cos"), col("rank").cast("int").as("rank"))
+    rerankExact(topKPer(cand, m, col("iscore").desc), corpus, queries, k,
+      vecCol, idCol)
   }
 
   /** IVF-composed SQ8 search (FAISS IVF-SQ shape) — the scale path for
@@ -1756,40 +1655,18 @@ object SimilarityOps {
     require(k >= 1 && m >= k && cells >= 1 && nprobe >= 1 && nprobe <= cells,
       s"invalid ivf-sq8 shape: k=$k m=$m cells=$cells nprobe=$nprobe")
     val seeds = embs.filter(col(idCol) < cells)
+    val queries = embs.filter(queryPred)
     val c = ivfAssign(embs, seeds, vecCol, idCol)
       .select(col("nid"), col("cell"), scaledCodes(col("v"), 127).as("cc"))
-    val seedRows = seeds.select(col(idCol).as("cid"),
-      quantize(col(vecCol)).as("cv"))
-    val qcells = embs.filter(queryPred)
-      .select(col(idCol).as("qid"), quantize(col(vecCol)).as("qq"),
+    val qcells = probeCells(queries, seeds, nprobe, vecCol, idCol,
         scaledCodes(col(vecCol), 127).as("qc"))
-      .crossJoin(broadcast(seedRows))
-      .withColumn("d2", lld2(col("qq"), col("cv")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("d2"), col("cid"))))
-      .filter(col("rk") <= nprobe)
-      .select(col("qid"), col("qc"), col("cid").as("qcell"))
-    // slim integer shortlist within the probed cells, exact rerank tail —
-    // the sq8TopK shape with the candidate set cell-bounded
+      .select(col("qid"), col("qc"), col("qcell"))
+    // the sq8TopK shortlist with the candidate set cell-bounded
     val cand = c.join(broadcast(qcells),
         col("cell") === col("qcell") && col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"), lldot(col("qc"), col("cc")).as("iscore"))
-      .withColumn("prank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("iscore").desc, col("nid"))))
-      .filter(col("prank") <= m)
-    val cv = embs.select(col(idCol).as("nid"), col(vecCol).as("v"),
-      l2norm(col(vecCol)).as("nrm"))
-    val qv = embs.filter(queryPred)
-      .select(col(idCol).as("qid"), col(vecCol).as("qvec"),
-        l2norm(col(vecCol)).as("qn"))
-    cand.join(cv, "nid").join(broadcast(qv), "qid")
-      .select(col("qid"), col("nid"),
-        round(dot(col("qvec"), col("v")) / (col("qn") * col("nrm")), 6).as("cos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("cos"),
-        col("rank").cast("int").as("rank"))
+    rerankExact(topKPer(cand, m, col("iscore").desc), embs, queries, k,
+      vecCol, idCol)
   }
 
   // ---- k-NN graph -----------------------------------------------------------
@@ -1845,8 +1722,9 @@ object SimilarityOps {
     * precedent): at 200k vectors the bits=4 build costs 679 s, bits=6
     * 181 s, bits=8 20.5 s — 33× — while the mutual-edge count (the
     * robustness proxy the clustering consumers key on) stays within ±1 %
-    * at both 20k and 200k, and ProbeKnnBits' sampled exact-3NN agreement
-    * anchors the proxy directly (DESIGN.md "knn-graph bits"). At every
+    * at both 20k and 200k, and a sampled exact-3NN agreement (measured
+    * with the since-removed ProbeKnnBits main; see git history) anchors
+    * the proxy directly (DESIGN.md "knn-graph bits"). At every
     * fixture scale (≤ 20k rows) the derived value IS 4, so derive-mode
     * output is byte-identical to the pinned oracle rows — which stay at
     * an EXPLICIT bits=4 regardless, because bucket membership is part of
@@ -1938,7 +1816,7 @@ object SimilarityOps {
     val rev = edges.select(col("dst").as("src"), col("src").as("dst"),
       lit(1).as("rflag"))
     edges.join(rev, Seq("src", "dst"), "left")
-      .select(col("src"), col("dst"), col("rank").cast("int").as("rank"),
+      .select(col("src"), col("dst"), col("rank"),
         col("icos"), col("rflag").isNotNull.as("mutual"))
   }
 

@@ -229,8 +229,8 @@ object Similarity extends QuerySet {
     // exact nprobe shortlist — same rerank, new index-build scale path
     "sim_topk_ivf_pruned" -> ((s, dir) => {
       val all = embs(s, dir)
-      SimilarityOps.topKIvfPruned(all, all.filter(col("vec_id") % 100 === 0),
-          k = 3, cells = 16, nprobe = 4, sprobe = 2)
+      SimilarityOps.topKIvfProbe(all, all.filter(col("vec_id") % 100 === 0),
+          k = 3, cells = 16, nprobe = 4, sprobe = Some(2))
         .select(col("qid"), col("nid"), col("rank"), col("cos"))
     }),
 

@@ -130,24 +130,32 @@ object StagingFs {
     thunk()
   }
 
-  /** Remove graft-named stage dirs/stamps from the LOCAL tmpdir scratch
-    * root (bench comparability hygiene, r14): cross-run named stages
-    * (replay quarters, event-source copies — verbatim fixture copies, not
-    * results) survive JVM restarts keyed on fixture stamps, so a warm
-    * second driver pass would report smaller stage_sec than a cold one.
-    * [[graft.Bench]] clears them at startup so every bench pass builds
-    * from the same cold state. Only `graft-*` entries are touched —
-    * Spark's own scratch (blockmgr-*, spark-*) is left alone. */
-  def cleanLocalScratch(): Unit = {
+  /** Remove the stamped named caches from a LOCAL scratch root (bench
+    * comparability hygiene, r14): cross-run named stages (replay quarters,
+    * event-source copies — verbatim fixture copies, not results) survive
+    * JVM restarts keyed on fixture stamps, so a warm second bench pass
+    * would report smaller stage_sec than a cold one. [[graft.Bench]]
+    * clears them at startup so every bench pass builds from the same cold
+    * state. Only a `graft-*` directory with a sibling `<name>.stamp` (the
+    * [[namedStageDir]] convention) is removed, together with that stamp;
+    * a live JVM's [[newStageDir]] dirs carry no stamp and are left alone,
+    * as is Spark's own scratch. */
+  def cleanLocalScratch(rootDir: java.io.File): Unit = {
     def rm(x: java.io.File): Unit = {
       if (x.isDirectory)
         Option(x.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rm)
       x.delete()
     }
-    val rootDir = new java.io.File(sys.props("java.io.tmpdir"))
     Option(rootDir.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(_.getName.startsWith("graft-"))
-      .foreach { f => System.err.println(s"[scratch-clean] removing $f"); rm(f) }
+      .filter(d => d.getName.startsWith("graft-") && d.isDirectory)
+      .foreach { d =>
+        val stamp = new java.io.File(rootDir, d.getName + ".stamp")
+        if (stamp.isFile) {
+          System.err.println(s"[scratch-clean] removing $d")
+          rm(d)
+          stamp.delete()
+        }
+      }
   }
 
   /** Committed `.parquet` part files of `srcDir`, in name order. */

@@ -89,7 +89,8 @@ object VecIngest {
     * grows with the cell count and at production cells (√n ⇒ thousands)
     * blows the generated-method limits exactly like the unrolled JL tree
     * graft_jl replaced (the spec pins value identity to that form; the
-    * ProbeAnnKnobs `cellkernel` ladder measures the residency cliff). */
+    * `cellkernel` ladder of the since-removed ProbeAnnKnobs main, kept in
+    * git history, measured the residency cliff). */
   private def cellOf(qv: Column, cents: Seq[(Long, Seq[Long])]): Column = {
     import graft.functions.GraftFunctions.cellArgmin
     val sorted = cents.sortBy(_._1)

@@ -49,4 +49,21 @@ class MLFuzzSpec extends SparkSpecBase {
       }
     }
   }
+
+  test("knn outlier scores on an empty corpus or an empty query set: empty, same schema") {
+    import spark.implicits._
+    val df = Seq((1L, Array(1f, 2f, 3f)), (2L, Array(2f, 0f, 1f)),
+        (3L, Array(0f, 1f, 1f))).toDF("vec_id", "embedding")
+    def scores(embs: org.apache.spark.sql.DataFrame,
+               pred: org.apache.spark.sql.Column) =
+      MLOps.knnDistOutlierScores(embs, "embedding", "vec_id", pred, k = 1)
+    val full = scores(df, lit(true))
+    assert(full.count() == 3)
+    val noCorpus = scores(df.filter(col("vec_id") < 0), lit(true))
+    val noQueries = scores(df, col("vec_id") < 0)
+    for (out <- Seq(noCorpus, noQueries)) {
+      assert(out.schema == full.schema)
+      assert(out.isEmpty)
+    }
+  }
 }

@@ -271,16 +271,16 @@ class PipelineOpsSpec extends SparkSpecBase {
 
   test("ivf-projected with m >= corpus size equals the pruned ivf probe exactly") {
     // the projected shortlist passes every candidate through when m is the
-    // corpus size, so the exact rerank must reproduce topKIvfPruned with
-    // the same (cells, nprobe, sprobe) row for row — the m degeneracy that
-    // pins the composed operator to its parent
+    // corpus size, so the exact rerank must reproduce the pruned-index
+    // topKIvfProbe with the same (cells, nprobe, sprobe) row for row — the
+    // m degeneracy that pins the composed operator to its parent
     val qs = embs.filter(col("vec_id") % 100 === 0)
     val n = embs.count().toInt
     val proj = SimilarityOps.ivfProjectedTopK(embs, qs, k = 3, cells = 16,
         nprobe = 4, sprobe = 2, m = n)
       .select(col("qid"), col("nid"), col("rank"), col("cos"))
-    val pruned = SimilarityOps.topKIvfPruned(embs, qs, k = 3, cells = 16,
-        nprobe = 4, sprobe = 2)
+    val pruned = SimilarityOps.topKIvfProbe(embs, qs, k = 3, cells = 16,
+        nprobe = 4, sprobe = Some(2))
       .select(col("qid"), col("nid"), col("rank"), col("cos"))
     assert(proj.exceptAll(pruned).isEmpty && pruned.exceptAll(proj).isEmpty)
   }
@@ -330,10 +330,10 @@ class PipelineOpsSpec extends SparkSpecBase {
     val projS = SimilarityOps.ivfProjectedTopK(embs, qs, k = 3, cells = 16,
       nprobe = 4, sprobe = 2, m = 10)
     assert(projT.exceptAll(projS).isEmpty && projS.exceptAll(projT).isEmpty)
-    val prunedT = SimilarityOps.topKIvfPruned(embs, qs, k = 3, cells = 16,
-      nprobe = 4, sprobe = 2, centroids = Some(t0))
-    val prunedS = SimilarityOps.topKIvfPruned(embs, qs, k = 3, cells = 16,
-      nprobe = 4, sprobe = 2)
+    val prunedT = SimilarityOps.topKIvfProbe(embs, qs, k = 3, cells = 16,
+      nprobe = 4, centroids = Some(t0), sprobe = Some(2))
+    val prunedS = SimilarityOps.topKIvfProbe(embs, qs, k = 3, cells = 16,
+      nprobe = 4, sprobe = Some(2))
     assert(prunedT.exceptAll(prunedS).isEmpty &&
       prunedS.exceptAll(prunedT).isEmpty)
     val filtT = SimilarityOps.topKIvfFiltered(embs, qs, k = 3, cells = 16,

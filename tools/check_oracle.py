@@ -1,12 +1,14 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's DuckDB-oracle compare.
 
-Usage: check_oracle.py <sfDir> <verifyOutDir>
+Usage: check_oracle.py <sfDir> <verifyOutDir> [name,name,...]
 
 Reads each <name>/ parquet dir written by graft.Verify, runs the matching
 oracle SQL from oracle_sql.json in DuckDB over the sfDir parquet tables,
 then compares: row count, column names, and a hash of the value matrix
-(columns sorted by name, rows sorted).
+(columns sorted by name, rows sorted). The optional third argument is the
+comma-separated name list graft.Verify accepts: the check then covers
+exactly those rows; a listed name without a dump fails, as in the full check.
 """
 import sys, json, glob, os, hashlib, math
 import duckdb
@@ -34,7 +36,7 @@ def frame_hash(df: pd.DataFrame):
     h = hashlib.sha256("\n".join(rows).encode()).hexdigest()[:16]
     return h, cols, len(rows)
 
-def main(sf_dir, out_dir):
+def main(sf_dir, out_dir, only=None):
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
@@ -47,6 +49,12 @@ def main(sf_dir, out_dir):
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
     names = sorted([os.path.basename(d) for d in glob.glob(f"{out_dir}/*") if os.path.isdir(d)])
     n_pass = n_fail = n_noora = 0
+    if only is not None:
+        for unknown in sorted(only - set(oracles) - set(names)):
+            print(f"✗ {unknown}: NO DUMP AND NO ORACLE (unknown name?)")
+            n_fail += 1
+        oracles = {k: v for k, v in oracles.items() if k in only}
+        names = [n for n in names if n in only]
     # an oracle key with no dump dir means the query FAILED inside Verify
     # (it swallows per-query errors to stderr) — count it as a failure, the
     # way the driver's compare would
@@ -87,4 +95,5 @@ def main(sf_dir, out_dir):
     return 1 if n_fail else 0
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    only = set(filter(None, sys.argv[3].split(","))) if len(sys.argv) > 3 else None
+    sys.exit(main(sys.argv[1], sys.argv[2], only))
