@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
 
 /** Dev tool: time registered queries and print physical plans.
@@ -12,8 +15,37 @@ import org.apache.spark.sql.SparkSession
   * `build=` is construction time. It includes the eager collects some
   * operators run while building their plan (e.g. `knnDistOutlierScores`
   * collects its seeds and per-cell stats), so that work is not in `count=`.
+  *
+  * `[probe-parts] <name> rep<r> build=… count=…` lists, per phase, the
+  * distinct task counts of the stages that read a shuffle (stages with a
+  * parent stage): the effective reducer count of every exchange the phase
+  * ran, after any `withShufflePartitions` cap and AQE coalescing.
   */
 object Probe {
+  private val PhaseKey = "graft.probe.phase"
+
+  /** Task counts of shuffle-reading stages and the phases whose jobs
+    * started, keyed by the [[PhaseKey]] local property of the submitting
+    * thread (threads a phase starts, e.g. a stream's, inherit it). */
+  private class PartsListener extends SparkListener {
+    val parts = new ConcurrentHashMap[String, java.util.Set[Int]]()
+    val started = ConcurrentHashMap.newKeySet[String]()
+    private def phase(props: java.util.Properties) =
+      Option(props).flatMap(p => Option(p.getProperty(PhaseKey)))
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      phase(e.properties).foreach(started.add)
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      phase(e.properties).filter(_ => e.stageInfo.parentIds.nonEmpty).foreach(ph =>
+        parts.computeIfAbsent(ph, _ => ConcurrentHashMap.newKeySet[Int]())
+          .add(e.stageInfo.numTasks))
+    /** "4,8" for the phase's distinct task counts, "-" when it read none. */
+    def counts(ph: String): String = {
+      import scala.jdk.CollectionConverters._
+      Option(parts.get(ph)).map(_.asScala.toSeq.sorted.mkString(","))
+        .filter(_.nonEmpty).getOrElse("-")
+    }
+  }
+
   /** Pairs of `GRAFT_PROBE_CONF="k=v;k=v"`: empty segments are skipped and
     * a segment without `=` fails by name. */
   def confPairs(spec: String): Seq[(String, String)] =
@@ -49,19 +81,35 @@ object Probe {
     Tables.names.foreach(n =>
       try Tables.load(spark, sfDir, n).count()
       catch { case _: Exception => })
+    val sc = spark.sparkContext
+    val listener = new PartsListener
+    sc.addSparkListener(listener)
+    def inPhase[T](ph: String)(body: => T): T = {
+      sc.setLocalProperty(PhaseKey, ph)
+      try body finally sc.setLocalProperty(PhaseKey, null)
+    }
     for (name <- names; r <- 1 to reps) {
+      val ph = s"$name#$r#"
       // time the construction separately: streaming queries run to
       // completion inside the query function (runToTable awaits
       // termination), so their cost lands in build, not count
       val tb = System.nanoTime()
-      val df = SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query: $name"))(spark, sfDir)
+      val df = inPhase(ph + "build")(SparkEntry.queries.getOrElse(name,
+        sys.error(s"unknown query: $name"))(spark, sfDir))
       val buildS = (System.nanoTime() - tb) / 1e9
       if (doExplain && r == 1) df.explain("formatted")
       val t0 = System.nanoTime()
-      val n = df.count()
+      val n = inPhase(ph + "count")(df.count())
       println(f"[probe] $name rep$r rows=$n build=$buildS%.2fs count=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      // listener events arrive in order: once a marker job's start is seen,
+      // every stage of the two phases has been recorded
+      inPhase(ph + "flush")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 60e9.toLong
+      while (!listener.started.contains(ph + "flush") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      println(s"[probe-parts] $name rep$r build=${listener.counts(ph + "build")} " +
+        s"count=${listener.counts(ph + "count")}")
+      sc.getPersistentRDDs.values.foreach(_.unpersist(false))
     }
     val ph = graft.sources.PhaseStats.snapshot
     if (ph.nonEmpty) println("[probe-phases] " + ph.toSeq.sorted

@@ -427,6 +427,7 @@ object DedupOps {
       .filter(col("est_jaccard") >= minJaccard)
       .select(col("id1"), col("id2")).localCheckpoint()
     val spark = docs.sparkSession
+    // caps the jobs of the CC superstep loop and its closing checkpoint
     val cc = PartitionOps.withShufflePartitions(spark, 8) {
       val verts =
         if (includeSingletons) docs.select(col(idCol).as("vid"))

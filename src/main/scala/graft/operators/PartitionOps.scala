@@ -127,8 +127,12 @@ object PartitionOps {
   }
 
   /** Run `body` with `spark.sql.shuffle.partitions` capped at `n`, restoring
-    * the previous value afterwards — the load-derived sizing knob shared by
-    * the fixture-scale streaming runs and small-graph iteration phases. */
+    * the previous value afterwards. Exchanges are planned when an action
+    * runs, so the cap reaches only the jobs run inside `body` (a
+    * `localCheckpoint`, a collect, a stage write, a streaming query's
+    * `start()`); a DataFrame built inside and run after it plans with the
+    * restored value. Batch callers therefore wrap the loops that run jobs:
+    * superstep iterations and per-round checkpoints. */
   def withShufflePartitions[T](spark: org.apache.spark.sql.SparkSession,
                                n: Int)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
@@ -152,30 +156,20 @@ object PartitionOps {
       _ => graft.Tables.load(spark, dir, table).count()).longValue()
   }
 
-  /** Scale-adaptive shuffle sizing for the corpus-keyed batch stages
-    * (r14, replacing the fixture-tuned constant 8 — verdict item 6, the
-    * r12 derivedStatePartitions pattern for batch wrappers): one reducer
-    * per ~`rowsPer` source rows, clamped to [`floor`, 4·defaultParallelism].
-    * The density is CALIBRATED, not guessed: the sf1 A/B in
-    * plans/r14/derived_partitions_sf1_probe.txt measured the 8-partition
-    * floor still AHEAD of 32 at a 10× corpus (dedup_ngram_jaccard 2.5 s at
-    * 8 vs 11 s at 32 — these wrappers stay small-exchange/fixed-cost-bound
-    * well past fixture scale), so rowsPer = 6 250 holds the floor exactly
-    * through sf1 (50 000 docs → 8) and scales reducers ∝ volume beyond
-    * (sf10 → 80, capped by 4·cores). The ceiling is the local-mode guard;
+  /** Scale-adaptive partition count for the iterative batch loops that
+    * run inside a [[withShufflePartitions]] scope (graph supersteps, the
+    * PRF and MMR checkpoints): one reducer per 6 250 rows of `table`,
+    * clamped to [8, 4·defaultParallelism] — 8 through sf1 (50 000 docs),
+    * growing with the corpus beyond. The ceiling is the local-mode guard;
     * a cluster run sizes spark.sql.shuffle.partitions globally instead. */
   def derivedShufflePartitions(spark: org.apache.spark.sql.SparkSession,
-                               dir: String, table: String = "documents",
-                               rowsPer: Long = 6250L, floor: Int = 8): Int = {
+                               dir: String, table: String = "documents"): Int = {
     val cores = spark.sparkContext.defaultParallelism.toLong
     // a partial fixture dir without the probe table sizes to the floor
     val probe = new org.apache.hadoop.fs.Path(dir, table + ".parquet")
     val rows = if (!graft.sources.StagingFs.exists(spark, probe)) 0L
       else fixtureRows(spark, dir, table)
-    // deployment/probe override for the density (rows per reducer)
-    val per = spark.conf.getOption("spark.graft.shuffle.rowsPer")
-      .map(_.toLong).getOrElse(rowsPer)
-    math.max(floor.toLong, math.min(4L * cores, rows / per)).toInt
+    math.max(8L, math.min(4L * cores, rows / 6250L)).toInt
   }
 
   /** Scope an arbitrary SQL conf to `body`, restoring the previous value

@@ -1865,18 +1865,17 @@ object SimilarityOps {
     * singletons as their own cluster; labels are the component's min id,
     * with the size alongside — the [[graft.operators.DedupOps.dedupClusters]]
     * contract on the embedding side. The CC supersteps run at a partition
-    * count sized to the edge graph (O(k·n) edges, not corpus-sized):
-    * `ccPartitions` overrides; the default derives from the ACTUAL edge
-    * count (~250k edge rows per partition, floor 8 — the measured fixture
-    * optimum — capped at 2048), so a billion-edge graph at 100 TB gets
-    * thousands of CC partitions instead of a fixture-sized constant. The
-    * edge list is already localCheckpoint-ed, so the sizing count is a
-    * cached-partition sweep, not a recompute. */
+    * count sized to the edge graph (O(k·n) edges, not corpus-sized),
+    * derived from the ACTUAL edge count (~250k edge rows per partition,
+    * floor 8 — the measured fixture optimum — capped at 2048), so a
+    * billion-edge graph at 100 TB gets thousands of CC partitions instead
+    * of a fixture-sized constant. The edge list is already
+    * localCheckpoint-ed, so the sizing count is a cached-partition sweep,
+    * not a recompute. */
   def knnClusters(embs: DataFrame, k: Int = 3, bits: Int = 0,
                   minIcos: Long = 0L, vecCol: String = "embedding",
                   idCol: String = "vec_id",
-                  precomputedGraph: Option[DataFrame] = None,
-                  ccPartitions: Option[Int] = None): DataFrame = {
+                  precomputedGraph: Option[DataFrame] = None): DataFrame = {
     // the k-NN edge list is the expensive stage and is EXACTLY what
     // [[knnGraph]] computes — a pipeline that materialized the graph
     // passes it in instead of paying the bucket scan twice (the staged
@@ -1892,10 +1891,8 @@ object SimilarityOps {
     // cluster afterwards via one left join.
     val paired = mutual.select(col("src").as("vid"))
       .union(mutual.select(col("dst").as("vid"))).distinct()
-    val ccParts = ccPartitions.getOrElse {
-      val nEdges = mutual.count()
-      math.max(8, math.min(2048, (nEdges / 250000L).toInt + 1))
-    }
+    val ccParts = math.max(8, math.min(2048, (mutual.count() / 250000L).toInt + 1))
+    // caps the jobs of the CC superstep loop and its closing checkpoint
     val cc = PartitionOps.withShufflePartitions(spark, ccParts) {
       graft.graph.GraphAlgorithms.connectedComponentsFast(
           graft.graph.Graph(paired, mutual))

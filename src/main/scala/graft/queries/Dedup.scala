@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.StagingFs
 import graft.operators.DedupOps
 
 /** Deduplication inventory over `documents` / `embeddings` (LLM-pipeline
@@ -14,44 +15,20 @@ object Dedup extends QuerySet {
   private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
   private def embs(s: SparkSession, dir: String) = Tables.load(s, dir, "embeddings")
 
-  /** The MinHash signature + band pipeline is the expensive stage of BOTH
-    * `dedup_minhash_lsh` and `dedup_clusters`; a run that executes several
-    * dedup queries over the same fixture computes it ONCE and stages the
-    * (small) pair set as parquet — the shared-materialization shape a real
-    * pipeline uses (parquet, not cached blocks, so per-query storage
-    * cleanup cannot drop it). Keyed per (app, fixture); all staging I/O
-    * goes through [[graft.sources.StagingFs]] (Hadoop FileSystem API +
-    * configurable root), so the same stages work against a cluster FS. */
-  private def staged(s: SparkSession, dir: String, prefix: String)
-                    (build: String => Unit): DataFrame = {
-    val key = s.sparkContext.applicationId + "#" + dir + "#" + prefix
-    s.read.parquet(
-      graft.sources.StagingFs.stageOnce(s, key, prefix)(build))
-  }
   /** Per-doc distinct shingle-hash set, staged once per (app, fixture):
     * ONE tokenize+md5 text scan feeds the whole shingle family — the
     * MinHash signatures derive from it relationally, and the exact-Jaccard
     * inverted index joins on it directly. */
   private def shingleSet(s: SparkSession, dir: String): DataFrame =
-    staged(s, dir, "graft-shingles") { p =>
-      // fixture-scale shuffle sizing, like the pairs stage below: the
-      // distinct-shingle shuffle is a few hundred k rows here, and 32
-      // reducers + 32 part files are pure fixed cost (a cluster run sizes
-      // spark.sql.shuffle.partitions to the corpus instead)
-      graft.operators.PartitionOps.withShufflePartitions(s,
-          graft.operators.PartitionOps.derivedShufflePartitions(s, dir)) {
-        DedupOps.shingleHashSet(docs(s, dir)).write.mode("overwrite").parquet(p)
-      }
+    StagingFs.readStage(s, dir, "graft-shingles") { p =>
+      DedupOps.shingleHashSet(docs(s, dir)).write.mode("overwrite").parquet(p)
     }
   /** Per-doc SimHash values, staged once per (app, fixture): the token
     * explode + per-bit md5 votes dominate every SimHash-family query
     * (fingerprints, pair blocking, edit-distance candidates). */
   private def simhashStaged(s: SparkSession, dir: String): DataFrame =
-    staged(s, dir, "graft-simhash") { p =>
-      graft.operators.PartitionOps.withShufflePartitions(s,
-          graft.operators.PartitionOps.derivedShufflePartitions(s, dir)) {
-        DedupOps.simhash(docs(s, dir)).write.mode("overwrite").parquet(p)
-      }
+    StagingFs.readStage(s, dir, "graft-simhash") { p =>
+      DedupOps.simhash(docs(s, dir)).write.mode("overwrite").parquet(p)
     }
   /** Per-doc MinHash signatures, staged once per (app, fixture): the
     * signature pass is the dominant cost of every MinHash-family query,
@@ -60,19 +37,16 @@ object Dedup extends QuerySet {
     * filters over the same stage. Derived from the shingle stage, so the
     * text is scanned once across the whole family. */
   private def minhashSigs(s: SparkSession, dir: String): DataFrame =
-    staged(s, dir, "graft-minhash-sigs") { p =>
-      graft.operators.PartitionOps.withShufflePartitions(s,
-          graft.operators.PartitionOps.derivedShufflePartitions(s, dir)) {
-        DedupOps.minhashSignaturesFromHashes(shingleSet(s, dir))
-          .write.mode("overwrite").parquet(p)
-      }
+    StagingFs.readStage(s, dir, "graft-minhash-sigs") { p =>
+      DedupOps.minhashSignaturesFromHashes(shingleSet(s, dir))
+        .write.mode("overwrite").parquet(p)
     }
   /** Winnowing fingerprint sketch staged once per (app, fixture): the
     * sketch row (`text_winnowing`) and the pair detector
     * (`dedup_winnowing_pairs`) both consume it, so the tokenize + window
     * pass runs once and its cost lands in the bench's stage_sec. */
   private def winnowFps(s: SparkSession, dir: String): DataFrame =
-    staged(s, dir, "graft-winnow-fps") { p =>
+    StagingFs.readStage(s, dir, "graft-winnow-fps") { p =>
       graft.operators.TextOps.winnowFingerprints(docs(s, dir))
         .write.mode("overwrite").parquet(p)
     }
@@ -82,25 +56,20 @@ object Dedup extends QuerySet {
     * (spans / apply / incremental) previously re-ran the tokenize + lead
     * window pass twice per row, six times per bench (r13). */
   private def gram6Staged(s: SparkSession, dir: String): DataFrame =
-    staged(s, dir, "graft-grams6") { p =>
-      graft.operators.PartitionOps.withShufflePartitions(s,
-          graft.operators.PartitionOps.derivedShufflePartitions(s, dir)) {
-        DedupOps.gramHashTable(docs(s, dir))
-          .write.mode("overwrite").parquet(p)
-      }
+    StagingFs.readStage(s, dir, "graft-grams6") { p =>
+      DedupOps.gramHashTable(docs(s, dir))
+        .write.mode("overwrite").parquet(p)
     }
 
+  /** The MinHash signature + band pipeline is the expensive stage of BOTH
+    * `dedup_minhash_lsh` and `dedup_clusters`; a run that executes several
+    * dedup queries over the same fixture computes it ONCE and stages the
+    * (small) pair set as parquet. */
   private def minhashPairs(s: SparkSession, dir: String): DataFrame =
-    staged(s, dir, "graft-minhash-pairs") { p =>
-      // the candidate graph is orders smaller than the corpus: its band
-      // join + est-jaccard joins pay per-partition fixed cost, so size the
-      // shuffles to the pair set (same reasoning as the streaming state cap)
-      graft.operators.PartitionOps.withShufflePartitions(s,
-          graft.operators.PartitionOps.derivedShufflePartitions(s, dir)) {
-        DedupOps.minhashLshPairs(docs(s, dir),
-            precomputedSigs = Some(minhashSigs(s, dir)))
-          .write.mode("overwrite").parquet(p)
-      }
+    StagingFs.readStage(s, dir, "graft-minhash-pairs") { p =>
+      DedupOps.minhashLshPairs(docs(s, dir),
+          precomputedSigs = Some(minhashSigs(s, dir)))
+        .write.mode("overwrite").parquet(p)
     }
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -126,11 +95,8 @@ object Dedup extends QuerySet {
       DedupOps.simhashPairs(simhashStaged(s, dir))),
 
     "dedup_ngram_jaccard" -> ((s, dir) =>
-      graft.operators.PartitionOps.withShufflePartitions(s,
-          graft.operators.PartitionOps.derivedShufflePartitions(s, dir)) {
-        DedupOps.ngramJaccardPairs(docs(s, dir),
-          precomputedShingles = Some(shingleSet(s, dir)))
-      }),
+      DedupOps.ngramJaccardPairs(docs(s, dir),
+        precomputedShingles = Some(shingleSet(s, dir)))),
 
     // benchmark decontamination: every 97th doc plays the held-out eval
     // set; the rest is the training corpus, flagged when it shares >= 2
@@ -157,14 +123,11 @@ object Dedup extends QuerySet {
       // signatures come from the shared per-fixture stage (row-local, so
       // subset filters of the staged table ARE the per-side signatures)
       val sigs = minhashSigs(s, dir)
-      graft.operators.PartitionOps.withShufflePartitions(s,
-          graft.operators.PartitionOps.derivedShufflePartitions(s, dir)) {
-        DedupOps.incrementalMinhashPairs(
-          d.filter(col("doc_id") % 3 =!= 0),
-          d.filter(col("doc_id") % 3 === 0),
-          precomputedOldSigs = Some(sigs.filter(col("id") % 3 =!= 0)),
-          precomputedNewSigs = Some(sigs.filter(col("id") % 3 === 0)))
-      }
+      DedupOps.incrementalMinhashPairs(
+        d.filter(col("doc_id") % 3 =!= 0),
+        d.filter(col("doc_id") % 3 === 0),
+        precomputedOldSigs = Some(sigs.filter(col("id") % 3 =!= 0)),
+        precomputedNewSigs = Some(sigs.filter(col("id") % 3 === 0)))
     }),
 
     // the exact all-pairs BASELINE, explicitly opted into (quadratic):
@@ -189,12 +152,9 @@ object Dedup extends QuerySet {
     }),
 
     "dedup_pipeline" -> ((s, dir) =>
-      graft.operators.PartitionOps.withShufflePartitions(s,
-          graft.operators.PartitionOps.derivedShufflePartitions(s, dir)) {
-        DedupOps.dedupCorpus(docs(s, dir),
-            precomputedSigs = Some(minhashSigs(s, dir)))
-          .select(col("doc_id"))
-      }),
+      DedupOps.dedupCorpus(docs(s, dir),
+          precomputedSigs = Some(minhashSigs(s, dir)))
+        .select(col("doc_id"))),
 
     // near-duplicate GROUPS, not just pairs: connected components over the
     // LSH candidate graph (est_jaccard >= 0.5) — the form a curation
@@ -225,11 +185,8 @@ object Dedup extends QuerySet {
     // distinct 3-gram hashes + containment ratio — the corpus diagnostic
     // that surfaces mirrored/syndicated sources before doc-level dedup
     "corpus_source_overlap" -> ((s, dir) =>
-      graft.operators.PartitionOps.withShufflePartitions(s,
-          graft.operators.PartitionOps.derivedShufflePartitions(s, dir)) {
-        DedupOps.sourceOverlap(docs(s, dir),
-          precomputedShingles = Some(shingleSet(s, dir)))
-      }),
+      DedupOps.sourceOverlap(docs(s, dir),
+        precomputedShingles = Some(shingleSet(s, dir)))),
 
     // MOSS winnowing sketch: per-window rightmost-min k-gram hash — the
     // fingerprint family's LOCAL-match member (guarantee: any shared run
@@ -240,36 +197,28 @@ object Dedup extends QuerySet {
     // relative df cap cuts boilerplate hashes) — local plagiarism-style
     // match detection over the staged sketch, join keyed on the hash
     "dedup_winnowing_pairs" -> ((s, dir) =>
-      graft.operators.PartitionOps.withShufflePartitions(s,
-          graft.operators.PartitionOps.derivedShufflePartitions(s, dir)) {
-        DedupOps.winnowingPairs(docs(s, dir),
-          precomputedFps = Some(winnowFps(s, dir)))
-      }),
+      DedupOps.winnowingPairs(docs(s, dir),
+        precomputedFps = Some(winnowFps(s, dir)))),
 
     // MOSS containment report: per candidate pair, shared fps as basis
     // points of EACH side's sketch — excerpt-of vs mutual near-dup; same
     // staged sketch as the pair detector
     "dedup_winnowing_containment" -> ((s, dir) =>
-      graft.operators.PartitionOps.withShufflePartitions(s,
-          graft.operators.PartitionOps.derivedShufflePartitions(s, dir)) {
-        DedupOps.winnowingContainment(docs(s, dir),
-          precomputedFps = Some(winnowFps(s, dir)))
-      }),
+      DedupOps.winnowingContainment(docs(s, dir),
+        precomputedFps = Some(winnowFps(s, dir)))),
 
     // continuous-ingest winnowing: only the doc_id % 3 == 0 batch is
     // tokenized; the stored corpus is probed as its fingerprint index
     // (winnowing is doc-local, so the staged sketch filtered to the
     // stored slice IS the stored index) — new×old pairs only
-    "dedup_winnowing_incremental" -> ((s, dir) =>
-      graft.operators.PartitionOps.withShufflePartitions(s,
-          graft.operators.PartitionOps.derivedShufflePartitions(s, dir)) {
-        val d = docs(s, dir)
-        DedupOps.winnowingIncremental(
-          d.filter(col("doc_id") % 3 =!= 0),
-          d.filter(col("doc_id") % 3 === 0),
-          precomputedStoredFps =
-            Some(winnowFps(s, dir).filter(col("doc_id") % 3 =!= 0)))
-      }),
+    "dedup_winnowing_incremental" -> ((s, dir) => {
+      val d = docs(s, dir)
+      DedupOps.winnowingIncremental(
+        d.filter(col("doc_id") % 3 =!= 0),
+        d.filter(col("doc_id") % 3 === 0),
+        precomputedStoredFps =
+          Some(winnowFps(s, dir).filter(col("doc_id") % 3 =!= 0)))
+    }),
 
     // SemDeDup (Abbas et al. 2023): coarse-cluster the embedding space,
     // drop every vector with a smaller-id cosine>=0.85 neighbor in its
@@ -332,12 +281,9 @@ object Dedup extends QuerySet {
     // artifacts (pair graph + shingle sets), so the audit costs only the
     // candidate-bounded intersection join
     "dedup_lsh_precision" -> ((s, dir) =>
-      graft.operators.PartitionOps.withShufflePartitions(s,
-          graft.operators.PartitionOps.derivedShufflePartitions(s, dir)) {
-        DedupOps.lshPrecision(docs(s, dir),
-          precomputedPairs = Some(minhashPairs(s, dir)),
-          precomputedShingles = Some(shingleSet(s, dir)))
-      }),
+      DedupOps.lshPrecision(docs(s, dir),
+        precomputedPairs = Some(minhashPairs(s, dir)),
+        precomputedShingles = Some(shingleSet(s, dir)))),
 
     // paragraph-level exact dedup (CCNet): 20-token blocks hashed
     // corpus-wide, keep-first by (doc_id, blk) — the boilerplate

@@ -35,10 +35,8 @@ object GraphQueries extends QuerySet {
     Graph(vertices, edges)
   }
 
-  /** Iterative (superstep) algorithms pay per-round fixed cost per
-    * shuffle partition; the fixture's per-round state is thousands of
-    * rows, so run the driver loops at 8 partitions (cluster runs size to
-    * the frontier — same reasoning as the streaming state cap). */
+  /** Caps the superstep loop's per-round checkpoint jobs, which pay a
+    * fixed cost per shuffle partition on thousands of rows of state. */
   private def capped[A](s: SparkSession, dir: String)(f: => A): A =
     graft.operators.PartitionOps.withShufflePartitions(s,
       graft.operators.PartitionOps.derivedShufflePartitions(s, dir))(f)
@@ -53,21 +51,14 @@ object GraphQueries extends QuerySet {
     "graph_cc_bipartite" -> ((s, dir) =>
       capped(s, dir)(GraphAlgorithms.connectedComponents(bipartiteGraph(s, dir), maxIter = 5))),
 
-    // multi-source SSSP from every block head. The Bellman-Ford loop pays
-    // per-superstep fixed cost per shuffle partition (same reasoning as
-    // the streaming state cap / dedup pair-graph cap): the workset is
-    // thousands of rows here, so 8 partitions; a cluster run sizes it to
-    // the frontier instead
+    // multi-source SSSP from every block head
     "graph_sssp_chain" -> ((s, dir) => {
       val g = chainGraph(s, dir)
       val sources = g.vertices.filter(col("vid") % 10 === 0)
-      graft.operators.PartitionOps.withShufflePartitions(s,
-          graft.operators.PartitionOps.derivedShufflePartitions(s, dir)) {
-        // chain graph: degree ≤ 2, diameter 9 — exactly the shape the
-        // 2-hop closure halves the superstep count for (same fixpoint)
-        GraphAlgorithms.shortestPaths(g, sources, maxIter = 15,
-          doubleHops = true)
-      }
+      // chain graph: degree ≤ 2, diameter 9 — exactly the shape the
+      // 2-hop closure halves the superstep count for (same fixpoint)
+      capped(s, dir)(GraphAlgorithms.shortestPaths(g, sources, maxIter = 15,
+        doubleHops = true))
     }),
 
     // PageRank on the chain graph, integer-quantized so long sums are

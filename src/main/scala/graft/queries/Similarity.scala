@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.StagingFs
 import graft.operators.SimilarityOps
 
 /** Similarity-search inventory over `embeddings` (LLM-pipeline extension —
@@ -19,20 +20,11 @@ object Similarity extends QuerySet {
   /** Raw bigram tf postings staged once per (app, fixture) — the shared
     * tokenize→explode→count stage the whole lexical family (bm25, dsir;
     * tfidf derives its own weighted copy) probes instead of re-scanning. */
-  private def bigramTf(s: SparkSession, dir: String) = {
-    val key = s.sparkContext.applicationId + "#" + dir + "#graft-bm25-tf"
-    s.read.parquet(
-      graft.sources.StagingFs.stageOnce(s, key, "graft-bm25-tf") { p =>
-        // the BUILD wants full parallelism (corpus-sized grouped count),
-        // even though the consumers probe it under the pair-set shuffle
-        // sizing — measured 52.6 s at sf1 when the build inherited the
-        // caller's 8 partitions
-        graft.operators.PartitionOps.withShufflePartitions(s, 32) {
-          SimilarityOps.termFrequencies(Tables.load(s, dir, "documents"))
-            .write.mode("overwrite").parquet(p)
-        }
-      })
-  }
+  private def bigramTf(s: SparkSession, dir: String) =
+    StagingFs.readStage(s, dir, "graft-bm25-tf") { p =>
+      SimilarityOps.termFrequencies(Tables.load(s, dir, "documents"))
+        .write.mode("overwrite").parquet(p)
+    }
 
   /** T=2 exact-Lloyd k=16 centroids staged once per (app, fixture) — a
     * pure function of the fixture consumed IDENTICALLY by three
@@ -41,26 +33,20 @@ object Similarity extends QuerySet {
     * same driver Lloyd loop (r14; the knnStage/grams6 staging convention —
     * one-time cost lands in stage_sec). 16 rows; the exact integer
     * arithmetic round-trips parquet doubles bit-exactly. */
-  private def trainedCents16(s: SparkSession, dir: String) = {
-    val key = s.sparkContext.applicationId + "#" + dir + "#graft-kmeans16x2"
-    s.read.parquet(
-      graft.sources.StagingFs.stageOnce(s, key, "graft-kmeans16x2") { p =>
-        graft.ml.MLOps.kmeansCentroidsExact(embs(s, dir), k = 16, iters = 2)
-          .write.mode("overwrite").parquet(p)
-      })
-  }
+  private def trainedCents16(s: SparkSession, dir: String) =
+    StagingFs.readStage(s, dir, "graft-kmeans16x2") { p =>
+      graft.ml.MLOps.kmeansCentroidsExact(embs(s, dir), k = 16, iters = 2)
+        .write.mode("overwrite").parquet(p)
+    }
 
   /** k-NN mutual-edge graph staged once per (app, fixture) — shared by the
     * graph row and the clusters row. */
-  private def knnStage(s: SparkSession, dir: String) = {
-    val key = s.sparkContext.applicationId + "#" + dir + "#graft-knn-g"
-    s.read.parquet(
-      graft.sources.StagingFs.stageOnce(s, key, "graft-knn-g") { p =>
-        SimilarityOps.knnGraph(Tables.load(s, dir, "embeddings"),
-            k = 3, bits = 4)
-          .write.mode("overwrite").parquet(p)
-      })
-  }
+  private def knnStage(s: SparkSession, dir: String) =
+    StagingFs.readStage(s, dir, "graft-knn-g") { p =>
+      SimilarityOps.knnGraph(Tables.load(s, dir, "embeddings"),
+          k = 3, bits = 4)
+        .write.mode("overwrite").parquet(p)
+    }
 
   /** Post-split IVF lake staged once per (app, fixture): bucketed lake
     * built, the 115 %-pressure split applied IN PLACE (only flagged cells'
@@ -80,14 +66,11 @@ object Similarity extends QuerySet {
 
   /** tf-idf weighted postings staged once per (app, fixture) — shared by
     * the tfidf ranker and the keyword extractor. */
-  private def tfidfStage(s: SparkSession, dir: String) = {
-    val key = s.sparkContext.applicationId + "#" + dir + "#graft-tfidf-w"
-    s.read.parquet(
-      graft.sources.StagingFs.stageOnce(s, key, "graft-tfidf-w") { p =>
-        SimilarityOps.tfidfWeights(Tables.load(s, dir, "documents"))
-          .write.mode("overwrite").parquet(p)
-      })
-  }
+  private def tfidfStage(s: SparkSession, dir: String) =
+    StagingFs.readStage(s, dir, "graft-tfidf-w") { p =>
+      SimilarityOps.tfidfWeights(Tables.load(s, dir, "documents"))
+        .write.mode("overwrite").parquet(p)
+    }
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "sim_topk_bruteforce" -> ((s, dir) => {
@@ -514,28 +497,21 @@ object Similarity extends QuerySet {
 
     // lexical counterpart of the dense ANN paths: TF-IDF weighted
     // inverted-index join with a df cap pruning hot posting lists, exact
-    // cosine re-rank (integer rational weights → value-oracle-exact);
-    // fixture-scale shuffle sizing like the dedup family. The weighted
-    // postings (tokenize → tf → df cap) are the dominant cost and a pure
-    // function of the fixture — staged once per (app, fixture) like the
-    // dedup signature stages, so repeated passes pay only the
+    // cosine re-rank (integer rational weights → value-oracle-exact).
+    // The weighted postings (tokenize → tf → df cap) are the dominant cost
+    // and a pure function of the fixture — staged once per (app, fixture)
+    // like the dedup signature stages, so repeated passes pay only the
     // norms/index-join/top-k tail
     "sim_tfidf_topk" -> ((s, dir) =>
-      graft.operators.PartitionOps.withShufflePartitions(s,
-          graft.operators.PartitionOps.derivedShufflePartitions(s, dir)) {
-        SimilarityOps.tfidfTopK(Tables.load(s, dir, "documents"),
-          precomputedWeights = Some(tfidfStage(s, dir)))
-      }),
+      SimilarityOps.tfidfTopK(Tables.load(s, dir, "documents"),
+        precomputedWeights = Some(tfidfStage(s, dir)))),
 
     // per-doc keyword extraction (top-3 distinctive bigrams by integer
     // tf-idf weight) — the metadata-enrichment pass; probes the SAME
     // staged weighted postings as the tfidf ranker
     "text_keywords" -> ((s, dir) =>
-      graft.operators.PartitionOps.withShufflePartitions(s,
-          graft.operators.PartitionOps.derivedShufflePartitions(s, dir)) {
-        SimilarityOps.keywords(Tables.load(s, dir, "documents"),
-          precomputedWeights = Some(tfidfStage(s, dir)))
-      }),
+      SimilarityOps.keywords(Tables.load(s, dir, "documents"),
+        precomputedWeights = Some(tfidfStage(s, dir)))),
 
     // vector-side ingest monitoring: per-dim micro-mean shift of the
     // incoming batch (vec_id % 10 = 0) vs the stored corpus
@@ -552,45 +528,40 @@ object Similarity extends QuerySet {
     // every score is an exact BIGINT whose magnitude is corpus-size-
     // INDEPENDENT (corpus stats enter only through the quantized avgdl)
     "sim_bm25_topk" -> ((s, dir) =>
-      graft.operators.PartitionOps.withShufflePartitions(s,
-          graft.operators.PartitionOps.derivedShufflePartitions(s, dir)) {
-        SimilarityOps.bm25TopK(Tables.load(s, dir, "documents"),
-          precomputedTf = Some(bigramTf(s, dir)))
-      }),
+      SimilarityOps.bm25TopK(Tables.load(s, dir, "documents"),
+        precomputedTf = Some(bigramTf(s, dir)))),
 
     // DSIR-style importance resampling toward the lang='en' target slice:
     // quantized probability-ratio weights over 4096 hashed-bigram buckets
     // + derandomized (md5-draw) acceptance with prob weight/w_max; reuses
     // the SAME staged bigram postings as bm25/tfidf
     "corpus_dsir_sample" -> ((s, dir) =>
-      graft.operators.PartitionOps.withShufflePartitions(s,
-          graft.operators.PartitionOps.derivedShufflePartitions(s, dir)) {
-        graft.operators.TextOps.dsirSample(
-          Tables.load(s, dir, "documents"), col("lang") === "en",
-          precomputedTf = Some(bigramTf(s, dir)))
-      }),
+      graft.operators.TextOps.dsirSample(
+        Tables.load(s, dir, "documents"), col("lang") === "en",
+        precomputedTf = Some(bigramTf(s, dir)))),
 
     // BM25 + pseudo-relevance feedback (RM3 expansion): top-3 feedback
     // docs donate their top-5 terms (Σw desc, term asc — engine-exact),
     // second pass mixes original 70 / expansion 30; shared staged postings
-    "sim_bm25_prf" -> ((s, dir) =>
+    "sim_bm25_prf" -> ((s, dir) => {
+      // the shared stage builds outside the cap, at the session's sizing
+      val tf = bigramTf(s, dir)
+      // caps the postings localCheckpoint job that feeds both passes
       graft.operators.PartitionOps.withShufflePartitions(s,
           graft.operators.PartitionOps.derivedShufflePartitions(s, dir)) {
         SimilarityOps.bm25Prf(Tables.load(s, dir, "documents"),
-          precomputedTf = Some(bigramTf(s, dir)))
-      }),
+          precomputedTf = Some(tf))
+      }
+    }),
 
     // hybrid retrieval: BM25 over documents + dense cosine over their
     // embeddings (row i of embeddings embeds document i), fused by
     // reciprocal-rank fusion — only RANKS cross the system boundary, so
     // no score calibration; reuses the staged bigram postings
     "sim_hybrid_rrf" -> ((s, dir) =>
-      graft.operators.PartitionOps.withShufflePartitions(s,
-          graft.operators.PartitionOps.derivedShufflePartitions(s, dir)) {
-        SimilarityOps.hybridRrf(Tables.load(s, dir, "documents"),
-          embs(s, dir), k = 5, queryMod = 100,
-          precomputedTf = Some(bigramTf(s, dir)))
-      }),
+      SimilarityOps.hybridRrf(Tables.load(s, dir, "documents"),
+        embs(s, dir), k = 5, queryMod = 100,
+        precomputedTf = Some(bigramTf(s, dir)))),
 
     // contrastive pair mining: per query, top-k same-label positives AND
     // top-k different-label hard negatives — broadcast query set × one
@@ -601,7 +572,8 @@ object Similarity extends QuerySet {
     // MMR diversity rerank: greedy λ·rel − (1−λ)·maxsim selection over
     // the top-m candidates; relevance/pairwise sims quantized once to
     // micro-cosine BIGINTs so the whole greedy trajectory is
-    // integer-exact on both engines
+    // integer-exact on both engines. The cap sizes the greedy loop's
+    // per-round localCheckpoint jobs
     "sim_mmr_rerank" -> ((s, dir) =>
       graft.operators.PartitionOps.withShufflePartitions(s,
           graft.operators.PartitionOps.derivedShufflePartitions(s, dir,

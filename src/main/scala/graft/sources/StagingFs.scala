@@ -1,7 +1,8 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import java.util.concurrent.ConcurrentHashMap
 
@@ -128,6 +129,23 @@ object StagingFs {
       () => dir
     })
     thunk()
+  }
+
+  // schema of each written stage, by stage path: a path comes from
+  // newStageDir, unique per build and written once, so it never changes
+  private val stageSchemas = new ConcurrentHashMap[String, StructType]()
+
+  /** Read the parquet stage `prefix` of fixture `dir`, built once per
+    * (app, fixture) by [[stageOnce]] — the shared-materialization shape a
+    * real pipeline uses (parquet, not cached blocks, so per-query storage
+    * cleanup cannot drop it). The stage's schema is inferred once per
+    * stage path, so only the first construction pays the inference job. */
+  def readStage(spark: SparkSession, dir: String, prefix: String)
+               (build: String => Unit): DataFrame = {
+    val key = spark.sparkContext.applicationId + "#" + dir + "#" + prefix
+    val path = stageOnce(spark, key, prefix)(build)
+    spark.read.schema(stageSchemas.computeIfAbsent(path,
+      _ => spark.read.parquet(path).schema)).parquet(path)
   }
 
   /** Remove the stamped named caches from a LOCAL scratch root (bench

@@ -199,4 +199,28 @@ class PartitionOpsSpec extends SparkSpecBase {
     def rows(d: String) = q(spark, d).collect().map(_.toString).toSeq.sorted
     assert(rows(dir.toString) == rows(sfDir))
   }
+
+  test("withShufflePartitions: a plan built inside the scope and run after it uses the session's count") {
+    PartitionOps.withConf(spark, "spark.sql.adaptive.enabled", "false") {
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+      val agg = PartitionOps.withShufflePartitions(spark, 2) {
+        orders.groupBy(col("o_custkey")).count()
+      }
+      agg.collect()
+      val parts = agg.queryExecution.executedPlan.collect {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e.numPartitions
+      }
+      assert(parts == Seq(4))
+    }
+  }
+
+  test("withShufflePartitions: a localCheckpoint taken inside the scope keeps the cap") {
+    PartitionOps.withConf(spark, "spark.sql.adaptive.enabled", "false") {
+      val cp = PartitionOps.withShufflePartitions(spark, 2) {
+        orders.groupBy(col("o_custkey")).count().localCheckpoint()
+      }
+      assert(cp.rdd.getNumPartitions == 2)
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    }
+  }
 }

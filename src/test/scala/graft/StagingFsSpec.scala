@@ -1,11 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.StagingFs
 
-/** [[StagingFs.cleanLocalScratch]] removes only stamped named caches. */
-class StagingFsSpec extends AnyFunSuite {
+/** [[StagingFs.cleanLocalScratch]] removes only stamped named caches, and a
+  * staged table is read without re-inferring its schema. */
+class StagingFsSpec extends SparkSpecBase {
 
   test("cleanLocalScratch removes stamped caches and leaves unstamped dirs and other files") {
     val root = Files.createTempDirectory("scratch-clean-spec")
@@ -27,5 +27,16 @@ class StagingFsSpec extends AnyFunSuite {
     assert(!Files.exists(cache) && !Files.exists(stamp))
     assert(Files.exists(live.resolve("part-0.parquet")))
     assert(Files.exists(other) && Files.exists(looseStamp))
+  }
+
+  test("constructing a stage-reading query a second time submits no Spark job") {
+    val q = SparkEntry.queries("dedup_ngram_jaccard")
+    // the first construction builds the shingle stage and infers its schema
+    val (first, _) = jobsDuring(q(spark, sfDir))
+    val (again, jobs) = jobsDuring(q(spark, sfDir))
+    assert(jobs == 0)
+    assert(again.schema == first.schema)
+    assert(again.collect().map(_.toString).sorted.toSeq ==
+      first.collect().map(_.toString).sorted.toSeq)
   }
 }

@@ -26,6 +26,34 @@ class StreamingSpec extends SparkSpecBase {
     MemoryStream[EventRow]
   }
 
+  test("runToTable sizes the state operator to statePartitions and restores the session") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import StreamingQueryListener._
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val parts = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = started.add(e.id)
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (started.contains(e.progress.id))
+          e.progress.stateOperators.foreach(op => parts.add(op.numShufflePartitions))
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (started.contains(e.id)) done.countDown()
+    }
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    spark.streams.addListener(listener)
+    try {
+      val out = EventStream.runToTable(spark,
+        EventStream.read(spark, sfDir).groupBy(col("event_type")).count(),
+        "complete", statePartitions = 2)
+      // the terminated event follows every progress event of the query
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(parts.contains(2L) && parts.size == 1, s"state partitions: $parts")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+      assert(out.count() > 0)
+    } finally spark.streams.removeListener(listener)
+  }
+
   test("derived statePartitions reproduces the r11 ladder optima for all three families") {
     // the ladder box: 16 cores, optima measured over {2,4,8,16,32} at
     // 100k / 1M / 10M events per replay (DESIGN.md r11 table) — the

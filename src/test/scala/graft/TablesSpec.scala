@@ -1,8 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.Try
 
@@ -10,7 +8,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -23,36 +20,6 @@ import graft.operators.PartitionOps
 class TablesSpec extends SparkSpecBase {
 
   private def fixture(name: String) = s"$sfDir/$name.parquet"
-
-  /** Spark jobs `body` submits on this thread. Jobs are tagged with a job
-    * group; a marker job in a second group, whose start the listener must
-    * see, flushes the listener bus (events arrive in order). */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val (group, marker) = ("tables-spec-body", "tables-spec-marker")
-    val jobs = new AtomicInteger()
-    val flushed = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(`marker`) => flushed.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "measured body")
-      val out = body
-      sc.setJobGroup(marker, "listener bus flush")
-      sc.parallelize(Seq(1), 1).count()
-      assert(flushed.await(60, TimeUnit.SECONDS), "marker job never observed")
-      (out, jobs.get())
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
