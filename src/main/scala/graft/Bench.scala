@@ -46,16 +46,42 @@ object Bench {
     } catch { case e: Exception =>
       System.err.println(s"[bench-qprev] prior load failed: $e"); Map.empty
     }
+    // streaming cost split of the rows below, from the progress Spark
+    // reports (`<tag>_batches`, `_addbatch`, `_statecommit`, `_overhead`);
+    // the minimum over a row's passes, so it describes the best pass
+    val streamTags = Map(
+      "stream_interval_join_multibatch" -> "interval_mb",
+      "cep_stream_multibatch" -> "cep_mb",
+      "cep_stream_timeout" -> "cep_to",
+      "stream_ivf_ingest" -> "vecingest",
+      "stream_socket_counts" -> "socket",
+      "stream_socket_counts_25k" -> "socket_mod4",
+      "stream_custom_source_counts" -> "socket_dsv2",
+      "stream_retract_changelog" -> "retract",
+      "stream_iterate_halving" -> "iterate")
+    val phaseMin = scala.collection.mutable.Map.empty[String, Double]
+    def recordMin(k: String, v: Double): Unit =
+      phaseMin(k) = phaseMin.get(k).fold(v)(math.min(_, v))
+    val streams = StreamProgress.attach(spark)
     var idx = 0
     val results = SparkEntry.queries.map { case (name, fn) =>
       val g0 = gcMs
       def onePass(): Double = {
+        val mark = streams.mark()
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() } catch { case e: Throwable =>
           System.err.println(s"[bench-fail] $name ${e.getClass.getSimpleName}: ${e.getMessage}")
           -1L
         }
-        (System.nanoTime() - t0) / 1e9
+        val sec = (System.nanoTime() - t0) / 1e9
+        streamTags.get(name).foreach { tag =>
+          val t = StreamProgress.totals(streams.since(mark))
+          recordMin(s"${tag}_batches", t.batches.toDouble)
+          recordMin(s"${tag}_addbatch", t.addBatchMs / 1e3)
+          recordMin(s"${tag}_statecommit", t.stateCommitMs / 1e3)
+          recordMin(s"${tag}_overhead", t.overheadMs / 1e3)
+        }
+        sec
       }
       // one-time stage-build attribution: whichever query triggers a
       // cross-query staged build (dedup shingle chain, replay quarters)
@@ -124,8 +150,7 @@ object Bench {
     //  - "qcs": EVERY per-query time as centi-second ints, positionally
     //    keyed by the ascii-sorted query-name list ("qcs_order") — ~4 chars
     //    per query instead of ~28, so all 270+ rows fit the window;
-    //  - "phases": the socket/retract phase splits that previously lived
-    //    only in truncated stderr attribution lines.
+    //  - "phases": the streaming cost splits of `streamTags` and tf_stage.
     // The full name→sec map additionally lands in BENCH_DETAIL.json next to
     // the repo sources (and on stderr) for offline reads.
     // the shared bm25/dsir term-frequency stage build cost gets its own
@@ -133,8 +158,7 @@ object Bench {
     // stderr): 0 here means the stage was warm/never built this run
     graft.sources.StagingFs.buildCosts
       .find(_._1.endsWith("#graft-bm25-tf"))
-      .foreach { case (_, sec) =>
-        graft.sources.PhaseStats.recordMin("tf_stage", sec) }
+      .foreach { case (_, sec) => recordMin("tf_stage", sec) }
     // round-over-round drift adjudication (r9 verdict item 2): compare this
     // run's per-query times against the committed previous-round detail and
     // summarize — gt13/lt077 = rows that moved >1.3x either way (ignoring
@@ -156,7 +180,7 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     System.err.println(s"[bench-all] $allQs")
-    val allPhases = graft.sources.PhaseStats.snapshot.toSeq.sortBy(_._1)
+    val allPhases = phaseMin.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     val allStages = graft.sources.StagingFs.buildCosts.toSeq.sortBy(_._1)
@@ -188,18 +212,13 @@ object Bench {
     def qArr(perSec: Long): String = sortedNames
       .map(k => math.round(results(k) * perSec).toString)
       .mkString("[", ",", "]")
-    // phase attribution recorded by the operators themselves
-    // (EventStream.socketCounts/runToTable, RetractStream, IterateStream):
-    // socket_{ids,feed,drain}, socket_mod4_*, socket_dsv2_*,
-    // retract_{changelog,snapshot,batches}, iterate_*, interval_mb_*,
-    // cep_mb_*, cep_to_*, tf_stage. Near-zero phases (< 5 ms) and the
-    // derived `_overhead` fields are dropped from STDOUT (they stay in
-    // BENCH_DETAIL.json) — the line must fit the driver's 2000-char stdout
-    // tail with the full qcs array intact. Integral values (batch counts)
-    // print as ints.
+    // Near-zero phases (< 5 ms) and the `_overhead` fields are dropped
+    // from STDOUT (they stay in BENCH_DETAIL.json) — the line must fit the
+    // driver's 2000-char stdout tail with the full qcs array intact.
+    // Integral values (batch counts) print as ints.
     def fmtSec(v: Double): String =
       if (v == math.rint(v) && v < 1e6) math.round(v).toString else f"$v%.2f"
-    val phases = graft.sources.PhaseStats.snapshot.toSeq
+    val phases = phaseMin.toSeq
       .filter { case (k, v) => v >= 0.005 && !k.endsWith("_overhead") }
       .sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + fmtSec(v) }

@@ -20,6 +20,12 @@ import org.apache.spark.sql.SparkSession
   * distinct task counts of the stages that read a shuffle (stages with a
   * parent stage): the effective reducer count of every exchange the phase
   * ran, after any `withShufflePartitions` cap and AQE coalescing.
+  *
+  * For a row that runs streaming queries, its [[StreamProgress]] records
+  * print as one `[probe-stream] <name> rep<r> q=<query> b=<batchId>
+  * rows=… <durationMs split> | <state ops>` line per micro-batch, then one
+  * summary line: batches, Σ addBatch, Σ (triggerExecution − addBatch) as
+  * `overhead`, Σ state commit, state-store instances and late rows dropped.
   */
 object Probe {
   private val PhaseKey = "graft.probe.phase"
@@ -84,12 +90,14 @@ object Probe {
     val sc = spark.sparkContext
     val listener = new PartsListener
     sc.addSparkListener(listener)
+    val streams = StreamProgress.attach(spark)
     def inPhase[T](ph: String)(body: => T): T = {
       sc.setLocalProperty(PhaseKey, ph)
       try body finally sc.setLocalProperty(PhaseKey, null)
     }
     for (name <- names; r <- 1 to reps) {
       val ph = s"$name#$r#"
+      val mark = streams.mark()
       // time the construction separately: streaming queries run to
       // completion inside the query function (runToTable awaits
       // termination), so their cost lands in build, not count
@@ -109,11 +117,29 @@ object Probe {
         Thread.sleep(10)
       println(s"[probe-parts] $name rep$r build=${listener.counts(ph + "build")} " +
         s"count=${listener.counts(ph + "count")}")
+      val runs = streams.since(mark)
+      import scala.jdk.CollectionConverters._
+      for (run <- runs; p <- run.progress) {
+        val durs = p.durationMs.asScala.toSeq.sortBy(_._1)
+          .map { case (k, v) => s"$k=$v" }.mkString(" ")
+        val ops = p.stateOperators.map(o => s"${o.operatorName}:" +
+          s"rows=${o.numRowsTotal}:commit=${o.commitTimeMs}ms:" +
+          s"mem=${o.memoryUsedBytes}:parts=${o.numShufflePartitions}:" +
+          s"late=${o.numRowsDroppedByWatermark}").mkString(" ")
+        val q = Option(run.name).getOrElse(run.runId.toString)
+        println(s"[probe-stream] $name rep$r q=$q b=${p.batchId} " +
+          s"rows=${p.numInputRows} $durs | $ops")
+      }
+      if (runs.nonEmpty) {
+        val t = StreamProgress.totals(runs)
+        println(f"[probe-stream] $name rep$r queries=${runs.size} " +
+          f"batches=${t.batches} addbatch=${t.addBatchMs / 1e3}%.2fs " +
+          f"overhead=${t.overheadMs / 1e3}%.2fs " +
+          f"statecommit=${t.stateCommitMs / 1e3}%.2fs " +
+          f"instances=${t.stateInstances} late=${t.lateDropped}")
+      }
       sc.getPersistentRDDs.values.foreach(_.unpersist(false))
     }
-    val ph = graft.sources.PhaseStats.snapshot
-    if (ph.nonEmpty) println("[probe-phases] " + ph.toSeq.sorted
-      .map { case (k, v) => f"$k=$v%.2f" }.mkString(" "))
     spark.stop()
   }
 }

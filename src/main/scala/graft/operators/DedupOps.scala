@@ -399,21 +399,18 @@ object DedupOps {
     kept.join(drops, Seq(idCol), "left_anti")
   }
 
-  /** Near-duplicate CLUSTERS: connected components over the MinHash-LSH
-    * candidate-pair graph at `minJaccard` — each document is assigned the
-    * minimum doc id reachable through near-dup links (singletons keep
-    * their own id). The cluster-preserving variant of [[dedupCorpus]]'s
-    * greedy drop: downstream policies (keep longest, keep newest) pick per
-    * cluster instead of per pair. Composition of hash-partitioned stages +
-    * the CC join-iteration — nothing quadratic. */
   /** Near-duplicate clusters: pointer-jumping connected components over the
     * LSH candidate graph (est_jaccard ≥ minJaccard), labeled by min doc id,
-    * with the cluster size alongside. `includeSingletons` keeps unpaired
-    * docs as their own clusters (the full-corpus view); `false` restricts to
-    * docs that participate in at least one pair (the curation view). The CC
-    * supersteps run at a partition count sized to the candidate graph — it
-    * is O(near-dups), orders smaller than the corpus — because each
-    * superstep's fixed job cost scales with shuffle partitions. */
+    * with the cluster size alongside. The cluster-preserving variant of
+    * [[dedupCorpus]]'s greedy drop: downstream policies (keep longest, keep
+    * newest) pick per cluster instead of per pair. `includeSingletons`
+    * keeps unpaired docs as their own clusters (the full-corpus view);
+    * `false` restricts to docs that participate in at least one pair (the
+    * curation view). Composition of hash-partitioned stages + the CC
+    * join-iteration — nothing quadratic. The CC supersteps run at a
+    * partition count sized to the candidate graph — it is O(near-dups),
+    * orders smaller than the corpus — because each superstep's fixed job
+    * cost scales with shuffle partitions. */
   def dedupClusters(docs: DataFrame, textCol: String = "text",
                     idCol: String = "doc_id",
                     minJaccard: Double = 0.5,
@@ -1071,7 +1068,7 @@ object DedupOps {
       // recurring content only: rank 2+ of a multi-occurrence group
       .withColumn("grp", count(lit(1)).over(Window.partitionBy(col("span_fp"))))
       .filter(col("grp") >= 2 && col("rk") >= 2)
-      .select(col("doc_id"), col("span_start").as("cs"),
+      .select(col("doc_id").as("cut_doc"), col("span_start").as("cs"),
         col("span_end").as("ce"))
     // full token sequence: the staged gram table keeps every position
     // (tail rows carry gh = null), so the apply step re-tokenizes nothing
@@ -1081,8 +1078,10 @@ object DedupOps {
         .select(col(idCol).as("doc_id"),
           posexplode(tokens(col(textCol))).as(Seq("pos", "tok")))
         .select(col("doc_id"), col("pos").cast("long").as("pos"), col("tok")))
+    // the cut side's key is renamed: on the staged path both sides carry
+    // the gram table's own doc_id attribute
     val kept = toks.join(cuts,
-        toks("doc_id") === cuts("doc_id") &&
+        col("doc_id") === col("cut_doc") &&
           col("pos").between(col("cs"), col("ce")), "left_anti")
     kept.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens_kept"),

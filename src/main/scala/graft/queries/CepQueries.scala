@@ -200,8 +200,7 @@ object CepQueries extends QuerySet {
       graft.streaming.EventStream.runToTable(s, out, "append",
         statePartitions =
           graft.streaming.EventStream.derivedStatePartitions("cep",
-            graft.Tables.load(s, dir, "events").count()),
-        phase = Some("cep_mb"))
+            graft.operators.PartitionOps.fixtureRows(s, dir, "events")))
     }),
 
     // timeout side output (PatternStream.select with timeout handler):
@@ -233,8 +232,7 @@ object CepQueries extends QuerySet {
         (k, m) => (k, m.first("a").event_id, m.first("b").event_id, false)
       } { (k, m) => (k, m.first("a").event_id, -1L, true)
       }.toDF("user_id", "a_id", "b_id", "timed_out")
-      graft.streaming.EventStream.runToTable(s, out, "append",
-        phase = Some("cep_to"))
+      graft.streaming.EventStream.runToTable(s, out, "append")
     })
   )
 

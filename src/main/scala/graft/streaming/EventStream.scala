@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import org.apache.hadoop.fs.Path
-import graft.sources.{PhaseStats, StagingFs}
+import graft.sources.StagingFs
 
 import java.sql.Timestamp
 
@@ -277,12 +277,6 @@ object EventStream {
     require(sampleMod >= 1, s"sampleMod must be >= 1: $sampleMod")
     val t0 = System.nanoTime()
     def sinceS: Double = (System.nanoTime() - t0) / 1e9
-    // phase tag for the bench JSON: the builtin-source 100k replay is
-    // "socket"; the subsampled feed and the DSv2 source get their own keys
-    val phaseTag =
-      if (format != "socket") "socket_dsv2"
-      else if (sampleMod == 1L) "socket"
-      else s"socket_mod$sampleMod"
     val srcStamp = dir + "|mod" + sampleMod + "|" +
       StagingFs.fileStamp(spark, new Path(dir, "events.parquet"))
     val userIds = feedIdsCache.computeIfAbsent(srcStamp, _ => {
@@ -377,12 +371,6 @@ object EventStream {
           f"done=$tDone%.2fs batches=${q.recentProgress.map(p =>
             s"${p.batchId}:${p.numInputRows}:${p.durationMs.get("addBatch")}ms")
             .mkString(",")}")
-        // same split, driver-visible: Bench folds these into its final
-        // stdout JSON line (the stderr line above never survives the
-        // driver's output truncation)
-        PhaseStats.recordMin(s"${phaseTag}_ids", tIds)
-        PhaseStats.recordMin(s"${phaseTag}_feed", tFeed - tIds)
-        PhaseStats.recordMin(s"${phaseTag}_drain", tDone - tFeed)
       } finally {
         q.stop()
         server.close() // idempotent; unblocks a feeder still in accept()
@@ -394,45 +382,6 @@ object EventStream {
     spark.table(name)
   }
 
-  /** Run a streaming DataFrame to completion into a memory sink, return the
-    * result table. `AvailableNow` processes the full backlog then stops.
-    *
-    * The number of state-store instances a stateful streaming query runs is
-    * frozen to `spark.sql.shuffle.partitions` at its FIRST micro-batch — a
-    * sizing decision, not a semantic one (hash layout only; results are
-    * partition-count independent, which the DuckDB oracles already prove
-    * across verify/bench configs). Each instance pays fixed open/commit/
-    * checkpoint cost per micro-batch, so over-sharding a small stream is
-    * pure overhead: the 10k-event fixture measured 16.1 s at 32 partitions
-    * vs 10.4 s at 8 for the full-outer interval join, and the round-10
-    * phase split showed commit cost ∝ partitions × batches × stores —
-    * re-measured across the single-batch family, 4 beats 8 by ~0.5–1 s per
-    * row (tumble_append 3.0 → 2.0, session_append 3.5 → 2.6, full-outer
-    * interval 2.7 → 2.2) with no row slower, hence the default.
-    * `statePartitions` right-sizes the fixture runs; a real deployment
-    * sizes it to cluster cores × state volume instead.
-    *
-    * `phase`: when set, the per-micro-batch cost split Spark already
-    * collects ([[org.apache.spark.sql.streaming.StreamingQueryProgress]])
-    * is folded into [[PhaseStats]] under `<phase>_*` keys so the bench
-    * artifact attributes multi-batch streaming rows the same way it
-    * attributes the socket/retract/iterate harnesses:
-    *   `_batches`     micro-batch count (incl. no-data watermark batches)
-    *   `_addbatch`    Σ addBatch ms — planning + shuffle + state work
-    *   `_statecommit` Σ state-store commit ms across operators/batches
-    *   `_overhead`    Σ (triggerExecution − addBatch) — offset/commit log,
-    *                  source listing, trigger bookkeeping
-    * SCOPE (bench-JSON reader contract): each phase prefix is recorded by
-    * exactly ONE query row — `interval_mb` = stream_interval_join_multibatch
-    * only (the other four interval rows pass no phase), `cep_mb` =
-    * cep_stream_multibatch, `cep_to` = cep_stream_timeout. And
-    * `_statecommit` SUMS commitTimeMs over every state-store INSTANCE
-    * (operators × partitions × batches), instances that run in parallel —
-    * so it is a CPU-seconds-like figure that can legitimately EXCEED the
-    * row's wall time (4 stores × 4 partitions × 5 batches ≈ 80 commits
-    * for the interval row); divide by instances for per-commit cost, don't
-    * read it as elapsed time. recordMin semantics match the bench's
-    * best-of-2: the split describes the best pass. */
   /** Family-derived statePartitions — the r11 ladder's deployment rule as
     * code (the prose lived in DESIGN.md; r11 verdict item 4). The measured
     * optima over {2,4,8,16,32} × {100k, 1M, 10M events} × 16 cores:
@@ -450,8 +399,8 @@ object EventStream {
     *    compute but the per-partition HDFSBackedStateStore commit tax
     *    catches up one octave earlier than session's.
     *
-    * Callers pass the expected replay volume (or `replayTable.count()` —
-    * a parquet-metadata read); fixture-scale replays derive the same 4 the
+    * Callers pass the expected replay volume (for a fixture, the memoized
+    * [[graft.operators.PartitionOps.fixtureRows]]); fixture-scale replays derive the same 4 the
     * bench rows were tuned to, so this is behavior-neutral below ~780k
     * events and ladder-optimal above. */
   def derivedStatePartitions(family: String, replayRows: Long,
@@ -470,26 +419,30 @@ object EventStream {
     }
   }
 
+  /** Run a streaming DataFrame to completion into a memory sink, return the
+    * result table. `AvailableNow` processes the full backlog then stops.
+    *
+    * The number of state-store instances a stateful streaming query runs is
+    * frozen to `spark.sql.shuffle.partitions` at its FIRST micro-batch — a
+    * sizing decision, not a semantic one (hash layout only; results are
+    * partition-count independent, which the DuckDB oracles already prove
+    * across verify/bench configs). Each instance pays fixed open/commit/
+    * checkpoint cost per micro-batch, so over-sharding a small stream is
+    * pure overhead: the 10k-event fixture measured 16.1 s at 32 partitions
+    * vs 10.4 s at 8 for the full-outer interval join, and the round-10
+    * phase split showed commit cost ∝ partitions × batches × stores —
+    * re-measured across the single-batch family, 4 beats 8 by ~0.5–1 s per
+    * row (tumble_append 3.0 → 2.0, session_append 3.5 → 2.6, full-outer
+    * interval 2.7 → 2.2) with no row slower, hence the default.
+    * `statePartitions` right-sizes the fixture runs; a real deployment
+    * sizes it to cluster cores × state volume instead. */
   def runToTable(spark: SparkSession, df: DataFrame, mode: String,
-                 statePartitions: Int = 4,
-                 phase: Option[String] = None): DataFrame = {
+                 statePartitions: Int = 4): DataFrame = {
     val name = s"graft_stream_${runId.incrementAndGet()}"
     graft.operators.PartitionOps.withShufflePartitions(spark, statePartitions) {
       val q = df.writeStream.format("memory").queryName(name)
         .outputMode(mode).trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      phase.foreach { p =>
-        val prog = q.recentProgress
-        def dur(key: String): Double = prog.map(b =>
-          Option(b.durationMs.get(key)).map(_.toDouble).getOrElse(0.0)).sum / 1e3
-        val stateCommit = prog.map(
-          _.stateOperators.map(_.commitTimeMs.toDouble).sum).sum / 1e3
-        PhaseStats.recordMin(s"${p}_batches", prog.length.toDouble)
-        PhaseStats.recordMin(s"${p}_addbatch", dur("addBatch"))
-        PhaseStats.recordMin(s"${p}_statecommit", stateCommit)
-        PhaseStats.recordMin(s"${p}_overhead",
-          math.max(0.0, dur("triggerExecution") - dur("addBatch")))
-      }
     }
     spark.table(name)
   }

@@ -69,13 +69,6 @@ object IterateStream {
       col("value").cast("long")).write.parquet(stage)
     StagingFs.adoptParts(spark, stage, srcDir, "seed")
     val feedbackId = new java.util.concurrent.atomic.AtomicLong(0L)
-    // per-run phase accumulators → PhaseStats (bench JSON attribution):
-    // the loop's cost is rounds × (output write + feedback write/adopt +
-    // emptiness job) — fixed micro-batch machinery, not data volume
-    val outWriteNs = new java.util.concurrent.atomic.LongAdder
-    val feedbackNs = new java.util.concurrent.atomic.LongAdder
-    val emptyNs = new java.util.concurrent.atomic.LongAdder
-    val rounds = new java.util.concurrent.atomic.LongAdder
     // batchId of a committed batch that produced NO feedback rows: since
     // feedback files land in the source before their batch commits and
     // batches are sequential, such a batch is provably the loop's last —
@@ -88,8 +81,6 @@ object IterateStream {
         .foreachBatch { (b: DataFrame, batchId: Long) =>
           val batch = b.persist()
           try {
-            rounds.increment()
-            var t = System.nanoTime()
             def step(d: DataFrame): DataFrame =
               d.filter(continues(col("value")))
                 .select(col("id"), (col("iter") + 1).as("iter"),
@@ -113,16 +104,13 @@ object IterateStream {
               .drop("__last")
               .write.mode("append").parquet(outDir) // output edge
             val fbRows = obs.get("fb_n").asInstanceOf[Long]
-            outWriteNs.add(System.nanoTime() - t)
             val fb = step(levels.last)
             if (fbRows > 0L) {
               val fbStage = new Path(base,
                 s"stage-fb-${feedbackId.incrementAndGet()}").toString
-              t = System.nanoTime()
               fb.write.parquet(fbStage) // distributed write...
               StagingFs.adoptParts(spark, fbStage, srcDir, // ...renamed into the head
                 s"fb-${feedbackId.get()}")
-              feedbackNs.add(System.nanoTime() - t)
             } else drainedBatch.set(batchId)
           } finally batch.unpersist()
         }
@@ -169,17 +157,6 @@ object IterateStream {
       q.exception.foreach(e => throw e)
       require(done, "feedback loop did not quiesce before the timeout")
     } finally q.stop()
-    // best-pass phase split for the bench JSON (min across best-of-2 runs,
-    // like the socket phases): everything not in the three job phases is
-    // trigger scheduling + the quiescence poll
-    graft.sources.PhaseStats.recordMin("iterate_rounds",
-      rounds.sum().toDouble)
-    graft.sources.PhaseStats.recordMin("iterate_out_write",
-      outWriteNs.sum() / 1e9)
-    graft.sources.PhaseStats.recordMin("iterate_feedback",
-      feedbackNs.sum() / 1e9)
-    graft.sources.PhaseStats.recordMin("iterate_empty_check",
-      emptyNs.sum() / 1e9) // 0 since r13: folded into the out-write observation
     spark.read.parquet(outDir)
   }
 }

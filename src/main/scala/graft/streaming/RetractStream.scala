@@ -117,11 +117,6 @@ class RetractStream(keyCols: Seq[String],
       // the per-micro-batch trend the bench watches
       System.err.println(f"[retract-cost] batch=$batchId " +
         f"changelog=$tChangelog%.2fs snapshot=${sinceS - tChangelog}%.2fs")
-      // driver-visible sums (Bench divides by retract_batches for the
-      // per-batch figure the stderr line shows per batch)
-      graft.sources.PhaseStats.add("retract_changelog", tChangelog)
-      graft.sources.PhaseStats.add("retract_snapshot", sinceS - tChangelog)
-      graft.sources.PhaseStats.add("retract_batches", 1.0)
     } finally b.unpersist()
   }
 

@@ -103,8 +103,7 @@ object VecIngest {
     * (`pathGlobFilter` — the file stream never lists the other epoch's
     * batches) against one centroid epoch. */
   private def epochPass(spark: SparkSession, dir: String, glob: String,
-                        centroids: DataFrame,
-                        phase: Option[String]): DataFrame = {
+                        centroids: DataFrame): DataFrame = {
     graft.functions.GraftExtensions.install(spark)
     import graft.functions.GraftFunctions.quantize
     val seeds = centroids
@@ -125,8 +124,7 @@ object VecIngest {
     // state-store instance is pure per-micro-batch open/commit tax with
     // nothing to shard — the socketCounts argument, sized by state
     // cardinality rather than volume. Scale-safe by construction.
-    EventStream.runToTable(spark, counts, "complete", statePartitions = 1,
-      phase = phase)
+    EventStream.runToTable(spark, counts, "complete", statePartitions = 1)
   }
 
   /** Per-cell occupancy after the full 4-batch vector replay: stateless
@@ -138,7 +136,7 @@ object VecIngest {
     val seedDf = centroids.getOrElse(
       graft.Tables.load(spark, dir, "embeddings")
         .filter(col("vec_id") < cells))
-    epochPass(spark, dir, "q[0-3].parquet", seedDf, Some("vecingest"))
+    epochPass(spark, dir, "q[0-3].parquet", seedDf)
   }
 
   /** The EPOCH SWAP the incremental-IVF maintenance loop runs (r12 verdict
@@ -158,9 +156,9 @@ object VecIngest {
                              epoch1Centroids: DataFrame): DataFrame = {
     val seedDf = graft.Tables.load(spark, dir, "embeddings")
       .filter(col("vec_id") < cells)
-    val e0 = epochPass(spark, dir, "q[01].parquet", seedDf, None)
+    val e0 = epochPass(spark, dir, "q[01].parquet", seedDf)
       .select(lit(0).as("epoch"), col("cell"), col("n"))
-    val e1 = epochPass(spark, dir, "q[23].parquet", epoch1Centroids, None)
+    val e1 = epochPass(spark, dir, "q[23].parquet", epoch1Centroids)
       .select(lit(1).as("epoch"), col("cell"), col("n"))
     e0.unionByName(e1)
   }

@@ -575,4 +575,30 @@ class DedupFuzzSpec extends SparkSpecBase {
       rows(DedupOps.incrementalDuplicateSpans(stored, incoming, k = 3)),
       "incremental: staged != direct")
   }
+
+  test("substring apply: the staged-table join names two distinct doc_id attributes") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo}
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    // both sides of the keep-first anti join derive from the staged gram
+    // table, so a key named on each side must still be two attributes —
+    // one attribute compared with itself is a trivially true predicate.
+    // Built with Spark's self-join rewrite off, so the plan cannot lean on
+    // it to turn such a predicate back into a key equality
+    val all = docsDf
+    val g = DedupOps.gramHashTable(all, k = 3).localCheckpoint()
+    val staged = graft.operators.PartitionOps.withConf(spark,
+        "spark.sql.selfJoinAutoResolveAmbiguity", "false") {
+      DedupOps.cutDuplicateSpans(all, k = 3, precomputedGramTable = Some(g))
+    }
+    val selfEq = staged.queryExecution.analyzed.collect {
+      case j: Join => j.condition.toSeq.flatMap(_.collect {
+        case e @ EqualTo(a: AttributeReference, b: AttributeReference)
+          if a.exprId == b.exprId => e
+      })
+    }.flatten
+    assert(selfEq.isEmpty, s"self-equal join keys: $selfEq")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSet
+    assert(rows(staged) == rows(DedupOps.cutDuplicateSpans(all, k = 3)))
+  }
 }

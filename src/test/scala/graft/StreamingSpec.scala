@@ -27,31 +27,81 @@ class StreamingSpec extends SparkSpecBase {
   }
 
   test("runToTable sizes the state operator to statePartitions and restores the session") {
-    import org.apache.spark.sql.streaming.StreamingQueryListener
-    import StreamingQueryListener._
-    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
-    val parts = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
-    val done = new java.util.concurrent.CountDownLatch(1)
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: QueryStartedEvent): Unit = started.add(e.id)
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        if (started.contains(e.progress.id))
-          e.progress.stateOperators.foreach(op => parts.add(op.numShufflePartitions))
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-        if (started.contains(e.id)) done.countDown()
-    }
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
-    spark.streams.addListener(listener)
+    val streams = StreamProgress.attach(spark)
     try {
+      val mark = streams.mark()
       val out = EventStream.runToTable(spark,
         EventStream.read(spark, sfDir).groupBy(col("event_type")).count(),
         "complete", statePartitions = 2)
+      val runs = streams.since(mark)
       // the terminated event follows every progress event of the query
-      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      assert(parts.contains(2L) && parts.size == 1, s"state partitions: $parts")
+      assert(runs.size == 1 && runs.forall(_.terminated), s"runs: ${runs.map(r => (r.name, r.terminated))}")
+      val parts = runs.flatMap(_.progress)
+        .flatMap(_.stateOperators.map(_.numShufflePartitions)).toSet
+      assert(parts == Set(2L), s"state partitions: $parts")
       assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
       assert(out.count() > 0)
-    } finally spark.streams.removeListener(listener)
+    } finally streams.detach()
+  }
+
+  test("StreamProgress keeps one record per run, equal to that query's own progress") {
+    import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
+    import StreamingQueryListener._
+    import scala.jdk.CollectionConverters._
+    // five one-file micro-batches of (epoch seconds, user). A batch judges
+    // lateness by the watermark its predecessor ran with, so minute 2 in
+    // the fourth file is late: the third batch ran at 30 − 5 minutes
+    val dir = java.nio.file.Files.createTempDirectory("graft-late")
+    for ((minutes, i) <- Seq(Seq(1, 3), Seq(30), Seq(31), Seq(2), Seq(60))
+           .zipWithIndex) {
+      val f = dir.resolve(s"b$i.json")
+      java.nio.file.Files.write(f, minutes
+        .map(m => s"""{"t":${m * 60},"user_id":7}""").mkString("\n").getBytes)
+      // the file source orders a backlog by modification time
+      f.toFile.setLastModified(1700000000000L + i * 60000L)
+    }
+    val agg = spark.readStream.schema("t LONG, user_id LONG")
+      .option("maxFilesPerTrigger", 1).json(dir.toString)
+      .select(timestamp_seconds(col("t")).as("ts"), col("user_id"))
+      .withWatermark("ts", "5 minutes")
+      .groupBy(window(col("ts"), "10 minutes"), col("user_id"))
+      .agg(count(lit(1)).as("n"))
+    // each query's own handle, taken while it starts
+    val handles = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQuery]()
+    val grab = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        handles.add(spark.streams.get(e.id))
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    val streams = StreamProgress.attach(spark)
+    spark.streams.addListener(grab)
+    val (counts, runs) = try {
+      val mark = streams.mark()
+      val counts = Seq.fill(2)(
+        EventStream.runToTable(spark, agg, "append").collect()
+          .map(_.getAs[Long]("n")).sorted.toSeq)
+      (counts, streams.since(mark))
+    } finally {
+      spark.streams.removeListener(grab)
+      streams.detach()
+    }
+    // the late row never reaches its closed window
+    assert(counts == Seq.fill(2)(Seq(2L, 2L)), s"window counts: $counts")
+    assert(runs.size == 2 && runs.map(_.runId).distinct.size == 2 &&
+      runs.forall(_.terminated), s"runs: ${runs.map(r => (r.name, r.terminated))}")
+    val byRun = handles.asScala.map(q => q.runId -> q).toMap
+    for (run <- runs) {
+      val own = byRun(run.runId).recentProgress.toSeq
+      val ops = own.flatMap(_.stateOperators)
+      val t = StreamProgress.totals(Seq(run))
+      assert(t.batches == own.size && t.batches >= 5, s"batches: $t")
+      assert(t.addBatchMs == own.map(StreamProgress.durationMs(_, "addBatch")).sum)
+      assert(t.stateCommitMs == ops.map(_.commitTimeMs).sum)
+      assert(t.lateDropped == ops.map(_.numRowsDroppedByWatermark).sum)
+      assert(t.lateDropped == 1L, s"late rows dropped: $t")
+    }
   }
 
   test("derived statePartitions reproduces the r11 ladder optima for all three families") {
@@ -76,11 +126,16 @@ class StreamingSpec extends SparkSpecBase {
   }
 
   test("vector ingest: 4 micro-batch replay, cells-sized state, batch parity") {
-    val out = graft.streaming.VecIngest
-      .ingestCellCounts(spark, sfDir, cells = 8).localCheckpoint()
+    val streams = StreamProgress.attach(spark)
+    val (out, runs) = try {
+      val mark = streams.mark()
+      val out = graft.streaming.VecIngest
+        .ingestCellCounts(spark, sfDir, cells = 8).localCheckpoint()
+      (out, streams.since(mark))
+    } finally streams.detach()
     assert(out.count() <= 8, "state is cells-sized")
-    val batches = graft.sources.PhaseStats.snapshot.get("vecingest_batches")
-    assert(batches.exists(_ >= 4.0),
+    val batches = StreamProgress.totals(runs).batches
+    assert(runs.size == 1 && batches >= 4,
       s"expected >= 4 micro-batches (one per staged quarter), got $batches")
     // end-of-replay snapshot equals the batch seeded assignment's counts
     val embs = Tables.load(spark, sfDir, "embeddings")
