@@ -1,6 +1,7 @@
 package graft
 
 import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
@@ -16,10 +17,11 @@ import org.apache.spark.sql.SparkSession
   * operators run while building their plan (e.g. `knnDistOutlierScores`
   * collects its seeds and per-cell stats), so that work is not in `count=`.
   *
-  * `[probe-parts] <name> rep<r> build=… count=…` lists, per phase, the
-  * distinct task counts of the stages that read a shuffle (stages with a
-  * parent stage): the effective reducer count of every exchange the phase
-  * ran, after any `withShufflePartitions` cap and AQE coalescing.
+  * `[probe-parts] <name> rep<r> build=… count=… jobs=<build>/<count>`
+  * lists, per phase, the distinct task counts of the stages that read a
+  * shuffle (stages with a parent stage): the effective reducer count of
+  * every exchange the phase ran, after any `withShufflePartitions` cap and
+  * AQE coalescing; `jobs=` is the number of Spark jobs each phase started.
   *
   * For a row that runs streaming queries, its [[StreamProgress]] records
   * print as one `[probe-stream] <name> rep<r> q=<query> b=<batchId>
@@ -30,16 +32,17 @@ import org.apache.spark.sql.SparkSession
 object Probe {
   private val PhaseKey = "graft.probe.phase"
 
-  /** Task counts of shuffle-reading stages and the phases whose jobs
-    * started, keyed by the [[PhaseKey]] local property of the submitting
-    * thread (threads a phase starts, e.g. a stream's, inherit it). */
+  /** Task counts of shuffle-reading stages and job counts, keyed by the
+    * [[PhaseKey]] local property of the submitting thread (threads a phase
+    * starts, e.g. a stream's, inherit it). */
   private class PartsListener extends SparkListener {
     val parts = new ConcurrentHashMap[String, java.util.Set[Int]]()
-    val started = ConcurrentHashMap.newKeySet[String]()
+    val jobs = new ConcurrentHashMap[String, AtomicInteger]()
     private def phase(props: java.util.Properties) =
       Option(props).flatMap(p => Option(p.getProperty(PhaseKey)))
     override def onJobStart(e: SparkListenerJobStart): Unit =
-      phase(e.properties).foreach(started.add)
+      phase(e.properties).foreach(ph =>
+        jobs.computeIfAbsent(ph, _ => new AtomicInteger()).incrementAndGet())
     override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
       phase(e.properties).filter(_ => e.stageInfo.parentIds.nonEmpty).foreach(ph =>
         parts.computeIfAbsent(ph, _ => ConcurrentHashMap.newKeySet[Int]())
@@ -50,6 +53,7 @@ object Probe {
       Option(parts.get(ph)).map(_.asScala.toSeq.sorted.mkString(","))
         .filter(_.nonEmpty).getOrElse("-")
     }
+    def jobCount(ph: String): Int = Option(jobs.get(ph)).fold(0)(_.get)
   }
 
   /** Pairs of `GRAFT_PROBE_CONF="k=v;k=v"`: empty segments are skipped and
@@ -113,10 +117,11 @@ object Probe {
       // every stage of the two phases has been recorded
       inPhase(ph + "flush")(sc.parallelize(Seq(1), 1).count())
       val deadline = System.nanoTime() + 60e9.toLong
-      while (!listener.started.contains(ph + "flush") && System.nanoTime() < deadline)
+      while (!listener.jobs.containsKey(ph + "flush") && System.nanoTime() < deadline)
         Thread.sleep(10)
       println(s"[probe-parts] $name rep$r build=${listener.counts(ph + "build")} " +
-        s"count=${listener.counts(ph + "count")}")
+        s"count=${listener.counts(ph + "count")} " +
+        s"jobs=${listener.jobCount(ph + "build")}/${listener.jobCount(ph + "count")}")
       val runs = streams.since(mark)
       import scala.jdk.CollectionConverters._
       for (run <- runs; p <- run.progress) {

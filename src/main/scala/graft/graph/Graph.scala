@@ -2,16 +2,19 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.operators.Iterate
+import graft.operators.{Iterate, PartitionOps}
 
 /** Gelly-style property graph over DataFrames (reference `Graph<K,VV,EV>`,
   * `flink-libraries/flink-gelly/.../graph/Graph.java`; SURVEY §2.8).
   *
   * vertices: (vid [, attrs…]);  edges: (src, dst [, weight]).
-  * Algorithms are Pregel-style driver loops over joins (Iterate.bulk/delta)
-  * — at scale both frames should be pre-partitioned on the join keys; each
-  * superstep is then a co-partitioned join + map-side-combining min/sum
-  * aggregation, the same shuffle profile as Gelly's scatter-gather.
+  * The iterating algorithms are Pregel-style driver loops over joins:
+  * SSSP runs on `Iterate.delta`, every other superstep loop (both CCs, LP,
+  * both community detections, HITS, both PageRanks, the scatter-gather
+  * APIs) on `Iterate.bulk`. Each loop pre-partitions its static edge side
+  * on the join key once, so a superstep is a co-partitioned join +
+  * map-side-combining min/sum aggregation, the same shuffle profile as
+  * Gelly's scatter-gather.
   */
 final case class Graph(vertices: DataFrame, edges: DataFrame) {
 
@@ -23,6 +26,19 @@ final case class Graph(vertices: DataFrame, edges: DataFrame) {
   def undirectedEdges: DataFrame =
     edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
+
+  /** The static side of the undirected superstep loops: both directions of
+    * every edge, the edge columns `extra` carried along, restricted to
+    * edges whose `dst` is a vertex (`src` is restricted by each
+    * superstep's inner join against the state, but a `dst` outside the
+    * vertex set would inject a phantom result row; Gelly keys results to
+    * the vertex set), partitioned on `src` and materialized once. */
+  private[graph] def undirectedLoopEdges(extra: String*): DataFrame =
+    edges.select((Seq(col("src"), col("dst")) ++ extra.map(col)): _*)
+      .union(edges.select(
+        (Seq(col("dst").as("src"), col("src").as("dst")) ++ extra.map(col)): _*))
+      .join(vertices.select(col("vid").as("dst")), Seq("dst"), "left_semi")
+      .repartition(col("src")).localCheckpoint()
 
   def outDegrees: DataFrame =
     edges.groupBy(col("src").as("vid")).agg(count(lit(1)).as("deg"))
@@ -207,12 +223,11 @@ final case class Graph(vertices: DataFrame, edges: DataFrame) {
     * `vid` column and fresh attribute identities each round (re-alias
     * outputs, as the library algorithms do). */
   def runScatterGatherIteration(initial: DataFrame, maxIter: Int,
-                                checkpointEvery: Int = 5,
-                                converged: (DataFrame, DataFrame) => Boolean = (_, _) => false)
+                                checkpointEvery: Int = 5)
                                (scatter: DataFrame => DataFrame)
                                (gather: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val e = edges.repartition(col("src")).localCheckpoint()
-    graft.operators.Iterate.bulk(initial, maxIter, checkpointEvery, converged) { cur =>
+    Iterate.bulk(initial, maxIter, checkpointEvery) { cur =>
       val triplets = e.join(cur.withColumnRenamed("vid", "src"), "src")
       gather(cur, scatter(triplets))
     }
@@ -251,44 +266,48 @@ final case class Graph(vertices: DataFrame, edges: DataFrame) {
 
 object GraphAlgorithms {
 
-  /** Connected components by iterative min-label propagation (reference
-    * `graph/library/ConnectedComponents.java`). Converges once no label
-    * changes; each superstep = one co-partitioned join + min-agg. */
-  def connectedComponents(g: Graph, maxIter: Int = 50): DataFrame = {
-    // restrict edge endpoints to the vertex set ONCE, outside the loop:
-    // src is restricted naturally by the per-superstep inner join against
-    // the solution set, but a dst absent from vertices would inject a
-    // phantom result row (Gelly keys results to the vertex set)
-    val und = g.undirectedEdges
-      .join(g.vertices.select(col("vid").as("dst")), "dst", "left_semi")
-      .repartition(col("src")).localCheckpoint()
+  /** The scaffold both CC variants share: labels start at (vid, comp =
+    * vid) and `step(edges, cur)` min-folds them over the vertex-restricted
+    * undirected edges, materialized every superstep (the steps reference
+    * `cur` two and three times). Convergence is the LABEL-SUM fixpoint,
+    * not a join: labels only ever decrease, so equal consecutive sums ⇔ no
+    * label moved. The sum and a count ride each superstep's checkpoint job
+    * as observed metrics (r13); the old old⋈next change-join cost a full
+    * extra job per round. decimal(38,0) is exact to Σ comp < 10^38, which
+    * n·maxId never reaches. The count makes emptiness EXPLICIT: sum(decimal)
+    * is also null on overflow (ANSI off), so an empty vertex set is
+    * (null, 0) and stops, and an overflow is (null, n > 0) and fails
+    * loudly instead of stopping early with wrong labels. */
+  private def labelSumFixpoint(g: Graph, maxIter: Int)
+                              (step: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val und = g.undirectedLoopEdges()
     val init = g.vertices.select(col("vid"), col("vid").as("comp"))
-    // stride 1: the step references `cur` twice (neighbor join + union), so
-    // un-checkpointed plans double per round — see connectedComponentsFast.
-    // Convergence by label-sum fixpoint as an OBSERVED metric on the
-    // checkpoint job (r13): labels are min-folded, hence monotone
-    // non-increasing, so equal consecutive sums ⇔ no label moved — the
-    // old old⋈next change-join cost a full extra job per round.
     var prevSum: java.math.BigDecimal = null
-    Iterate.bulkObserved(init, maxIter, checkpointEvery = 1,
+    Iterate.bulk(init, maxIter, checkpointEvery = 1,
       metrics = Seq(sum(col("comp").cast("decimal(38,0)")).as("s"),
         count(lit(1)).as("n")),
-      convergedOnMetrics = m => {
+      done = m => {
         val s = m("s").asInstanceOf[java.math.BigDecimal]
         val n = m("n").asInstanceOf[Long]
         if (s == null && n > 0) throw new IllegalStateException(
-          "connectedComponents: label sum overflowed decimal(38,0)")
-        val done = n == 0 || (prevSum != null && s.compareTo(prevSum) == 0)
+          s"connected components: label sum overflowed decimal(38,0) " +
+            s"over $n vertices — labels exceed the 10^38 sum bound")
+        val stop = n == 0 || (prevSum != null && s.compareTo(prevSum) == 0)
         prevSum = s
-        done
-      }) { cur =>
-      val candidates = und
-        .join(cur.withColumnRenamed("vid", "src"), "src")
+        stop
+      })(step(und, _))
+  }
+
+  /** Connected components by iterative min-label propagation (reference
+    * `graph/library/ConnectedComponents.java`). Converges once no label
+    * changes; each superstep = one co-partitioned join + min-agg. */
+  def connectedComponents(g: Graph, maxIter: Int = 50): DataFrame =
+    labelSumFixpoint(g, maxIter) { (und, cur) =>
+      und.join(cur.withColumnRenamed("vid", "src"), "src")
         .select(col("dst").as("vid"), col("comp"))
         .union(cur)
-      candidates.groupBy("vid").agg(min(col("comp")).as("comp"))
+        .groupBy("vid").agg(min(col("comp")).as("comp"))
     }
-  }
 
   /** Connected components with POINTER JUMPING: each superstep takes the
     * minimum of the own label, the neighbors' labels, and the label OF the
@@ -296,79 +315,35 @@ object GraphAlgorithms {
     * reach per round, so convergence is O(log diameter) supersteps instead
     * of the plain propagation's O(diameter) — on a path-heavy
     * billion-vertex graph that is ~30 shuffle rounds versus ~6. Result is
-    * identical to [[connectedComponents]] (min vid per component).
-    *
-    * `jumps` > 1 chases the label pointer that many times per superstep
-    * (each extra jump is one more self-join INSIDE the round): per-round
-    * plan cost grows linearly while the round count drops ~logarithmically
-    * in the jump depth — the right trade whenever per-round fixed cost
-    * (shuffle barriers, checkpoint actions) dominates, which is both the
-    * tiny-graph regime (scheduling overhead) and the 100 TB regime (every
-    * round is a full barrier). The converged fixpoint is identical at any
-    * depth; labels only ever decrease. */
-  def connectedComponentsFast(g: Graph, maxIter: Int = 20,
-                              jumps: Int = 1): DataFrame = {
-    require(jumps >= 1 && jumps <= 4, s"jump depth out of range: $jumps")
-    val und = g.undirectedEdges
-      .join(g.vertices.select(col("vid").as("dst")), Seq("dst"), "left_semi")
-      .repartition(col("src")).localCheckpoint()
-    val init = g.vertices.select(col("vid"), col("vid").as("comp"))
-    // convergence by LABEL-SUM fixpoint, not a join: every update takes
-    // least(...), so per-vertex labels are monotone non-increasing and the
-    // label sum strictly decreases until the fixpoint — equal consecutive
-    // sums ⇔ no label moved. One narrow aggregation over the checkpointed
-    // frame per round instead of a shuffle join + isEmpty (the dominant
-    // fixed cost of small-graph CC; the knn-clusters row measured the
-    // join-check at ~0.4 s/round pure overhead). decimal(38,0): exact and
-    // overflow-free to Σ comp < 10^38, which n·maxId never reaches.
-    var prevSum: java.math.BigDecimal = null
-    // count travels with the sum so emptiness is EXPLICIT: sum(decimal)
-    // also returns null on overflow (ANSI off), and conflating the two
-    // would silently stop iteration early with wrong labels — an empty
-    // vertex set is (null, 0); an overflow is (null, n > 0) and fails
-    // loudly (unreachable while Σ comp < 10^38 holds, but the assumption
-    // is now checked instead of encoded invisibly)
-    // checkpointEvery = 1: the step references `cur` THREE times (neighbor
-    // join, own labels, jump self-join), so an un-checkpointed plan grows
-    // 3^stride between cuts — stride-5 compiles a 243-reference tree before
-    // the first materialization. Linear-step loops (PageRank) measure equal
-    // at stride 1 vs 5 (DESIGN.md); a self-referencing step must cut every
-    // round. The label-sum ride the checkpoint job as observed metrics
-    // (r13) — previously a separate aggregation job per round.
-    Iterate.bulkObserved(init, maxIter, checkpointEvery = 1,
-      metrics = Seq(sum(col("comp").cast("decimal(38,0)")).as("s"),
-        count(lit(1)).as("n")),
-      convergedOnMetrics = m => {
-        val s = m("s").asInstanceOf[java.math.BigDecimal]
-        val n = m("n").asInstanceOf[Long]
-        if (s == null && n > 0) throw new IllegalStateException(
-          s"connectedComponentsFast: label sum overflowed decimal(38,0) " +
-            s"over $n vertices — labels exceed the 10^38 sum bound")
-        val done = n == 0 || (prevSum != null && s.compareTo(prevSum) == 0)
-        prevSum = s
-        done
-      }) { cur =>
-      // all columns re-aliased: jump is a self-join of cur against itself
+    * identical to [[connectedComponents]] (min vid per component). */
+  def connectedComponentsFast(g: Graph, maxIter: Int = 20): DataFrame =
+    labelSumFixpoint(g, maxIter) { (und, cur) =>
       val nm = und.join(cur.withColumnRenamed("vid", "src"), "src")
         .groupBy(col("dst").as("vid")).agg(min(col("comp")).as("nmin"))
       val own = cur.select(col("vid"), col("comp").as("own"))
       val jump = cur.select(col("vid").as("jv"), col("comp").as("jcomp"))
-      // re-alias vid too: the convergence check self-joins old vs next, so
-      // the step output must not reuse the input's attribute identities
-      val merged = own
-        .join(nm, Seq("vid"), "left")
+      // re-alias vid too: the jump self-joins cur, so the step output
+      // must not reuse the input's attribute identities
+      own.join(nm, Seq("vid"), "left")
         .join(jump, col("own") === col("jv"), "left")
         .select(col("vid").as("vid"),
           least(col("own"), coalesce(col("nmin"), col("own")),
             coalesce(col("jcomp"), col("own"))).as("comp"))
-      (1 until jumps).foldLeft(merged) { (m, _) =>
-        val mj = m.select(col("vid").as("mjv"), col("comp").as("mjcomp"))
-        m.select(col("vid"), col("comp").as("mown"))
-          .join(mj, col("mown") === col("mjv"), "left")
-          .select(col("vid").as("vid"),
-            least(col("mown"), coalesce(col("mjcomp"), col("mown")))
-              .as("comp"))
-      }
+    }
+
+  /** [[connectedComponentsFast]] for the clustering callers (dedup and
+    * k-NN clusters), materialized. Their candidate graphs are O(near-dups)
+    * or O(k·n) edges, orders smaller than the corpus, and each superstep's
+    * fixed job cost grows with shuffle partitions, so the supersteps run
+    * at max(8, min(2048, |edges| / 250000 + 1)) partitions: ~250k edge rows
+    * each, floor 8 (the measured fixture optimum), so a billion-edge graph
+    * gets thousands. `g.edges` should be materialized: the count then scans
+    * a checkpointed frame (both callers derive 8 at sf0.01 and sf0.1). It
+    * counts the RDD: one job, where `Dataset.count`'s exchange makes two. */
+  def clusterComponents(g: Graph): DataFrame = {
+    val parts = math.max(8, math.min(2048, (g.edges.rdd.count() / 250000L).toInt + 1))
+    PartitionOps.withShufflePartitions(g.edges.sparkSession, parts) {
+      connectedComponentsFast(g).localCheckpoint()
     }
   }
 
@@ -398,38 +373,25 @@ object GraphAlgorithms {
         .groupBy(col("src"), col("dst")).agg(min(col("weight")).as("weight"))
         .repartition(col("src")).localCheckpoint()
     }
+    // one frame per round, (vid, dist, cand): the solution keeps the
+    // better of dist and cand, the workset is the vertices cand improved
+    val improved = col("cand").isNotNull && col("cand") < col("dist")
     val init = g.vertices
       .join(sources.withColumn("is_src", lit(true)), Seq("vid"), "left")
-      .select(col("vid"),
-        when(col("is_src"), lit(0L)).otherwise(lit(Long.MaxValue)).as("dist"))
-    var solution = init.localCheckpoint()
-    var workset = solution.filter(col("dist") === 0L).localCheckpoint()
-    var i = 0
-    while (i < maxIter && !workset.isEmpty) {
-      // ONE materialization per round (optimization r13): checkpoint the
-      // joined (vid, dist, cand) frame and derive BOTH the next solution
-      // and the workset as narrow projections over it — the old shape
-      // checkpointed the workset (evaluating the whole join chain) and
-      // left the solution lazy, so each later round's evaluation re-ran
-      // up to `stride` rounds of join/aggregate lineage, and the workset
-      // isEmpty probe was a separate full job. Now isEmpty and both
-      // derivations scan the round's cached 8-partition frame.
-      val relaxed = e
-        .join(workset.withColumnRenamed("vid", "src"), "src")
-        .select(col("dst").as("vid"), (col("dist") + col("weight")).as("cand"))
-        .groupBy("vid").agg(min(col("cand")).as("cand"))
-      val joined = solution.join(relaxed, Seq("vid"), "left")
-        .select(col("vid"), col("dist"), col("cand"))
-        .localCheckpoint()
-      solution = joined.select(col("vid"),
-        when(col("cand").isNotNull && col("cand") < col("dist"), col("cand"))
-          .otherwise(col("dist")).as("dist"))
-      workset = joined
-        .filter(col("cand").isNotNull && col("cand") < col("dist"))
-        .select(col("vid"), col("cand").as("dist"))
-      i += 1
-    }
-    solution.select(col("vid"),
+      .select(col("vid"), lit(Long.MaxValue).as("dist"),
+        when(col("is_src"), lit(0L)).as("cand"))
+    Iterate.delta(init, maxIter)(
+      _.select(col("vid"),
+        when(improved, col("cand")).otherwise(col("dist")).as("dist")),
+      _.filter(improved).select(col("vid"), col("cand").as("dist"))) {
+      (solution, workset) =>
+        val relaxed = e
+          .join(workset.withColumnRenamed("vid", "src"), "src")
+          .select(col("dst").as("vid"), (col("dist") + col("weight")).as("cand"))
+          .groupBy("vid").agg(min(col("cand")).as("cand"))
+        solution.join(relaxed, Seq("vid"), "left")
+          .select(col("vid"), col("dist"), col("cand"))
+    }.select(col("vid"),
       when(col("dist") === Long.MaxValue, lit(null).cast("long"))
         .otherwise(col("dist")).as("dist"))
   }
@@ -476,25 +438,8 @@ object GraphAlgorithms {
     * label. Init label = vid. Synchronous fixed-iteration form: one
     * co-partitioned join + two map-side-combining aggregations per
     * superstep. */
-  def labelPropagation(g: Graph, maxIter: Int): DataFrame = {
-    val und = g.undirectedEdges
-      .join(g.vertices.select(col("vid").as("dst")), Seq("dst"), "left_semi")
-      .repartition(col("src")).localCheckpoint()
-    val init = g.vertices.select(col("vid"), col("vid").as("label"))
-    // stride 1: two `cur` references per step (votes + adoption join)
-    Iterate.bulk(init, maxIter, checkpointEvery = 1) { cur =>
-      val votes = und
-        .join(cur.withColumnRenamed("vid", "src"), "src")
-        .groupBy(col("dst").as("vid"), col("label"))
-        .agg(count(lit(1)).as("cnt"))
-      val adopted = votes.groupBy("vid")
-        .agg(max(struct(col("cnt"), col("label"))).getField("label")
-          .as("new_label"))
-      cur.join(adopted, Seq("vid"), "left")
-        .select(col("vid"),
-          coalesce(col("new_label"), col("label")).as("label"))
-    }
-  }
+  def labelPropagation(g: Graph, maxIter: Int): DataFrame =
+    voteSupersteps(g, g.undirectedLoopEdges(), count(lit(1)), maxIter)
 
   /** Community detection (reference `graph/library/CommunityDetection.java`
     * core rule): like label propagation but each neighbor's vote counts
@@ -503,21 +448,25 @@ object GraphAlgorithms {
     * reference's hop-attenuation refinement of vote scores is not
     * reproduced — it requires float score state whose accumulation order
     * is not cross-engine deterministic.) */
-  def communityDetection(g: Graph, maxIter: Int): DataFrame = {
-    val undW = g.edges.select(col("src"), col("dst"), col("weight"))
-      .union(g.edges.select(col("dst").as("src"), col("src").as("dst"),
-        col("weight")))
-      .join(g.vertices.select(col("vid").as("dst")), Seq("dst"), "left_semi")
-      .repartition(col("src")).localCheckpoint()
+  def communityDetection(g: Graph, maxIter: Int): DataFrame =
+    voteSupersteps(g, g.undirectedLoopEdges("weight"), sum(col("weight")), maxIter)
+
+  /** The synchronous vote both [[labelPropagation]] and
+    * [[communityDetection]] run: labels start at vid, and each superstep
+    * every vertex adopts the neighbor label with the highest `score` (an
+    * aggregate over its votes' edge rows), ties to the highest label;
+    * vertices without votes keep theirs. Stride 1: the step references
+    * `cur` twice (votes + adoption join). */
+  private def voteSupersteps(g: Graph, und: DataFrame, score: Column,
+                             maxIter: Int): DataFrame = {
     val init = g.vertices.select(col("vid"), col("vid").as("label"))
-    // stride 1: two `cur` references per step (votes + adoption join)
     Iterate.bulk(init, maxIter, checkpointEvery = 1) { cur =>
-      val votes = undW
+      val votes = und
         .join(cur.withColumnRenamed("vid", "src"), "src")
         .groupBy(col("dst").as("vid"), col("label"))
-        .agg(sum(col("weight")).as("w"))
+        .agg(score.as("score"))
       val adopted = votes.groupBy("vid")
-        .agg(max(struct(col("w"), col("label"))).getField("label")
+        .agg(max(struct(col("score"), col("label"))).getField("label")
           .as("new_label"))
       cur.join(adopted, Seq("vid"), "left")
         .select(col("vid"),
@@ -546,18 +495,17 @@ object GraphAlgorithms {
   def communityDetectionExact(g: Graph, maxIter: Int, deltaNum: Long = 1L,
                               deltaDen: Long = 2L,
                               scale: Long = 1000000L): DataFrame = {
-    val undW = g.edges.select(col("src"), col("dst"), col("weight"))
-      .union(g.edges.select(col("dst").as("src"), col("src").as("dst"),
-        col("weight")))
-      .join(g.vertices.select(col("vid").as("dst")), Seq("dst"), "left_semi")
-      .repartition(col("src")).localCheckpoint()
-    var cur = g.vertices
-      .select(col("vid"), col("vid").as("label"), lit(scale).as("score_q"))
-      .localCheckpoint()
-    for (i <- 1 to maxIter) {
+    val penalties = (1 to maxIter).map { i =>
       require(scale * deltaNum % (deltaDen * i) == 0,
         s"hop penalty not integral at superstep $i: pick a scale divisible by ${deltaDen * i}")
-      val penalty = scale * deltaNum / (deltaDen * i)
+      scale * deltaNum / (deltaDen * i)
+    }.iterator
+    val undW = g.undirectedLoopEdges("weight")
+    val init = g.vertices
+      .select(col("vid"), col("vid").as("label"), lit(scale).as("score_q"))
+    // stride 1: two `cur` references per step (messages + adoption join)
+    Iterate.bulk(init, maxIter, checkpointEvery = 1) { cur =>
+      val penalty = penalties.next()
       val msgs = undW
         .join(cur.withColumnRenamed("vid", "src"), "src")
         .select(col("dst").as("vid"), col("label"),
@@ -569,15 +517,13 @@ object GraphAlgorithms {
         .agg(min(struct((-col("sum_s")).as("neg"), col("label").as("l"),
           col("max_s").as("m"))).as("c"))
         .select(col("vid"), col("c.l").as("new_label"), col("c.m").as("new_max"))
-      val next = cur.join(chosen, Seq("vid"), "left")
+      cur.join(chosen, Seq("vid"), "left")
         .select(col("vid"),
           coalesce(col("new_label"), col("label")).as("label"),
           when(col("new_label").isNull, col("score_q"))
             .when(col("new_label") === col("label"), col("new_max"))
             .otherwise(col("new_max") - penalty).as("score_q"))
-      cur = next.localCheckpoint()
     }
-    cur
   }
 
   /** HITS hubs-and-authorities (reference
@@ -806,6 +752,8 @@ object GraphAlgorithms {
                     dampDen: Long = 100L,
                     scale: Long = 1000000000000L): DataFrame = {
     val n = g.vertices.count()
+    // no vertices, no rank mass to split (scale / n would divide by zero)
+    if (n == 0) return g.vertices.select(col("vid"), lit(0L).as("rank_q"))
     // static per-superstep inputs are built ONCE: edges carry their source
     // degree (one join hoisted out of the loop), pre-partitioned on the
     // join key so each round shuffles only the rank state, never the

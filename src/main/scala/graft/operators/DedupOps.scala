@@ -407,10 +407,9 @@ object DedupOps {
     * keeps unpaired docs as their own clusters (the full-corpus view);
     * `false` restricts to docs that participate in at least one pair (the
     * curation view). Composition of hash-partitioned stages + the CC
-    * join-iteration — nothing quadratic. The CC supersteps run at a
-    * partition count sized to the candidate graph — it is O(near-dups),
-    * orders smaller than the corpus — because each superstep's fixed job
-    * cost scales with shuffle partitions. */
+    * join-iteration — nothing quadratic. The CC supersteps run at the
+    * edge-derived partition count of
+    * [[graft.graph.GraphAlgorithms.clusterComponents]]. */
   def dedupClusters(docs: DataFrame, textCol: String = "text",
                     idCol: String = "doc_id",
                     minJaccard: Double = 0.5,
@@ -423,18 +422,12 @@ object DedupOps {
       .getOrElse(minhashLshPairs(docs, textCol, idCol))
       .filter(col("est_jaccard") >= minJaccard)
       .select(col("id1"), col("id2")).localCheckpoint()
-    val spark = docs.sparkSession
-    // caps the jobs of the CC superstep loop and its closing checkpoint
-    val cc = PartitionOps.withShufflePartitions(spark, 8) {
-      val verts =
-        if (includeSingletons) docs.select(col(idCol).as("vid"))
-        else pairs.select(col("id1").as("vid"))
-          .union(pairs.select(col("id2").as("vid"))).distinct()
-      graft.graph.GraphAlgorithms.connectedComponentsFast(
-          graft.graph.Graph(verts,
-            pairs.select(col("id1").as("src"), col("id2").as("dst"))))
-        .localCheckpoint()
-    }
+    val verts =
+      if (includeSingletons) docs.select(col(idCol).as("vid"))
+      else pairs.select(col("id1").as("vid"))
+        .union(pairs.select(col("id2").as("vid"))).distinct()
+    val cc = graft.graph.GraphAlgorithms.clusterComponents(graft.graph.Graph(
+      verts, pairs.select(col("id1").as("src"), col("id2").as("dst"))))
     cc.withColumn("cluster_size", count(lit(1)).over(
         Window.partitionBy(col("comp"))))
       .select(col("vid").as(idCol), col("comp").as("cluster_id"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 
 /** Driver-loop iteration helpers — the Spark mapping of the reference's
   * bulk/delta iterations (`DataSet.iterate` `DataSet.java:1156`,
@@ -32,75 +32,58 @@ object Iterate {
     if (df.queryExecution.optimizedPlan.stats.sizeInBytes.bitLength <= 96) df
     else df.sparkSession.createDataFrame(df.rdd, df.schema)
 
-  /** Bulk iteration: repeat `step` until `maxIter` or until `converged`
-    * (old, new) returns true. The convergence predicate launches extra jobs,
-    * so it is only evaluated at checkpoint strides — a few overshoot rounds
-    * are cheaper than doubling the job count. */
+  /** Bulk iteration: apply `step` up to `maxIter` times, materializing
+    * every `checkpointEvery`-th round. `metrics` are aggregate expressions
+    * over the new frame evaluated by the SAME job that materializes a
+    * stride (observed metrics, optimization r13), so a convergence signal
+    * costs no job of its own; `done` sees their named values after each
+    * stride (it typically closes over the previous stride's) and ends the
+    * loop when it returns true. A step that references `cur` k ≥ 2 times
+    * needs stride 1: its un-checkpointed plan grows k^stride references
+    * between cuts. The result is materialized exactly once: a frame the
+    * last stride checkpointed is returned as it is. */
   def bulk(init: DataFrame, maxIter: Int, checkpointEvery: Int = 5,
-           converged: (DataFrame, DataFrame) => Boolean = (_, _) => false)
+           metrics: Seq[Column] = Nil,
+           done: Map[String, Any] => Boolean = _ => false)
           (step: DataFrame => DataFrame): DataFrame = {
     var cur = init.localCheckpoint()
+    var materialized = true
+    var stop = false
     var i = 0
-    var done = false
-    while (i < maxIter && !done) {
-      val atStride = (i + 1) % checkpointEvery == 0
-      val next =
-        if (atStride) statsSane(step(cur).localCheckpoint()) else step(cur)
-      if (atStride && converged(cur, next)) done = true
-      cur = next
+    while (i < maxIter && !stop) {
+      materialized = (i + 1) % checkpointEvery == 0
+      cur =
+        if (!materialized) step(cur)
+        else if (metrics.isEmpty) statsSane(step(cur).localCheckpoint())
+        else {
+          val obs = Observation()
+          val next = statsSane(
+            step(cur).observe(obs, metrics.head, metrics.tail: _*).localCheckpoint())
+          stop = done(obs.get)
+          next
+        }
       i += 1
     }
-    cur.localCheckpoint()
+    if (materialized) cur else cur.localCheckpoint()
   }
 
-  /** [[bulk]] with the convergence signal folded INTO the per-stride
-    * checkpoint job as observed metrics (optimization r13): `converged`
-    * predicates that aggregate the new frame (label sums, change counts)
-    * used to launch one extra Spark job per stride — at stride 1 that is
-    * half of every superstep's job count, pure fixed cost on small/medium
-    * graphs. `metrics` are aggregate expressions evaluated by the SAME
-    * job that materializes the checkpoint; `convergedOnMetrics` sees their
-    * named values (and typically closes over the previous round's). */
-  def bulkObserved(init: DataFrame, maxIter: Int, checkpointEvery: Int = 1,
-                   metrics: Seq[org.apache.spark.sql.Column] = Nil,
-                   convergedOnMetrics: Map[String, Any] => Boolean = _ => false)
-                  (step: DataFrame => DataFrame): DataFrame = {
-    require(metrics.nonEmpty, "bulkObserved needs at least one metric")
-    var cur = init.localCheckpoint()
+  /** Delta iteration (reference iterateDelta semantics): a solution set
+    * and a workset, ending when the workset is empty or after `maxIter`
+    * rounds. Each round materializes ONE frame, and the round's solution
+    * and workset are both narrow projections over it (`solution(frame)`,
+    * `workset(frame)`; optimization r13): the emptiness probe and both
+    * derivations scan the round's checkpoint, and no round re-runs the
+    * lineage of an earlier one. `init` is the first frame; `step` maps
+    * (solution, workset) to the next. Returns the last frame's solution. */
+  def delta(init: DataFrame, maxIter: Int)
+           (solution: DataFrame => DataFrame, workset: DataFrame => DataFrame)
+           (step: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    var frame = init.localCheckpoint()
     var i = 0
-    var done = false
-    while (i < maxIter && !done) {
-      if ((i + 1) % checkpointEvery == 0) {
-        val obs = org.apache.spark.sql.Observation()
-        val next = statsSane(
-          step(cur).observe(obs, metrics.head, metrics.tail: _*)
-            .localCheckpoint())
-        done = convergedOnMetrics(obs.get)
-        cur = next
-      } else cur = step(cur)
+    while (i < maxIter && !workset(frame).isEmpty) {
+      frame = step(solution(frame), workset(frame)).localCheckpoint()
       i += 1
     }
-    cur.localCheckpoint()
-  }
-
-  /** Delta iteration: maintain a solution set and a shrinking workset; stop
-    * when the workset is empty (reference iterateDelta semantics). `step`
-    * maps (solution, workset) to (updatedSolution, newWorkset). */
-  def delta(initialSolution: DataFrame, initialWorkset: DataFrame,
-            maxIter: Int, checkpointEvery: Int = 5)
-           (step: (DataFrame, DataFrame) => (DataFrame, DataFrame)): DataFrame = {
-    var solution = initialSolution.localCheckpoint()
-    var workset = initialWorkset.localCheckpoint()
-    var i = 0
-    while (i < maxIter && !workset.isEmpty) {
-      val (s, w) = step(solution, workset)
-      if ((i + 1) % checkpointEvery == 0) {
-        solution = s.localCheckpoint(); workset = w.localCheckpoint()
-      } else {
-        solution = s; workset = w.localCheckpoint() // isEmpty forces eval
-      }
-      i += 1
-    }
-    solution
+    solution(frame)
   }
 }

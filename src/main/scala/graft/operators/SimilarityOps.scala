@@ -1864,14 +1864,9 @@ object SimilarityOps {
     * regions through hubs; mutual edges don't). Every vector appears,
     * singletons as their own cluster; labels are the component's min id,
     * with the size alongside — the [[graft.operators.DedupOps.dedupClusters]]
-    * contract on the embedding side. The CC supersteps run at a partition
-    * count sized to the edge graph (O(k·n) edges, not corpus-sized),
-    * derived from the ACTUAL edge count (~250k edge rows per partition,
-    * floor 8 — the measured fixture optimum — capped at 2048), so a
-    * billion-edge graph at 100 TB gets thousands of CC partitions instead
-    * of a fixture-sized constant. The edge list is already
-    * localCheckpoint-ed, so the sizing count is a cached-partition sweep,
-    * not a recompute. */
+    * contract on the embedding side. The CC supersteps run at the
+    * edge-derived partition count of
+    * [[graft.graph.GraphAlgorithms.clusterComponents]]. */
   def knnClusters(embs: DataFrame, k: Int = 3, bits: Int = 0,
                   minIcos: Long = 0L, vecCol: String = "embedding",
                   idCol: String = "vec_id",
@@ -1883,7 +1878,6 @@ object SimilarityOps {
     val mutual = precomputedGraph.getOrElse(knnGraph(embs, k, bits, vecCol, idCol))
       .filter(col("mutual") && col("icos") >= minIcos && col("src") < col("dst"))
       .select(col("src"), col("dst")).localCheckpoint()
-    val spark = embs.sparkSession
     // CC iterates over PAIRED vertices only — mutual-kNN graphs are mostly
     // singletons (every unpaired vector would otherwise ride every
     // superstep's three joins for nothing; measured 9.3 s → the dominant
@@ -1891,13 +1885,8 @@ object SimilarityOps {
     // cluster afterwards via one left join.
     val paired = mutual.select(col("src").as("vid"))
       .union(mutual.select(col("dst").as("vid"))).distinct()
-    val ccParts = math.max(8, math.min(2048, (mutual.count() / 250000L).toInt + 1))
-    // caps the jobs of the CC superstep loop and its closing checkpoint
-    val cc = PartitionOps.withShufflePartitions(spark, ccParts) {
-      graft.graph.GraphAlgorithms.connectedComponentsFast(
-          graft.graph.Graph(paired, mutual))
-        .localCheckpoint()
-    }
+    val cc = graft.graph.GraphAlgorithms.clusterComponents(
+      graft.graph.Graph(paired, mutual))
     embs.select(col(idCol).as("vid"))
       .join(cc, Seq("vid"), "left")
       .select(col("vid"), coalesce(col("comp"), col("vid")).as("cluster_id"))

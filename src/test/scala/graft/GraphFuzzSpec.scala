@@ -41,6 +41,30 @@ class GraphFuzzSpec extends SparkSpecBase {
     assert(fast == comp, "pointer-jumping CC diverged from union-find")
   }
 
+  test("label propagation and community detection match a local synchronous vote") {
+    // both directions of every edge; a vertex adopts the label with the
+    // best score among its neighbors' labels (ties to the highest label)
+    // and keeps its own when it has no neighbors
+    val nbrs = (rawEdges ++ rawEdges.map(e => (e._2, e._1, e._3))).groupBy(_._1)
+    def vote(rounds: Int, score: Seq[(Long, Long)] => Long): Map[Long, Long] =
+      (1 to rounds).foldLeft(vids.map(v => v -> v).toMap) { (lab, _) =>
+        vids.map { v =>
+          val byLabel = nbrs.getOrElse(v, Vector.empty)
+            .map(e => (lab(e._2), e._3)).groupBy(_._1)
+          v -> (if (byLabel.isEmpty) lab(v)
+            else byLabel.iterator.map { case (l, vs) => (score(vs), l) }.max._2)
+        }.toMap
+      }
+    def m(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    for (rounds <- Seq(1, 4)) {
+      assert(m(GraphAlgorithms.labelPropagation(graph, rounds)) ==
+        vote(rounds, _.size.toLong), s"LP, $rounds rounds")
+      assert(m(GraphAlgorithms.communityDetection(graph, rounds)) ==
+        vote(rounds, _.map(_._2).sum), s"CD, $rounds rounds")
+    }
+  }
+
   test("multi-source shortest paths match local Dijkstra") {
     import spark.implicits._
     val sources = vids.filter(_ % 17 == 0)

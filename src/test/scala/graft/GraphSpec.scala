@@ -75,25 +75,6 @@ class GraphSpec extends SparkSpecBase {
     assert((0L to 15L).forall(v => fast(v) == 0L) && fast(16L) == 16L)
   }
 
-  test("multi-jump CC (jumps 2..4) equals single-jump labels on a path-heavy graph") {
-    import spark.implicits._
-    // 24-vertex path + isolated vertex: deep enough that the multi-jump
-    // foldLeft (re-aliasing + null coalescing) actually chases pointers
-    // across rounds; the converged fixpoint must be identical at any depth
-    val vs = (0L to 24L).toDF("vid")
-    val es = (0L until 23L).map(i => (i, i + 1, 1L)).toDF("src", "dst", "weight")
-    val g = Graph(vs, es)
-    val base = GraphAlgorithms.connectedComponentsFast(g, maxIter = 10)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    for (j <- 2 to 4) {
-      val multi = GraphAlgorithms.connectedComponentsFast(g, maxIter = 10,
-          jumps = j)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(multi == base, s"jumps=$j diverged: $multi vs $base")
-    }
-    assert((0L to 23L).forall(v => base(v) == 0L) && base(24L) == 24L)
-  }
-
   test("summarize contracts same-valued vertices and groups edges by value pair") {
     import spark.implicits._
     val verts = Seq((1L, 10L), (2L, 10L), (3L, 20L)).toDF("vid", "value")
@@ -104,6 +85,59 @@ class GraphSpec extends SparkSpecBase {
     val sem = se.collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(sem == Map((10L, 10L) -> 1L, (10L, 20L) -> 2L))
+  }
+
+  test("every iterating algorithm returns 0 rows with its schema on an empty graph") {
+    import spark.implicits._
+    val empty = Graph(Seq.empty[Long].toDF("vid"),
+      Seq.empty[(Long, Long, Long)].toDF("src", "dst", "weight"))
+    val runs = Seq(
+      GraphAlgorithms.connectedComponents(empty) -> Seq("vid", "comp"),
+      GraphAlgorithms.connectedComponentsFast(empty) -> Seq("vid", "comp"),
+      GraphAlgorithms.shortestPaths(empty, Seq.empty[Long].toDF("vid")) ->
+        Seq("vid", "dist"),
+      GraphAlgorithms.labelPropagation(empty, maxIter = 2) -> Seq("vid", "label"),
+      GraphAlgorithms.communityDetection(empty, maxIter = 2) -> Seq("vid", "label"),
+      GraphAlgorithms.communityDetectionExact(empty, maxIter = 2) ->
+        Seq("vid", "label", "score_q"),
+      GraphAlgorithms.hits(empty) -> Seq("vid", "auth", "hub"),
+      GraphAlgorithms.pageRank(empty) -> Seq("vid", "rank"),
+      GraphAlgorithms.pageRankExact(empty) -> Seq("vid", "rank_q"))
+    runs.foreach { case (df, cols) =>
+      assert(df.columns.toSeq == cols)
+      assert(df.count() == 0L, cols.mkString(","))
+    }
+  }
+
+  test("Iterate.bulk stops at the first stride whose observed metrics say so") {
+    import graft.operators.Iterate
+    val init = spark.range(1).select(col("id").as("x"))
+    val step = (cur: org.apache.spark.sql.DataFrame) =>
+      cur.select((col("x") + 1).as("x"))
+    // metrics ride only the strides' checkpoint jobs: every 2nd round
+    for ((stride, want, seenWant) <- Seq((1, 3L, Seq(1L, 2L, 3L)), (2, 4L, Seq(2L, 4L)))) {
+      val seen = scala.collection.mutable.ArrayBuffer[Long]()
+      val out = Iterate.bulk(init, maxIter = 10, checkpointEvery = stride,
+        metrics = Seq(max(col("x")).as("m")),
+        done = m => { seen += m("m").asInstanceOf[Long]; seen.last >= 3L })(step)
+      assert(out.collect().map(_.getLong(0)).toSeq == Seq(want))
+      assert(seen.toSeq == seenWant)
+    }
+    // a frame the last stride checkpointed is not checkpointed again:
+    // one job for the initial frame, one per round
+    val (_, jobs) = jobsDuring(Iterate.bulk(init, maxIter = 3, checkpointEvery = 1)(step))
+    assert(jobs == 4, s"jobs=$jobs")
+  }
+
+  test("Iterate.bulk and Iterate.delta at maxIter = 0 return the initial rows") {
+    import graft.operators.Iterate
+    val init = spark.range(3).select(col("id").as("x"), (col("id") * 10).as("y"))
+    val bulk = Iterate.bulk(init, maxIter = 0)(_ => sys.error("no round runs"))
+    assert(bulk.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      Set((0L, 0L), (1L, 10L), (2L, 20L)))
+    val delta = Iterate.delta(init, maxIter = 0)(
+      _.select(col("x")), _.filter(col("y") > 0))((_, _) => sys.error("no round runs"))
+    assert(delta.collect().map(_.getLong(0)).toSet == Set(0L, 1L, 2L))
   }
 
   test("pageRankExact hits the 2-cycle fixed point exactly") {
