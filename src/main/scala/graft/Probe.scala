@@ -27,7 +27,9 @@ import org.apache.spark.sql.SparkSession
   * print as one `[probe-stream] <name> rep<r> q=<query> b=<batchId>
   * rows=… <durationMs split> | <state ops>` line per micro-batch, then one
   * summary line: batches, Σ addBatch, Σ (triggerExecution − addBatch) as
-  * `overhead`, Σ state commit, state-store instances and late rows dropped.
+  * `overhead`, Σ state commit, state-store instances, late rows dropped and
+  * `forks`, the child processes the JVM started during the row
+  * ([[ProcessStarts]]).
   */
 object Probe {
   private val PhaseKey = "graft.probe.phase"
@@ -95,6 +97,7 @@ object Probe {
     val listener = new PartsListener
     sc.addSparkListener(listener)
     val streams = StreamProgress.attach(spark)
+    val forks = new ProcessStarts()
     def inPhase[T](ph: String)(body: => T): T = {
       sc.setLocalProperty(PhaseKey, ph)
       try body finally sc.setLocalProperty(PhaseKey, null)
@@ -102,6 +105,7 @@ object Probe {
     for (name <- names; r <- 1 to reps) {
       val ph = s"$name#$r#"
       val mark = streams.mark()
+      val forkMark = forks.mark()
       // time the construction separately: streaming queries run to
       // completion inside the query function (runToTable awaits
       // termination), so their cost lands in build, not count
@@ -141,10 +145,12 @@ object Probe {
           f"batches=${t.batches} addbatch=${t.addBatchMs / 1e3}%.2fs " +
           f"overhead=${t.overheadMs / 1e3}%.2fs " +
           f"statecommit=${t.stateCommitMs / 1e3}%.2fs " +
-          f"instances=${t.stateInstances} late=${t.lateDropped}")
+          f"instances=${t.stateInstances} late=${t.lateDropped} " +
+          f"forks=${forks.since(forkMark).size}")
       }
       sc.getPersistentRDDs.values.foreach(_.unpersist(false))
     }
+    forks.close()
     spark.stop()
   }
 }

@@ -751,7 +751,8 @@ object GraphAlgorithms {
   def pageRankExact(g: Graph, iters: Int = 10, dampNum: Long = 85L,
                     dampDen: Long = 100L,
                     scale: Long = 1000000000000L): DataFrame = {
-    val n = g.vertices.count()
+    // the RDD count is one job; `Dataset.count`'s exchange makes two
+    val n = g.vertices.rdd.count()
     // no vertices, no rank mass to split (scale / n would divide by zero)
     if (n == 0) return g.vertices.select(col("vid"), lit(0L).as("rank_q"))
     // static per-superstep inputs are built ONCE: edges carry their source
@@ -780,7 +781,7 @@ object GraphAlgorithms {
     * cross-engine hashes are not defined for this op — correctness is pinned
     * by GraphSpec against hand-computed values instead of the SQL oracle. */
   def pageRank(g: Graph, iters: Int = 10, damping: Double = 0.85): DataFrame = {
-    val n = g.vertices.count()
+    val n = g.vertices.rdd.count()
     val ew = g.edges.select(col("src"), col("dst"))
       .join(g.outDegrees.withColumnRenamed("vid", "src"), "src")
       .repartition(col("src")).localCheckpoint()

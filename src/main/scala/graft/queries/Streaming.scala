@@ -121,13 +121,9 @@ object Streaming extends QuerySet {
       val agg = events(s, dir)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n"), sum(cents("value")).as("sum_cents"))
-      graft.operators.PartitionOps.withShufflePartitions(s, 8) {
-        val q = agg.writeStream.format("noop").outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      EventStream.start(s, agg.writeStream.format("noop").outputMode("update")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
+        statePartitions = 8, checkpoint = Some(ckpt))(_.awaitTermination())
       // state buffer fields for count/sum are named `count`/`sum`
       StatefulOps.queryableState(s, ckpt)
         .select(col("key.user_id").as("user_id"),

@@ -76,87 +76,85 @@ object IterateStream {
     // of waiting out the silence window
     val drainedBatch = new java.util.concurrent.atomic.AtomicLong(-1L)
     val stream = spark.readStream.schema(rowSchema).parquet(srcDir)
-    val q = graft.operators.PartitionOps.withShufflePartitions(spark, 4) {
-      stream.writeStream
-        .foreachBatch { (b: DataFrame, batchId: Long) =>
-          val batch = b.persist()
-          try {
-            def step(d: DataFrame): DataFrame =
-              d.filter(continues(col("value")))
-                .select(col("id"), (col("iter") + 1).as("iter"),
-                  stepValue(col("value")).as("value"))
-            // unrolled levels: batch, step(batch), …, step^(unroll−1)(batch)
-            // — all narrow transforms over the persisted batch
-            val levels = (1 until unroll)
-              .scanLeft(batch: DataFrame)((d, _) => step(d))
-            // the feedback-row count rides the output write as an observed
-            // metric (optimization r13): the separate fb.isEmpty job cost
-            // one extra Spark job per round (measured 0.3–0.6 s across the
-            // 14-round halving run) and the observation is exact where
-            // isEmpty was a limit-1 probe. Only the LAST level's survivors
-            // feed back; the marker column never reaches the sink.
-            val emit = levels.init.map(_.withColumn("__last", lit(false)))
-              .foldRight(levels.last.withColumn("__last", lit(true)))(_ unionByName _)
-            val obs = org.apache.spark.sql.Observation()
-            emit.observe(obs,
-                count(when(col("__last") && continues(col("value")), 1))
-                  .as("fb_n"))
-              .drop("__last")
-              .write.mode("append").parquet(outDir) // output edge
-            val fbRows = obs.get("fb_n").asInstanceOf[Long]
-            val fb = step(levels.last)
-            if (fbRows > 0L) {
-              val fbStage = new Path(base,
-                s"stage-fb-${feedbackId.incrementAndGet()}").toString
-              fb.write.parquet(fbStage) // distributed write...
-              StagingFs.adoptParts(spark, fbStage, srcDir, // ...renamed into the head
-                s"fb-${feedbackId.get()}")
-            } else drainedBatch.set(batchId)
-          } finally batch.unpersist()
-        }
-        .trigger(Trigger.ProcessingTime("25 milliseconds"))
-        .start()
-    }
-    try {
-      // quiescence = the feedback edge went silent: feedback files land in
-      // the source BEFORE a batch commits, so while data flows, batches
-      // chain back-to-back; once no new batch commits for a few trigger
-      // intervals after at least one ran, the loop has drained (the
-      // reference's loops likewise end only when feedback stops)
-      val deadline = System.nanoTime() + timeoutMs * 1000000L
-      var lastBatch = -1L
-      var lastChangeNs = System.nanoTime()
-      var ranAny = false
-      var done = false
-      while (!done && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        // stream death is an error, never quiescence: without this check a
-        // failed query stops committing batches and the silence timer would
-        // return partial output as success
-        q.exception.foreach(e => throw e)
-        val p = q.lastProgress
-        if (p != null && p.batchId != lastBatch) {
-          lastBatch = p.batchId
-          lastChangeNs = System.nanoTime()
-          if (p.numInputRows > 0) ranAny = true
-        }
-        // data rounds chain within ~one trigger interval; 2 s of silence
-        // is ~40 intervals of margin. lastProgress only advances on batch
-        // COMMIT, so silence alone cannot distinguish "drained" from "one
-        // slow batch still running" — also require no trigger in flight
-        // and no data waiting at the poll instant
-        val st = q.status
-        val silent = System.nanoTime() - lastChangeNs > 2000000000L
-        // fast path: the zero-feedback batch has committed — deterministic
-        // drain, no silence margin needed (the silence window stays as the
-        // fallback for runs whose last batch raced the progress poll)
-        val drained = p != null && p.batchId == drainedBatch.get()
-        done = ranAny && !st.isTriggerActive && !st.isDataAvailable &&
-          (drained || silent)
+    EventStream.start(spark, stream.writeStream
+      .foreachBatch { (b: DataFrame, batchId: Long) =>
+        val batch = b.persist()
+        try {
+          def step(d: DataFrame): DataFrame =
+            d.filter(continues(col("value")))
+              .select(col("id"), (col("iter") + 1).as("iter"),
+                stepValue(col("value")).as("value"))
+          // unrolled levels: batch, step(batch), …, step^(unroll−1)(batch)
+          // — all narrow transforms over the persisted batch
+          val levels = (1 until unroll)
+            .scanLeft(batch: DataFrame)((d, _) => step(d))
+          // the feedback-row count rides the output write as an observed
+          // metric (optimization r13): the separate fb.isEmpty job cost
+          // one extra Spark job per round (measured 0.3–0.6 s across the
+          // 14-round halving run) and the observation is exact where
+          // isEmpty was a limit-1 probe. Only the LAST level's survivors
+          // feed back; the marker column never reaches the sink.
+          val emit = levels.init.map(_.withColumn("__last", lit(false)))
+            .foldRight(levels.last.withColumn("__last", lit(true)))(_ unionByName _)
+          val obs = org.apache.spark.sql.Observation()
+          emit.observe(obs,
+              count(when(col("__last") && continues(col("value")), 1))
+                .as("fb_n"))
+            .drop("__last")
+            .write.mode("append").parquet(outDir) // output edge
+          val fbRows = obs.get("fb_n").asInstanceOf[Long]
+          val fb = step(levels.last)
+          if (fbRows > 0L) {
+            val fbStage = new Path(base,
+              s"stage-fb-${feedbackId.incrementAndGet()}").toString
+            fb.write.parquet(fbStage) // distributed write...
+            StagingFs.adoptParts(spark, fbStage, srcDir, // ...renamed into the head
+              s"fb-${feedbackId.get()}")
+          } else drainedBatch.set(batchId)
+        } finally batch.unpersist()
       }
-      q.exception.foreach(e => throw e)
-      require(done, "feedback loop did not quiesce before the timeout")
-    } finally q.stop()
+      .trigger(Trigger.ProcessingTime("25 milliseconds")), statePartitions = 4) { q =>
+      try {
+        // quiescence = the feedback edge went silent: feedback files land in
+        // the source BEFORE a batch commits, so while data flows, batches
+        // chain back-to-back; once no new batch commits for a few trigger
+        // intervals after at least one ran, the loop has drained (the
+        // reference's loops likewise end only when feedback stops)
+        val deadline = System.nanoTime() + timeoutMs * 1000000L
+        var lastBatch = -1L
+        var lastChangeNs = System.nanoTime()
+        var ranAny = false
+        var done = false
+        while (!done && System.nanoTime() < deadline) {
+          Thread.sleep(100)
+          // stream death is an error, never quiescence: without this check a
+          // failed query stops committing batches and the silence timer would
+          // return partial output as success
+          q.exception.foreach(e => throw e)
+          val p = q.lastProgress
+          if (p != null && p.batchId != lastBatch) {
+            lastBatch = p.batchId
+            lastChangeNs = System.nanoTime()
+            if (p.numInputRows > 0) ranAny = true
+          }
+          // data rounds chain within ~one trigger interval; 2 s of silence
+          // is ~40 intervals of margin. lastProgress only advances on batch
+          // COMMIT, so silence alone cannot distinguish "drained" from "one
+          // slow batch still running" — also require no trigger in flight
+          // and no data waiting at the poll instant
+          val st = q.status
+          val silent = System.nanoTime() - lastChangeNs > 2000000000L
+          // fast path: the zero-feedback batch has committed — deterministic
+          // drain, no silence margin needed (the silence window stays as the
+          // fallback for runs whose last batch raced the progress poll)
+          val drained = p != null && p.batchId == drainedBatch.get()
+          done = ranAny && !st.isTriggerActive && !st.isDataAvailable &&
+            (drained || silent)
+        }
+        q.exception.foreach(e => throw e)
+        require(done, "feedback loop did not quiesce before the timeout")
+      } finally q.stop()
+    }
     spark.read.parquet(outDir)
   }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Retract-stream adapter (reference `toRetractStream[(Boolean, T)]`,
@@ -213,15 +213,10 @@ object RetractStream {
           compactEvery: Int = 0)
       : RetractStream = {
     val rs = new RetractStream(keyCols, snapshotLevel, compactEvery)
-    graft.operators.PartitionOps.withShufflePartitions(
-      agg.sparkSession, statePartitions) {
-      val q: StreamingQuery = agg.writeStream
-        .outputMode("update")
-        .foreachBatch((b: DataFrame, id: Long) => rs.onBatch(b, id))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    EventStream.start(agg.sparkSession, agg.writeStream
+      .outputMode("update")
+      .foreachBatch((b: DataFrame, id: Long) => rs.onBatch(b, id))
+      .trigger(Trigger.AvailableNow()), statePartitions)(_.awaitTermination())
     rs
   }
 }

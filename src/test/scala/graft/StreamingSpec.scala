@@ -45,6 +45,66 @@ class StreamingSpec extends SparkSpecBase {
     } finally streams.detach()
   }
 
+  // process starts of Hadoop's `Shell` readlink, which Spark's default
+  // checkpoint manager forks four times per rename on the local filesystem
+  private def readlinks(commands: Seq[String]): Int =
+    commands.count(_.split(' ').head.endsWith("readlink"))
+
+  test("checkpointFileManager: local checkpoints get the FileSystem manager, hdfs and s3a keep the default") {
+    val fsManager = Some("org.apache.spark.sql.execution.streaming." +
+      "checkpointing.FileSystemBasedCheckpointFileManager")
+    for (local <- Seq("file:/tmp/graft-ckpt", "file:///tmp/graft-ckpt",
+                      "/tmp/graft-ckpt", "graft-ckpt"))
+      assert(EventStream.checkpointFileManager(local) == fsManager, local)
+    for (remote <- Seq("hdfs://nn:8020/ckpt", "hdfs:///ckpt", "s3a://bucket/ckpt"))
+      assert(EventStream.checkpointFileManager(remote).isEmpty, remote)
+    // a temp checkpoint (no location set) and a staging dir resolve to file:
+    val tmp = sys.props("java.io.tmpdir")
+    assert(EventStream.resolvedCheckpoint(spark, None) == "file:" + tmp)
+    assert(EventStream.resolvedCheckpoint(spark, Some(tmp + "/c")) == s"file:$tmp/c")
+    val staged = graft.sources.StagingFs.newStageDir(spark, "graft-ckpt-spec")
+    assert(EventStream.resolvedCheckpoint(spark, Some(staged)) == staged)
+  }
+
+  test("runToTable: a 5-batch watermarked replay starts no readlink process") {
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    val before = spark.conf.getOption(key)
+    val agg = EventStream.readLateBatches(spark, sfDir)
+      .withWatermark("ts", "30 minutes")
+      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("n"))
+    val streams = StreamProgress.attach(spark)
+    val forks = new ProcessStarts()
+    try {
+      val (mark, forkMark) = (streams.mark(), forks.mark())
+      EventStream.runToTable(spark, agg, "append").count()
+      val progress = streams.since(mark).flatMap(_.progress)
+      val commands = forks.since(forkMark)
+      // four replay files, then the batch the advanced watermark runs
+      assert(progress.size == 5, s"batches: ${progress.map(_.batchId)}")
+      assert(progress.forall(_.stateOperators.map(_.numShufflePartitions).sum == 4))
+      assert(readlinks(commands) == 0, s"readlink of ${commands.size} process starts")
+      assert(spark.conf.getOption(key) == before)
+    } finally { forks.close(); streams.detach() }
+  }
+
+  test("checkpoint recovery and queryable state restore state through EventStream.start") {
+    val ev = Tables.load(spark, sfDir, "events")
+    val forks = new ProcessStarts()
+    try {
+      val forkMark = forks.mark()
+      val recovered = SparkEntry.queries("stream_checkpoint_recovery")(spark, sfDir)
+      val state = SparkEntry.queries("stream_queryable_state")(spark, sfDir)
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+      assert(rows(recovered.select("user_id", "n")) ==
+        rows(ev.groupBy("user_id").agg(count(lit(1)).as("n"))))
+      assert(rows(state.select("user_id", "n", "sum_cents")) ==
+        rows(ev.groupBy("user_id").agg(count(lit(1)).as("n"),
+          sum(expr("CAST(round(value * 100) AS BIGINT)")).as("sum_cents"))))
+      assert(readlinks(forks.since(forkMark)) == 0, "readlink process starts")
+    } finally forks.close()
+  }
+
   test("StreamProgress keeps one record per run, equal to that query's own progress") {
     import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
     import StreamingQueryListener._
