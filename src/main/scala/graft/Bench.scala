@@ -231,8 +231,10 @@ object Bench {
     def mkLine(qcsPart: String): String =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"stage_sec":$stageTotal%.2f,${qprev.map(_ + ",").getOrElse("")}"phases":$phases,"queries":$qs$qcsPart,"sf":"$sfDir"}"""
     // stay safely inside the driver's 2000-char stdout tail: centi-second
-    // array first (~1.1 KB at current scale), decisecond array if a slow
-    // box fattens the digits, no array as the last resort
+    // array first, decisecond array next, no array as the last resort. At
+    // 341 rows the centi-second form (~4 chars per row) never fits, so the
+    // line carries the decisecond array (1669 and 1750 chars measured at
+    // sf0.01 on 4 CPUs)
     val line = Seq(
       mkLine(s""","qcs_order":"name-asc","qcs":${qArr(100L)}"""),
       mkLine(s""","qds_order":"name-asc","qds":${qArr(10L)}"""),

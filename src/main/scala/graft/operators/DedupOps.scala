@@ -33,21 +33,21 @@ object DedupOps {
     * (true for the lowest doc_id of each identical-text group) and
     * `group_size`. One shuffle on the 128-bit digest — the digest is tiny
     * and uniformly distributed, so this scales linearly. */
-  def exact(docs: DataFrame, textCol: String = "text",
-            idCol: String = "doc_id"): DataFrame = {
-    val w = Window.partitionBy(md5(col(textCol)))
+  def exact(docs: DataFrame): DataFrame = {
+    val w = Window.partitionBy(md5(col("text")))
     docs
       .withColumn("group_size", count(lit(1)).over(w))
-      .withColumn("is_kept", col(idCol) === min(col(idCol)).over(w))
+      .withColumn("is_kept", col("doc_id") === min(col("doc_id")).over(w))
   }
 
   /** Per-permutation MinHash over word `n`-gram shingles:
     * sig[i] = min over shingles s of ((H(s) mod P)·(2i+1) + i·12582917) mod P.
-    * Row-local, integer-exact. */
-  /** NOTE: Catalyst higher-order lambdas inline their argument expressions —
+    * Row-local, integer-exact.
+    *
+    * NOTE: Catalyst higher-order lambdas inline their argument expressions —
     * the outer K-permutation transform re-evaluates the md5 pipeline K times
-    * per row. Fine for ad-hoc column use; the pipeline operator
-    * [[minhashLshPairs]] uses the relational formulation below instead. */
+    * per row. Fine for ad-hoc column use; the pipeline operators take the
+    * relational [[minhashSignatures]] table instead. */
   def minhashSignature(text: Column, n: Int = 3): Column = {
     val hs = transform(array_distinct(shingles(tokens(text), n)),
       s => stableHash(s) % MinHashP)
@@ -56,34 +56,22 @@ object DedupOps {
         (h * (i * 2 + 1) + i * lit(12582917L)) % MinHashP)))
   }
 
-  /** Relational MinHash: one md5 pass over exploded shingles, then K
-    * codegen'd `min` aggregates with map-side combine — the 100 TB form.
-    *
-    * Shingling is relational too: `posexplode` + window `lead`s build the
-    * n-grams entirely inside whole-stage codegen; the array-lambda form
-    * ([[minhashSignature]]) evaluates interpreted higher-order functions
-    * per row — measured ~3× slower on the sf0.1 corpus. Duplicate
-    * shingles are deliberately NOT removed: `min` is idempotent over
-    * duplicates, so the signature is identical and the distinct shuffle
-    * is saved (the oracle's `list_distinct` is equally irrelevant to its
-    * `min`). Docs with fewer than n tokens contribute their whole token
-    * string as the single fallback shingle, as in [[shingles]]. */
   /** Relational per-doc shingle hashes (id, h = 60-bit md5 hash of each
     * word n-gram, NOT deduplicated): `posexplode` + window `lead`s build
     * the grams entirely inside whole-stage codegen — measured ~3× faster
     * than the per-row higher-order-lambda form on the sf0.1 corpus. Same
     * gram semantics as [[graft.functions.GraftFunctions.shingles]],
     * including the <n-token whole-string fallback. */
-  private def shingleHashes(docs: DataFrame, textCol: String,
-                            idCol: String, n: Int): DataFrame = {
+  private def shingleHashes(docs: DataFrame, n: Int): DataFrame = {
+    require(n >= 1, s"shingle width must be >= 1: $n")
     // repartition BEFORE tokenizing: the window below needs a hash exchange
     // on id anyway — hoisting it above the posexplode ships compact text
     // rows instead of exploded tokens AND spreads the regex/md5 work across
     // cores when the input is a single file split (the fixture shape; a
     // many-file corpus is parallel either way)
-    val toks = docs.repartition(col(idCol))
-      .select(col(idCol).as("id"),
-        posexplode(tokens(col(textCol))).as(Seq("pos", "tok")))
+    val toks = docs.repartition(col("doc_id"))
+      .select(col("doc_id").as("id"),
+        posexplode(tokens(col("text"))).as(Seq("pos", "tok")))
     val wLead = Window.partitionBy(col("id")).orderBy(col("pos"))
     val wCnt = Window.partitionBy(col("id"))
     val parts = col("tok") +: (1 until n).map(k => lead(col("tok"), k).over(wLead))
@@ -105,9 +93,14 @@ object DedupOps {
       .select(col("id"), stableHash(col("str")).as("h"))
   }
 
-  def minhashSignatures(docs: DataFrame, textCol: String = "text",
-                        idCol: String = "doc_id", n: Int = 3): DataFrame =
-    minhashSignaturesFromHashes(shingleHashes(docs, textCol, idCol, n))
+  /** Relational MinHash signatures (id, sig): one md5 pass over exploded
+    * shingles, then K codegen'd `min` aggregates with map-side combine —
+    * the 100 TB form. Duplicate shingles are deliberately NOT removed:
+    * `min` is idempotent over duplicates, so the signature is identical
+    * and the distinct shuffle is saved (the oracle's `list_distinct` is
+    * equally irrelevant to its `min`). */
+  def minhashSignatures(docs: DataFrame, n: Int = 3): DataFrame =
+    minhashSignaturesFromHashes(shingleHashes(docs, n))
 
   /** LSH band signatures: the K-wide signature cut into B bands of R values,
     * each band serialized to a join key. */
@@ -115,37 +108,42 @@ object DedupOps {
     transform(sequence(lit(0), lit(Bands - 1)), b =>
       array_join(slice(sig, b * RowsPerBand + 1, lit(RowsPerBand)), "-"))
 
-  /** MinHash+LSH near-duplicate candidate pairs.
-    * Output: (id1, id2, n_bands, est_jaccard) for pairs colliding in ≥1 band.
-    * est_jaccard = fraction of equal signature positions (exact k/16 rational
-    * — deterministic). The only shuffles are the band-key self-join and the
-    * pair groupBy, both on small uniformly-hashed keys. */
-  def minhashLshPairs(docs: DataFrame, textCol: String = "text",
-                      idCol: String = "doc_id", n: Int = 3,
-                      maxBandFreq: Long = 10000L,
-                      precomputedSigs: Option[DataFrame] = None): DataFrame = {
-    // materialize the signatures ONCE: the band explode + the two est-
-    // jaccard joins would otherwise each replay the full md5 pipeline
-    // (Catalyst plans self-join branches independently). localCheckpoint
-    // cuts the plan; at cluster scale use persist(DISK_ONLY) instead.
-    // `precomputedSigs` (id, sig) skips the stage entirely — the form a
-    // pipeline running several MinHash-family passes over one corpus uses
-    // (signatures are computed once and stored next to the corpus).
-    val sigs = precomputedSigs.getOrElse(
-      minhashSignatures(docs, textCol, idCol, n).localCheckpoint())
-    // materialized once: the hot-bucket scan, the anti-join probe, and both
-    // self-join sides would otherwise each replay the band explode
-    val allBands = sigs.select(col("id"),
-      posexplode(bandSignatures(col("sig"))).as(Seq("band", "bsig")))
-      .localCheckpoint()
-    // hot-bucket cap: a degenerate band signature shared by k docs emits
-    // k²/2 join rows on ONE key — the quadratic-blowup / straggler shape at
-    // corpus scale. Buckets over `maxBandFreq` carry no near-dup signal
-    // (they are boilerplate collisions), so drop them from the join.
-    val hot = allBands.groupBy(col("band"), col("bsig"))
+  /** (id, band, bsig) rows of a signature table. */
+  private def bandsOf(sigs: DataFrame): DataFrame = sigs.select(col("id"),
+    posexplode(bandSignatures(col("sig"))).as(Seq("band", "bsig")))
+
+  /** Band rows minus the hot buckets: a degenerate band signature shared by
+    * k docs emits k²/2 join rows on ONE key — the quadratic-blowup /
+    * straggler shape at corpus scale. Buckets over `maxBandFreq` carry no
+    * near-dup signal (they are boilerplate collisions), so they are dropped
+    * from the join. `bands` is read twice (the bucket count and the
+    * anti-join probe): pass it materialized. */
+  private def coolBands(bands: DataFrame, maxBandFreq: Long): DataFrame = {
+    val hot = bands.groupBy(col("band"), col("bsig"))
       .agg(count(lit(1)).as("df")).filter(col("df") > maxBandFreq)
       .select(col("band"), col("bsig"))
-    val bands = allBands.join(hot, Seq("band", "bsig"), "left_anti")
+    bands.join(hot, Seq("band", "bsig"), "left_anti")
+  }
+
+  /** Fraction of equal positions of two K-wide signatures: an exact k/16
+    * rational, so the estimate is deterministic. */
+  private def estJaccard(sig1: Column, sig2: Column): Column =
+    ((1 to NumPerm).map(i =>
+      when(element_at(sig1, i) === element_at(sig2, i), 1)
+        .otherwise(0)).reduceLeft(_ + _)
+      .cast("double") / NumPerm).as("est_jaccard")
+
+  /** MinHash+LSH near-duplicate candidate pairs over a [[minhashSignatures]]
+    * table (id, sig), read three times (band explode and both join-backs):
+    * pass it materialized.
+    * Output: (id1, id2, n_bands, est_jaccard) for pairs colliding in ≥1 band.
+    * The only shuffles are the band-key self-join and the pair groupBy,
+    * both on small uniformly-hashed keys. */
+  def minhashLshPairs(sigs: DataFrame,
+                      maxBandFreq: Long = 10000L): DataFrame = {
+    // materialized once: the hot-bucket scan, the anti-join probe, and both
+    // self-join sides would otherwise each replay the band explode
+    val bands = coolBands(bandsOf(sigs).localCheckpoint(), maxBandFreq)
     val a = bands.as("a"); val b = bands.as("b")
     val pairs = a.join(b, col("a.band") === col("b.band") &&
         col("a.bsig") === col("b.bsig") && col("a.id") < col("b.id"))
@@ -157,10 +155,7 @@ object DedupOps {
       .join(sigs.select(col("id").as("id1"), col("sig").as("sig1")), "id1")
       .join(sigs.select(col("id").as("id2"), col("sig").as("sig2")), "id2")
       .select(col("id1"), col("id2"), col("n_bands"),
-        ((1 to NumPerm).map(i =>
-          when(element_at(col("sig1"), i) === element_at(col("sig2"), i), 1)
-            .otherwise(0)).reduceLeft(_ + _)
-          .cast("double") / NumPerm).as("est_jaccard"))
+        estJaccard(col("sig1"), col("sig2")))
   }
 
   /** Incremental near-duplicate detection: probe NEW documents against the
@@ -174,28 +169,12 @@ object DedupOps {
     * and this probe is a co-located join against it. The hot-bucket cap is
     * computed on the INDEX side (boilerplate buckets carry no near-dup
     * signal and would make every future ingest pay their fan-out).
+    * Both sides are [[minhashSignatures]] tables; signatures are row-local,
+    * so id-filtered slices of one corpus-wide table serve as the two sides.
     * Output: (new_id, old_id, n_bands, est_jaccard). */
-  def incrementalMinhashPairs(oldDocs: DataFrame, newDocs: DataFrame,
-                              textCol: String = "text", idCol: String = "doc_id",
-                              n: Int = 3, maxBandFreq: Long = 10000L,
-                              precomputedOldSigs: Option[DataFrame] = None,
-                              precomputedNewSigs: Option[DataFrame] = None): DataFrame = {
-    // signatures materialized once per side: the band explode and the
-    // est-jaccard join-back would otherwise each replay the md5 pipeline.
-    // In the steady state the snapshot side arrives precomputed (the
-    // stored band index's signature table) — pass it via
-    // `precomputedOldSigs` and only the incoming batch is hashed.
-    val oldSigs = precomputedOldSigs.getOrElse(
-      minhashSignatures(oldDocs, textCol, idCol, n).localCheckpoint())
-    val newSigs = precomputedNewSigs.getOrElse(
-      minhashSignatures(newDocs, textCol, idCol, n).localCheckpoint())
-    def bandsOf(sigs: DataFrame) = sigs.select(col("id"),
-      posexplode(bandSignatures(col("sig"))).as(Seq("band", "bsig")))
-    val oldBands = bandsOf(oldSigs).localCheckpoint()
-    val hot = oldBands.groupBy(col("band"), col("bsig"))
-      .agg(count(lit(1)).as("df")).filter(col("df") > maxBandFreq)
-      .select(col("band"), col("bsig"))
-    val idx = oldBands.join(hot, Seq("band", "bsig"), "left_anti")
+  def incrementalMinhashPairs(oldSigs: DataFrame, newSigs: DataFrame,
+                              maxBandFreq: Long = 10000L): DataFrame = {
+    val idx = coolBands(bandsOf(oldSigs).localCheckpoint(), maxBandFreq)
     val pairs = bandsOf(newSigs).as("a")
       .join(idx.as("b"),
         col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig"))
@@ -205,23 +184,19 @@ object DedupOps {
       .join(newSigs.select(col("id").as("new_id"), col("sig").as("sig1")), "new_id")
       .join(oldSigs.select(col("id").as("old_id"), col("sig").as("sig2")), "old_id")
       .select(col("new_id"), col("old_id"), col("n_bands"),
-        ((1 to NumPerm).map(i =>
-          when(element_at(col("sig1"), i) === element_at(col("sig2"), i), 1)
-            .otherwise(0)).reduceLeft(_ + _)
-          .cast("double") / NumPerm).as("est_jaccard"))
+        estJaccard(col("sig1"), col("sig2")))
   }
 
   /** SimHash bits per document, relational formulation: explode tokens ×
     * bit positions, one md5 per (token, bit), majority vote per bit.
     * `width` ≤ 62 keeps the packed value in a signed 64-bit long.
     * Scales as a pair of map-side-combining groupBys on doc_id. */
-  def simhash(docs: DataFrame, textCol: String = "text",
-              idCol: String = "doc_id", width: Int = 48): DataFrame = {
+  def simhash(docs: DataFrame, width: Int = 48): DataFrame = {
     // dictionary-encode: hash each DISTINCT token once (md5 dominates; real
     // corpora are zipf-distributed, so |vocab| << |occurrences|), then join
     // the per-token bit votes back weighted by occurrence count
-    val toks = docs.select(col(idCol).as("id"),
-      explode(tokens(col(textCol))).as("tok"))
+    val toks = docs.select(col("doc_id").as("id"),
+      explode(tokens(col("text"))).as("tok"))
     val tokCounts = toks.groupBy(col("id"), col("tok"))
       .agg(count(lit(1)).as("cnt"))
     val vocabVotes = toks.select(col("tok")).distinct()
@@ -238,27 +213,17 @@ object DedupOps {
         expr("shiftleft(CAST(1 AS BIGINT), bit)")).otherwise(0L)).as("simhash"))
   }
 
-  /** SimHash near-dup pairs: block on `chunks` sub-signatures (a pair within
-    * hamming d of each other collides on ≥1 chunk when d < chunks), then
-    * exact hamming via bit_count(xor). */
-  /** Edit-distance near-duplicates: SimHash chunk blocking proposes
-    * candidates (pigeonhole-complete for hamming ≤ chunks−1), then exact
-    * `levenshtein` (codegen'd built-in) confirms on the pair. The string
-    * comparison runs only on blocked candidates — never all pairs — so at
-    * corpus scale the cost is the blocking join, and the O(len²) DP only
-    * touches near-identical texts. */
-  def editDistancePairs(docs: DataFrame, textCol: String = "text",
-                        idCol: String = "doc_id",
-                        maxDist: Int = 8,
-                        precomputedSimhash: Option[DataFrame] = None): DataFrame = {
-    val texts = docs.select(col(idCol).as("id"), col(textCol).as("txt"))
+  /** Edit-distance near-duplicates: SimHash chunk blocking over a
+    * [[simhash]] table proposes candidates (pigeonhole-complete for
+    * hamming ≤ chunks−1), then exact `levenshtein` (codegen'd built-in)
+    * confirms on the pair. The string comparison runs only on blocked
+    * candidates — never all pairs — so at corpus scale the cost is the
+    * blocking join, and the O(len²) DP only touches near-identical texts. */
+  def editDistancePairs(docs: DataFrame, simhashes: DataFrame,
+                        maxDist: Int = 8): DataFrame = {
+    val texts = docs.select(col("doc_id").as("id"), col("text").as("txt"))
       .localCheckpoint()
-    // a staged (id, simhash) table serves blocking directly — the SimHash
-    // pass is shared across the whole SimHash family the same way the
-    // shingle stage serves the MinHash family
-    val cand = simhashPairs(precomputedSimhash.getOrElse(
-        simhash(docs, textCol, idCol)))
-      .select(col("id1"), col("id2"))
+    val cand = simhashPairs(simhashes).select(col("id1"), col("id2"))
     // thresholded levenshtein: the banded DP early-exits (returns -1) once
     // the distance provably exceeds maxDist — O(len·maxDist) instead of
     // O(len²) on the non-duplicate majority of candidates
@@ -270,6 +235,9 @@ object DedupOps {
       .filter(col("dist") >= 0 && col("dist") <= maxDist)
   }
 
+  /** SimHash near-dup pairs: block on `chunks` sub-signatures (a pair within
+    * hamming d of each other collides on ≥1 chunk when d < chunks), then
+    * exact hamming via bit_count(xor). */
   def simhashPairs(sims: DataFrame, width: Int = 48, chunks: Int = 4,
                    maxHamming: Int = 3): DataFrame = {
     val cw = width / chunks
@@ -287,17 +255,12 @@ object DedupOps {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** Exact n-gram Jaccard similarity for every pair sharing ≥1 shingle.
-    * inter/union are integers, the division is a single rational→double step
-    * — deterministic. The shingle self-join is the classic
-    * inverted-index pattern: shuffle on shingle, never all-pairs. */
   /** Per-doc DISTINCT shingle-hash set (id, h) — the shared raw material
     * of the whole shingle family: MinHash signatures ([[minhashSignaturesFromHashes]]
     * — `min` is insensitive to the dedup) and the exact-Jaccard inverted
     * index both derive from it, so a pipeline stages ONE text scan. */
-  def shingleHashSet(docs: DataFrame, textCol: String = "text",
-                     idCol: String = "doc_id", n: Int = 3): DataFrame =
-    shingleHashes(docs, textCol, idCol, n).distinct()
+  def shingleHashSet(docs: DataFrame, n: Int = 3): DataFrame =
+    shingleHashes(docs, n).distinct()
 
   /** MinHash signatures from a precomputed (id, h) shingle-hash table —
     * the post-text-scan half of [[minhashSignatures]]. */
@@ -309,23 +272,22 @@ object DedupOps {
         .as("sig"))
   }
 
-  def ngramJaccardPairs(docs: DataFrame, textCol: String = "text",
-                        idCol: String = "doc_id", n: Int = 3,
-                        minJaccard: Double = 0.2,
-                        maxDocFreq: Long = 10000L,
-                        precomputedShingles: Option[DataFrame] = None): DataFrame = {
-    // one tokenize+shingle pass feeds the index, the sizes, and both join
-    // sides — materialize it instead of replaying the text pipeline 4x.
-    // The index carries the md5-derived 60-bit hash of each shingle, not
+  /** Exact n-gram Jaccard similarity for every pair sharing ≥1 shingle of a
+    * [[shingleHashSet]] table (read four times — index, sizes and both join
+    * sides: pass it materialized). inter/union are integers, the division
+    * is a single rational→double step — deterministic. The shingle
+    * self-join is the classic inverted-index pattern: shuffle on shingle,
+    * never all-pairs. */
+  def ngramJaccardPairs(shingleSet: DataFrame, minJaccard: Double = 0.2,
+                        maxDocFreq: Long = 10000L): DataFrame = {
+    // the index carries the md5-derived 60-bit hash of each shingle, not
     // the string: the self-join shuffles fixed 8-byte keys instead of
     // ~20-40-byte phrases (the exchange IS the cost of this operator at
     // corpus scale). Per-doc distinctness is applied on (id, hash) — a
     // (vanishingly rare) cross-doc collision merges two shingles
     // identically in every engine that uses the same hash — the DuckDB
-    // oracle does. `precomputedShingles` is a staged [[shingleHashSet]].
-    val sh = precomputedShingles.getOrElse(
-        shingleHashSet(docs, textCol, idCol, n).localCheckpoint())
-      .select(col("id"), col("h").as("s"))
+    // oracle does.
+    val sh = shingleSet.select(col("id"), col("h").as("s"))
     val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("sz"))
     // document-frequency cap: a stop-phrase shingle shared by k docs makes
     // that join key's output k²/2 — quadratic on one reducer. Shingles with
@@ -358,18 +320,17 @@ object DedupOps {
     * no corpus shuffle on the join key at all. Returns every corpus doc
     * with its overlapping-shingle count and the keep verdict. */
   def decontaminate(corpus: DataFrame, benchmark: DataFrame,
-                    textCol: String = "text", idCol: String = "doc_id",
                     n: Int = 3, minOverlap: Long = 1L): DataFrame = {
-    def sh(df: DataFrame) = df.select(col(idCol).as("id"),
-        explode(array_distinct(shingles(tokens(col(textCol)), n))).as("str"))
+    def sh(df: DataFrame) = df.select(col("doc_id").as("id"),
+        explode(array_distinct(shingles(tokens(col("text")), n))).as("str"))
       .select(col("id"), stableHash(col("str")).as("s"))
     val benchSet = sh(benchmark).select(col("s")).distinct()
     // per-doc shingles are distinct pre-join, so the count IS the number
     // of distinct contaminated shingles
     val hits = sh(corpus).join(broadcast(benchSet), Seq("s"))
       .groupBy(col("id")).agg(count(lit(1)).as("hits"))
-    corpus.select(col(idCol))
-      .join(hits.withColumnRenamed("id", idCol), Seq(idCol), "left")
+    corpus.select(col("doc_id"))
+      .join(hits.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
       .withColumn("hits", coalesce(col("hits"), lit(0L)))
       .withColumn("is_clean", col("hits") < minOverlap)
   }
@@ -378,59 +339,50 @@ object DedupOps {
     * id) then near-dup layer (MinHash LSH candidates with estimated
     * jaccard ≥ `minJaccard`; the higher id of each pair is dropped — the
     * standard greedy keep-first policy). Returns the surviving documents.
-    * Composition of hash-partitioned stages only — the full pipeline a
-    * training-data run executes at scale. */
-  def dedupCorpus(docs: DataFrame, textCol: String = "text",
-                  idCol: String = "doc_id",
-                  minJaccard: Double = 0.5,
-                  precomputedSigs: Option[DataFrame] = None): DataFrame = {
-    val kept = exact(docs, textCol, idCol).filter(col("is_kept"))
+    * `sigs` is the corpus's [[minhashSignatures]] table. Composition of
+    * hash-partitioned stages only — the full pipeline a training-data run
+    * executes at scale. */
+  def dedupCorpus(docs: DataFrame, sigs: DataFrame,
+                  minJaccard: Double = 0.5): DataFrame = {
+    val kept = exact(docs).filter(col("is_kept"))
       .drop("is_kept", "group_size")
-    // signatures are row-local, so a stored signature table restricted to
-    // the exact-kept survivors (a semi-join on id — far cheaper than
-    // re-hashing their text) serves the near-dup layer directly
-    val keptSigs = precomputedSigs.map(
-      _.join(kept.select(col(idCol).as("id")), Seq("id"), "left_semi")
-        .localCheckpoint())
-    val drops = minhashLshPairs(kept, textCol, idCol,
-        precomputedSigs = keptSigs)
+    // signatures are row-local, so the signature table restricted to the
+    // exact-kept survivors (a semi-join on id — far cheaper than re-hashing
+    // their text) serves the near-dup layer directly
+    val keptSigs = sigs.join(kept.select(col("doc_id").as("id")), Seq("id"),
+        "left_semi")
+      .localCheckpoint()
+    val drops = minhashLshPairs(keptSigs)
       .filter(col("est_jaccard") >= minJaccard)
-      .select(col("id2").as(idCol)).distinct()
-    kept.join(drops, Seq(idCol), "left_anti")
+      .select(col("id2").as("doc_id")).distinct()
+    kept.join(drops, Seq("doc_id"), "left_anti")
   }
 
   /** Near-duplicate clusters: pointer-jumping connected components over the
-    * LSH candidate graph (est_jaccard ≥ minJaccard), labeled by min doc id,
-    * with the cluster size alongside. The cluster-preserving variant of
-    * [[dedupCorpus]]'s greedy drop: downstream policies (keep longest, keep
-    * newest) pick per cluster instead of per pair. `includeSingletons`
-    * keeps unpaired docs as their own clusters (the full-corpus view);
-    * `false` restricts to docs that participate in at least one pair (the
-    * curation view). Composition of hash-partitioned stages + the CC
-    * join-iteration — nothing quadratic. The CC supersteps run at the
-    * edge-derived partition count of
-    * [[graft.graph.GraphAlgorithms.clusterComponents]]. */
-  def dedupClusters(docs: DataFrame, textCol: String = "text",
-                    idCol: String = "doc_id",
+    * LSH candidate graph `pairs` ([[minhashLshPairs]] output, kept where
+    * est_jaccard ≥ minJaccard), labeled by min doc id, with the cluster
+    * size alongside. The cluster-preserving variant of [[dedupCorpus]]'s
+    * greedy drop: downstream policies (keep longest, keep newest) pick per
+    * cluster instead of per pair. `includeSingletons` keeps unpaired docs
+    * as their own clusters (the full-corpus view); `false` restricts to
+    * docs that participate in at least one pair (the curation view).
+    * Composition of hash-partitioned stages + the CC join-iteration —
+    * nothing quadratic. The CC supersteps run at the edge-derived
+    * partition count of [[graft.graph.GraphAlgorithms.clusterComponents]]. */
+  def dedupClusters(docs: DataFrame, pairs: DataFrame,
                     minJaccard: Double = 0.5,
-                    includeSingletons: Boolean = true,
-                    precomputedPairs: Option[DataFrame] = None): DataFrame = {
-    // the MinHash signature + band stage is the expensive part and is the
-    // SAME computation minhashLshPairs runs — a pipeline computing both
-    // passes its pairs in (`precomputedPairs`) instead of paying it twice
-    val pairs = precomputedPairs
-      .getOrElse(minhashLshPairs(docs, textCol, idCol))
-      .filter(col("est_jaccard") >= minJaccard)
+                    includeSingletons: Boolean = true): DataFrame = {
+    val edges = pairs.filter(col("est_jaccard") >= minJaccard)
       .select(col("id1"), col("id2")).localCheckpoint()
     val verts =
-      if (includeSingletons) docs.select(col(idCol).as("vid"))
-      else pairs.select(col("id1").as("vid"))
-        .union(pairs.select(col("id2").as("vid"))).distinct()
+      if (includeSingletons) docs.select(col("doc_id").as("vid"))
+      else edges.select(col("id1").as("vid"))
+        .union(edges.select(col("id2").as("vid"))).distinct()
     val cc = graft.graph.GraphAlgorithms.clusterComponents(graft.graph.Graph(
-      verts, pairs.select(col("id1").as("src"), col("id2").as("dst"))))
+      verts, edges.select(col("id1").as("src"), col("id2").as("dst"))))
     cc.withColumn("cluster_size", count(lit(1)).over(
         Window.partitionBy(col("comp"))))
-      .select(col("vid").as(idCol), col("comp").as("cluster_id"),
+      .select(col("vid").as("doc_id"), col("comp").as("cluster_id"),
         col("cluster_size"))
   }
 
@@ -450,19 +402,15 @@ object DedupOps {
     * Scale shape: everything beyond [[dedupClusters]] (the staged LSH
     * chain + pointer-jumping CC) is a codegen'd per-row map — no extra
     * shuffle, no collect. Returns (doc_id, cluster_id, split). */
-  def leakageSafeSplits(docs: DataFrame, textCol: String = "text",
-                        idCol: String = "doc_id",
+  def leakageSafeSplits(docs: DataFrame, pairs: DataFrame,
                         minJaccard: Double = 0.5,
-                        trainPct: Int = 80, validPct: Int = 10,
-                        precomputedPairs: Option[DataFrame] = None)
-      : DataFrame = {
+                        trainPct: Int = 80, validPct: Int = 10): DataFrame = {
     require(trainPct >= 1 && validPct >= 1 && trainPct + validPct <= 99,
       s"split percentages must leave room for test: $trainPct/$validPct")
     val bucket = graft.functions.GraftFunctions
       .stableHashMod(col("cluster_id").cast("string"), 100L)
-    dedupClusters(docs, textCol, idCol, minJaccard,
-        includeSingletons = true, precomputedPairs)
-      .select(col(idCol), col("cluster_id"),
+    dedupClusters(docs, pairs, minJaccard, includeSingletons = true)
+      .select(col("doc_id"), col("cluster_id"),
         when(bucket < trainPct, "train")
           .when(bucket < trainPct + validPct, "valid")
           .otherwise("test").as("split"))
@@ -481,23 +429,20 @@ object DedupOps {
     * the (staged, shared) pair graph + CC is ONE aggregation keyed by
     * cluster id — no window, no second shuffle; the argmax rides the
     * partial-aggregate path so skewed mega-clusters combine map-side. */
-  def canonicalSelect(docs: DataFrame, textCol: String = "text",
-                      idCol: String = "doc_id",
+  def canonicalSelect(docs: DataFrame, pairs: DataFrame,
                       qualityCol: String = "n_chars",
-                      minJaccard: Double = 0.5,
-                      precomputedPairs: Option[DataFrame] = None)
-      : DataFrame = {
-    val clusters = dedupClusters(docs, textCol, idCol, minJaccard,
-        includeSingletons = true, precomputedPairs)
-      .select(col(idCol), col("cluster_id"))
+                      minJaccard: Double = 0.5): DataFrame = {
+    val clusters = dedupClusters(docs, pairs, minJaccard,
+        includeSingletons = true)
+      .select(col("doc_id"), col("cluster_id"))
     clusters
-      .join(docs.select(col(idCol), col(qualityCol).cast("long").as("q")),
-        idCol)
+      .join(docs.select(col("doc_id"), col(qualityCol).cast("long").as("q")),
+        "doc_id")
       .groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("cluster_size"),
         // lexicographic struct max = highest quality, then LOWEST id
         // (negated so the max picks it) — a single associative argmax
-        max(struct(col("q"), (-col(idCol)).as("negid"))).as("best"))
+        max(struct(col("q"), (-col("doc_id")).as("negid"))).as("best"))
       .select(col("cluster_id"), (-col("best.negid")).as("kept_doc_id"),
         col("best.q").as("kept_quality"), col("cluster_size"))
   }
@@ -508,33 +453,24 @@ object DedupOps {
     * containment ratio n_shared / min(|A|, |B|) — the corpus diagnostic
     * that surfaces mirrored/syndicated sources (near-1 containment) and
     * quantifies cross-crawl redundancy before any doc-level dedup runs.
+    * `shingleSet` is the corpus's [[shingleHashSet]] (its width is the
+    * k of the k-grams): the per-doc distinct is idempotent under the
+    * (src, h) distinct below.
     *
-    * Shape at scale: ONE tokenize scan → distinct (group, hash) — the
-    * per-group shingle vocabulary, the only corpus-sized shuffle
-    * (materialized once; sizes and pairs both read it) — then ONE grouped
-    * pass per hash collecting its source set (≤ groups elements by
-    * definition: 20 sources, not 20M docs) and expanding the ordered
-    * pairs ROW-LOCALLY with array expressions. No self-join: the first
-    * draft joined the vocabulary with itself on the hash and measured
-    * 11.2× for 10× data (the join re-tokenized both sides and fanned the
-    * hot hashes through the shuffle); the grouped-collect form is one
-    * exchange and came back 15× faster at sf1. */
-  def sourceOverlap(docs: DataFrame, k: Int = 3, groupCol: String = "source",
-                    textCol: String = "text",
-                    idCol: String = "doc_id",
-                    precomputedShingles: Option[DataFrame] = None): DataFrame = {
-    require(k >= 1, s"shingle width must be >= 1: $k")
-    // shingleHashes, not shingles(tokens(..)): the higher-order shingle
-    // lambda inlines its tokenizer argument and re-splits the text once
-    // per position (the round-8 lm-fluency pathology — measured 9× here
-    // too); the posexplode+lead form splits once per doc and keeps the
-    // whole-doc fallback for sub-k docs. `precomputedShingles` = a staged
-    // [[shingleHashSet]] (r13): the per-doc distinct is idempotent under
-    // the (src, h) distinct below, so the staged table skips the tokenize
-    // pass entirely.
-    val sh = precomputedShingles
-      .getOrElse(shingleHashes(docs, textCol, idCol, k))
-      .join(docs.select(col(idCol).as("id"), col(groupCol).as("src")), "id")
+    * Shape at scale: distinct (group, hash) — the per-group shingle
+    * vocabulary, the only corpus-sized shuffle (materialized once; sizes
+    * and pairs both read it) — then ONE grouped pass per hash collecting
+    * its source set (≤ groups elements by definition: 20 sources, not 20M
+    * docs) and expanding the ordered pairs ROW-LOCALLY with array
+    * expressions. No self-join: the first draft joined the vocabulary with
+    * itself on the hash and measured 11.2× for 10× data (the join
+    * re-tokenized both sides and fanned the hot hashes through the
+    * shuffle); the grouped-collect form is one exchange and came back 15×
+    * faster at sf1. */
+  def sourceOverlap(docs: DataFrame, shingleSet: DataFrame,
+                    groupCol: String = "source"): DataFrame = {
+    val sh = shingleSet
+      .join(docs.select(col("doc_id").as("id"), col(groupCol).as("src")), "id")
       .select(col("src"), col("h")).distinct()
       .localCheckpoint()
     val sizes = sh.groupBy(col("src")).agg(count(lit(1)).as("n"))
@@ -562,13 +498,13 @@ object DedupOps {
           .as("containment_micro"))
   }
 
-  /** Winnowing similarity pairs (the MOSS match-detection step over
-    * [[TextOps.winnowFingerprints]] sketches): documents sharing at least
-    * `minShared` selected fingerprints, with the shared count as the
-    * match strength. The winnowing guarantee makes this a LOCAL-match
-    * detector — any shared run of ≥ w + k − 1 tokens is caught even when
-    * whole-document measures (minhash Jaccard, simhash) stay far apart,
-    * the code/boilerplate-plagiarism shape doc-level dedup misses.
+  /** Winnowing similarity pairs (the MOSS match-detection step over a
+    * [[TextOps.winnowFingerprints]] sketch `fps` of `docs`): documents
+    * sharing at least `minShared` selected fingerprints, with the shared
+    * count as the match strength. The winnowing guarantee makes this a
+    * LOCAL-match detector — any shared run of ≥ w + k − 1 tokens is caught
+    * even when whole-document measures (minhash Jaccard, simhash) stay far
+    * apart, the code/boilerplate-plagiarism shape doc-level dedup misses.
     *
     * Shape at scale: the join key is the selected fingerprint hash (the
     * ~2/(w+1)-density sketch, NOT raw grams), and hot boilerplate
@@ -576,28 +512,35 @@ object DedupOps {
     * self-join — the same stopword bound as tfidf/bm25, so within-hash
     * pair fan-out is bounded by (maxDfPct% · n)² per hash at worst and
     * the candidate volume stays sketch-sized. Never all-pairs. */
-  def winnowingPairs(docs: DataFrame, k: Int = 4, w: Int = 4,
-                     minShared: Int = 2, maxDfPct: Int = 10,
-                     precomputedFps: Option[DataFrame] = None): DataFrame = {
+  def winnowingPairs(docs: DataFrame, fps: DataFrame, minShared: Int = 2,
+                     maxDfPct: Int = 10): DataFrame = {
     require(minShared >= 1 && maxDfPct >= 1 && maxDfPct <= 100,
       s"invalid winnow-pair shape: minShared=$minShared maxDfPct=$maxDfPct")
-    // per-doc hash SET: one doc selecting the same gram at two positions
-    // must count once toward a pair
-    val fps = precomputedFps
-      .getOrElse(TextOps.winnowFingerprints(docs, k, w))
-      .select(col("doc_id"), col("fp_hash")).distinct()
-    val ndocs = docs.agg(count(lit(1)).as("n"))
-    val kept = fps.groupBy(col("fp_hash")).agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(ndocs))
-      .filter(col("df") * 100 <= col("n") * maxDfPct)
-      .select(col("fp_hash"))
-    val p = fps.join(kept, "fp_hash")
+    val p = dfCapped(fpSet(fps), docs, maxDfPct)
     p.select(col("fp_hash"), col("doc_id").as("id1"))
       .join(p.select(col("fp_hash"), col("doc_id").as("id2")), "fp_hash")
       .filter(col("id1") < col("id2"))
       .groupBy(col("id1"), col("id2"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
+  }
+
+  /** Per-doc fingerprint hash SET (doc_id, fp_hash) of a sketch: one doc
+    * selecting the same gram at two positions counts once toward a pair. */
+  private def fpSet(fps: DataFrame): DataFrame =
+    fps.select(col("doc_id"), col("fp_hash")).distinct()
+
+  /** The rows of `fps` whose hash is in at most `maxDfPct`% of the
+    * `corpus` documents — the boilerplate cut of the winnowing family. The
+    * corpus size rides in as a one-row broadcast, no driver round trip. */
+  private def dfCapped(fps: DataFrame, corpus: DataFrame,
+                       maxDfPct: Int): DataFrame = {
+    val n = corpus.agg(count(lit(1)).as("n"))
+    val kept = fps.groupBy(col("fp_hash")).agg(count(lit(1)).as("df"))
+      .crossJoin(broadcast(n))
+      .filter(col("df") * 100 <= col("n") * maxDfPct)
+      .select(col("fp_hash"))
+    fps.join(kept, "fp_hash")
   }
 
   /** MOSS-style containment report over the winnowing candidate pairs:
@@ -610,16 +553,11 @@ object DedupOps {
     * containment); sketch sizes are the doc's full distinct-fp counts.
     * Cost past the shared pair graph: one grouped count over the sketch +
     * two candidate-bounded joins. */
-  def winnowingContainment(docs: DataFrame, k: Int = 4, w: Int = 4,
-                           minShared: Int = 2, maxDfPct: Int = 10,
-                           precomputedFps: Option[DataFrame] = None)
-      : DataFrame = {
-    val fps = precomputedFps
-      .getOrElse(TextOps.winnowFingerprints(docs, k, w))
-      .select(col("doc_id"), col("fp_hash")).distinct()
-    val sizes = fps.groupBy(col("doc_id")).agg(count(lit(1)).as("nf"))
-    winnowingPairs(docs, k, w, minShared, maxDfPct,
-        precomputedFps = precomputedFps)
+  def winnowingContainment(docs: DataFrame, fps: DataFrame,
+                           minShared: Int = 2,
+                           maxDfPct: Int = 10): DataFrame = {
+    val sizes = fpSet(fps).groupBy(col("doc_id")).agg(count(lit(1)).as("nf"))
+    winnowingPairs(docs, fps, minShared, maxDfPct)
       .join(sizes.select(col("doc_id").as("id1"), col("nf").as("nf1")), "id1")
       .join(sizes.select(col("doc_id").as("id2"), col("nf").as("nf2")), "id2")
       .select(col("id1"), col("id2"), col("n_shared"),
@@ -629,35 +567,26 @@ object DedupOps {
 
   /** Incremental winnowing (continuous-ingest member of the winnowing
     * family, completing the incremental set next to minhash / semantic /
-    * substring): ONLY the incoming batch is tokenized and sketched; the
-    * stored corpus participates as its (precomputed, stored) fingerprint
-    * index, probed by the batch's hashes — new×old pairs only, so each
-    * ingest batch costs O(|batch| + probe hits) instead of re-sketching
-    * the corpus. Winnowing is doc-local, so the stored sketch never goes
-    * stale as batches arrive — new docs only APPEND rows to the index.
+    * substring): ONLY the incoming batch is tokenized and sketched (with
+    * the same `k`/`w` as the stored sketch `storedFps`); the stored corpus
+    * participates as its fingerprint index, probed by the batch's hashes —
+    * new×old pairs only, so each ingest batch costs O(|batch| + probe
+    * hits) instead of re-sketching the corpus. Winnowing is doc-local, so
+    * the stored sketch never goes stale as batches arrive — new docs only
+    * APPEND rows to the index.
     *
     * The boilerplate df cap is computed over the STORED corpus (the
     * index's own statistics, the dedup_incremental hot-band convention),
     * so probe fan-out is bounded without rescanning anything. */
   def winnowingIncremental(stored: DataFrame, batch: DataFrame,
-                           k: Int = 4, w: Int = 4, minShared: Int = 2,
-                           maxDfPct: Int = 10,
-                           precomputedStoredFps: Option[DataFrame] = None)
-      : DataFrame = {
+                           storedFps: DataFrame, k: Int = 4, w: Int = 4,
+                           minShared: Int = 2,
+                           maxDfPct: Int = 10): DataFrame = {
     require(minShared >= 1 && maxDfPct >= 1 && maxDfPct <= 100,
       s"invalid winnow-inc shape: minShared=$minShared maxDfPct=$maxDfPct")
-    val oldFps = precomputedStoredFps
-      .getOrElse(TextOps.winnowFingerprints(stored, k, w))
-      .select(col("doc_id"), col("fp_hash")).distinct()
-    val newFps = TextOps.winnowFingerprints(batch, k, w)
-      .select(col("doc_id"), col("fp_hash")).distinct()
-    val nStored = stored.agg(count(lit(1)).as("n"))
-    val kept = oldFps.groupBy(col("fp_hash")).agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(nStored))
-      .filter(col("df") * 100 <= col("n") * maxDfPct)
-      .select(col("fp_hash"))
+    val newFps = fpSet(TextOps.winnowFingerprints(batch, k, w))
     newFps.select(col("fp_hash"), col("doc_id").as("new_id"))
-      .join(oldFps.join(kept, "fp_hash")
+      .join(dfCapped(fpSet(storedFps), stored, maxDfPct)
         .select(col("fp_hash"), col("doc_id").as("old_id")), "fp_hash")
       .groupBy(col("new_id"), col("old_id"))
       .agg(count(lit(1)).as("n_shared"))
@@ -681,18 +610,16 @@ object DedupOps {
     * The blocked result is always a SUBSET of the brute-force result (the
     * rerank is exact); recall below the brute-force set is the documented
     * LSH trade-off governed by `bands`. */
-  def embeddingCosinePairs(embs: DataFrame, vecCol: String = "embedding",
-                           idCol: String = "vec_id",
-                           minCos: Double = 0.4,
+  def embeddingCosinePairs(embs: DataFrame, minCos: Double = 0.4,
                            bruteForce: Boolean = false,
                            bands: Int = 8,
                            maxBucketFreq: Long = 10000L,
                            bits: Int = SimilarityOps.LshBits): DataFrame = {
     // the exact rerank shared by both paths: pairs of ids -> scored pairs
     def rescored(cand: DataFrame): DataFrame = {
-      val withNorm = embs.select(col(idCol).as("id"),
-        col(vecCol).cast("array<double>").as("v"),
-        l2norm(col(vecCol)).as("nrm"))
+      val withNorm = embs.select(col("vec_id").as("id"),
+        col("embedding").cast("array<double>").as("v"),
+        l2norm(col("embedding")).as("nrm"))
       cand
         .join(withNorm.select(col("id").as("id1"), col("v").as("v1"),
           col("nrm").as("n1")), "id1")
@@ -709,9 +636,9 @@ object DedupOps {
       // (often single) file partitions and (b) re-inlines the cast pipeline
       // into the pushed-down join condition — 128 array casts per candidate
       // pair instead of 0
-      val withNorm = embs.select(col(idCol).as("id"),
-          col(vecCol).cast("array<double>").as("v"),
-          l2norm(col(vecCol)).as("nrm"))
+      val withNorm = embs.select(col("vec_id").as("id"),
+          col("embedding").cast("array<double>").as("v"),
+          l2norm(col("embedding")).as("nrm"))
         .repartition(col("id"))
       val a = withNorm.as("a"); val b = withNorm.as("b")
       a.join(b, col("a.id") < col("b.id"))
@@ -727,8 +654,8 @@ object DedupOps {
       // linear total work — needs bits ∝ log₂(n). The fixture default (8)
       // matches the value oracle; a 10× corpus wants bits+3 or 4 (measured
       // in DESIGN.md's sf1 table).
-      val banded = embs.select(col(idCol).as("id"),
-          posexplode(SimilarityOps.lshBandBucketsAll(col(vecCol), bands, bits))
+      val banded = embs.select(col("vec_id").as("id"),
+          posexplode(SimilarityOps.lshBandBucketsAll(col("embedding"), bands, bits))
             .as(Seq("band", "bucket")))
         .localCheckpoint()
       val hot = banded.groupBy(col("band"), col("bucket"))
@@ -772,9 +699,8 @@ object DedupOps {
     *
     * Returns (vec_id, cell, dup): `dup` = this vector has a smaller-id
     * τ-neighbor in its cluster; `filter(!dup)` is the curated corpus. */
-  def semanticDedup(embs: DataFrame, tauPct: Int = 85, cells: Int = 16,
-                    vecCol: String = "embedding",
-                    idCol: String = "vec_id"): DataFrame = {
+  def semanticDedup(embs: DataFrame, tauPct: Int = 85,
+                    cells: Int = 16): DataFrame = {
     require(tauPct > 0 && tauPct <= 100, s"tauPct must be in (0,100]: $tauPct")
     // cells = 0 would silently yield zero seeds, ivfAssign's rank-1 filter
     // would then drop every row, and the "curated corpus" would come back
@@ -784,9 +710,8 @@ object DedupOps {
     // `id < cells` filter would silently yield ZERO seeds (and an empty
     // result) on any corpus whose ids don't start at 0. TakeOrdered: no
     // full sort at scale.
-    val seeds = embs.orderBy(col(idCol)).limit(cells)
-    semanticPrunePass(SimilarityOps.ivfAssign(embs, seeds, vecCol, idCol),
-      tauPct)
+    val seeds = embs.orderBy(col("vec_id")).limit(cells)
+    semanticPrunePass(SimilarityOps.ivfAssign(embs, seeds), tauPct)
   }
 
   /** The within-cell ε-prune shared by [[semanticDedup]] (exact assigner)
@@ -834,13 +759,11 @@ object DedupOps {
     * compared, the same trade SemDeDup already makes by clustering at
     * all. */
   def semanticDedupPruned(embs: DataFrame, tauPct: Int = 85, cells: Int = 16,
-                          sprobe: Int = 2, vecCol: String = "embedding",
-                          idCol: String = "vec_id"): DataFrame = {
+                          sprobe: Int = 2): DataFrame = {
     require(tauPct > 0 && tauPct <= 100, s"tauPct must be in (0,100]: $tauPct")
     require(cells >= 1, s"cells must be >= 1: $cells")
-    val seeds = embs.orderBy(col(idCol)).limit(cells)
-    semanticPrunePass(
-      SimilarityOps.ivfAssignPruned(embs, seeds, sprobe, vecCol, idCol),
+    val seeds = embs.orderBy(col("vec_id")).limit(cells)
+    semanticPrunePass(SimilarityOps.ivfAssignPruned(embs, seeds, sprobe),
       tauPct)
   }
 
@@ -859,14 +782,13 @@ object DedupOps {
     * Same exact decimal(38,0) cross-multiplied cosine threshold as the
     * full pass. Returns (vec_id, cell, dup) for the INCOMING batch. */
   def semanticDedupIncremental(stored: DataFrame, incoming: DataFrame,
-                               tauPct: Int = 85, cells: Int = 16,
-                               vecCol: String = "embedding",
-                               idCol: String = "vec_id"): DataFrame = {
+                               tauPct: Int = 85,
+                               cells: Int = 16): DataFrame = {
     require(tauPct > 0 && tauPct <= 100, s"tauPct must be in (0,100]: $tauPct")
     require(cells >= 1, s"cells must be >= 1: $cells")
-    val seeds = stored.orderBy(col(idCol)).limit(cells)
+    val seeds = stored.orderBy(col("vec_id")).limit(cells)
     def prep(side: DataFrame): DataFrame =
-      SimilarityOps.ivfAssign(side, seeds, vecCol, idCol)
+      SimilarityOps.ivfAssign(side, seeds)
         .select(col("nid"), col("cell"), quantize(col("v")).as("qv"))
         .withColumn("n2", lldot(col("qv"), col("qv")))
         .localCheckpoint()
@@ -895,13 +817,24 @@ object DedupOps {
         coalesce(col("dup"), lit(false)).as("dup"))
   }
 
+  /** Staged-table contract for the substring family's shared gram pass
+    * (r13): `tokenGramsWithTail` + hashed gram —
+    * (doc_id, pos, tok, gh = md5(gram), gh null on the per-doc tail).
+    * One tokenize+window pass per fixture serves all three substring rows
+    * (spans / apply / incremental) instead of each rebuilding it twice. */
+  def gramHashTable(docs: DataFrame, k: Int = 6): DataFrame =
+    TextOps.tokenGramsWithTail(docs, "text", "doc_id", k)
+      .select(col("doc_id"), col("pos"), col("tok"),
+        md5(col("gram")).as("gh"))
+
   /** Substring-level dedup (the Lee et al. 2021 "Deduplicating Training
     * Data Makes Language Models Better" mode): every token k-gram that
     * occurs `minCount`+ times ANYWHERE in the corpus marks its k-token
     * window, and per doc the overlapping-or-adjacent marked windows merge
     * into maximal spans (gaps-and-islands over window ends). Unlike the
     * doc-level families above, this finds boilerplate and licence blocks
-    * embedded inside otherwise-unique documents.
+    * embedded inside otherwise-unique documents. `grams` is the corpus's
+    * [[gramHashTable]] built with the same `k`.
     *
     * Returns (doc_id, span_start, span_end, span_tokens) with 0-based
     * inclusive token positions — the cut-list a cleaner applies (which
@@ -909,44 +842,23 @@ object DedupOps {
     * paper's suffix-array formulation; the k-gram inventory is its
     * scalable relational equivalent).
     *
-    * Scale shape: posexplode (one row per token) → one grouped count with
-    * map-side combine → a LEFT SEMI join back on the 128-bit gram hash
-    * (posting layout — never all-pairs; a boilerplate gram present a
-    * million times costs one hash row in the dup set) → per-doc window
-    * sort for the island merge. Skew bound: the per-doc sort partitions
-    * by doc_id, so the widest unit is one document's positions. */
-  /** Staged-table contract for the substring family's shared gram pass
-    * (r13): `tokenGramsWithTail` + hashed gram —
-    * (doc_id, pos, tok, gh = md5(gram), gh null on the per-doc tail).
-    * One tokenize+window pass per fixture serves all three substring rows
-    * (spans / apply / incremental) instead of each rebuilding it twice. */
-  def gramHashTable(docs: DataFrame, textCol: String = "text",
-                    idCol: String = "doc_id", k: Int = 6): DataFrame =
-    TextOps.tokenGramsWithTail(docs, textCol, idCol, k)
-      .select(col("doc_id"), col("pos"), col("tok"),
-        md5(col("gram")).as("gh"))
-
-  def duplicateSpans(docs: DataFrame, textCol: String = "text",
-                     idCol: String = "doc_id", k: Int = 6,
-                     minCount: Int = 2,
-                     precomputedGramTable: Option[DataFrame] = None): DataFrame = {
+    * Scale shape: one grouped count with map-side combine → a LEFT SEMI
+    * join back on the 128-bit gram hash (posting layout — never
+    * all-pairs; a boilerplate gram present a million times costs one hash
+    * row in the dup set) → per-doc window sort for the island merge. Skew
+    * bound: the per-doc sort partitions by doc_id, so the widest unit is
+    * one document's positions. */
+  def duplicateSpans(grams: DataFrame, k: Int = 6,
+                     minCount: Int = 2): DataFrame = {
     require(k >= 2, s"k-gram width must be >= 2: $k")
-    // shared relational k-gram build (TextOps.tokenGrams: one regex split
-    // per document; the higher-order `shingles` lambda measured 8× slower
-    // at sf1 on this op). Both the dup-count and the hits semi-join read
-    // it; deliberately NOT checkpointed — materializing one row per token
-    // measured slower at sf1 than replaying the map-shaped build, and the
-    // dup side reduces to a tiny broadcast set under AQE anyway. A staged
-    // [[gramHashTable]] (shared across the whole substring family) skips
-    // the build entirely.
-    val grams = precomputedGramTable
-      .map(_.filter(col("gh").isNotNull).select(col("doc_id"), col("pos"), col("gh")))
-      .getOrElse(TextOps.tokenGrams(docs, textCol, idCol, k)
-        .select(col("doc_id"), col("pos"), md5(col("gram")).as("gh")))
-    val dup = grams.groupBy("gh").agg(count(lit(1)).as("cnt"))
+    // both the dup-count and the hits semi-join read the grams; the dup
+    // side reduces to a tiny broadcast set under AQE
+    val g = grams.filter(col("gh").isNotNull)
+      .select(col("doc_id"), col("pos"), col("gh"))
+    val dup = g.groupBy("gh").agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= minCount)
       .select("gh")
-    val hits = grams.join(dup, Seq("gh"), "left_semi")
+    val hits = g.join(dup, Seq("gh"), "left_semi")
       .select(col("doc_id"), col("pos").as("s"),
         (col("pos") + (k - 1)).as("e"))
     mergeSpanIslands(hits)
@@ -974,40 +886,26 @@ object DedupOps {
   /** Incremental substring dedup — the continuous-ingest shape of
     * [[duplicateSpans]], completing the incremental family
     * ([[incrementalMinhashPairs]], [[semanticDedupIncremental]]): the
-    * stored corpus's k-gram inventory is a staged (gram_hash, count)
-    * index, and only the INCOMING batch's spans are computed. A gram in a
-    * new doc marks its window when stored_count + incoming_count ≥
-    * `minCount` — the corpus-wide rule of the full pass applied to
-    * stored ∪ incoming, while stored documents are never re-tokenized
-    * (pass the staged index via `precomputedStoredCounts`; the raw-docs
-    * path here is the bootstrap).
+    * stored corpus's k-gram inventory is a staged (gh, stored_cnt) index
+    * `storedCounts`, and only the INCOMING batch's spans are computed from
+    * its [[gramHashTable]] `incomingGrams`. A gram in a new doc marks its
+    * window when stored_count + incoming_count ≥ `minCount` — the
+    * corpus-wide rule of the full pass applied to stored ∪ incoming, while
+    * stored documents are never re-tokenized. Grams are row-local per doc,
+    * so id-filtered slices of one corpus-wide gram table serve as both
+    * sides.
     *
-    * Scale shape: one gram build over the NEW batch only, one grouped
-    * count of it, one join against the stored index (hash-keyed; only
-    * grams the new batch actually contains are probed), then the same
-    * per-doc islands merge as the full pass. O(new_tokens + probe hits).
+    * Scale shape: one grouped count of the new batch's grams, one join
+    * against the stored index (hash-keyed; only grams the new batch
+    * actually contains are probed), then the same per-doc islands merge as
+    * the full pass. O(new_tokens + probe hits).
     * Returns (doc_id, span_start, span_end, span_tokens) for NEW docs. */
-  def incrementalDuplicateSpans(stored: DataFrame, incoming: DataFrame,
-                                textCol: String = "text",
-                                idCol: String = "doc_id", k: Int = 6,
-                                minCount: Int = 2,
-                                precomputedStoredCounts: Option[DataFrame] =
-                                  None,
-                                precomputedIncomingGrams: Option[DataFrame] =
-                                  None): DataFrame = {
+  def incrementalDuplicateSpans(storedCounts: DataFrame,
+                                incomingGrams: DataFrame, k: Int = 6,
+                                minCount: Int = 2): DataFrame = {
     require(k >= 2, s"k-gram width must be >= 2: $k")
-    val storedCounts = precomputedStoredCounts.getOrElse(
-      TextOps.tokenGrams(stored, textCol, idCol, k)
-        .select(md5(col("gram")).as("gh"))
-        .groupBy("gh").agg(count(lit(1)).as("stored_cnt")))
-    // grams are row-local per doc, so a caller holding the fixture-wide
-    // staged [[gramHashTable]] passes id-filtered slices of it as both
-    // sides instead of re-tokenizing either (r13)
-    val grams = precomputedIncomingGrams
-      .map(_.filter(col("gh").isNotNull)
-        .select(col("doc_id"), col("pos"), col("gh")))
-      .getOrElse(TextOps.tokenGrams(incoming, textCol, idCol, k)
-        .select(col("doc_id"), col("pos"), md5(col("gram")).as("gh")))
+    val grams = incomingGrams.filter(col("gh").isNotNull)
+      .select(col("doc_id"), col("pos"), col("gh"))
     val newCounts = grams.groupBy("gh").agg(count(lit(1)).as("new_cnt"))
     val dup = newCounts.join(storedCounts, Seq("gh"), "left")
       .filter(col("new_cnt") + coalesce(col("stored_cnt"), lit(0L))
@@ -1027,6 +925,7 @@ object DedupOps {
     * neighbours into a longer island) are kept — span-content grouping
     * trades the suffix-array's sub-span exactness for a pure relational
     * shape; [[duplicateSpans]] still reports those regions for audit.
+    * `grams` is the [[gramHashTable]] of `docs`.
     *
     * Returns one row per document: (doc_id, n_tokens_kept, clean_fp)
     * where clean_fp fingerprints the kept tokens in order (narrow output;
@@ -1036,21 +935,18 @@ object DedupOps {
     *
     * Scale shape on top of [[duplicateSpans]]: spans are rare relative to
     * tokens, so the span-content hash join and the keep-first window run
-    * on the small span set; the only token-sized steps are one
-    * posexplode + a doc-partitioned range-containment join against each
-    * doc's own (few) cut spans + one ordered per-doc fold. */
-  def cutDuplicateSpans(docs: DataFrame, textCol: String = "text",
-                        idCol: String = "doc_id", k: Int = 6,
-                        minCount: Int = 2,
-                        precomputedGramTable: Option[DataFrame] = None): DataFrame = {
-    val spans = duplicateSpans(docs, textCol, idCol, k, minCount,
-      precomputedGramTable)
+    * on the small span set; the only token-sized steps are the gram
+    * table's token rows, a doc-partitioned range-containment join against
+    * each doc's own (few) cut spans and one ordered per-doc fold. */
+  def cutDuplicateSpans(docs: DataFrame, grams: DataFrame, k: Int = 6,
+                        minCount: Int = 2): DataFrame = {
+    val spans = duplicateSpans(grams, k, minCount)
     // span content fingerprint: re-slice the doc's tokens (one split per
     // SPAN row — spans are few; cheaper than threading arrays through the
     // island merge)
     val withFp = spans
-      .join(docs.select(col(idCol).as("doc_id"),
-        tokens(col(textCol)).as("toks")), "doc_id")
+      .join(docs.select(col("doc_id"), tokens(col("text")).as("toks")),
+        "doc_id")
       .withColumn("span_fp", md5(array_join(
         slice(col("toks"), col("span_start") + 1,
           (col("span_end") - col("span_start") + 1).cast("int")), " ")))
@@ -1063,16 +959,11 @@ object DedupOps {
       .filter(col("grp") >= 2 && col("rk") >= 2)
       .select(col("doc_id").as("cut_doc"), col("span_start").as("cs"),
         col("span_end").as("ce"))
-    // full token sequence: the staged gram table keeps every position
-    // (tail rows carry gh = null), so the apply step re-tokenizes nothing
-    val toks = precomputedGramTable
-      .map(_.select(col("doc_id"), col("pos"), col("tok")))
-      .getOrElse(docs.repartition(col(idCol))
-        .select(col(idCol).as("doc_id"),
-          posexplode(tokens(col(textCol))).as(Seq("pos", "tok")))
-        .select(col("doc_id"), col("pos").cast("long").as("pos"), col("tok")))
-    // the cut side's key is renamed: on the staged path both sides carry
-    // the gram table's own doc_id attribute
+    // full token sequence: the gram table keeps every position (tail rows
+    // carry gh = null), so the apply step re-tokenizes nothing
+    val toks = grams.select(col("doc_id"), col("pos"), col("tok"))
+    // the cut side's key is renamed: both sides carry the gram table's own
+    // doc_id attribute
     val kept = toks.join(cuts,
         col("doc_id") === col("cut_doc") &&
           col("pos").between(col("cs"), col("ce")), "left_anti")
@@ -1087,9 +978,10 @@ object DedupOps {
     * counterpart of the ANN recall probe (`sim_recall_lsh` audits what the
     * index MISSES; this audits what it FALSELY proposes, the number that
     * sets the wasted-verification bill at 100 TB). For every banded
-    * candidate pair, the EXACT shingle Jaccard is computed and compared to
-    * tauPct by integer cross-multiplication (inter·100 ≥ τ·union — no
-    * float can flip a verdict).
+    * candidate pair of `pairs` ([[minhashLshPairs]]), the EXACT shingle
+    * Jaccard over `shingleSet` ([[shingleHashSet]]) is computed and
+    * compared to tauPct by integer cross-multiplication (inter·100 ≥
+    * τ·union — no float can flip a verdict).
     *
     * Cost is candidate-bounded, never corpus-bounded: the pair graph and
     * the per-doc shingle sets are the two staged artifacts every MinHash
@@ -1097,22 +989,17 @@ object DedupOps {
     * to its id1-side shingles and semi-matches the id2 side — O(Σ|pair
     * shingles|), the same bill the banding already paid. Zero-overlap
     * candidates (pure band collisions) keep a row with inter = 0. */
-  def lshPrecision(docs: DataFrame, tauPct: Int = 50,
-                   textCol: String = "text", idCol: String = "doc_id",
-                   precomputedPairs: Option[DataFrame] = None,
-                   precomputedShingles: Option[DataFrame] = None): DataFrame = {
+  def lshPrecision(pairs: DataFrame, shingleSet: DataFrame,
+                   tauPct: Int = 50): DataFrame = {
     require(tauPct >= 0 && tauPct <= 100, s"tauPct out of range: $tauPct")
-    val pairs = precomputedPairs
-      .getOrElse(minhashLshPairs(docs, textCol, idCol))
-      .select(col("id1"), col("id2"))
-    val sh = precomputedShingles
-      .getOrElse(shingleHashSet(docs, textCol, idCol).localCheckpoint())
-    val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-    val inter = pairs
-      .join(sh.select(col("id").as("id1"), col("h").as("s")), "id1")
-      .join(sh.select(col("id").as("id2"), col("h").as("s")), Seq("id2", "s"))
+    val ids = pairs.select(col("id1"), col("id2"))
+    val sizes = shingleSet.groupBy(col("id")).agg(count(lit(1)).as("sz"))
+    val inter = ids
+      .join(shingleSet.select(col("id").as("id1"), col("h").as("s")), "id1")
+      .join(shingleSet.select(col("id").as("id2"), col("h").as("s")),
+        Seq("id2", "s"))
       .groupBy(col("id1"), col("id2")).agg(count(lit(1)).as("inter"))
-    pairs
+    ids
       .join(inter, Seq("id1", "id2"), "left")
       .na.fill(0L, Seq("inter"))
       .join(sizes.select(col("id").as("id1"), col("sz").as("sz1")), "id1")
@@ -1137,23 +1024,19 @@ object DedupOps {
     * single-shuffle budget as [[exact]], at paragraph granularity. Skew is
     * bounded: a block hash repeated k times fans to k window rows, never a
     * pair join. */
-  def paragraphDedup(docs: DataFrame, width: Int = 20,
-                     textCol: String = "text",
-                     idCol: String = "doc_id"): DataFrame =
-    flaggedBlocks(docs, width, textCol, idCol)
+  def paragraphDedup(docs: DataFrame, width: Int = 20): DataFrame =
+    flaggedBlocks(docs, width)
       .select(col("doc_id"), col("blk"), col("n_block_tokens"),
         (col("rn") > 1).as("dup"))
 
-  private def flaggedBlocks(docs: DataFrame, width: Int,
-                            textCol: String, idCol: String): DataFrame = {
+  private def flaggedBlocks(docs: DataFrame, width: Int): DataFrame = {
     // repartition BEFORE the block build (the shingleHashes idiom): a
     // single-file fixture scans as ONE partition, which trivially
     // satisfies the bh-window's clustered distribution — Catalyst would
     // skip the exchange and the whole tokenize+md5+window would run
     // serially (the ivfAssign serial-window hazard). Compact text rows
     // ship; the bh window still adds its own hash exchange.
-    val b = graft.operators.TextOps.tokenBlocks(
-        docs.repartition(col(idCol)), width, textCol, idCol)
+    val b = TextOps.tokenBlocks(docs.repartition(col("doc_id")), width)
       .withColumn("bh", md5(col("btxt")))
     b.withColumn("rn", row_number().over(
       Window.partitionBy(col("bh")).orderBy(col("doc_id"), col("blk"))))
@@ -1172,12 +1055,10 @@ object DedupOps {
     * index never goes stale. At 100 TB the index is materialized bucketed
     * on the hash and the probe is a co-located join. */
   def incrementalParagraphDedup(stored: DataFrame, batch: DataFrame,
-                                width: Int = 20, textCol: String = "text",
-                                idCol: String = "doc_id"): DataFrame = {
-    val storedIdx = graft.operators.TextOps.tokenBlocks(
-        stored.repartition(col(idCol)), width, textCol, idCol)
+                                width: Int = 20): DataFrame = {
+    val storedIdx = TextOps.tokenBlocks(stored.repartition(col("doc_id")), width)
       .select(md5(col("btxt")).as("bh")).distinct()
-    flaggedBlocks(batch, width, textCol, idCol)
+    flaggedBlocks(batch, width)
       .join(storedIdx.withColumn("stored_hit", lit(true)), Seq("bh"), "left")
       .select(col("doc_id"), col("blk"), col("n_block_tokens"),
         (coalesce(col("stored_hit"), lit(false)) || col("rn") > 1).as("dup"))
@@ -1190,10 +1071,8 @@ object DedupOps {
     * fully-cut docs. One extra shuffle past the flag (the per-doc rollup);
     * the ordered rebuild is a sorted collect_list fold, engine-exact
     * because (blk) is unique per doc. */
-  def paragraphDedupApply(docs: DataFrame, width: Int = 20,
-                          textCol: String = "text",
-                          idCol: String = "doc_id"): DataFrame =
-    flaggedBlocks(docs, width, textCol, idCol)
+  def paragraphDedupApply(docs: DataFrame, width: Int = 20): DataFrame =
+    flaggedBlocks(docs, width)
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_blocks"),
         sum(when(col("rn") === 1, 1L).otherwise(0L)).as("n_kept"),

@@ -235,25 +235,6 @@ object TextOps {
     df.select((idCol +: cols :+ md5(scrubbed).as("scrubbed_fp")): _*)
   }
 
-  /** Corpus-conditional n-gram fluency score — the integer-exact
-    * counterpart of the n-gram-LM perplexity filters production curation
-    * pipelines run (CCNet/RefinedWeb style): documents whose word
-    * transitions are rare under the corpus model score low and get culled.
-    *
-    * Model = bigram conditionals from ONE grouped pass over the corpus:
-    * P(b|a) = c(a,b) / c(a,·) with c(a,·) = Σ_b c(a,b) (self-consistent,
-    * no separate unigram scan). Per-bigram probability is quantized to
-    * micro-units via integer division BEFORE the per-doc mean, so the
-    * whole score is associative integer arithmetic — deterministic on any
-    * partitioning and value-oracle-exact (a log-domain perplexity would
-    * hinge on cross-engine `ln` ulps; deployments that want log scores
-    * swap the quantized ratio for quantized logs at the same place).
-    *
-    * Shape at scale: explode → two grouped counts → an inverted-index join
-    * on the bigram (the tfidf/posting layout) → one per-doc agg. No
-    * all-pairs anywhere; hot bigrams are bounded by the count pre-agg.
-    * Docs with < 2 tokens have no transitions and are absent (callers
-    * treat missing as "no evidence", like the repetition signal). */
   /** Relational k-gram positions (posexplode + lead): rows
     * (doc_id, pos, tok, gram) for every position whose k tokens fit;
     * docs shorter than k contribute no rows (all-leads-present guard —
@@ -288,6 +269,25 @@ object TextOps {
         when(parts.last.isNotNull, concat_ws(" ", parts: _*)).as("gram"))
   }
 
+  /** Corpus-conditional n-gram fluency score — the integer-exact
+    * counterpart of the n-gram-LM perplexity filters production curation
+    * pipelines run (CCNet/RefinedWeb style): documents whose word
+    * transitions are rare under the corpus model score low and get culled.
+    *
+    * Model = bigram conditionals from ONE grouped pass over the corpus:
+    * P(b|a) = c(a,b) / c(a,·) with c(a,·) = Σ_b c(a,b) (self-consistent,
+    * no separate unigram scan). Per-bigram probability is quantized to
+    * micro-units via integer division BEFORE the per-doc mean, so the
+    * whole score is associative integer arithmetic — deterministic on any
+    * partitioning and value-oracle-exact (a log-domain perplexity would
+    * hinge on cross-engine `ln` ulps; deployments that want log scores
+    * swap the quantized ratio for quantized logs at the same place).
+    *
+    * Shape at scale: explode → two grouped counts → an inverted-index join
+    * on the bigram (the tfidf/posting layout) → one per-doc agg. No
+    * all-pairs anywhere; hot bigrams are bounded by the count pre-agg.
+    * Docs with < 2 tokens have no transitions and are absent (callers
+    * treat missing as "no evidence", like the repetition signal). */
   def lmFluency(docs: DataFrame, textCol: String = "text",
                 idCol: String = "doc_id", scale: Long = 1000000L): DataFrame = {
     // the bigram's prefix IS the position's token — no split recovers it;
@@ -449,18 +449,17 @@ object TextOps {
     * cross-multiplied compare runs in decimal(38,0) (the SemDeDup
     * precedent; u·w_max can reach ~10²², past BIGINT).
     *
-    * Shape at scale: one tokenize scan (shared with the BM25/tfidf staged
-    * postings), two bucket-keyed aggregations (≤ `buckets` rows — a
-    * broadcast), one per-doc weighted sum. No joins wider than the
-    * 4096-row ratio table; an empty target corpus raises rather than
-    * silently weighting everything by the smoothing floor. */
-  def dsirSample(docs: DataFrame, targetFilter: Column, buckets: Int = 4096,
-                 textCol: String = "text", idCol: String = "doc_id",
-                 precomputedTf: Option[DataFrame] = None): DataFrame = {
+    * Shape at scale: `tf` is the corpus's
+    * [[SimilarityOps.termFrequencies]] table (the BM25 staged postings;
+    * `targetFilter` selects the target rows of `docs`), two bucket-keyed
+    * aggregations (≤ `buckets` rows — a broadcast), one per-doc weighted
+    * sum. No joins wider than the 4096-row ratio table; an empty target
+    * slice of a non-empty corpus raises rather than silently weighting
+    * everything by the smoothing floor (an empty corpus yields no rows). */
+  def dsirSample(docs: DataFrame, tf: DataFrame, targetFilter: Column,
+                 buckets: Int = 4096, idCol: String = "doc_id"): DataFrame = {
     require(buckets >= 2 && buckets <= 1000000,
       s"dsir buckets must be in [2, 1e6]: $buckets")
-    val tf = precomputedTf
-      .getOrElse(SimilarityOps.termFrequencies(docs, textCol, idCol))
     val cnt = tf
       .select(col("doc_id"), (stableHash(col("tok")) % buckets).as("b"),
         col("tf"))

@@ -67,8 +67,7 @@ object Dedup extends QuerySet {
     * (small) pair set as parquet. */
   private def minhashPairs(s: SparkSession, dir: String): DataFrame =
     StagingFs.readStage(s, dir, "graft-minhash-pairs") { p =>
-      DedupOps.minhashLshPairs(docs(s, dir),
-          precomputedSigs = Some(minhashSigs(s, dir)))
+      DedupOps.minhashLshPairs(minhashSigs(s, dir))
         .write.mode("overwrite").parquet(p)
     }
 
@@ -95,8 +94,7 @@ object Dedup extends QuerySet {
       DedupOps.simhashPairs(simhashStaged(s, dir))),
 
     "dedup_ngram_jaccard" -> ((s, dir) =>
-      DedupOps.ngramJaccardPairs(docs(s, dir),
-        precomputedShingles = Some(shingleSet(s, dir)))),
+      DedupOps.ngramJaccardPairs(shingleSet(s, dir))),
 
     // benchmark decontamination: every 97th doc plays the held-out eval
     // set; the rest is the training corpus, flagged when it shares >= 2
@@ -111,23 +109,19 @@ object Dedup extends QuerySet {
 
     // fuzzy dedup: SimHash blocking proposes, exact levenshtein confirms
     "dedup_edit_distance" -> ((s, dir) =>
-      DedupOps.editDistancePairs(docs(s, dir), maxDist = 16,
-        precomputedSimhash = Some(simhashStaged(s, dir)))),
+      DedupOps.editDistancePairs(docs(s, dir), simhashStaged(s, dir),
+        maxDist = 16)),
 
     // incremental ingest dedup: every 3rd doc plays the incoming batch,
     // probed against the band index of the remaining snapshot — only
     // new×old pairs come out (the steady-state pipeline shape; the full
     // re-pair above is the bootstrap)
     "dedup_incremental" -> ((s, dir) => {
-      val d = docs(s, dir)
       // signatures come from the shared per-fixture stage (row-local, so
       // subset filters of the staged table ARE the per-side signatures)
       val sigs = minhashSigs(s, dir)
-      DedupOps.incrementalMinhashPairs(
-        d.filter(col("doc_id") % 3 =!= 0),
-        d.filter(col("doc_id") % 3 === 0),
-        precomputedOldSigs = Some(sigs.filter(col("id") % 3 =!= 0)),
-        precomputedNewSigs = Some(sigs.filter(col("id") % 3 === 0)))
+      DedupOps.incrementalMinhashPairs(sigs.filter(col("id") % 3 =!= 0),
+        sigs.filter(col("id") % 3 === 0))
     }),
 
     // the exact all-pairs BASELINE, explicitly opted into (quadratic):
@@ -152,8 +146,7 @@ object Dedup extends QuerySet {
     }),
 
     "dedup_pipeline" -> ((s, dir) =>
-      DedupOps.dedupCorpus(docs(s, dir),
-          precomputedSigs = Some(minhashSigs(s, dir)))
+      DedupOps.dedupCorpus(docs(s, dir), minhashSigs(s, dir))
         .select(col("doc_id"))),
 
     // near-duplicate GROUPS, not just pairs: connected components over the
@@ -162,31 +155,28 @@ object Dedup extends QuerySet {
     // transitively-linked near-dups land in one cluster in O(log d) rounds.
     // Reuses the staged minhash pair set (shared signature stage).
     "dedup_clusters" -> ((s, dir) =>
-      DedupOps.dedupClusters(docs(s, dir), includeSingletons = false,
-        precomputedPairs = Some(minhashPairs(s, dir)))),
+      DedupOps.dedupClusters(docs(s, dir), minhashPairs(s, dir),
+        includeSingletons = false)),
 
     // leakage-safe splits: train/valid/test assigned per near-dup CLUSTER
     // (reusing the staged pair set), so a test doc's paraphrase can never
     // land in train — the eval-contamination guarantee a per-doc hash
     // split silently violates
     "corpus_split_leakage_safe" -> ((s, dir) =>
-      DedupOps.leakageSafeSplits(docs(s, dir),
-        precomputedPairs = Some(minhashPairs(s, dir)))),
+      DedupOps.leakageSafeSplits(docs(s, dir), minhashPairs(s, dir))),
 
     // quality-aware canonical selection: one kept doc per near-dup
     // cluster, chosen keep-BEST (longest copy, tie min id) rather than
     // keep-first — reuses the same staged pair set; past the shared CC
     // the cost is ONE cluster-keyed argmax aggregation
     "dedup_canonical_select" -> ((s, dir) =>
-      DedupOps.canonicalSelect(docs(s, dir),
-        precomputedPairs = Some(minhashPairs(s, dir)))),
+      DedupOps.canonicalSelect(docs(s, dir), minhashPairs(s, dir))),
 
     // pairwise shingle-overlap matrix between the 20 sources: shared
     // distinct 3-gram hashes + containment ratio — the corpus diagnostic
     // that surfaces mirrored/syndicated sources before doc-level dedup
     "corpus_source_overlap" -> ((s, dir) =>
-      DedupOps.sourceOverlap(docs(s, dir),
-        precomputedShingles = Some(shingleSet(s, dir)))),
+      DedupOps.sourceOverlap(docs(s, dir), shingleSet(s, dir))),
 
     // MOSS winnowing sketch: per-window rightmost-min k-gram hash — the
     // fingerprint family's LOCAL-match member (guarantee: any shared run
@@ -197,15 +187,13 @@ object Dedup extends QuerySet {
     // relative df cap cuts boilerplate hashes) — local plagiarism-style
     // match detection over the staged sketch, join keyed on the hash
     "dedup_winnowing_pairs" -> ((s, dir) =>
-      DedupOps.winnowingPairs(docs(s, dir),
-        precomputedFps = Some(winnowFps(s, dir)))),
+      DedupOps.winnowingPairs(docs(s, dir), winnowFps(s, dir))),
 
     // MOSS containment report: per candidate pair, shared fps as basis
     // points of EACH side's sketch — excerpt-of vs mutual near-dup; same
     // staged sketch as the pair detector
     "dedup_winnowing_containment" -> ((s, dir) =>
-      DedupOps.winnowingContainment(docs(s, dir),
-        precomputedFps = Some(winnowFps(s, dir)))),
+      DedupOps.winnowingContainment(docs(s, dir), winnowFps(s, dir))),
 
     // continuous-ingest winnowing: only the doc_id % 3 == 0 batch is
     // tokenized; the stored corpus is probed as its fingerprint index
@@ -216,8 +204,7 @@ object Dedup extends QuerySet {
       DedupOps.winnowingIncremental(
         d.filter(col("doc_id") % 3 =!= 0),
         d.filter(col("doc_id") % 3 === 0),
-        precomputedStoredFps =
-          Some(winnowFps(s, dir).filter(col("doc_id") % 3 =!= 0)))
+        winnowFps(s, dir).filter(col("doc_id") % 3 =!= 0))
     }),
 
     // SemDeDup (Abbas et al. 2023): coarse-cluster the embedding space,
@@ -248,14 +235,12 @@ object Dedup extends QuerySet {
     // boilerplate embedded inside otherwise-unique documents, which every
     // doc-level family above misses
     "dedup_substring_spans" -> ((s, dir) =>
-      DedupOps.duplicateSpans(docs(s, dir),
-        precomputedGramTable = Some(gram6Staged(s, dir)))),
+      DedupOps.duplicateSpans(gram6Staged(s, dir))),
 
     // the apply step: cut recurring spans keep-first; fully-cut docs
     // (exact duplicates) disappear from the cleaned corpus
     "dedup_substring_apply" -> ((s, dir) =>
-      DedupOps.cutDuplicateSpans(docs(s, dir),
-        precomputedGramTable = Some(gram6Staged(s, dir)))),
+      DedupOps.cutDuplicateSpans(docs(s, dir), gram6Staged(s, dir))),
 
     // continuous-ingest substring dedup: only the doc_id % 3 == 0 batch is
     // tokenized and span-merged; the rest of the corpus participates as a
@@ -263,16 +248,11 @@ object Dedup extends QuerySet {
     // sides are id-filtered slices of the staged fixture-wide gram table
     // (grams are row-local per doc, so the slices ARE the per-side builds)
     "dedup_substring_incremental" -> ((s, dir) => {
-      val d = docs(s, dir)
       val g6 = gram6Staged(s, dir)
       DedupOps.incrementalDuplicateSpans(
-        d.filter(col("doc_id") % 3 =!= 0),
-        d.filter(col("doc_id") % 3 === 0),
-        precomputedStoredCounts = Some(
-          g6.filter(col("gh").isNotNull && col("doc_id") % 3 =!= 0)
-            .groupBy(col("gh")).agg(count(lit(1)).as("stored_cnt"))),
-        precomputedIncomingGrams = Some(
-          g6.filter(col("doc_id") % 3 === 0)))
+        g6.filter(col("gh").isNotNull && col("doc_id") % 3 =!= 0)
+          .groupBy(col("gh")).agg(count(lit(1)).as("stored_cnt")),
+        g6.filter(col("doc_id") % 3 === 0))
     }),
 
     // LSH index-quality audit: exact shingle Jaccard for every banded
@@ -281,9 +261,7 @@ object Dedup extends QuerySet {
     // artifacts (pair graph + shingle sets), so the audit costs only the
     // candidate-bounded intersection join
     "dedup_lsh_precision" -> ((s, dir) =>
-      DedupOps.lshPrecision(docs(s, dir),
-        precomputedPairs = Some(minhashPairs(s, dir)),
-        precomputedShingles = Some(shingleSet(s, dir)))),
+      DedupOps.lshPrecision(minhashPairs(s, dir), shingleSet(s, dir))),
 
     // paragraph-level exact dedup (CCNet): 20-token blocks hashed
     // corpus-wide, keep-first by (doc_id, blk) — the boilerplate

@@ -444,15 +444,13 @@ object Similarity extends QuerySet {
     // own — graph-denoised weak labels before they gate curation; probes
     // the staged edge list shared with the graph/clusters rows
     "sim_knn_label_smooth" -> ((s, dir) =>
-      SimilarityOps.knnLabelSmooth(embs(s, dir), k = 3, bits = 4,
-        precomputedGraph = Some(knnStage(s, dir)))),
+      SimilarityOps.knnLabelSmooth(embs(s, dir), knnStage(s, dir))),
 
     // mutual-k-NN semantic clusters: connected components over the mutual,
     // positively-similar knn edges; every vector labeled (singletons kept);
     // probes the staged edge list, pays only CC + the label tail
     "sim_knn_clusters" -> ((s, dir) =>
-      SimilarityOps.knnClusters(embs(s, dir), k = 3, bits = 4, minIcos = 0L,
-        precomputedGraph = Some(knnStage(s, dir)))),
+      SimilarityOps.knnClusters(embs(s, dir), knnStage(s, dir), minIcos = 0L)),
 
     // product quantization: 4-byte codes per 64-dim vector (the standard
     // ANN compression — the corpus index stores codes, not floats)
@@ -503,15 +501,13 @@ object Similarity extends QuerySet {
     // like the dedup signature stages, so repeated passes pay only the
     // norms/index-join/top-k tail
     "sim_tfidf_topk" -> ((s, dir) =>
-      SimilarityOps.tfidfTopK(Tables.load(s, dir, "documents"),
-        precomputedWeights = Some(tfidfStage(s, dir)))),
+      SimilarityOps.tfidfTopK(tfidfStage(s, dir))),
 
     // per-doc keyword extraction (top-3 distinctive bigrams by integer
     // tf-idf weight) — the metadata-enrichment pass; probes the SAME
     // staged weighted postings as the tfidf ranker
     "text_keywords" -> ((s, dir) =>
-      SimilarityOps.keywords(Tables.load(s, dir, "documents"),
-        precomputedWeights = Some(tfidfStage(s, dir)))),
+      SimilarityOps.keywords(tfidfStage(s, dir))),
 
     // vector-side ingest monitoring: per-dim micro-mean shift of the
     // incoming batch (vec_id % 10 = 0) vs the stored corpus
@@ -528,17 +524,15 @@ object Similarity extends QuerySet {
     // every score is an exact BIGINT whose magnitude is corpus-size-
     // INDEPENDENT (corpus stats enter only through the quantized avgdl)
     "sim_bm25_topk" -> ((s, dir) =>
-      SimilarityOps.bm25TopK(Tables.load(s, dir, "documents"),
-        precomputedTf = Some(bigramTf(s, dir)))),
+      SimilarityOps.bm25TopK(bigramTf(s, dir))),
 
     // DSIR-style importance resampling toward the lang='en' target slice:
     // quantized probability-ratio weights over 4096 hashed-bigram buckets
     // + derandomized (md5-draw) acceptance with prob weight/w_max; reuses
     // the SAME staged bigram postings as bm25/tfidf
     "corpus_dsir_sample" -> ((s, dir) =>
-      graft.operators.TextOps.dsirSample(
-        Tables.load(s, dir, "documents"), col("lang") === "en",
-        precomputedTf = Some(bigramTf(s, dir)))),
+      graft.operators.TextOps.dsirSample(Tables.load(s, dir, "documents"),
+        bigramTf(s, dir), col("lang") === "en")),
 
     // BM25 + pseudo-relevance feedback (RM3 expansion): top-3 feedback
     // docs donate their top-5 terms (Σw desc, term asc — engine-exact),
@@ -549,8 +543,7 @@ object Similarity extends QuerySet {
       // caps the postings localCheckpoint job that feeds both passes
       graft.operators.PartitionOps.withShufflePartitions(s,
           graft.operators.PartitionOps.derivedShufflePartitions(s, dir)) {
-        SimilarityOps.bm25Prf(Tables.load(s, dir, "documents"),
-          precomputedTf = Some(tf))
+        SimilarityOps.bm25Prf(tf)
       }
     }),
 
@@ -559,9 +552,8 @@ object Similarity extends QuerySet {
     // reciprocal-rank fusion — only RANKS cross the system boundary, so
     // no score calibration; reuses the staged bigram postings
     "sim_hybrid_rrf" -> ((s, dir) =>
-      SimilarityOps.hybridRrf(Tables.load(s, dir, "documents"),
-        embs(s, dir), k = 5, queryMod = 100,
-        precomputedTf = Some(bigramTf(s, dir)))),
+      SimilarityOps.hybridRrf(bigramTf(s, dir), embs(s, dir), k = 5,
+        queryMod = 100)),
 
     // contrastive pair mining: per query, top-k same-label positives AND
     // top-k different-label hard negatives — broadcast query set × one

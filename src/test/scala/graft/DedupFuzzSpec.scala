@@ -84,8 +84,11 @@ class DedupFuzzSpec extends SparkSpecBase {
     // 45 (new side) copies doc 8 (old side)
     val all = docsLocal ++ Vector((43L, docsLocal(6)._2), (45L, docsLocal(8)._2))
     val df = all.toDF("doc_id", "text")
+    def sigsOf(d: org.apache.spark.sql.DataFrame) =
+      DedupOps.minhashSignatures(d).localCheckpoint()
     val out = DedupOps.incrementalMinhashPairs(
-        df.filter($"doc_id" % 3 =!= 0), df.filter($"doc_id" % 3 === 0))
+        sigsOf(df.filter($"doc_id" % 3 =!= 0)),
+        sigsOf(df.filter($"doc_id" % 3 === 0)))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .toSet
@@ -137,7 +140,8 @@ class DedupFuzzSpec extends SparkSpecBase {
       inter = (si & sj).size if inter > 0
       jac = inter.toDouble / (si.size + sj.size - inter) if jac >= 0.2
     } yield (i, j, inter.toLong, jac)).toSet
-    val got = DedupOps.ngramJaccardPairs(docsDf).collect()
+    val got = DedupOps.ngramJaccardPairs(
+        DedupOps.shingleHashSet(docsDf).localCheckpoint()).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .toSet
     assert(got == expect)
@@ -358,7 +362,8 @@ class DedupFuzzSpec extends SparkSpecBase {
       (i.toLong, ts.mkString(" "))
     }.toVector ++ Vector((100L, "alpha beta gamma")) // < k tokens: absent
     import spark.implicits._
-    val got = DedupOps.duplicateSpans(longDocs.toDF("doc_id", "text"))
+    val got = DedupOps.duplicateSpans(
+        DedupOps.gramHashTable(longDocs.toDF("doc_id", "text")))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSet
@@ -409,9 +414,9 @@ class DedupFuzzSpec extends SparkSpecBase {
     // an exact duplicate of doc 1: must vanish entirely from the output
     val all = base :+ (50L, base(1)._2)
     import spark.implicits._
-    val got = DedupOps.cutDuplicateSpans(
-        all.map { case (id, ts) => (id, ts.mkString(" ")) }
-          .toDF("doc_id", "text"))
+    val allDf = all.map { case (id, ts) => (id, ts.mkString(" ")) }
+      .toDF("doc_id", "text")
+    val got = DedupOps.cutDuplicateSpans(allDf, DedupOps.gramHashTable(allDf))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getString(2))))
       .toMap
 
@@ -478,7 +483,7 @@ class DedupFuzzSpec extends SparkSpecBase {
   }
 
   test("incremental substring spans equal the full pass restricted to the batch") {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, count, lit}
     // the defining property: stored_count + incoming_count is exactly the
     // corpus-wide count, so the incremental result must equal the full
     // pass filtered to the incoming docs — on a corpus with planted
@@ -487,17 +492,24 @@ class DedupFuzzSpec extends SparkSpecBase {
     def spans(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val full = spans(DedupOps.duplicateSpans(all, k = 3)
+    val full = spans(DedupOps.duplicateSpans(DedupOps.gramHashTable(all, k = 3),
+        k = 3)
       .filter(col("doc_id") % 3 === 0))
-    val got = spans(DedupOps.incrementalDuplicateSpans(
-      all.filter(col("doc_id") % 3 =!= 0),
-      all.filter(col("doc_id") % 3 === 0), k = 3))
+    val storedCounts = DedupOps.gramHashTable(
+        all.filter(col("doc_id") % 3 =!= 0), k = 3)
+      .filter(col("gh").isNotNull)
+      .groupBy(col("gh")).agg(count(lit(1)).as("stored_cnt"))
+    val got = spans(DedupOps.incrementalDuplicateSpans(storedCounts,
+      DedupOps.gramHashTable(all.filter(col("doc_id") % 3 === 0), k = 3),
+      k = 3))
     assert(got == full)
     assert(got.nonEmpty, "fixture must exercise cross-side duplication")
   }
 
   test("leakage-safe splits: cluster-atomic, total, and hash-exact") {
-    val got = DedupOps.leakageSafeSplits(docsDf)
+    val pairs = DedupOps.minhashLshPairs(
+      DedupOps.minhashSignatures(docsDf).localCheckpoint())
+    val got = DedupOps.leakageSafeSplits(docsDf, pairs)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
     // total: every doc assigned exactly once
@@ -518,7 +530,7 @@ class DedupFuzzSpec extends SparkSpecBase {
     assert(got.map(_._3).toVector == expectSplit.toVector)
     // invalid percentage shapes error instead of silently missing a split
     assertThrows[IllegalArgumentException] {
-      DedupOps.leakageSafeSplits(docsDf, trainPct = 95, validPct = 10)
+      DedupOps.leakageSafeSplits(docsDf, pairs, trainPct = 95, validPct = 10)
     }
   }
 
@@ -547,35 +559,6 @@ class DedupFuzzSpec extends SparkSpecBase {
     }
   }
 
-  test("substring family: staged gram-table path equals the direct path") {
-    import org.apache.spark.sql.functions.{col, count, lit}
-    // r13 optimization contract: one staged gramHashTable serves spans,
-    // apply and incremental — each must be row-identical to the
-    // re-tokenizing form it replaced
-    val all = docsDf
-    val g = DedupOps.gramHashTable(all, k = 3).localCheckpoint()
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).toSet
-    assert(rows(DedupOps.duplicateSpans(all, k = 3,
-        precomputedGramTable = Some(g))) ==
-      rows(DedupOps.duplicateSpans(all, k = 3)),
-      "spans: staged != direct")
-    assert(rows(DedupOps.cutDuplicateSpans(all, k = 3,
-        precomputedGramTable = Some(g))) ==
-      rows(DedupOps.cutDuplicateSpans(all, k = 3)),
-      "apply: staged != direct")
-    val stored = all.filter(col("doc_id") % 3 =!= 0)
-    val incoming = all.filter(col("doc_id") % 3 === 0)
-    assert(rows(DedupOps.incrementalDuplicateSpans(stored, incoming, k = 3,
-        precomputedStoredCounts = Some(
-          g.filter(col("gh").isNotNull && col("doc_id") % 3 =!= 0)
-            .groupBy(col("gh")).agg(count(lit(1)).as("stored_cnt"))),
-        precomputedIncomingGrams = Some(
-          g.filter(col("doc_id") % 3 === 0)))) ==
-      rows(DedupOps.incrementalDuplicateSpans(stored, incoming, k = 3)),
-      "incremental: staged != direct")
-  }
-
   test("substring apply: the staged-table join names two distinct doc_id attributes") {
     import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo}
     import org.apache.spark.sql.catalyst.plans.logical.Join
@@ -588,7 +571,7 @@ class DedupFuzzSpec extends SparkSpecBase {
     val g = DedupOps.gramHashTable(all, k = 3).localCheckpoint()
     val staged = graft.operators.PartitionOps.withConf(spark,
         "spark.sql.selfJoinAutoResolveAmbiguity", "false") {
-      DedupOps.cutDuplicateSpans(all, k = 3, precomputedGramTable = Some(g))
+      DedupOps.cutDuplicateSpans(all, g, k = 3)
     }
     val selfEq = staged.queryExecution.analyzed.collect {
       case j: Join => j.condition.toSeq.flatMap(_.collect {
@@ -599,6 +582,7 @@ class DedupFuzzSpec extends SparkSpecBase {
     assert(selfEq.isEmpty, s"self-equal join keys: $selfEq")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).toSet
-    assert(rows(staged) == rows(DedupOps.cutDuplicateSpans(all, k = 3)))
+    assert(rows(staged) == rows(DedupOps.cutDuplicateSpans(all,
+      DedupOps.gramHashTable(all, k = 3), k = 3)))
   }
 }

@@ -12,6 +12,14 @@ class PipelineOpsSpec extends SparkSpecBase {
   private lazy val docs = Tables.load(spark, sfDir, "documents")
   private lazy val embs = Tables.load(spark, sfDir, "embeddings")
 
+  // the staged inputs the operators take, derived in-line
+  private def lshPairsOf(d: org.apache.spark.sql.DataFrame) =
+    DedupOps.minhashLshPairs(DedupOps.minhashSignatures(d).localCheckpoint())
+  private def shingleSetOf(d: org.apache.spark.sql.DataFrame) =
+    DedupOps.shingleHashSet(d).localCheckpoint()
+  private def tfOf(d: org.apache.spark.sql.DataFrame) =
+    SimilarityOps.termFrequencies(d).localCheckpoint()
+
   test("dedup_exact: kept-count equals distinct-text count") {
     val out = DedupOps.exact(docs)
     val kept = out.filter(col("is_kept")).count()
@@ -27,7 +35,7 @@ class PipelineOpsSpec extends SparkSpecBase {
       assert(s.length == DedupOps.NumPerm)
       assert(s.forall(v => v >= 0 && v < DedupOps.MinHashP))
     }
-    DedupOps.minhashLshPairs(docs).collect().foreach { r =>
+    lshPairsOf(docs).collect().foreach { r =>
       val j = r.getAs[Double]("est_jaccard")
       assert(j >= 0.0 && j <= 1.0)
       assert(r.getAs[Long]("id1") < r.getAs[Long]("id2"))
@@ -44,16 +52,17 @@ class PipelineOpsSpec extends SparkSpecBase {
       (3L, "unrelated words entirely here the end of it"),
       (4L, "other content again completely the end of it")
     ).toDF("doc_id", "text")
-    val uncapped = DedupOps.ngramJaccardPairs(fixture, minJaccard = 0.01)
+    val uncapped = DedupOps.ngramJaccardPairs(shingleSetOf(fixture),
+        minJaccard = 0.01)
       .select("id1", "id2").as[(Long, Long)].collect().toSet
     // cap at df<=3: the 3-gram shingles of "the end of it" (df=4) leave the
     // index; only the discriminative alpha/beta pair survives
-    val capped = DedupOps.ngramJaccardPairs(fixture, minJaccard = 0.01,
+    val capped = DedupOps.ngramJaccardPairs(shingleSetOf(fixture), minJaccard = 0.01,
       maxDocFreq = 3L).select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(uncapped.contains((3L, 4L)), s"stop-phrase pair expected: $uncapped")
     assert(capped == Set((1L, 2L)), s"capped index must drop df>3 keys: $capped")
     // a cap above every fixture df is a no-op (the oracle contract)
-    val wide = DedupOps.ngramJaccardPairs(fixture, minJaccard = 0.01,
+    val wide = DedupOps.ngramJaccardPairs(shingleSetOf(fixture), minJaccard = 0.01,
       maxDocFreq = 100L).select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(wide == uncapped)
   }
@@ -63,9 +72,10 @@ class PipelineOpsSpec extends SparkSpecBase {
     // 6 identical docs → every band bucket has df 6
     val fixture = (1L to 6L).map(i => (i, "same exact text for everyone here"))
       .toDF("doc_id", "text")
-    val uncapped = DedupOps.minhashLshPairs(fixture)
+    val sigs = DedupOps.minhashSignatures(fixture).localCheckpoint()
+    val uncapped = DedupOps.minhashLshPairs(sigs)
     assert(uncapped.count() == 15) // C(6,2) pairs
-    val capped = DedupOps.minhashLshPairs(fixture, maxBandFreq = 5L)
+    val capped = DedupOps.minhashLshPairs(sigs, maxBandFreq = 5L)
     assert(capped.count() == 0, "all buckets exceed the cap and must drop")
   }
 
@@ -76,7 +86,8 @@ class PipelineOpsSpec extends SparkSpecBase {
       (2L, "the quick brown fox jumps over the lazy dog today"),
       (5L, "completely different content with no overlap at all here")
     ).toDF("doc_id", "text")
-    val rows = DedupOps.dedupClusters(fixture).collect()
+    val pairs = lshPairsOf(fixture)
+    val rows = DedupOps.dedupClusters(fixture, pairs).collect()
     val clusters = rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
     val sizes = rows.map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(clusters(1L) == 1L && clusters(2L) == 1L,
@@ -84,13 +95,13 @@ class PipelineOpsSpec extends SparkSpecBase {
     assert(clusters(5L) == 5L, s"singleton keeps its own id: $clusters")
     assert(sizes(1L) == 2L && sizes(5L) == 1L, s"cluster sizes: $sizes")
     // curation view drops singletons
-    val paired = DedupOps.dedupClusters(fixture, includeSingletons = false)
+    val paired = DedupOps.dedupClusters(fixture, pairs, includeSingletons = false)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(paired == Set(1L, 2L), s"pair-participants only: $paired")
   }
 
   test("jaccard pairs: 0 < jaccard <= 1 and symmetric-free ordering") {
-    DedupOps.ngramJaccardPairs(docs).collect().foreach { r =>
+    DedupOps.ngramJaccardPairs(shingleSetOf(docs)).collect().foreach { r =>
       val j = r.getAs[Double]("jaccard")
       assert(j >= 0.2 && j <= 1.0)
       assert(r.getAs[Long]("id1") < r.getAs[Long]("id2"))
@@ -632,8 +643,7 @@ class PipelineOpsSpec extends SparkSpecBase {
 
   test("knn label smoothing: local majority mirror, isolates keep their label") {
     val g = SimilarityOps.knnGraph(embs, k = 3, bits = 4).localCheckpoint()
-    val out = SimilarityOps.knnLabelSmooth(embs, k = 3, bits = 4,
-      precomputedGraph = Some(g)).localCheckpoint()
+    val out = SimilarityOps.knnLabelSmooth(embs, g).localCheckpoint()
     assert(out.count() == embs.count(), "every vector gets a verdict")
     assert(out.filter(col("n_neighbors") === 0 &&
       col("smoothed_label") =!= col("label")).isEmpty,
@@ -811,7 +821,8 @@ class PipelineOpsSpec extends SparkSpecBase {
     val corpus = (Seq((1L, excerpt), (2L, full), (3L, excerpt)) ++
       (10L until 40L).map(i => i -> (0 until 25).map(j => s"u${i}x$j").mkString(" ")))
       .toDF("doc_id", "text")
-    val ct = DedupOps.winnowingContainment(corpus)
+    val ct = DedupOps.winnowingContainment(corpus,
+        TextOps.winnowFingerprints(corpus))
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     ct.values.foreach { case (_, c1, c2) =>
@@ -863,9 +874,9 @@ class PipelineOpsSpec extends SparkSpecBase {
       1L -> "x y q r q r",
       2L -> "q r q r q r") ++
       (10L until 40L).map(i => i -> s"f$i g$i f$i g$i")).toDF("doc_id", "text")
-    val plain = SimilarityOps.bm25TopK(corpus, k = 5)
+    val plain = SimilarityOps.bm25TopK(tfOf(corpus), k = 5)
       .filter(col("qid") === 0).collect().map(_.getLong(1)).toSet
-    val prf = SimilarityOps.bm25Prf(corpus, k = 5)
+    val prf = SimilarityOps.bm25Prf(tfOf(corpus), k = 5)
       .filter(col("qid") === 0).collect()
     assert(!plain.contains(2L), "plain bm25 cannot see the no-shared-term doc")
     assert(prf.map(_.getLong(1)).contains(2L),
@@ -878,12 +889,12 @@ class PipelineOpsSpec extends SparkSpecBase {
   }
 
   test("hybrid rrf: fusion equals the integer rank formula over the two lists") {
-    val out = SimilarityOps.hybridRrf(docs, embs, k = 3, queryMod = 100)
+    val out = SimilarityOps.hybridRrf(tfOf(docs), embs, k = 3, queryMod = 100)
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         (Option(r.get(2)).map(_.asInstanceOf[Int]),
           Option(r.get(3)).map(_.asInstanceOf[Int]),
           r.getLong(4), r.getInt(5))).toMap
-    val lex = SimilarityOps.bm25TopK(docs, k = 3, queryMod = 100)
+    val lex = SimilarityOps.bm25TopK(tfOf(docs), k = 3, queryMod = 100)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(3)).toMap
     val den = SimilarityOps.topKBruteForce(embs,
         embs.filter(col("vec_id") % 100 === 0), 3)
@@ -948,7 +959,8 @@ class PipelineOpsSpec extends SparkSpecBase {
   }
 
   test("knn clusters: every vector labeled once, labels = union-find over mutual positive edges") {
-    val cl = SimilarityOps.knnClusters(embs, k = 3, bits = 1, minIcos = 0L)
+    val cl = SimilarityOps.knnClusters(embs,
+        SimilarityOps.knnGraph(embs, k = 3, bits = 1), minIcos = 0L)
       .cache()
     val n = embs.count()
     assert(cl.count() == n && cl.select(col("vec_id")).distinct().count() == n)
@@ -1020,9 +1032,8 @@ class PipelineOpsSpec extends SparkSpecBase {
     val clone = docs.orderBy(col("doc_id")).limit(1)
       .select((col("doc_id") + 9000000L).as("doc_id"), col("text"))
     val mini = docs.limit(40).select(col("doc_id"), col("text")).union(clone)
-    val pairs = DedupOps.minhashLshPairs(mini)
-    val prec = DedupOps.lshPrecision(mini,
-      precomputedPairs = Some(pairs)).cache()
+    val pairs = lshPairsOf(mini)
+    val prec = DedupOps.lshPrecision(pairs, shingleSetOf(mini)).cache()
     assert(prec.count() == pairs.select(col("id1"), col("id2")).distinct().count(),
       "exactly one audited row per candidate pair")
     // the exact clone collides in every band and has inter = uni
@@ -1032,7 +1043,7 @@ class PipelineOpsSpec extends SparkSpecBase {
       r.getAs[Boolean]("true_pos") &&
         r.getAs[Long]("inter") == r.getAs[Long]("uni")))
     // verdicts agree with an independently computed exact jaccard
-    val truth = DedupOps.ngramJaccardPairs(mini, minJaccard = 0.0)
+    val truth = DedupOps.ngramJaccardPairs(shingleSetOf(mini), minJaccard = 0.0)
       .select(col("id1"), col("id2"), col("jaccard"))
     prec.join(truth, Seq("id1", "id2")).collect().foreach { r =>
       assert(r.getAs[Boolean]("true_pos") == (r.getAs[Double]("jaccard") >= 0.5))
@@ -1119,7 +1130,7 @@ class PipelineOpsSpec extends SparkSpecBase {
       (5L, "common term filler five six"),
       (7L, "common term filler seven eight"),
       (9L, "unrelated junk text nine ten"))
-    val got = SimilarityOps.bm25TopK(rows.toDF("doc_id", "text"),
+    val got = SimilarityOps.bm25TopK(tfOf(rows.toDF("doc_id", "text")),
         k = 5, maxDfPct = 80, queryMod = 2)
       .select("qid", "nid", "score_i", "rank")
       .as[(Long, Long, Long, Int)].collect().toSet
@@ -1134,7 +1145,7 @@ class PipelineOpsSpec extends SparkSpecBase {
     val rows2 = rows.map { case (3L, _) =>
         (3L, "common term filler common term filler common term filler")
       case r => r }
-    val got2 = SimilarityOps.bm25TopK(rows2.toDF("doc_id", "text"),
+    val got2 = SimilarityOps.bm25TopK(tfOf(rows2.toDF("doc_id", "text")),
         k = 5, maxDfPct = 80, queryMod = 2)
       .select("qid", "nid", "score_i", "rank")
       .as[(Long, Long, Long, Int)].collect().toSet
@@ -1142,10 +1153,10 @@ class PipelineOpsSpec extends SparkSpecBase {
     val q0b = got2.filter(_._1 == 0L).toSeq.sortBy(_._4)
     assert(q0b.head._2 == 1L, s"saturated tf must not beat idf: $q0b")
     intercept[IllegalArgumentException] {
-      SimilarityOps.bm25TopK(rows.toDF("doc_id", "text"), k = 0)
+      SimilarityOps.bm25TopK(tfOf(rows.toDF("doc_id", "text")), k = 0)
     }
     intercept[IllegalArgumentException] {
-      SimilarityOps.bm25TopK(rows.toDF("doc_id", "text"), queryMod = 1)
+      SimilarityOps.bm25TopK(tfOf(rows.toDF("doc_id", "text")), queryMod = 1)
     }
   }
 
@@ -1160,7 +1171,7 @@ class PipelineOpsSpec extends SparkSpecBase {
       val len = 1 + rnd.nextInt(14)
       (i, Vector.fill(len)(vocab(rnd.nextInt(vocab.size))).mkString(" "))
     }
-    val got = SimilarityOps.bm25TopK(rows.toDF("doc_id", "text"),
+    val got = SimilarityOps.bm25TopK(tfOf(rows.toDF("doc_id", "text")),
         k = 4, maxDfPct = 60, queryMod = 7)
       .select("qid", "nid", "score_i", "rank")
       .as[(Long, Long, Long, Int)].collect().toSet
@@ -1283,14 +1294,14 @@ class PipelineOpsSpec extends SparkSpecBase {
       (3L, "x y z w q", "s3"), // disjoint — must produce NO pair rows
       (4L, "a b c zz ww", "s4") // shares exactly the "a b c" gram
     ).toDF("doc_id", "text", "source")
-    val got = DedupOps.sourceOverlap(fx)
+    val got = DedupOps.sourceOverlap(fx, DedupOps.shingleHashSet(fx))
       .as[(String, String, Long, Long, Long, Long)].collect().toSet
     assert(got == Set(
       ("s1", "s2", 3L, 3L, 3L, 1000000L),
       ("s1", "s4", 1L, 3L, 3L, 333333L),
       ("s2", "s4", 1L, 3L, 3L, 333333L)), s"got $got")
     intercept[IllegalArgumentException] {
-      DedupOps.sourceOverlap(fx, k = 0)
+      DedupOps.sourceOverlap(fx, DedupOps.shingleHashSet(fx, n = 0))
     }
   }
 
@@ -1324,7 +1335,7 @@ class PipelineOpsSpec extends SparkSpecBase {
       (7L, "unique text here", 30L)
     ).toDF("doc_id", "text", "n_chars")
     val pairs = Seq((1L, 2L, 1.0)).toDF("id1", "id2", "est_jaccard")
-    val got = DedupOps.canonicalSelect(fixture, precomputedPairs = Some(pairs))
+    val got = DedupOps.canonicalSelect(fixture, pairs)
       .select("cluster_id", "kept_doc_id", "kept_quality", "cluster_size")
       .as[(Long, Long, Long, Long)].collect().toSet
     assert(got == Set((1L, 2L, 55L, 2L), (7L, 7L, 30L, 1L)),
@@ -1335,7 +1346,7 @@ class PipelineOpsSpec extends SparkSpecBase {
       (2L, "shared text alpha", 40L),
       (7L, "unique text here", 30L)
     ).toDF("doc_id", "text", "n_chars")
-    val got2 = DedupOps.canonicalSelect(tied, precomputedPairs = Some(pairs))
+    val got2 = DedupOps.canonicalSelect(tied, pairs)
       .select("cluster_id", "kept_doc_id", "kept_quality", "cluster_size")
       .as[(Long, Long, Long, Long)].collect().toSet
     assert(got2 == Set((1L, 1L, 40L, 2L), (7L, 7L, 30L, 1L)),

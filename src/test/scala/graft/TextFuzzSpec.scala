@@ -144,9 +144,11 @@ class TextFuzzSpec extends SparkSpecBase {
     val f1 = TextOps.lmFluency(df.repartition(1)).collect().map(key).toSet
     val f7 = TextOps.lmFluency(df.repartition(7)).collect().map(key).toSet
     assert(f1 == f7 && f1.nonEmpty)
-    val s1 = DedupOps.duplicateSpans(df.repartition(1), k = 2)
+    val s1 = DedupOps.duplicateSpans(
+        DedupOps.gramHashTable(df.repartition(1), k = 2), k = 2)
       .collect().map(key).toSet
-    val s7 = DedupOps.duplicateSpans(df.repartition(7), k = 2)
+    val s7 = DedupOps.duplicateSpans(
+        DedupOps.gramHashTable(df.repartition(7), k = 2), k = 2)
       .collect().map(key).toSet
     assert(s1 == s7 && s1.nonEmpty)
   }
@@ -259,7 +261,8 @@ class TextFuzzSpec extends SparkSpecBase {
       Seq((20L, "alpha beta gamma delta", "xx"),
           (21L, "zeta eta theta iota", "xx"))
     val df = corpus.toDF("doc_id", "text", "lang")
-    val got = TextOps.dsirSample(df, col("lang") === "en")
+    val tf = graft.operators.SimilarityOps.termFrequencies(df)
+    val got = TextOps.dsirSample(df, tf, col("lang") === "en")
       .select("doc_id", "n_feats", "weight", "u", "accepted")
       .as[(Long, Long, Long, Long, Boolean)].collect().toSet
     def grams(tx: String): Seq[String] = {
@@ -295,10 +298,10 @@ class TextFuzzSpec extends SparkSpecBase {
     assert(w(20L)._2 > w(21L)._2,
       s"on-target content must outweigh off-target: ${w(20L)} vs ${w(21L)}")
     intercept[Exception] {
-      TextOps.dsirSample(df, col("lang") === "nope").collect()
+      TextOps.dsirSample(df, tf, col("lang") === "nope").collect()
     }
     intercept[IllegalArgumentException] {
-      TextOps.dsirSample(df, col("lang") === "en", buckets = 1)
+      TextOps.dsirSample(df, tf, col("lang") === "en", buckets = 1)
     }
   }
 
@@ -404,8 +407,9 @@ class TextFuzzSpec extends SparkSpecBase {
     val all = stored ++ batch
     require(stored.forall(_._1 % 3 != 0) && batch.forall(_._1 % 3 == 0))
     val df = all.toDF("doc_id", "text")
-    val got = operators.DedupOps.winnowingIncremental(
-        df.filter(col("doc_id") % 3 =!= 0), df.filter(col("doc_id") % 3 === 0))
+    val storedDf = df.filter(col("doc_id") % 3 =!= 0)
+    val got = operators.DedupOps.winnowingIncremental(storedDf,
+        df.filter(col("doc_id") % 3 === 0), TextOps.winnowFingerprints(storedDf))
       .as[(Long, Long, Long)].collect().toSet
     // mirror: full fingerprints, stored-side df cap, new×old restriction
     val fps = all.flatMap { case (id, tx) => winnowLocal(id, tx, 4, 4) }.toSet
@@ -440,7 +444,8 @@ class TextFuzzSpec extends SparkSpecBase {
     } ++ Seq((100L, "q1 q2 q3 " + run2 + " q4"),
              (101L, "p1 " + run2 + " p2 p3"))
     val df = corpus.toDF("doc_id", "text")
-    val got = operators.DedupOps.winnowingPairs(df)
+    val fpsDf = TextOps.winnowFingerprints(df)
+    val got = operators.DedupOps.winnowingPairs(df, fpsDf)
       .as[(Long, Long, Long)].collect().toSet
     val fps = corpus.flatMap { case (id, tx) => winnowLocal(id, tx, 4, 4) }.toSet
     val want = winnowPairsLocal(fps, corpus.size.toLong, 10, 2)
@@ -450,10 +455,10 @@ class TextFuzzSpec extends SparkSpecBase {
     assert(got.forall(p => p._1 == 100L && p._2 == 101L),
       s"boilerplate-only doc pairs must be cut by the df cap: $got")
     intercept[IllegalArgumentException] {
-      operators.DedupOps.winnowingPairs(df, minShared = 0)
+      operators.DedupOps.winnowingPairs(df, fpsDf, minShared = 0)
     }
     intercept[IllegalArgumentException] {
-      operators.DedupOps.winnowingPairs(df, maxDfPct = 101)
+      operators.DedupOps.winnowingPairs(df, fpsDf, maxDfPct = 101)
     }
   }
 }

@@ -1,0 +1,90 @@
+#!/usr/bin/env python3
+"""Compare two `graft.Probe <rows> <sfDir> explain <reps>` logs row by row.
+
+Usage: python3 tools/plan_counts.py BEFORE.log AFTER.log
+
+For every query row (and rep) it prints the physical-operator counts of the
+row's formatted plan, the `rows=` value of its `[probe]` line and the
+`jobs=<build>/<count>` value of its `[probe-parts]` line, marking what
+differs between the two logs. Operator counts are taken from the numbered
+node headers of `explain("formatted")` (`(12) HashAggregate [codegen id : 3]`
+counts one `HashAggregate`).
+
+Exit status: 0 when every row is identical; 1 when a row's operator counts
+or row count differ (or a row is missing from one log); 2 when only `jobs=`
+differs. Job counts are reported apart because they are not always
+reproducible: when AQE propagates an empty relation, the number of
+shuffle-stage jobs a row submits can vary from run to run with the same
+physical plan.
+"""
+import collections
+import re
+import sys
+
+NODE = re.compile(r"^\((\d+)\) (.+?)(?: \[codegen id : \d+\])?\s*$")
+PROBE = re.compile(r"^\[probe\] (\S+) rep(\d+) rows=(\d+) ")
+PARTS = re.compile(r"^\[probe-parts\] (\S+) rep(\d+) .* jobs=(\S+)\s*$")
+
+
+def parse(path):
+    """{(row, rep): {"ops": Counter, "rows": str, "jobs": str}} in log order."""
+    rows = collections.OrderedDict()
+    ops = collections.Counter()
+    with open(path, errors="replace") as f:
+        for line in f:
+            m = NODE.match(line)
+            if m:
+                ops[m.group(2)] += 1
+                continue
+            m = PROBE.match(line)
+            if m:
+                rows[(m.group(1), m.group(2))] = {
+                    "ops": ops, "rows": m.group(3), "jobs": None}
+                ops = collections.Counter()
+                continue
+            m = PARTS.match(line)
+            if m and (m.group(1), m.group(2)) in rows:
+                rows[(m.group(1), m.group(2))]["jobs"] = m.group(3)
+    return rows
+
+
+def ops_text(ops):
+    return " ".join(f"{k}={v}" for k, v in sorted(ops.items())) or "-"
+
+
+def main(argv):
+    if len(argv) != 3:
+        print(__doc__.strip().splitlines()[2], file=sys.stderr)
+        return 64
+    before, after = parse(argv[1]), parse(argv[2])
+    keys = list(before) + [k for k in after if k not in before]
+    plan_diffs, job_diffs = [], []
+    for key in keys:
+        name = f"{key[0]} rep{key[1]}"
+        a, b = before.get(key), after.get(key)
+        if a is None or b is None:
+            print(f"{name}: only in {'after' if a is None else 'before'}")
+            plan_diffs.append(name)
+            continue
+        same_ops, same_rows = a["ops"] == b["ops"], a["rows"] == b["rows"]
+        same_jobs = a["jobs"] == b["jobs"]
+        print(f"{name}: ops={sum(a['ops'].values())}"
+              f"{'' if same_ops else '->' + str(sum(b['ops'].values()))}"
+              f" rows={a['rows']}{'' if same_rows else '->' + b['rows']}"
+              f" jobs={a['jobs']}{'' if same_jobs else '->' + str(b['jobs'])}")
+        if not same_ops:
+            print(f"  before: {ops_text(a['ops'] - b['ops'])}")
+            print(f"  after:  {ops_text(b['ops'] - a['ops'])}")
+        if not (same_ops and same_rows):
+            plan_diffs.append(name)
+        elif not same_jobs:
+            job_diffs.append(name)
+    print(f"{len(keys)} rows; operator/row-count differences: "
+          f"{len(plan_diffs)} {' '.join(plan_diffs)}".rstrip())
+    print(f"jobs= differences only: {len(job_diffs)} "
+          f"{' '.join(job_diffs)}".rstrip())
+    return 1 if plan_diffs else 2 if job_diffs else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv))
