@@ -135,22 +135,20 @@ object MLOps {
     * nearest neighbors by cosine, ties broken toward the smaller label —
     * deterministic, so it participates in the value oracle. Built on
     * [[graft.operators.SimilarityOps.topKBruteForce]]; swap in topKLsh /
-    * topKIvf for the ANN path at scale. */
+    * topKIvfSeeds for the ANN path at scale. */
   def knnClassify(corpus: DataFrame, labeled: DataFrame, queries: DataFrame,
-                  k: Int, labelCol: String = "label",
-                  idCol: String = "vec_id"): DataFrame = {
+                  k: Int): DataFrame = {
     val nn = graft.operators.SimilarityOps.topKBruteForce(corpus, queries, k)
-    nn.join(labeled.select(col(idCol).as("nid"), col(labelCol)), "nid")
-      .groupBy(col("qid"), col(labelCol))
+    nn.join(labeled.select(col("vec_id").as("nid"), col("label")), "nid")
+      .groupBy(col("qid"), col("label"))
       .agg(count(lit(1)).as("votes"))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("qid"))
-          .orderBy(col("votes").desc, col(labelCol))))
+          .orderBy(col("votes").desc, col("label"))))
       .filter(col("rk") === 1)
-      .select(col("qid"), col(labelCol).as("predicted"), col("votes"))
+      .select(col("qid"), col("label").as("predicted"), col("votes"))
   }
 
-  /** KMeans façade over an `array<float>` embedding column. */
   /** One exact Lloyd step with integer-quantized arithmetic (the oracle-able
     * counterpart of the spark.ml [[kmeansAssign]] façade): seeds are the k
     * lowest-id vectors, assignment minimizes the EXACT integer squared
@@ -161,10 +159,10 @@ object MLOps {
     * way — the same trick as `pageRankExact`/`graft_iqdot`. Plan shape:
     * broadcast the k seeds, one narrow distance map, one argmin aggregation,
     * one (cluster, dim) aggregation. */
-  def kmeansStepExact(embs: DataFrame, vecCol: String = "embedding",
-                      idCol: String = "vec_id", k: Int = 8): DataFrame = {
+  def kmeansStepExact(embs: DataFrame, k: Int = 8): DataFrame = {
     import graft.functions.GraftFunctions.quantize
-    val q = embs.select(col(idCol).as("id"), quantize(col(vecCol)).as("qv"))
+    val q = embs.select(col("vec_id").as("id"),
+        quantize(col("embedding")).as("qv"))
       .localCheckpoint()
     val seeds = broadcast(q.orderBy(col("id")).limit(k)
       .select(col("id").as("sid"), col("qv").as("sv"))
@@ -208,7 +206,7 @@ object MLOps {
     * Cost: `iters` corpus scans, each one broadcast crossJoin (k rows) +
     * one k×64-group aggregation — no corpus shuffle anywhere, so the loop
     * scales to 100 TB as `iters` × (scan + map-side combine). Output
-    * (`idCol` = 0..k-1, `vecCol` = centroid/1e6 as array<double>) plugs
+    * (`vec_id` = 0..k-1, `embedding` = centroid/1e6 as array<double>) plugs
     * into every seeds-taking IVF operator; re-quantizing the doubles
     * recovers the integer grid exactly (|c| < 2^31 ≪ 2^52).
     *
@@ -216,9 +214,8 @@ object MLOps {
     * id seeding inherits the data's id-order quirks and yields arbitrarily
     * unbalanced cells, and max-cell/mean-cell balance is the variance term
     * in every IVF probe cost (see the DESIGN.md balance table). */
-  def kmeansCentroidsExact(embs: DataFrame, k: Int = 16, iters: Int = 2,
-                           vecCol: String = "embedding",
-                           idCol: String = "vec_id"): DataFrame = {
+  def kmeansCentroidsExact(embs: DataFrame, k: Int = 16,
+                           iters: Int = 2): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(iters >= 0, s"iters must be >= 0: $iters")
     import graft.functions.GraftFunctions.{quantize, lld2}
@@ -227,8 +224,8 @@ object MLOps {
     // just ones that already went through Tables.load
     graft.functions.GraftExtensions.install(spark)
     import spark.implicits._
-    val q = embs.select(col(idCol).cast("long").as("id"),
-        quantize(col(vecCol)).as("qv"))
+    val q = embs.select(col("vec_id").cast("long").as("id"),
+        quantize(col("embedding")).as("qv"))
       .localCheckpoint()
     var cents: Seq[(Long, Seq[Long])] = q.orderBy(col("id")).limit(k)
       .collect().toSeq.zipWithIndex
@@ -257,14 +254,15 @@ object MLOps {
       }
     }
     cents.toDF("cid", "cq")
-      .select(col("cid").as(idCol),
-        transform(col("cq"), x => x.cast("double") / 1000000.0).as(vecCol))
+      .select(col("cid").as("vec_id"),
+        transform(col("cq"), x => x.cast("double") / 1000000.0).as("embedding"))
   }
 
-  def kmeansAssign(df: DataFrame, vecCol: String, k: Int,
-                   seed: Long = 42L): DataFrame = {
+  /** KMeans façade over the `embedding` column: the input with a
+    * `cluster` column from spark.ml's seed-pinned k-means. */
+  def kmeansAssign(df: DataFrame, k: Int, seed: Long = 42L): DataFrame = {
     val feat = df.withColumn("features",
-      array_to_vector(col(vecCol).cast("array<double>")))
+      array_to_vector(col("embedding").cast("array<double>")))
     val model = new KMeans().setK(k).setSeed(seed).setFeaturesCol("features")
       .fit(feat)
     model.transform(feat).withColumnRenamed("prediction", "cluster")
@@ -363,13 +361,13 @@ object MLOps {
     * the same blocked shape as `ml_knn_classify` (at corpus scale the
     * candidate side goes through the LSH bucket join, same contract as
     * embedding dedup). */
-  def knnDistOutlierScores(embs: DataFrame, vecCol: String, idCol: String,
-                           queryPred: Column, k: Int = 5,
+  def knnDistOutlierScores(embs: DataFrame, queryPred: Column, k: Int = 5,
                            cells: Int = 16): DataFrame = {
     import graft.functions.GraftFunctions.{cellArgmin, lld2, quantize}
     graft.functions.GraftExtensions.install(embs.sparkSession)
     def proj(df: DataFrame, id: String, v: String) =
-      df.select(col(idCol).cast("long").as(id), quantize(col(vecCol)).as(v))
+      df.select(col("vec_id").cast("long").as(id),
+        quantize(col("embedding")).as(v))
     val queries = proj(embs.filter(queryPred), "id", "qv")
     val cand = proj(embs, "nid", "nv")
     // EXACT cell-pruned k-NN scan (r14; guide §3 "avoid exploding joins"):
@@ -396,7 +394,7 @@ object MLOps {
     // over the (empty) pair set, so the schema equals the non-empty result
     if (seeds.isEmpty)
       return queries.crossJoin(cand)
-        .select(col("id").as(idCol), lld2(col("qv"), col("nv")).as("knn_d2"))
+        .select(col("id").as("vec_id"), lld2(col("qv"), col("nv")).as("knn_d2"))
     val nCells = seeds.length // corpus smaller than `cells` degrades cleanly
     val matrix = typedLit(seeds.map(_._2.toSeq).toSeq)
     val assigned = cand
@@ -449,7 +447,7 @@ object MLOps {
       .select(col("id"), col("nid"), lld2(col("qv"), col("nv")).as("d2"))
       .withColumn("rk", row_number().over(wRank))
       .filter(col("rk") === k)
-      .select(col("id").as(idCol), col("d2").as("knn_d2"))
+      .select(col("id").as("vec_id"), col("d2").as("knn_d2"))
   }
 
   /** Soft-margin linear SVM façade (FlinkML `classification/SVM.scala` —
@@ -474,13 +472,13 @@ object MLOps {
     * p(j) = Π_i (1 − b_ij). The pairwise-distance stage is the brute-force
     * exact baseline (same declared contract as embedding cosine pairs —
     * block with LSH buckets at corpus scale); the per-point β search runs
-    * inside `flatMapGroups`, state O(neighbors of one point). */
-  def stochasticOutlierSelection(df: DataFrame, vecCol: String,
-                                 idCol: String,
+    * inside `flatMapGroups`, state O(neighbors of one point). Reads
+    * (vec_id, embedding); returns (vec_id, outlier_prob). */
+  def stochasticOutlierSelection(df: DataFrame,
                                  perplexity: Double = 3.0): DataFrame = {
     import df.sparkSession.implicits._
-    val pts = df.select(col(idCol).cast("long").as("id"),
-      col(vecCol).cast("array<double>").as("v"))
+    val pts = df.select(col("vec_id").cast("long").as("id"),
+      col("embedding").cast("array<double>").as("v"))
     val a = pts.as("a"); val b = pts.as("b")
     val d2 = a.join(b, col("a.id") =!= col("b.id"))
       .select(col("a.id").as("i"), col("b.id").as("j"),
@@ -506,7 +504,7 @@ object MLOps {
         val s = aff.map(_._2).sum
         aff.iterator.map { case (j, af) => (i, j, af / s) }
       }.toDF("i", "j", "b")
-    bind.groupBy(col("j").as(idCol))
+    bind.groupBy(col("j").as("vec_id"))
       .agg(exp(sum(log(lit(1.0) - col("b")))).as("outlier_prob"))
   }
 

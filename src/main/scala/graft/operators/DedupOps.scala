@@ -823,7 +823,7 @@ object DedupOps {
     * One tokenize+window pass per fixture serves all three substring rows
     * (spans / apply / incremental) instead of each rebuilding it twice. */
   def gramHashTable(docs: DataFrame, k: Int = 6): DataFrame =
-    TextOps.tokenGramsWithTail(docs, "text", "doc_id", k)
+    TextOps.tokenGramsWithTail(docs, k)
       .select(col("doc_id"), col("pos"), col("tok"),
         md5(col("gram")).as("gh"))
 

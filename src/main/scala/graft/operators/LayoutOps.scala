@@ -69,19 +69,15 @@ object LayoutOps {
     * the materialized form of the claim every IVF scaladoc here makes
     * ("at 100 TB the corpus is written bucketed by cell; a probe touches
     * 1/cells of the data"). Cell placement is [[SimilarityOps.ivfAssign]]
-    * over the smallest-id seeds (swap trained centroids or the pruned
+    * over [[SimilarityOps.seedCells]] (swap trained centroids or the pruned
     * assigner upstream — layout is placement-agnostic); the norm is
     * precomputed into the lake so a probe never re-folds it. One
     * assignment pass + one partitioned write — the index BUILD a real
     * deployment runs once and probes forever. */
-  def writeIvfBucketed(embs: DataFrame, cells: Int, path: String,
-                       vecCol: String = "embedding",
-                       idCol: String = "vec_id"): Unit = {
-    val seeds = embs.filter(col(idCol) < cells)
-    SimilarityOps.ivfAssign(embs, seeds, vecCol, idCol)
+  def writeIvfBucketed(embs: DataFrame, cells: Int, path: String): Unit =
+    SimilarityOps.ivfAssign(embs, SimilarityOps.seedCells(embs, cells))
       .select(col("nid"), col("v"), col("nrm"), col("cell"))
       .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(path)
-  }
 
   /** Apply the `needs_split` outcome to a [[writeIvfBucketed]] lake by
     * rewriting ONLY the flagged cells' partitions — the lake half of
@@ -100,10 +96,9 @@ object LayoutOps {
     * Occupancy stats come from the lake's own footer counts (cells-sized
     * table); flagged members load through partition pruning (`isin` on
     * the partition column). Returns the POST-SPLIT centroid table
-    * (idCol, vecCol as array<double>) for routing probes: unflagged cells
-    * keep their seed vector (the seeded-build invariant: a seed lives in
-    * its own cell, so the lake row with nid == cell IS the centroid),
-    * flagged cells contribute their two trained sub-centroids
+    * (vec_id, embedding as array<double>) for routing probes: unflagged
+    * cells keep their row of `centroids`, flagged cells contribute their
+    * two trained sub-centroids
     * (floor-mean integer grid / 1e6 — re-quantizing recovers the grid
     * exactly, the kmeansCentroidsExact round-trip). Feed it to
     * [[ivfLakeTopK]] as `seeds` and probes route to sub-cells with no
@@ -117,12 +112,13 @@ object LayoutOps {
     * fresh-id offset away from the documented contract, so it fails loud
     * instead of inferring.
     *
-    * `centroids` is the previous apply's returned table (REQUIRED for any
-    * generation after the first): cells not flagged this round keep their
-    * row from it verbatim; only flagged cells and their twins re-derive.
-    * Without it the unflagged centroids come from the seeded-build
-    * invariant (nid == cell), which holds only for a never-split lake —
-    * a gen-1 twin cell has no such member row.
+    * `centroids` is the lake's CURRENT (vec_id, embedding) centroid
+    * table: for a fresh [[writeIvfBucketed]] lake, the seeds it was built
+    * with ([[SimilarityOps.seedCells]] — a seed lives in its own cell);
+    * for any later generation, the previous apply's returned table (a
+    * gen-1 twin cell has no seed). Cells not flagged this round keep
+    * their row from it verbatim; only flagged cells and their twins
+    * re-derive.
     *
     * Duplication guard: dynamic partition overwrite only replaces
     * partitions PRESENT in the written frame — if a Lloyd round drained
@@ -133,15 +129,16 @@ object LayoutOps {
     * therefore falls back to staying WHOLE (not split this round — logged
     * to stderr), which keeps the lake exactly as it was for that cell. */
   def applySplitToLake(spark: org.apache.spark.sql.SparkSession,
-                       path: String, cells: Int,
+                       path: String, centroids: DataFrame, cells: Int,
                        splitIters: Int = 1,
-                       splitThresholdPct: Int = 200,
-                       idCol: String = "vec_id",
-                       vecCol: String = "embedding",
-                       centroids: Option[DataFrame] = None): DataFrame = {
+                       splitThresholdPct: Int = 200): DataFrame = {
     import graft.functions.GraftFunctions.quantize
     require(splitIters >= 0 && splitThresholdPct >= 1 && cells >= 1,
       s"bad split knobs: iters=$splitIters pct=$splitThresholdPct cells=$cells")
+    require(centroids.columns.contains("vec_id") &&
+        centroids.columns.contains("embedding"),
+      "centroid table must carry (vec_id, embedding): " +
+        centroids.columns.mkString(","))
     val lake = spark.read.parquet(path)
       .select(col("nid"), col("v"), col("nrm"), col("cell").cast("long").as("cell"))
     // cells-sized stats, driver-side: flags + the fresh-id offset
@@ -191,44 +188,22 @@ object LayoutOps {
           when(col("sub") === 0, col("cell"))
             .otherwise(col("cell") + offset).as("cell"))
         .localCheckpoint()
-      // dynamic overwrite: only the partitions PRESENT in `rewritten`
-      // (the flagged ids and their +offset twins) are replaced on disk
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try rewritten.write.mode(SaveMode.Overwrite)
+      // dynamic overwrite, per write: only the partitions PRESENT in
+      // `rewritten` (the flagged ids and their +offset twins) are replaced
+      // on disk, and the session conf is left alone
+      rewritten.write.mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("cell").parquet(path)
-      finally prev match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None =>
-          spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
     }
     // post-split centroid table: cells NOT flagged this round keep their
-    // CURRENT centroid — the previous apply's returned row when `centroids`
-    // is passed (the multi-generation maintenance cadence: gen-1 twin
-    // cells have no nid == cell member, so the seeded invariant below
-    // cannot cover them), else the seeded-build invariant (a seed lives in
-    // its own cell, so the lake row with nid == cell IS the centroid).
-    // Flagged cells (and twins) re-derive as the exact floor-mean of their
-    // final members — the "centroid = mean of members" invariant a
-    // production index stores, deterministic for the oracle.
-    val after = spark.read.parquet(path)
-      .select(col("nid"), col("v"), col("cell").cast("long").as("cell"))
+    // CURRENT centroid (their row of `centroids`). Flagged cells (and
+    // twins) re-derive as the exact floor-mean of their final members —
+    // the "centroid = mean of members" invariant a production index
+    // stores, deterministic for the oracle.
     val flaggedSet = flaggedIds.toSet
-    val unflaggedCents = centroids match {
-      case Some(prev) =>
-        require(prev.columns.contains(idCol) && prev.columns.contains(vecCol),
-          s"centroid table must carry ($idCol, $vecCol): " +
-            prev.columns.mkString(","))
-        prev.filter(!col(idCol).isin(flaggedIds: _*))
-          .select(col(idCol), col(vecCol).cast("array<double>").as(vecCol))
-      case None => after
-        .filter(col("nid") === col("cell"))
-        .filter(!col("cell").isin(flaggedIds: _*))
-        .select(col("nid").as(idCol),
-          col("v").cast("array<double>").as(vecCol))
-    }
+    val unflaggedCents = centroids.filter(!col("vec_id").isin(flaggedIds: _*))
+      .select(col("vec_id"),
+        col("embedding").cast("array<double>").as("embedding"))
     if (flaggedIds.isEmpty) unflaggedCents
     else {
       // flagged ids (and their twins): centroid = exact floor-mean of the
@@ -236,7 +211,8 @@ object LayoutOps {
       // this equals the trained sub-centroid's own update; determinism is
       // what the oracle needs, and "centroid = mean of members" is the
       // maintained invariant a production index stores
-      val splitCents = after
+      val splitCents = spark.read.parquet(path)
+        .select(col("nid"), col("v"), col("cell").cast("long").as("cell"))
         .filter(col("cell").isin((flaggedSet ++ flaggedSet.map(_ + offset))
           .toSeq: _*))
         .select(col("cell"), posexplode(quantize(col("v"))).as(Seq("dim", "x")))
@@ -246,8 +222,8 @@ object LayoutOps {
         .groupBy(col("cell"))
         .agg(transform(
           array_sort(collect_list(struct(col("dim"), col("c")))),
-          s => s.getField("c").cast("double") / 1000000.0).as(vecCol))
-        .select(col("cell").as(idCol), col(vecCol))
+          s => s.getField("c").cast("double") / 1000000.0).as("embedding"))
+        .select(col("cell").as("vec_id"), col("embedding"))
       unflaggedCents.unionByName(splitCents)
     }
   }
@@ -259,23 +235,27 @@ object LayoutOps {
     * `isin` filter on the partition column, and Catalyst turns that into
     * static partition pruning: the scan's `PartitionFilters` keeps every
     * unprobed cell's files unopened (PlanSpec pins this). Values are
-    * identical to [[SimilarityOps.topKIvf]] (same oracle); only the I/O
+    * identical to [[SimilarityOps.topKIvfSeeds]] (same oracle); only the I/O
     * shape changes — which is the whole point at 100 TB, where a probe
     * of 4 cells of 1024 reads ~0.4 % of the corpus instead of all of it. */
   def ivfLakeTopK(spark: org.apache.spark.sql.SparkSession, path: String,
-                  queries: DataFrame, seeds: DataFrame, k: Int,
-                  vecCol: String = "embedding",
-                  idCol: String = "vec_id"): DataFrame = {
+                  queries: DataFrame, seeds: DataFrame, k: Int): DataFrame = {
     import graft.functions.GraftFunctions.dot
     import org.apache.spark.sql.expressions.Window
-    val q = SimilarityOps.ivfAssign(queries, seeds, vecCol, idCol)
+    val q = SimilarityOps.ivfAssign(queries, seeds)
       .select(col("nid").as("qid"), col("v").as("qv"),
         col("nrm").as("qn"), col("cell").as("qcell"))
       .localCheckpoint()
     val probed = q.select(col("qcell")).distinct().collect()
       .map(_.getLong(0)).toSeq
-    val lake = spark.read.parquet(path)
-      .filter(col("cell").isin(probed: _*))
+    // no query placed (no queries, or no seeds): no cell is read, so the
+    // lake is not opened — the lake of an empty corpus has no file to
+    // infer a schema from. The stand-in carries the lake's columns.
+    val lake =
+      if (probed.isEmpty)
+        q.select(col("qid").as("nid"), col("qv").as("v"),
+          col("qn").as("nrm"), col("qcell").as("cell")).limit(0)
+      else spark.read.parquet(path).filter(col("cell").isin(probed: _*))
     val scored = lake.join(broadcast(q),
         col("cell") === col("qcell") && col("qid") =!= col("nid"))
       .select(col("qid"), col("cell").cast("long").as("cell"), col("nid"),

@@ -46,17 +46,18 @@ object SimilarityOps {
 
   /** Each query's `nprobe` nearest seeds by quantized-integer [[lld2]],
     * (d2, cid) ties, so cell choice is cross-engine exact. `queries` holds
-    * (idCol, vecCol); `carry` columns are evaluated on it before the probe.
+    * (vec_id, embedding); `carry` columns are evaluated on it before the
+    * probe.
     * Output: (qid, qq quantized vector, carry…, qcell), nprobe rows per
     * query. The seed set is cells-sized and broadcasts, so the probe never
     * shuffles the corpus. */
   private def probeCells(queries: DataFrame, seeds: DataFrame, nprobe: Int,
-                         vecCol: String, idCol: String,
                          carry: Column*): DataFrame = {
-    val seedRows = seeds.select(col(idCol).as("cid"),
-      quantize(col(vecCol)).as("cv"))
+    val seedRows = seeds.select(col("vec_id").as("cid"),
+      quantize(col("embedding")).as("cv"))
     queries.select(
-        (col(idCol).as("qid") +: quantize(col(vecCol)).as("qq") +: carry): _*)
+        (col("vec_id").as("qid") +: quantize(col("embedding")).as("qq") +:
+          carry): _*)
       .crossJoin(broadcast(seedRows))
       .withColumn("d2", lld2(col("qq"), col("cv")))
       .withColumn("rk", row_number().over(
@@ -71,12 +72,11 @@ object SimilarityOps {
     * broadcasts), score the 6-dp cosine, rank with [[topKPer]]. Output
     * (qid, nid, cos, rank). */
   private def rerankExact(shortlist: DataFrame, corpus: DataFrame,
-                          queries: DataFrame, k: Int, vecCol: String,
-                          idCol: String): DataFrame = {
-    val cv = corpus.select(col(idCol).as("nid"), col(vecCol).as("v"),
-      l2norm(col(vecCol)).as("nrm"))
-    val qv = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"),
-      l2norm(col(vecCol)).as("qn"))
+                          queries: DataFrame, k: Int): DataFrame = {
+    val cv = corpus.select(col("vec_id").as("nid"), col("embedding").as("v"),
+      l2norm(col("embedding")).as("nrm"))
+    val qv = queries.select(col("vec_id").as("qid"), col("embedding").as("qv"),
+      l2norm(col("embedding")).as("qn"))
     topKPer(shortlist.select(col("qid"), col("nid"))
         .join(cv, "nid").join(broadcast(qv), "qid")
         .select(col("qid"), col("nid"), cosine("qv", "qn", "v", "nrm")),
@@ -96,18 +96,17 @@ object SimilarityOps {
     * `queries` is expected to be small — it is broadcast, making the join a
     * map-side nested loop over corpus partitions (no corpus shuffle; the only
     * shuffle is the final per-query top-k, which AQE keeps tiny). */
-  def topKBruteForce(corpus: DataFrame, queries: DataFrame, k: Int,
-                     vecCol: String = "embedding",
-                     idCol: String = "vec_id"): DataFrame = {
+  def topKBruteForce(corpus: DataFrame, queries: DataFrame,
+                     k: Int): DataFrame = {
     // cast + norm behind an exchange: spreads the nested-loop scan over all
     // cores and keeps the (pushed-down) join condition on plain attributes
-    val c = corpus.select(col(idCol).as("nid"),
-        col(vecCol).cast("array<double>").as("cv"),
-        l2norm(col(vecCol)).as("cn"))
+    val c = corpus.select(col("vec_id").as("nid"),
+        col("embedding").cast("array<double>").as("cv"),
+        l2norm(col("embedding")).as("cn"))
       .repartition(col("nid"))
-    val q = queries.select(col(idCol).as("qid"),
-      col(vecCol).cast("array<double>").as("qv"),
-      l2norm(col(vecCol)).as("qn"))
+    val q = queries.select(col("vec_id").as("qid"),
+      col("embedding").cast("array<double>").as("qv"),
+      l2norm(col("embedding")).as("qn"))
     topKPer(c.join(broadcast(q), col("qid") =!= col("nid"))
         .select(col("qid"), col("nid"), cosine("qv", "qn", "cv", "cn")),
       k, col("cos").desc)
@@ -160,21 +159,20 @@ object SimilarityOps {
 
   /** Bucket the corpus: one narrow map, persistable/bucketable by `bucket`
     * for repeated probes. */
-  def lshBuckets(corpus: DataFrame, vecCol: String = "embedding",
-                 idCol: String = "vec_id"): DataFrame =
-    corpus.select(col(idCol).as("nid"),
-      col(vecCol).cast("array<double>").as("cv"),
-      l2norm(col(vecCol)).as("cn"), lshBucket(col(vecCol)).as("bucket"))
+  def lshBuckets(corpus: DataFrame): DataFrame =
+    corpus.select(col("vec_id").as("nid"),
+      col("embedding").cast("array<double>").as("cv"),
+      l2norm(col("embedding")).as("cn"),
+      lshBucket(col("embedding")).as("bucket"))
 
   /** ANN top-k: probe only the query's own bucket. Recall trades off with
     * bucket count (2^LshBits); multi-probe = union over neighbor buckets. */
-  def topKLsh(corpus: DataFrame, queries: DataFrame, k: Int,
-              vecCol: String = "embedding",
-              idCol: String = "vec_id"): DataFrame = {
-    val c = lshBuckets(corpus, vecCol, idCol).repartition(col("bucket"))
-    val q = queries.select(col(idCol).as("qid"),
-      col(vecCol).cast("array<double>").as("qv"),
-      l2norm(col(vecCol)).as("qn"), lshBucket(col(vecCol)).as("qbucket"))
+  def topKLsh(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val c = lshBuckets(corpus).repartition(col("bucket"))
+    val q = queries.select(col("vec_id").as("qid"),
+      col("embedding").cast("array<double>").as("qv"),
+      l2norm(col("embedding")).as("qn"),
+      lshBucket(col("embedding")).as("qbucket"))
     topKPer(c.join(broadcast(q),
           col("bucket") === col("qbucket") && col("qid") =!= col("nid"))
         .select(col("qid"), col("qbucket").as("bucket"), col("nid"),
@@ -183,18 +181,17 @@ object SimilarityOps {
   }
 
   /** IVF-style partitioned ANN: assign every vector to its nearest "coarse
-    * centroid" (here: a deterministic seed set — the first `cells` corpus
-    * vectors; production swaps in k-means centroids), then probe only the
+    * centroid" (`seeds`: [[seedCells]], the first `cells` corpus vectors,
+    * or trained k-means centroids), then probe only the
     * query's cell. Assignment uses integer-quantized squared distance
     * (‖a−b‖² expanded as iqdot terms), so cell ids are cross-engine exact.
     * At 100 TB the corpus is written bucketed by `cell`; a probe touches
     * 1/cells of the data. */
   def ivfAssign(corpus: DataFrame, seeds: DataFrame,
-                vecCol: String = "embedding",
-                idCol: String = "vec_id",
                 carry: Seq[String] = Nil): DataFrame = {
-    val qv = quantize(col(vecCol))
-    val seedRows = seeds.select(col(idCol).as("cid"), quantize(col(vecCol)).as("cv"))
+    val qv = quantize(col("embedding"))
+    val seedRows = seeds.select(col("vec_id").as("cid"),
+      quantize(col("embedding")).as("cv"))
     // dist²(a,c) = Σ(a−c)² in quantized ints; argmin by (dist, cid).
     // repartition(nid) FIRST (the topKBruteForce rule): a single-file
     // corpus is one partition, and one partition trivially satisfies the
@@ -204,7 +201,7 @@ object SimilarityOps {
     // Caught by the r10 sf10 ladder: the full SemDeDup pass was serial,
     // 468 s at 200k×141 before, 32-way after.
     val joined = corpus.select(
-        (col(idCol).as("nid") +: col(vecCol).as("v") +: qv.as("qv") +:
+        (col("vec_id").as("nid") +: col("embedding").as("v") +: qv.as("qv") +:
           carry.map(col)): _*)
       .repartition(col("nid"))
       .crossJoin(broadcast(seedRows))
@@ -247,18 +244,17 @@ object SimilarityOps {
     * cell is a partition choice, not a correctness bound. Output schema
     * matches [[ivfAssign]]: (nid, v, nrm, cell). An empty seed set raises
     * unless the corpus is empty too, which yields an empty assignment. */
-  def ivfAssignPruned(corpus: DataFrame, seeds: DataFrame, sprobe: Int = 2,
-                      vecCol: String = "embedding",
-                      idCol: String = "vec_id"): DataFrame = {
+  def ivfAssignPruned(corpus: DataFrame, seeds: DataFrame,
+                      sprobe: Int = 2): DataFrame = {
     require(sprobe >= 1, s"sprobe must be >= 1: $sprobe")
-    val seedRows = seeds.select(col(idCol).as("cid"),
-      quantize(col(vecCol)).as("cv"))
+    val seedRows = seeds.select(col("vec_id").as("cid"),
+      quantize(col("embedding")).as("cv"))
     val nSeeds = seedRows.count()
     // seeds drawn from an empty corpus are empty: the assignment is empty
     require(nSeeds >= 1 || corpus.isEmpty, "ivfAssignPruned: empty seed set")
     val nSupers = math.ceil(math.sqrt(nSeeds.toDouble)).toLong
-    val supers = seeds.orderBy(col(idCol)).limit(nSupers.toInt)
-      .select(col(idCol).as("sid"), quantize(col(vecCol)).as("sv"))
+    val supers = seeds.orderBy(col("vec_id")).limit(nSupers.toInt)
+      .select(col("vec_id").as("sid"), quantize(col("embedding")).as("sv"))
     def d2(a: Column, b: Column): Column = lld2(a, b)
     // level 1: seed -> nearest super (tiny; both sides broadcastable)
     val seedSuper = seedRows.crossJoin(broadcast(supers))
@@ -270,8 +266,8 @@ object SimilarityOps {
     // level 2a: vector -> sprobe nearest supers (n x sqrt(cells));
     // repartition first — same single-partition serial-window hazard as
     // ivfAssign (see the comment there)
-    val short = corpus.select(col(idCol).as("nid"), col(vecCol).as("v"),
-        quantize(col(vecCol)).as("qv"))
+    val short = corpus.select(col("vec_id").as("nid"), col("embedding").as("v"),
+        quantize(col("embedding")).as("qv"))
       .repartition(col("nid"))
       .crossJoin(broadcast(supers))
       .withColumn("sd2", d2(col("qv"), col("sv")))
@@ -291,24 +287,25 @@ object SimilarityOps {
         col("cid").as("cell"))
   }
 
-  /** IVF top-k: probe the query's own cell only. */
-  def topKIvf(corpus: DataFrame, queries: DataFrame, k: Int, cells: Int,
-              vecCol: String = "embedding",
-              idCol: String = "vec_id"): DataFrame =
-    topKIvfSeeds(corpus, queries, k, corpus.filter(col(idCol) < cells),
-      vecCol, idCol)
+  /** The seeded IVF centroid set: the `cells` smallest-id corpus vectors
+    * (ids 0 … cells−1), the cross-engine-exact Voronoi seeds every seeded
+    * IVF row and oracle uses. The trained alternative is
+    * [[graft.ml.MLOps.kmeansCentroidsExact]]. An operator with a `seeds`
+    * parameter takes it from its caller, who picks one of the two; one
+    * with only a `cells` count uses these seeds. */
+  def seedCells(corpus: DataFrame, cells: Int): DataFrame =
+    corpus.filter(col("vec_id") < cells)
 
-  /** [[topKIvf]] over a CALLER-SUPPLIED centroid set — the trained-index
-    * form: pass [[graft.ml.MLOps.kmeansCentroidsExact]] output (or any
-    * (idCol, vecCol) frame) as `seeds` and the cells are k-means cells
-    * instead of smallest-id Voronoi seeds. Probe shape is unchanged; only
-    * cell QUALITY moves (balance — the variance term in the IVF cost
-    * model; see the DESIGN.md seeded-vs-trained balance table). */
+  /** IVF top-k: each query probes its own cell only. `seeds` is any
+    * (vec_id, embedding) centroid set — [[seedCells]] for smallest-id
+    * Voronoi seeds, [[graft.ml.MLOps.kmeansCentroidsExact]] output for
+    * the trained index. Probe shape is the same for both; only cell
+    * QUALITY moves (balance — the variance term in the IVF cost model;
+    * see the DESIGN.md seeded-vs-trained balance table). */
   def topKIvfSeeds(corpus: DataFrame, queries: DataFrame, k: Int,
-                   seeds: DataFrame, vecCol: String = "embedding",
-                   idCol: String = "vec_id"): DataFrame = {
-    val c = ivfAssign(corpus, seeds, vecCol, idCol)
-    val q = ivfAssign(queries, seeds, vecCol, idCol)
+                   seeds: DataFrame): DataFrame = {
+    val c = ivfAssign(corpus, seeds)
+    val q = ivfAssign(queries, seeds)
       .select(col("nid").as("qid"), col("v").as("qv"),
         col("nrm").as("qn"), col("cell").as("qcell"))
     topKPer(c.join(broadcast(q),
@@ -330,17 +327,15 @@ object SimilarityOps {
     * a production IVF index build); queries keep the exact nprobe probe
     * over all seeds (they are few). Recall then differs only where a
     * corpus vector's pruned cell diverges from its true nearest cell — at
-    * s = ⌈√cells⌉ the index IS the exact one. */
-  def topKIvfProbe(corpus: DataFrame, queries: DataFrame, k: Int, cells: Int,
-                   nprobe: Int, vecCol: String = "embedding",
-                   idCol: String = "vec_id",
-                   centroids: Option[DataFrame] = None,
+    * s = ⌈√cells⌉ the index IS the exact one. `seeds` as in
+    * [[topKIvfSeeds]]. */
+  def topKIvfProbe(corpus: DataFrame, queries: DataFrame, k: Int,
+                   seeds: DataFrame, nprobe: Int,
                    sprobe: Option[Int] = None): DataFrame = {
-    val seeds = centroids.getOrElse(corpus.filter(col(idCol) < cells))
     val c = sprobe
-      .map(sp => ivfAssignPruned(corpus, seeds, sp, vecCol, idCol))
-      .getOrElse(ivfAssign(corpus, seeds, vecCol, idCol))
-    ivfProbeScan(c, queries, seeds, k, nprobe, vecCol, idCol, Nil)
+      .map(sp => ivfAssignPruned(corpus, seeds, sp))
+      .getOrElse(ivfAssign(corpus, seeds))
+    ivfProbeScan(c, queries, seeds, k, nprobe, Nil)
   }
 
   /** The probe-and-score body shared by [[topKIvfProbe]] and
@@ -349,10 +344,8 @@ object SimilarityOps {
     * members of its `nprobe` cells. */
   private def ivfProbeScan(assigned: DataFrame, queries: DataFrame,
                            seeds: DataFrame, k: Int, nprobe: Int,
-                           vecCol: String, idCol: String,
                            carry: Seq[String]): DataFrame = {
-    val qcells = probeCells(queries, seeds, nprobe, vecCol, idCol,
-        col(vecCol).as("qvec"))
+    val qcells = probeCells(queries, seeds, nprobe, col("embedding").as("qvec"))
       .select(col("qid"), col("qvec"), l2norm(col("qvec")).as("qn"),
         col("qcell"))
     topKPer(assigned.join(broadcast(qcells),
@@ -371,28 +364,20 @@ object SimilarityOps {
     * a production index acts on asynchronously. This closes the
     * incremental family on the ANN side the way the six dedup
     * granularities were closed: batch cost is O(batch · cells · d)
-    * assignment + cells-sized bookkeeping; `stored` is scanned only for
-    * training and its one-time placement. A real deployment reads both
-    * from the persisted index: pass `centroids` (the trained centroid set
-    * the index was built with) AND `storedIndex` (the persisted
-    * assignment) together to skip the stored scan entirely. `storedIndex`
-    * alone still retrains from `stored` — it MUST be the
-    * kmeansCentroidsExact(stored, cells, iters) placement or the
-    * stored_n/needs_split stats misalign with the cells the batch lands
-    * in, which is why the pair travels together in a persisted index. */
-  def ivfAssignIncremental(stored: DataFrame, batch: DataFrame, cells: Int,
-                           iters: Int = 1, vecCol: String = "embedding",
-                           idCol: String = "vec_id",
-                           storedIndex: Option[DataFrame] = None,
-                           centroids: Option[DataFrame] = None): DataFrame = {
-    val cents = centroids.getOrElse(
-      graft.ml.MLOps.kmeansCentroidsExact(stored, k = cells,
-        iters = iters, vecCol = vecCol, idCol = idCol))
+    * assignment + cells-sized bookkeeping. The index travels as a pair:
+    * `centroids` (the `cells` centroids it was built with, e.g.
+    * [[graft.ml.MLOps.kmeansCentroidsExact]] over the stored corpus) and
+    * `storedIndex` (the stored corpus's placement against exactly those
+    * centroids — [[ivfAssign]]`(stored, centroids)` or the persisted
+    * assignment; only its `cell` column is read). A placement against any
+    * other centroid set misaligns the stored_n/needs_split stats with the
+    * cells the batch lands in. */
+  def ivfAssignIncremental(storedIndex: DataFrame, batch: DataFrame,
+                           centroids: DataFrame, cells: Int): DataFrame = {
     val storedCells = storedIndex
-      .getOrElse(ivfAssign(stored, cents, vecCol, idCol))
       .groupBy(col("cell")).agg(count(lit(1)).as("stored_n"))
-    val placed = ivfAssign(batch, cents, vecCol, idCol)
-      .select(col("nid").as(idCol), col("cell"))
+    val placed = ivfAssign(batch, centroids)
+      .select(col("nid").as("vec_id"), col("cell"))
     val batchCells = placed.groupBy(col("cell"))
       .agg(count(lit(1)).as("batch_n"))
     // cells-sized stats table: the unpartitioned total window is over at
@@ -407,7 +392,7 @@ object SimilarityOps {
         (col("stored_n") + col("batch_n")) * cells > lit(2L) * col("_tot"))
       .drop("_tot")
     placed.join(broadcast(cellStats), "cell")
-      .select(col(idCol), col("cell"), col("stored_n"), col("batch_n"),
+      .select(col("vec_id"), col("cell"), col("stored_n"), col("batch_n"),
         col("needs_split"))
   }
 
@@ -437,17 +422,17 @@ object SimilarityOps {
     *
     * Determinism (value-oracled): quantized integer d2, (d2, sub) ties,
     * floor-mean on the integer grid, empty/degenerate subs keep their seed
-    * (a 1-member flagged cell trains 1 sub and maps wholly to 2c). Output:
-    * (idCol, cell, needs_split, new_cell) for EVERY corpus vector. */
-  def ivfSplitCells(corpus: DataFrame, cells: Int, splitIters: Int = 1,
-                    splitThresholdPct: Int = 200,
-                    vecCol: String = "embedding", idCol: String = "vec_id",
-                    centroids: Option[DataFrame] = None): DataFrame = {
+    * (a 1-member flagged cell trains 1 sub and maps wholly to 2c). `seeds`
+    * is the index's `cells`-row centroid set ([[seedCells]] or trained).
+    * Output: (vec_id, cell, needs_split, new_cell) for EVERY corpus
+    * vector. */
+  def ivfSplitCells(corpus: DataFrame, seeds: DataFrame, cells: Int,
+                    splitIters: Int = 1,
+                    splitThresholdPct: Int = 200): DataFrame = {
     require(splitIters >= 0, s"splitIters must be >= 0: $splitIters")
     require(splitThresholdPct >= 1,
       s"splitThresholdPct must be >= 1: $splitThresholdPct")
-    val seeds = centroids.getOrElse(corpus.filter(col(idCol) < cells))
-    val assigned = ivfAssign(corpus, seeds, vecCol, idCol)
+    val assigned = ivfAssign(corpus, seeds)
       .select(col("nid"), quantize(col("v")).as("qv"), col("cell"))
     // exact integers: cell_n·cells·100 > pct·total  ⇔  cell_n > pct% of mean
     val stats = assigned.groupBy(col("cell")).agg(count(lit(1)).as("cell_n"))
@@ -462,7 +447,7 @@ object SimilarityOps {
       .select(col("nid"), (col("cell") * 2 + col("sub")).as("new_cell"))
     assigned.join(broadcast(stats), "cell")
       .join(placed, Seq("nid"), "left")
-      .select(col("nid").as(idCol), col("cell"), col("needs_split"),
+      .select(col("nid").as("vec_id"), col("cell"), col("needs_split"),
         coalesce(col("new_cell"), col("cell") * 2).cast("long").as("new_cell"))
   }
 
@@ -528,32 +513,27 @@ object SimilarityOps {
     * (pcos desc, nid) ties), rerank is the usual 6-dp cosine. With
     * m ≥ every probed candidate count the shortlist passes everything
     * through and the result degenerates to [[topKIvfProbe]] with the same
-    * (cells, nprobe, sprobe) — the spec pins that.
+    * (seeds, nprobe, sprobe) — the spec pins that.
     *
-    * `centroids` (default None = smallest-id seeds) runs the composed
-    * member over a TRAINED centroid set ([[graft.ml.MLOps
-    * .kmeansCentroidsExact]]) — the production configuration: balanced
-    * cells bound the worst-case probed-candidate volume. */
+    * `seeds` as in [[topKIvfSeeds]]; a TRAINED centroid set
+    * ([[graft.ml.MLOps.kmeansCentroidsExact]]) is the production
+    * configuration: balanced cells bound the worst-case probed-candidate
+    * volume. */
   def ivfProjectedTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-                       cells: Int, nprobe: Int, sprobe: Int = 2,
-                       m: Int = 10, outDims: Int = 16,
-                       vecCol: String = "embedding",
-                       idCol: String = "vec_id",
-                       centroids: Option[DataFrame] = None): DataFrame = {
-    val seeds = centroids.getOrElse(corpus.filter(col(idCol) < cells))
-    val c = ivfAssignPruned(corpus, seeds, sprobe, vecCol, idCol)
+                       seeds: DataFrame, nprobe: Int, sprobe: Int = 2,
+                       m: Int = 10, outDims: Int = 16): DataFrame = {
+    val c = ivfAssignPruned(corpus, seeds, sprobe)
     val cSlim = c.select(col("nid"), col("cell"),
         projectArr(quantize(col("v")), outDims).as("pc"))
       .withColumn("pcn", intNorm(col("pc")))
-    val qcells = probeCells(queries, seeds, nprobe, vecCol, idCol)
+    val qcells = probeCells(queries, seeds, nprobe)
       .select(col("qid"), projectArr(col("qq"), outDims).as("pq"),
         col("qcell"))
       .withColumn("pqn", intNorm(col("pq")))
     val cand = cSlim.join(broadcast(qcells),
         col("cell") === col("qcell") && col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"), intCosine("pq", "pqn", "pc", "pcn"))
-    rerankExact(topKPer(cand, m, col("pcos").desc), corpus, queries, k,
-      vecCol, idCol)
+    rerankExact(topKPer(cand, m, col("pcos").desc), corpus, queries, k)
   }
 
   /** Metadata-FILTERED IVF top-k — the filtered-vector-search shape every
@@ -567,16 +547,14 @@ object SimilarityOps {
     * rides the indexed side as a plain pushdown-able column predicate, no
     * per-predicate index rebuild. Metadata columns travel through the
     * assignment via [[ivfAssign]]'s carry parameter — one corpus scan,
-    * no re-join. */
+    * no re-join. The `label` column is carried, so `candPred` may test it
+    * and the output keeps it. `seeds` as in [[topKIvfSeeds]]. */
   def topKIvfFiltered(corpus: DataFrame, queries: DataFrame, k: Int,
-                      cells: Int, nprobe: Int, candPred: Column,
-                      carry: Seq[String] = Seq("label"),
-                      vecCol: String = "embedding",
-                      idCol: String = "vec_id",
-                      centroids: Option[DataFrame] = None): DataFrame = {
-    val seeds = centroids.getOrElse(corpus.filter(col(idCol) < cells))
-    ivfProbeScan(ivfAssign(corpus, seeds, vecCol, idCol, carry).filter(candPred),
-      queries, seeds, k, nprobe, vecCol, idCol, carry)
+                      seeds: DataFrame, nprobe: Int,
+                      candPred: Column): DataFrame = {
+    val carry = Seq("label")
+    ivfProbeScan(ivfAssign(corpus, seeds, carry).filter(candPred),
+      queries, seeds, k, nprobe, carry)
   }
 
   /** Cluster-balanced corpus resampling — the coverage-preserving
@@ -591,12 +569,10 @@ object SimilarityOps {
     * [[ivfAssignPruned]] past fixture scale) + one window on the cell —
     * no pair joins anywhere, so a mega-cluster costs its own rows, not
     * its rows². */
-  def clusterBalance(embs: DataFrame, cells: Int = 16, cap: Int = 25,
-                     vecCol: String = "embedding",
-                     idCol: String = "vec_id"): DataFrame = {
+  def clusterBalance(embs: DataFrame, cells: Int = 16,
+                     cap: Int = 25): DataFrame = {
     require(cap >= 1, s"cap must be >= 1: $cap")
-    val seeds = embs.filter(col(idCol) < cells)
-    val assigned = ivfAssign(embs, seeds, vecCol, idCol)
+    val assigned = ivfAssign(embs, seedCells(embs, cells))
     assigned.withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("cell"))
           .orderBy(md5(col("nid").cast("string")).asc, col("nid").asc)))
@@ -614,14 +590,12 @@ object SimilarityOps {
     * bandwidth per candidate, with JL's distance-preservation guarantee in
     * expectation. Narrow per-row map — composes into the scan, no
     * shuffle; the signs fold at plan time into a codegen'd expression. */
-  def randomProject(embs: DataFrame, outDims: Int = 16,
-                    vecCol: String = "embedding",
-                    idCol: String = "vec_id"): DataFrame = {
+  def randomProject(embs: DataFrame, outDims: Int = 16): DataFrame = {
     require(outDims >= 1, s"outDims must be >= 1: $outDims")
-    val q = quantize(col(vecCol))
+    val q = quantize(col("embedding"))
     // sign(i,j) ([[jlSign]]) is computed at plan time so the per-row
     // expression is a plain ±ql sum, not 64·outDims runtime hashes
-    embs.select(col(idCol),
+    embs.select(col("vec_id"),
       array_join(array(projectComps(q, outDims): _*), ",").as("pvec"))
   }
 
@@ -669,11 +643,11 @@ object SimilarityOps {
     * sides map to the integer `code` of their quantized vector, every
     * (query, corpus) pair scores [[intCosine]], and the slim
     * (qid, nid, pcos) rows go through [[topKPer]]. */
-  private def codeShortlist(corpus: DataFrame, queries: DataFrame, m: Int,
-                            vecCol: String, idCol: String)
+  private def codeShortlist(corpus: DataFrame, queries: DataFrame, m: Int)
                            (code: Column => Column): DataFrame = {
     def slim(df: DataFrame, idAs: String, pAs: String, nAs: String) =
-      df.select(col(idCol).as(idAs), code(quantize(col(vecCol))).as(pAs))
+      df.select(col("vec_id").as(idAs),
+          code(quantize(col("embedding"))).as(pAs))
         .withColumn(nAs, intNorm(col(pAs)))
     val c = slim(corpus, "nid", "pc", "pcn").repartition(col("nid"))
     val qs = slim(queries, "qid", "pq", "pqn")
@@ -694,15 +668,12 @@ object SimilarityOps {
     * LSH (bucketing) and IVF (partitioning). Projected dots are exact
     * BIGINTs; both cosines round at 6 dp, so ranks are engine-exact. */
   def topKProjected(corpus: DataFrame, queries: DataFrame, k: Int = 3,
-                    m: Int = 10, outDims: Int = 16,
-                    vecCol: String = "embedding",
-                    idCol: String = "vec_id"): DataFrame =
+                    m: Int = 10, outDims: Int = 16): DataFrame =
     // native graft_jl: ONE kernel call per row — the unrolled 16×64
     // element_at tree dropped this stage out of codegen (r12 bench: the
     // projection rows were the slowest in the run from plan overhead alone)
-    rerankExact(codeShortlist(corpus, queries, m, vecCol, idCol)(
-        projectArr(_, outDims)),
-      corpus, queries, k, vecCol, idCol)
+    rerankExact(codeShortlist(corpus, queries, m)(projectArr(_, outDims)),
+      corpus, queries, k)
 
   /** Matryoshka / PREFIX-dimension ANN (MRL-style: embeddings trained so
     * leading dimensions carry the coarse signal — Kusupati et al. 2022):
@@ -716,13 +687,10 @@ object SimilarityOps {
     * is. Same shortlist shape as [[topKProjected]]; deterministic: BIGINT
     * prefix dots, 6-dp rounded prefix cosine, (pcos desc, nid) ties. */
   def topKPrefix(corpus: DataFrame, queries: DataFrame, k: Int = 3,
-                 m: Int = 10, prefixDims: Int = 16,
-                 vecCol: String = "embedding",
-                 idCol: String = "vec_id"): DataFrame = {
+                 m: Int = 10, prefixDims: Int = 16): DataFrame = {
     require(prefixDims >= 1, s"prefixDims must be >= 1: $prefixDims")
-    rerankExact(codeShortlist(corpus, queries, m, vecCol, idCol)(
-        slice(_, 1, prefixDims)),
-      corpus, queries, k, vecCol, idCol)
+    rerankExact(codeShortlist(corpus, queries, m)(slice(_, 1, prefixDims)),
+      corpus, queries, k)
   }
 
   /** HARD-NEGATIVE mining for contrastive training: for each anchor, the
@@ -737,19 +705,17 @@ object SimilarityOps {
     * family rides at corpus scale. Complements [[contrastivePairs]] (which
     * pairs by shared label); together they emit the (anchor, positive,
     * hard-negative) triples a contrastive run trains on. */
-  def hardNegatives(embs: DataFrame, anchorPred: Column, k: Int = 3,
-                    labelCol: String = "label",
-                    vecCol: String = "embedding",
-                    idCol: String = "vec_id"): DataFrame = {
-    val c = embs.select(col(idCol).as("nid"),
-        col(vecCol).cast("array<double>").as("cv"),
-        l2norm(col(vecCol)).as("cn"), lshBucket(col(vecCol)).as("bucket"),
-        col(labelCol).as("neg_label"))
+  def hardNegatives(embs: DataFrame, anchorPred: Column,
+                    k: Int = 3): DataFrame = {
+    val c = embs.select(col("vec_id").as("nid"),
+        col("embedding").cast("array<double>").as("cv"),
+        l2norm(col("embedding")).as("cn"),
+        lshBucket(col("embedding")).as("bucket"), col("label").as("neg_label"))
       .repartition(col("bucket"))
-    val q = embs.filter(anchorPred).select(col(idCol).as("qid"),
-      col(vecCol).cast("array<double>").as("qv"),
-      l2norm(col(vecCol)).as("qn"), lshBucket(col(vecCol)).as("qbucket"),
-      col(labelCol).as("anchor_label"))
+    val q = embs.filter(anchorPred).select(col("vec_id").as("qid"),
+      col("embedding").cast("array<double>").as("qv"),
+      l2norm(col("embedding")).as("qn"),
+      lshBucket(col("embedding")).as("qbucket"), col("label").as("anchor_label"))
     topKPer(c.join(broadcast(q),
           col("bucket") === col("qbucket") && col("qid") =!= col("nid") &&
             col("neg_label") =!= col("anchor_label"))
@@ -764,11 +730,10 @@ object SimilarityOps {
     * memory and one that doesn't). Narrow: composes into the scan, no
     * shuffle. floor() (not round) keeps the quantized codes bit-identical
     * cross-engine; the norm surfaces rounded like the cosine scores. */
-  def normalizeQuantize(embs: DataFrame, vecCol: String = "embedding",
-                        idCol: String = "vec_id"): DataFrame = {
-    val ad = col(vecCol).cast("array<double>")
-    embs.select(col(idCol), ad.as("e"), l2norm(col(vecCol)).as("nrm"))
-      .select(col(idCol), round(col("nrm"), 6).as("qnorm"),
+  def normalizeQuantize(embs: DataFrame): DataFrame = {
+    val ad = col("embedding").cast("array<double>")
+    embs.select(col("vec_id"), ad.as("e"), l2norm(col("embedding")).as("nrm"))
+      .select(col("vec_id"), round(col("nrm"), 6).as("qnorm"),
         array_join(when(col("nrm") > 0,
           transform(col("e"), x => floor(x / col("nrm") * 127).cast("string")))
           .otherwise(transform(col("e"), _ => lit("0"))), ",").as("qvec"))
@@ -787,16 +752,15 @@ object SimilarityOps {
     * per (codeword, subspace). A trained codebook would come from k-means;
     * seeding keeps the whole pipeline value-oracle-able (no float
     * iteration), and NOTHING downstream depends on how the codebook was
-    * chosen — swap in trained centroids and the encode/ADC shapes are
-    * unchanged. PqK rows collect driver-side (tiny, like the bloom filter
-    * words) and broadcast to every probe. */
-  private[operators] def pqCodebook(embs: DataFrame, vecCol: String,
-                                    idCol: String): DataFrame = {
+    * chosen — pass [[pqCodebookTrained]] instead and the encode/ADC
+    * shapes are unchanged. PqK rows collect driver-side (tiny, like the
+    * bloom filter words) and broadcast to every probe. */
+  def pqCodebook(embs: DataFrame): DataFrame = {
     val spark = embs.sparkSession
     import spark.implicits._
     val seeds = embs
-      .select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("e"))
+      .select(col("vec_id").cast("long").as("id"),
+        col("embedding").cast("array<double>").as("e"))
       .orderBy(col("id")).limit(PqK).collect()
       .zipWithIndex.flatMap { case (r, cid) =>
         val v = r.getSeq[Double](1)
@@ -811,18 +775,15 @@ object SimilarityOps {
     * subvectors), replacing the smallest-id seeding — the FAISS-style
     * codebook whose codewords sit at subspace cluster means instead of
     * arbitrary data points, shrinking ADC quantization error. Same output
-    * shape as [[pqCodebook]] ((cid, s, cv)), so every consumer swaps in
-    * via the `codebook` parameter with encode/ADC unchanged (exactly the
-    * swap the pqCodebook scaladoc promised). Cost: PqSub × iters corpus
-    * scans over PqDims-wide slices, each one broadcast crossJoin + one
-    * k×PqDims aggregation — no corpus shuffle. Codeword values land on
-    * the 1e-6 grid (the k-means integer arithmetic), which is why the
-    * iters = 0 form is NOT bit-identical to the raw-double [[pqCodebook]];
-    * the spec pins shape + rank validity and DESIGN.md records the recall
-    * comparison. */
-  private[graft] def pqCodebookTrained(embs: DataFrame, vecCol: String,
-                                       idCol: String,
-                                       iters: Int = 2): DataFrame = {
+    * shape as [[pqCodebook]] ((cid, s, cv)), so it is passed as the
+    * `codebook` of any PQ operator with encode/ADC unchanged. Cost:
+    * PqSub × iters corpus scans over PqDims-wide slices, each one
+    * broadcast crossJoin + one k×PqDims aggregation — no corpus shuffle.
+    * Codeword values land on the 1e-6 grid (the k-means integer
+    * arithmetic), which is why the iters = 0 form is NOT bit-identical to
+    * the raw-double [[pqCodebook]]; the spec pins shape + rank validity
+    * and DESIGN.md records the recall comparison. */
+  def pqCodebookTrained(embs: DataFrame, iters: Int = 2): DataFrame = {
     // the PqSub per-subspace trainings are INDEPENDENT driver loops (each
     // a couple of small collect jobs per Lloyd round) — run them as
     // concurrent jobs so one subspace's tail back-fills the others' idle
@@ -843,13 +804,12 @@ object SimilarityOps {
         ExecutionContext.fromExecutorService(pool)
       val trained = (0 until PqSub).map { s =>
         Future {
-          val part = embs.select(col(idCol),
-            expr(s"slice(CAST($vecCol AS array<double>), ${s * PqDims + 1}, " +
-              s"$PqDims)").as(vecCol))
-          graft.ml.MLOps.kmeansCentroidsExact(part, k = PqK, iters = iters,
-              vecCol = vecCol, idCol = idCol)
-            .select(col(idCol).cast("int").as("cid"), lit(s).as("s"),
-              col(vecCol).as("cv"))
+          val part = embs.select(col("vec_id"),
+            expr(s"slice(CAST(embedding AS array<double>), ${s * PqDims + 1}, " +
+              s"$PqDims)").as("embedding"))
+          graft.ml.MLOps.kmeansCentroidsExact(part, k = PqK, iters = iters)
+            .select(col("vec_id").cast("int").as("cid"), lit(s).as("s"),
+              col("embedding").as("cv"))
         }
       }
       trained.map(Await.result(_, Duration.Inf)).reduce(_ unionByName _)
@@ -871,13 +831,8 @@ object SimilarityOps {
     * encoding N vectors costs one pass (plus one spread-the-input hash
     * exchange on the id guarding the single-file serial hazard, see the
     * comment below). */
-  private def pqMins(embs: DataFrame, vecCol: String, idCol: String,
-                     codebook: Option[DataFrame] = None): DataFrame = {
+  private def pqMins(embs: DataFrame, codebook: DataFrame): DataFrame = {
     graft.functions.GraftExtensions.install(embs.sparkSession)
-    // optional precomputed codebook: callers that also need the codebook
-    // for themselves (ADC's query distance table) compute it once and
-    // thread it through instead of paying the driver-side orderBy+limit
-    // collect twice
     // codebook as an ordered matrix (row s·PqK + cid = codeword cid of
     // subspace s — sort_array over struct(s, cid, cv) is the (s, cid)
     // lexicographic order; pairs are unique so cv never drives the sort)
@@ -886,7 +841,7 @@ object SimilarityOps {
     // aggregate lambda chain (guide §4 "eliminate non-codegen expressions";
     // same d2 fold order and (d2, cid) tie-break, so values are
     // bit-identical — PqArgminSpec pins the differential).
-    val cbRow = codebook.getOrElse(pqCodebook(embs, vecCol, idCol))
+    val cbRow = codebook
       .select(struct(col("s"), col("cid"),
         col("cv").cast("array<double>").as("cv")).as("c"))
       .agg(sort_array(collect_list(col("c"))).as("cs"))
@@ -898,8 +853,8 @@ object SimilarityOps {
     // one core. On a many-file corpus the exchange is the one you'd drop;
     // at 100 TB the codes table is materialized once anyway.
     embs
-      .select(col(idCol).cast("long").as("vec_id"),
-        col(vecCol).cast("array<double>").as("v"))
+      .select(col("vec_id").cast("long").as("vec_id"),
+        col("embedding").cast("array<double>").as("v"))
       .repartition(col("vec_id"))
       .crossJoin(broadcast(cbRow))
       .select(col("vec_id"),
@@ -911,10 +866,10 @@ object SimilarityOps {
     * code = argmin codeword by squared L2 (ties to the smaller codeword
     * id), d2_micro the integer-quantized residual. Narrow end-to-end
     * (see [[pqMins]]); the only explode is the final per-subspace
-    * row-shaping, after the minimization. */
-  def pqEncode(embs: DataFrame, vecCol: String = "embedding",
-               idCol: String = "vec_id"): DataFrame =
-    pqMins(embs, vecCol, idCol)
+    * row-shaping, after the minimization. `codebook` is a (cid, s, cv)
+    * table: [[pqCodebook]] or [[pqCodebookTrained]]. */
+  def pqEncode(embs: DataFrame, codebook: DataFrame): DataFrame =
+    pqMins(embs, codebook)
       .select(col("vec_id"), posexplode(col("mins")).as(Seq("s", "m")))
       .select(col("vec_id"), col("s"), col("m.cid").as("code"),
         expr("CAST(round(m.d2 * 1e6) AS BIGINT)").as("d2_micro"))
@@ -926,21 +881,15 @@ object SimilarityOps {
     * codes, never the float vectors, which is the entire point at scale.
     * Subspace partials are integer-quantized BEFORE the sum so the
     * aggregation is associative — rank order cannot flip on float
-    * addition order. */
+    * addition order. `codebook` as in [[pqEncode]]; it feeds both the
+    * corpus encode and the query distance table. */
   def pqAdcTopK(embs: DataFrame, k: Int, queryPred: Column,
-                vecCol: String = "embedding",
-                idCol: String = "vec_id",
-                codebook: Option[DataFrame] = None): DataFrame = {
-    // codebook computed ONCE for both consumers (corpus encode + query
-    // distance table); it is PqK*PqSub tiny rows but building it costs a
-    // driver-side orderBy+limit collect over the corpus — not worth paying
-    // twice. `codebook` swaps in a trained one ([[pqCodebookTrained]]).
-    val cb = codebook.getOrElse(pqCodebook(embs, vecCol, idCol))
+                codebook: DataFrame): DataFrame = {
     // wide codes: one row per corpus vector, codes[s] = winning codeword —
     // narrow all the way (pqMins)
-    val codesWide = pqMins(embs, vecCol, idCol, Some(cb))
+    val codesWide = pqMins(embs, codebook)
       .select(col("vec_id"), expr("transform(mins, m -> m.cid)").as("codes"))
-    val qtable = pqQueryTable(embs, queryPred, cb, vecCol, idCol)
+    val qtable = pqQueryTable(embs, queryPred, codebook)
     // ADC = ordered sum of table lookups at the corpus vector's codes —
     // pure expression over (codes × broadcast tables); the ONLY shuffle in
     // the whole query is the final per-query top-k window
@@ -956,11 +905,11 @@ object SimilarityOps {
     * [[pqAdcTopK]] (flat scan) and [[ivfPqTopK]] (cell-probed scan);
     * subspace partials are integer-quantized here so every consumer's sum
     * is associative. */
-  private def pqQueryTable(embs: DataFrame, queryPred: Column, cb: DataFrame,
-                           vecCol: String, idCol: String): DataFrame = {
+  private def pqQueryTable(embs: DataFrame, queryPred: Column,
+                           cb: DataFrame): DataFrame = {
     val qsub = embs.filter(queryPred)
-      .select(col(idCol).cast("long").as("qid"),
-        col(vecCol).cast("array<double>").as("v"))
+      .select(col("vec_id").cast("long").as("qid"),
+        col("embedding").cast("array<double>").as("v"))
       .select(col("qid"), explode(sequence(lit(0), lit(PqSub - 1))).as("s"),
         col("v"))
       .select(col("qid"), col("s"),
@@ -997,13 +946,12 @@ object SimilarityOps {
     * product of the two knobs — nprobe (recall of the candidate set) and
     * the codebook (fidelity of the score) — each independently verified
     * by its own oracle row; at nprobe = cells this degenerates to exactly
-    * [[pqAdcTopK]], which the spec differential pins. */
+    * [[pqAdcTopK]], which the spec differential pins. `codebook` as in
+    * [[pqEncode]]. */
   def ivfPqTopK(embs: DataFrame, k: Int, cells: Int, nprobe: Int,
-                queryPred: Column, vecCol: String = "embedding",
-                idCol: String = "vec_id",
-                assignSprobe: Option[Int] = None,
-                codebook: Option[DataFrame] = None): DataFrame = {
-    val seeds = embs.filter(col(idCol) < cells)
+                queryPred: Column, codebook: DataFrame,
+                assignSprobe: Option[Int] = None): DataFrame = {
+    val seeds = seedCells(embs, cells)
     // corpus side: cell placement + PQ codes, joined on the vector id —
     // both sides are corpus-keyed, so at scale this is a co-partitioned
     // join (and the index build a real deployment materializes anyway).
@@ -1014,17 +962,16 @@ object SimilarityOps {
     // O(n·cells·d) assign term swamps the shrinking candidate volume,
     // exactly the SemDeDup r10 finding replayed on the ANN side.
     val assigned = assignSprobe
-      .map(sp => ivfAssignPruned(embs, seeds, sp, vecCol, idCol))
-      .getOrElse(ivfAssign(embs, seeds, vecCol, idCol))
+      .map(sp => ivfAssignPruned(embs, seeds, sp))
+      .getOrElse(ivfAssign(embs, seeds))
       .select(col("nid").cast("long").as("vec_id"), col("cell"))
-    val cb = codebook.getOrElse(pqCodebook(embs, vecCol, idCol))
-    val codesWide = pqMins(embs, vecCol, idCol, Some(cb))
+    val codesWide = pqMins(embs, codebook)
       .select(col("vec_id"), expr("transform(mins, m -> m.cid)").as("codes"))
       .join(assigned, "vec_id")
     // query side: nprobe-cell probe + the ADC distance table — both broadcast
-    val qprobe = probeCells(embs.filter(queryPred), seeds, nprobe, vecCol, idCol)
+    val qprobe = probeCells(embs.filter(queryPred), seeds, nprobe)
       .select(col("qid").cast("long").as("qid"), col("qcell"))
-    val qtable = pqQueryTable(embs, queryPred, cb, vecCol, idCol)
+    val qtable = pqQueryTable(embs, queryPred, codebook)
     val adc = codesWide
       .join(broadcast(qprobe), col("cell") === col("qcell"))
       .filter(col("qid") =!= col("vec_id"))
@@ -1087,10 +1034,9 @@ object SimilarityOps {
     * signed delta. One partial+final aggregation per side over the
     * exploded (dim, value) stream — linear, no joins beyond the 64-row
     * result merge. */
-  def embeddingDrift(stored: DataFrame, batch: DataFrame,
-                     vecCol: String = "embedding"): DataFrame = {
+  def embeddingDrift(stored: DataFrame, batch: DataFrame): DataFrame = {
     def dimMeans(df: DataFrame, as: String) = df
-      .select(posexplode(quantize(col(vecCol))).as(Seq("dim", "x")))
+      .select(posexplode(quantize(col("embedding"))).as(Seq("dim", "x")))
       .groupBy(col("dim"))
       .agg(expr("CAST(SUM(x) AS BIGINT) DIV COUNT(1)").as(as))
     dimMeans(stored, "stored_mean_micro")
@@ -1150,12 +1096,11 @@ object SimilarityOps {
     * site measured 45 s for the sf1 stage build before the rewrite,
     * 2.3 s after). Docs shorter than 2 tokens keep the whole-token-string
     * fallback shingle the oracles mirror. */
-  def termFrequencies(docs: DataFrame, textCol: String = "text",
-                      idCol: String = "doc_id"): DataFrame = {
+  def termFrequencies(docs: DataFrame): DataFrame = {
     import graft.functions.GraftFunctions.tokens
-    val toks = docs.repartition(col(idCol))
-      .select(col(idCol).as("doc_id"),
-        posexplode(tokens(col(textCol))).as(Seq("pos", "tok0")))
+    val toks = docs.repartition(col("doc_id"))
+      .select(col("doc_id"),
+        posexplode(tokens(col("text"))).as(Seq("pos", "tok0")))
     val wLead = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     val wCnt = Window.partitionBy(col("doc_id"))
     val nxt = lead(col("tok0"), 1).over(wLead)
@@ -1408,21 +1353,18 @@ object SimilarityOps {
     * [[topKLsh]]/[[topKIvfProbe]] candidates — the label filter commutes
     * with any candidate generator because it only prunes the rerank. */
   def contrastivePairs(embs: DataFrame, k: Int = 5,
-                       queryMod: Long = 100,
-                       vecCol: String = "embedding",
-                       idCol: String = "vec_id",
-                       labelCol: String = "label"): DataFrame = {
+                       queryMod: Long = 100): DataFrame = {
     require(k >= 1 && queryMod >= 2,
       s"invalid contrastive shape: k=$k queryMod=$queryMod")
-    val c = embs.select(col(idCol).as("nid"),
-        col(labelCol).as("n_label"),
-        col(vecCol).cast("array<double>").as("cv"),
-        l2norm(col(vecCol)).as("cn"))
+    val c = embs.select(col("vec_id").as("nid"),
+        col("label").as("n_label"),
+        col("embedding").cast("array<double>").as("cv"),
+        l2norm(col("embedding")).as("cn"))
       .repartition(col("nid"))
-    val q = embs.filter(col(idCol) % queryMod === 0)
-      .select(col(idCol).as("qid"), col(labelCol).as("q_label"),
-        col(vecCol).cast("array<double>").as("qv"),
-        l2norm(col(vecCol)).as("qn"))
+    val q = embs.filter(col("vec_id") % queryMod === 0)
+      .select(col("vec_id").as("qid"), col("label").as("q_label"),
+        col("embedding").cast("array<double>").as("qv"),
+        l2norm(col("embedding")).as("qn"))
     val scored = c.join(broadcast(q), col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"), col("q_label"), col("n_label"),
         when(col("q_label") === col("n_label"), "pos").otherwise("neg")
@@ -1468,16 +1410,14 @@ object SimilarityOps {
     * Measured (ProbeRecallSampled, sf10): the 1-in-10 panel tracks the
     * full audit within a few points at ~1/10 the ground-truth cost. */
   def recallAtKSampled(corpus: DataFrame, queries: DataFrame,
-                       sampleMod: Long, k: Int = 3,
-                       vecCol: String = "embedding",
-                       idCol: String = "vec_id")
+                       sampleMod: Long, k: Int = 3)
                       (member: DataFrame => DataFrame): DataFrame = {
     require(sampleMod >= 1, s"sampleMod must be >= 1: $sampleMod")
     import graft.functions.GraftFunctions.stableHash
     val sampled =
       if (sampleMod == 1) queries
       else queries.filter(
-        pmod(stableHash(col(idCol).cast("string")), lit(sampleMod)) === 0)
+        pmod(stableHash(col("vec_id").cast("string")), lit(sampleMod)) === 0)
     recallAtK(
       member(sampled).select(col("qid"), col("nid")),
       topKBruteForce(corpus, sampled, k).select(col("qid"), col("nid")))
@@ -1506,21 +1446,19 @@ object SimilarityOps {
     * greedy runs over LSH/IVF candidates — MMR only consumes (rel, sim)
     * pairs, not vectors. */
   def mmrRerank(embs: DataFrame, k: Int = 5, m: Int = 10,
-                lambdaPct: Int = 70, queryMod: Long = 100,
-                vecCol: String = "embedding",
-                idCol: String = "vec_id"): DataFrame = {
+                lambdaPct: Int = 70, queryMod: Long = 100): DataFrame = {
     require(k >= 1 && m >= k && lambdaPct >= 0 && lambdaPct <= 100 &&
         queryMod >= 2,
       s"invalid mmr shape: k=$k m=$m lambdaPct=$lambdaPct queryMod=$queryMod")
     val mu = 100 - lambdaPct
-    val c = embs.select(col(idCol).as("nid"),
-        col(vecCol).cast("array<double>").as("cv"),
-        l2norm(col(vecCol)).as("cn"))
+    val c = embs.select(col("vec_id").as("nid"),
+        col("embedding").cast("array<double>").as("cv"),
+        l2norm(col("embedding")).as("cn"))
       .repartition(col("nid"))
-    val q = embs.filter(col(idCol) % queryMod === 0)
-      .select(col(idCol).as("qid"),
-        col(vecCol).cast("array<double>").as("qv"),
-        l2norm(col(vecCol)).as("qn"))
+    val q = embs.filter(col("vec_id") % queryMod === 0)
+      .select(col("vec_id").as("qid"),
+        col("embedding").cast("array<double>").as("qv"),
+        l2norm(col("embedding")).as("qn"))
     // top-m candidates by micro-cosine relevance through the slim rank
     // step; vectors re-attach after the prune via one broadcast join
     // against the q·m-row survivor set
@@ -1573,11 +1511,10 @@ object SimilarityOps {
     * (×1e6, round) so the cross-row sum is associative, then the mean is
     * surfaced as a rounded double. Output one row per (label, dim) —
     * relational form, mirrors 1:1 into SQL engines. */
-  def labelCentroids(embs: DataFrame, vecCol: String = "embedding",
-                     labelCol: String = "label"): DataFrame =
+  def labelCentroids(embs: DataFrame): DataFrame =
     embs
-      .select(col(labelCol).as("label"),
-        posexplode(quantize(col(vecCol))).as(Seq("dim", "x")))
+      .select(col("label"),
+        posexplode(quantize(col("embedding"))).as(Seq("dim", "x")))
       .groupBy(col("label"), col("dim"))
       .agg(round(sum(col("x")).cast("double") / count(lit(1)) / 1000000.0, 6)
         .as("centroid"))
@@ -1607,19 +1544,17 @@ object SimilarityOps {
     * q·m-row survivor set. The corpus never shuffles; the queries
     * broadcast. */
   def sq8TopK(corpus: DataFrame, queries: DataFrame, k: Int = 3,
-              m: Int = 10, vecCol: String = "embedding",
-              idCol: String = "vec_id"): DataFrame = {
+              m: Int = 10): DataFrame = {
     require(k >= 1 && m >= k, s"invalid sq8 shape: k=$k m=$m")
-    val c = corpus.select(col(idCol).as("nid"),
-        scaledCodes(col(vecCol), 127).as("cc"))
+    val c = corpus.select(col("vec_id").as("nid"),
+        scaledCodes(col("embedding"), 127).as("cc"))
       .repartition(col("nid"))
-    val qs = queries.select(col(idCol).as("qid"),
-      scaledCodes(col(vecCol), 127).as("qc"))
+    val qs = queries.select(col("vec_id").as("qid"),
+      scaledCodes(col("embedding"), 127).as("qc"))
     val cand = c.crossJoin(broadcast(qs))
       .filter(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"), lldot(col("qc"), col("cc")).as("iscore"))
-    rerankExact(topKPer(cand, m, col("iscore").desc), corpus, queries, k,
-      vecCol, idCol)
+    rerankExact(topKPer(cand, m, col("iscore").desc), corpus, queries, k)
   }
 
   /** IVF-composed SQ8 search (FAISS IVF-SQ shape) — the scale path for
@@ -1631,24 +1566,21 @@ object SimilarityOps {
     * as IVF-PQ, trading the codebook for the scalar grid — simpler codes,
     * exact shortlist ordering within the probed cells. */
   def ivfSq8TopK(embs: DataFrame, queryPred: Column, k: Int = 3, m: Int = 10,
-                 cells: Int = 16, nprobe: Int = 4,
-                 vecCol: String = "embedding",
-                 idCol: String = "vec_id"): DataFrame = {
+                 cells: Int = 16, nprobe: Int = 4): DataFrame = {
     require(k >= 1 && m >= k && cells >= 1 && nprobe >= 1 && nprobe <= cells,
       s"invalid ivf-sq8 shape: k=$k m=$m cells=$cells nprobe=$nprobe")
-    val seeds = embs.filter(col(idCol) < cells)
+    val seeds = seedCells(embs, cells)
     val queries = embs.filter(queryPred)
-    val c = ivfAssign(embs, seeds, vecCol, idCol)
+    val c = ivfAssign(embs, seeds)
       .select(col("nid"), col("cell"), scaledCodes(col("v"), 127).as("cc"))
-    val qcells = probeCells(queries, seeds, nprobe, vecCol, idCol,
-        scaledCodes(col(vecCol), 127).as("qc"))
+    val qcells = probeCells(queries, seeds, nprobe,
+        scaledCodes(col("embedding"), 127).as("qc"))
       .select(col("qid"), col("qc"), col("qcell"))
     // the sq8TopK shortlist with the candidate set cell-bounded
     val cand = c.join(broadcast(qcells),
         col("cell") === col("qcell") && col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"), lldot(col("qc"), col("cc")).as("iscore"))
-    rerankExact(topKPer(cand, m, col("iscore").desc), embs, queries, k,
-      vecCol, idCol)
+    rerankExact(topKPer(cand, m, col("iscore").desc), embs, queries, k)
   }
 
   // ---- k-NN graph -----------------------------------------------------------
@@ -1734,8 +1666,6 @@ object SimilarityOps {
     * budget-adjusts the derived bits by log2(bands). Measured:
     * DESIGN.md "knn-graph bands". */
   def knnGraph(embs: DataFrame, k: Int = 3, bits: Int = 0,
-               vecCol: String = "embedding",
-               idCol: String = "vec_id",
                rowCount: Option[Long] = None,
                bands: Int = 0): DataFrame = {
     require(k >= 1 && bits >= 0 && bits <= 16 && bands >= 0 && bands <= 32,
@@ -1766,9 +1696,9 @@ object SimilarityOps {
     // the same family): the per-plane literal-array form runs interpreted
     // at this width — sf10 coded pass measured 43 s before, per-vector
     // work, all of it avoidable
-    val coded = embs.select(col(idCol).as("id"),
-      lshBandBucketsAll(col(vecCol), useBands, useBits).as("bks"),
-      scaledCodes(col(vecCol), 1000000).as("nc"))
+    val coded = embs.select(col("vec_id").as("id"),
+      lshBandBucketsAll(col("embedding"), useBands, useBits).as("bks"),
+      scaledCodes(col("embedding"), 1000000).as("nc"))
       .localCheckpoint()
     // one (band, bucket) row per band: band 1's exchange key space is
     // disjoint from band 0's, so the union of per-band candidate sets is
@@ -1815,26 +1745,24 @@ object SimilarityOps {
     * [[knnGraph]] edge list `graph` is EDGE-sized — one keyed label join,
     * one (src, label) count, one per-src argmax window, two bounded left
     * joins back — so at 100 TB it rides the k·n edge volume, never n². */
-  def knnLabelSmooth(embs: DataFrame, graph: DataFrame,
-                     labelCol: String = "label",
-                     idCol: String = "vec_id"): DataFrame = {
+  def knnLabelSmooth(embs: DataFrame, graph: DataFrame): DataFrame = {
     val mutual = graph.filter(col("mutual")).select(col("src"), col("dst"))
     val nb = mutual.join(
-      embs.select(col(idCol).as("dst"), col(labelCol).as("nlabel")), "dst")
+      embs.select(col("vec_id").as("dst"), col("label").as("nlabel")), "dst")
     val winner = nb.groupBy(col("src"), col("nlabel"))
       .agg(count(lit(1)).as("n"))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("src")).orderBy(col("n").desc, col("nlabel"))))
       .filter(col("rk") === 1)
-      .select(col("src").as(idCol), col("nlabel"))
+      .select(col("src").as("vec_id"), col("nlabel"))
     val degrees = nb.groupBy(col("src"))
       .agg(count(lit(1)).as("n_neighbors"))
-      .withColumnRenamed("src", idCol)
-    embs.select(col(idCol), col(labelCol))
-      .join(winner, Seq(idCol), "left")
-      .join(degrees, Seq(idCol), "left")
-      .select(col(idCol), col(labelCol),
-        coalesce(col("nlabel"), col(labelCol)).as("smoothed_label"),
+      .withColumnRenamed("src", "vec_id")
+    embs.select(col("vec_id"), col("label"))
+      .join(winner, Seq("vec_id"), "left")
+      .join(degrees, Seq("vec_id"), "left")
+      .select(col("vec_id"), col("label"),
+        coalesce(col("nlabel"), col("label")).as("smoothed_label"),
         coalesce(col("n_neighbors"), lit(0L)).as("n_neighbors"))
   }
 
@@ -1847,8 +1775,8 @@ object SimilarityOps {
     * contract on the embedding side. The CC supersteps run at the
     * edge-derived partition count of
     * [[graft.graph.GraphAlgorithms.clusterComponents]]. */
-  def knnClusters(embs: DataFrame, graph: DataFrame, minIcos: Long = 0L,
-                  idCol: String = "vec_id"): DataFrame = {
+  def knnClusters(embs: DataFrame, graph: DataFrame,
+                  minIcos: Long = 0L): DataFrame = {
     val mutual = graph
       .filter(col("mutual") && col("icos") >= minIcos && col("src") < col("dst"))
       .select(col("src"), col("dst")).localCheckpoint()
@@ -1861,11 +1789,11 @@ object SimilarityOps {
       .union(mutual.select(col("dst").as("vid"))).distinct()
     val cc = graft.graph.GraphAlgorithms.clusterComponents(
       graft.graph.Graph(paired, mutual))
-    embs.select(col(idCol).as("vid"))
+    embs.select(col("vec_id").as("vid"))
       .join(cc, Seq("vid"), "left")
       .select(col("vid"), coalesce(col("comp"), col("vid")).as("cluster_id"))
       .withColumn("cluster_size", count(lit(1)).over(
         Window.partitionBy(col("cluster_id"))))
-      .select(col("vid").as(idCol), col("cluster_id"), col("cluster_size"))
+      .select(col("vid").as("vec_id"), col("cluster_id"), col("cluster_size"))
   }
 }

@@ -92,7 +92,7 @@ object TextOps {
   def docFingerprint(text: Column): Column = fingerprint(tokens(text))
 
   /** Sequence packing for pretraining (concatenate-then-chunk): documents
-    * are laid out in `idCol` order into fixed training sequences of
+    * are laid out in `doc_id` order into fixed training sequences of
     * `seqLen` tokens; each doc gets its sequence id and token offset (a
     * doc may span sequence boundaries — the standard GPT-style packing).
     *
@@ -104,13 +104,11 @@ object TextOps {
     * deterministic even though the partitioner samples. This is the shape
     * that survives 100 TB; the single-partition window form would
     * serialize the corpus through one task. */
-  def packSequences(docs: DataFrame, seqLen: Long,
-                    textCol: String = "text",
-                    idCol: String = "doc_id"): DataFrame = {
+  def packSequences(docs: DataFrame, seqLen: Long): DataFrame = {
     val counted = docs
-      .select(col(idCol), size(tokens(col(textCol))).cast("long").as("n_tokens"))
-      .repartitionByRange(col(idCol))
-      .sortWithinPartitions(col(idCol))
+      .select(col("doc_id"), size(tokens(col("text"))).cast("long").as("n_tokens"))
+      .repartitionByRange(col("doc_id"))
+      .sortWithinPartitions(col("doc_id"))
     // PIN the layout: the range partitioner SAMPLES, so without the
     // checkpoint the totals job and the final job could re-plan onto
     // different boundaries and the broadcast offsets would belong to a
@@ -119,7 +117,7 @@ object TextOps {
       .localCheckpoint()
     val local = withPid.withColumn("_local_before",
       coalesce(sum(col("n_tokens")).over(
-        Window.partitionBy(col("_pid")).orderBy(col(idCol))
+        Window.partitionBy(col("_pid")).orderBy(col("doc_id"))
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
     // one row per partition — tiny by construction; running prefix of the
     // per-partition totals becomes a broadcast (pid → global offset) map
@@ -137,7 +135,7 @@ object TextOps {
     val offDf = broadcast(offsets.toDF("_pid", "_offset"))
     local.join(offDf, "_pid")
       .withColumn("_before", col("_local_before") + col("_offset"))
-      .select(col(idCol), col("n_tokens"),
+      .select(col("doc_id"), col("n_tokens"),
         expr(s"_before div $seqLen").as("seq_id"),
         (col("_before") % seqLen).as("seq_offset"))
   }
@@ -148,9 +146,8 @@ object TextOps {
     * ratios. Relational shape: explode bigrams → two same-key aggregations
     * (the second reuses the first's hash partitioning — one real shuffle on
     * doc id, partial-aggregated map-side). */
-  def repetition(docs: DataFrame, textCol: String = "text",
-                 idCol: String = "doc_id"): DataFrame = {
-    val base = docs.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("tk"))
+  def repetition(docs: DataFrame): DataFrame = {
+    val base = docs.select(col("doc_id"), tokens(col("text")).as("tk"))
       .select(col("doc_id"),
         size(col("tk")).as("n_tokens"),
         size(array_distinct(col("tk"))).as("n_distinct"),
@@ -177,12 +174,10 @@ object TextOps {
     * TEXT (the apply step needs it to reconstruct documents): rows
     * (doc_id, blk, n_block_tokens, btxt), the tail block partial. Pure
     * codegen'd map — no shuffle, composes into the scan at any scale. */
-  def tokenBlocks(docs: DataFrame, width: Int = 20,
-                  textCol: String = "text",
-                  idCol: String = "doc_id"): DataFrame = {
+  def tokenBlocks(docs: DataFrame, width: Int = 20): DataFrame = {
     require(width >= 1, s"block width must be >= 1: $width")
     docs
-      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
+      .select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(col("doc_id"), size(col("toks")).cast("long").as("n_toks"),
         posexplode(transform(
           sequence(lit(0), size(col("toks")) - 1, lit(width)),
@@ -202,10 +197,9 @@ object TextOps {
     * exchange — repartition by doc ships compact text rows, and both
     * grouped aggregations (per-(doc,token) counts, then the per-doc
     * rollup) are satisfied by that clustering, so neither re-shuffles. */
-  def lexicalDiversity(docs: DataFrame, textCol: String = "text",
-                       idCol: String = "doc_id"): DataFrame = {
-    val tf = docs.repartition(col(idCol))
-      .select(col(idCol).as("doc_id"), explode(tokens(col(textCol))).as("tok"))
+  def lexicalDiversity(docs: DataFrame): DataFrame = {
+    val tf = docs.repartition(col("doc_id"))
+      .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
       .groupBy(col("doc_id"), col("tok"))
       .agg(count(lit(1)).as("k"))
     tf.groupBy(col("doc_id"))
@@ -245,23 +239,21 @@ object TextOps {
     * round-8 notes; `DedupOps.shingleHashes` is the same shape with a
     * whole-doc fallback shingle for sub-k docs, which dedup needs and
     * positional ops must not emit). */
-  def tokenGrams(docs: DataFrame, textCol: String, idCol: String,
-                 k: Int): DataFrame =
-    tokenGramsWithTail(docs, textCol, idCol, k).filter(col("gram").isNotNull)
+  def tokenGrams(docs: DataFrame, k: Int): DataFrame =
+    tokenGramsWithTail(docs, k).filter(col("gram").isNotNull)
 
   /** [[tokenGrams]] INCLUDING the per-doc tail positions whose gram window
     * runs past the end (gram = null there): one staged copy of this frame
     * serves both the gram consumers (filter gram non-null) and full
     * token-sequence consumers (every position present) — the substring
     * dedup family shares one tokenize+window pass this way (r13). */
-  def tokenGramsWithTail(docs: DataFrame, textCol: String, idCol: String,
-                         k: Int): DataFrame = {
+  def tokenGramsWithTail(docs: DataFrame, k: Int): DataFrame = {
     require(k >= 2, s"k-gram width must be >= 2: $k")
     // repartition before tokenizing: the lead window exchanges on doc_id
     // anyway — hoisting it ships compact text rows, not exploded tokens
-    val toksExpl = docs.repartition(col(idCol))
-      .select(col(idCol).as("doc_id"),
-        posexplode(tokens(col(textCol))).as(Seq("pos", "tok")))
+    val toksExpl = docs.repartition(col("doc_id"))
+      .select(col("doc_id"),
+        posexplode(tokens(col("text"))).as(Seq("pos", "tok")))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     val parts = col("tok") +: (1 until k).map(i => lead(col("tok"), i).over(w))
     toksExpl
@@ -288,12 +280,11 @@ object TextOps {
     * all-pairs anywhere; hot bigrams are bounded by the count pre-agg.
     * Docs with < 2 tokens have no transitions and are absent (callers
     * treat missing as "no evidence", like the repetition signal). */
-  def lmFluency(docs: DataFrame, textCol: String = "text",
-                idCol: String = "doc_id", scale: Long = 1000000L): DataFrame = {
+  def lmFluency(docs: DataFrame, scale: Long = 1000000L): DataFrame = {
     // the bigram's prefix IS the position's token — no split recovers it;
     // tokens contain no whitespace, so bigram → prefix is functional and
     // the two-key groupBy has exactly the per-bigram groups
-    val bi = tokenGrams(docs, textCol, idCol, 2)
+    val bi = tokenGrams(docs, 2)
       .select(col("doc_id"), col("tok").as("prefix"), col("gram").as("bigram"))
     // per-(doc,bigram) multiplicities: ONE pass over instances, staged so
     // the model build and the per-doc probe both read it without replaying
@@ -335,12 +326,11 @@ object TextOps {
     *
     * Pure per-row explode of codegen'd array expressions — no shuffle, no
     * UDF; scales embarrassingly parallel like the other TextOps maps. */
-  def chunkWindows(docs: DataFrame, textCol: String = "text",
-                   idCol: String = "doc_id", width: Int = 32,
+  def chunkWindows(docs: DataFrame, width: Int = 32,
                    stride: Int = 24): DataFrame = {
     require(width >= 1 && stride >= 1, s"width/stride must be >= 1: $width/$stride")
     docs
-      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
+      .select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(col("doc_id"), size(col("toks")).as("n_tokens"),
         posexplode(transform(
           sequence(lit(0), size(col("toks")) - 1, lit(stride)),
@@ -389,15 +379,13 @@ object TextOps {
     * silently corrupting the lexicographic tie-break (99999999 − pos goes
     * negative and the '-'-prefixed complement breaks bytewise order). */
   def winnowFingerprints(docs: DataFrame, k: Int = 4, w: Int = 4,
-                         textCol: String = "text",
-                         idCol: String = "doc_id",
                          // test seam only: a tiny bound lets the spec prove
                          // the guard fires without a 1e8-token fixture
                          maxPos: Long = 99999999L): DataFrame = {
     require(k >= 2 && w >= 1, s"invalid winnow shape: k=$k w=$w")
     require(maxPos >= 1 && maxPos <= 99999999L,
       s"winnow position bound must fit the 8-digit complement: $maxPos")
-    val grams = tokenGrams(docs, textCol, idCol, k)
+    val grams = tokenGrams(docs, k)
     val posGuarded = when(col("pos") > lit(maxPos),
       raise_error(concat(
         lit("winnowing per-doc position bound (1e8 tokens) exceeded at doc_id="),
@@ -457,14 +445,14 @@ object TextOps {
     * slice of a non-empty corpus raises rather than silently weighting
     * everything by the smoothing floor (an empty corpus yields no rows). */
   def dsirSample(docs: DataFrame, tf: DataFrame, targetFilter: Column,
-                 buckets: Int = 4096, idCol: String = "doc_id"): DataFrame = {
+                 buckets: Int = 4096): DataFrame = {
     require(buckets >= 2 && buckets <= 1000000,
       s"dsir buckets must be in [2, 1e6]: $buckets")
     val cnt = tf
       .select(col("doc_id"), (stableHash(col("tok")) % buckets).as("b"),
         col("tf"))
       .groupBy(col("doc_id"), col("b")).agg(sum(col("tf")).as("c"))
-    val tgtIds = docs.filter(targetFilter).select(col(idCol).as("doc_id"))
+    val tgtIds = docs.filter(targetFilter).select(col("doc_id"))
     val tb = cnt.join(tgtIds, "doc_id").groupBy(col("b"))
       .agg(sum(col("c")).as("t"))
     val rb = cnt.groupBy(col("b")).agg(sum(col("c")).as("r"))
@@ -528,12 +516,10 @@ object TextOps {
     * kept-position set; the driver loop holds only `rounds` vocab rows.
     *
     * Returns one row per merge round: (merge_round, lhs, rhs, n). */
-  def bpeTrain(docs: DataFrame, rounds: Int = 3,
-               textCol: String = "text",
-               idCol: String = "doc_id"): DataFrame = {
+  def bpeTrain(docs: DataFrame, rounds: Int = 3): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    bpeMergeLoop(docs, rounds, textCol, idCol)._2
+    bpeMergeLoop(docs, rounds)._2
       .toDF("merge_round", "lhs", "rhs", "n")
   }
 
@@ -548,10 +534,8 @@ object TextOps {
     *
     * Scale shape: the loop cost is [[bpeTrain]]'s; the roll-up is one
     * map-side-combined shuffle on the symbol. */
-  def bpeEncode(docs: DataFrame, rounds: Int = 3,
-                textCol: String = "text",
-                idCol: String = "doc_id"): DataFrame =
-    bpeMergeLoop(docs, rounds, textCol, idCol)._1
+  def bpeEncode(docs: DataFrame, rounds: Int = 3): DataFrame =
+    bpeMergeLoop(docs, rounds)._1
       .groupBy(col("tok"))
       .agg(count(lit(1)).as("n"), countDistinct(col("doc_id")).as("n_docs"))
 
@@ -560,14 +544,13 @@ object TextOps {
     * halves (e.g. the query layer, which stages state+merges once per
     * fixture) run the loop exactly once. See [[bpeTrain]] for the
     * algorithm and scale-shape discussion. */
-  def bpeMergeLoop(docs: DataFrame, rounds: Int = 3,
-                   textCol: String = "text", idCol: String = "doc_id")
+  def bpeMergeLoop(docs: DataFrame, rounds: Int = 3)
       : (DataFrame, Seq[(Int, String, String, Long)]) = {
     require(rounds >= 1 && rounds <= 32, s"rounds must be in [1,32]: $rounds")
     val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     var state = docs
-      .select(col(idCol).as("doc_id"),
-        posexplode(tokens(col(textCol))).as(Seq("pos", "tok")))
+      .select(col("doc_id"),
+        posexplode(tokens(col("text"))).as(Seq("pos", "tok")))
       .select(col("doc_id"), col("pos").cast("long").as("pos"), col("tok"))
       .localCheckpoint()
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
@@ -620,17 +603,14 @@ object TextOps {
     * rank-below running sum runs over THAT grouped table — rows = distinct
     * scores per source, bounded by the grid, orders smaller than the
     * corpus — then broadcast-joins back. One corpus shuffle total. */
-  def calibrateQuality(docs: DataFrame, keepBp: Int = 2000,
-                       textCol: String = "text",
-                       idCol: String = "doc_id",
-                       srcCol: String = "source"): DataFrame = {
+  def calibrateQuality(docs: DataFrame, keepBp: Int = 2000): DataFrame = {
     require(keepBp >= 0 && keepBp <= 10000, s"keepBp out of range: $keepBp")
     // scored feeds BOTH the grid aggregation and the probe side of the
     // join — checkpoint the SLIM (id, source, q) rows so the regex-heavy
     // quality pass runs once, not once per consumer (measured 2× the row
     // cost when recomputed; the checkpoint carries no text)
-    val scored = docs.select(col(idCol).as("doc_id"), col(srcCol).as("source"),
-      qualityScore(col(textCol)).as("q"))
+    val scored = docs.select(col("doc_id"), col("source"),
+      qualityScore(col("text")).as("q"))
       .withColumn("q_micro", round(col("q") * 1e6).cast("long"))
       .localCheckpoint()
     val grid = scored.groupBy(col("source"), col("q_micro"))
@@ -667,13 +647,12 @@ object TextOps {
     * gram hash for the LEFT JOIN probe, grouped counts ride the same
     * clustering on doc_id. O(|batch grams| + probe hits), never
     * corpus-rescanning. */
-  def batchNovelty(stored: DataFrame, batch: DataFrame, k: Int = 6,
-                   textCol: String = "text",
-                   idCol: String = "doc_id"): DataFrame = {
-    val idx = tokenGrams(stored, textCol, idCol, k)
+  def batchNovelty(stored: DataFrame, batch: DataFrame,
+                   k: Int = 6): DataFrame = {
+    val idx = tokenGrams(stored, k)
       .select(stableHash(col("gram")).as("gh")).distinct()
       .withColumn("known", lit(1))
-    val bg = tokenGrams(batch, textCol, idCol, k)
+    val bg = tokenGrams(batch, k)
       .select(col("doc_id"), stableHash(col("gram")).as("gh")).distinct()
     bg.join(idx, Seq("gh"), "left")
       .groupBy(col("doc_id"))
@@ -683,8 +662,8 @@ object TextOps {
   }
 
   /** Convenience: annotate a documents frame with the full signal set. */
-  def annotate(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
+  def annotate(docs: DataFrame): DataFrame = {
+    val t = col("text")
     docs.select(
       (col("doc_id") +: (tokenStats(t) ++ qualitySignals(t) ++ Seq(
         bpeTokenCount(t).as("n_bpe_tokens"),

@@ -8,7 +8,9 @@ import org.apache.spark.sql.functions._
   * 2003, "A Symbolic Representation of Time Series"): per-key sliding
   * windows of `w` consecutive readings → piecewise aggregate approximation
   * (segment means) → fixed-breakpoint symbols → a SAX word per window;
-  * windows sharing a word are motif candidates. Sensor-series analytics is
+  * windows sharing a word are motif candidates. Every operator reads the
+  * `events` columns: `user_id` keys a series, `ts` then `event_id` order
+  * it, `value` is the reading. Sensor-series analytics is
   * the reference project's own domain (PROTEUS targeted hot-strip-mill
   * time series; the reference has no library for it — LLM/analytics
   * extension like TextOps).
@@ -29,19 +31,18 @@ import org.apache.spark.sql.functions._
   * families. */
 object TimeSeriesOps {
 
-  /** Shared sliding-window build: centi-unit quantized values, per-key
-    * position, and the `w` lead columns every SAX variant consumes. One
-    * keyed window (the per-key sort Spark needs for ANY per-key sequence
-    * op) — the variants differ only in the per-row word expression. */
-  private def windowed(events: DataFrame, valueCol: String, keyCol: String,
-                       tsCol: String, idCol: String,
-                       w: Int): (DataFrame, Seq[Column]) = {
+  /** Shared sliding-window build: centi-unit quantized `value`s, per-key
+    * (`user_id`) position in (`ts`, `event_id`) order, and the `w` lead
+    * columns every SAX variant consumes. One keyed window (the per-key
+    * sort Spark needs for ANY per-key sequence op) — the variants differ
+    * only in the per-row word expression. */
+  private def windowed(events: DataFrame, w: Int): (DataFrame, Seq[Column]) = {
     val byKey = Window.partitionBy(col("k")).orderBy(col("pos"))
-    val base = events.repartition(col(keyCol))
-      .select(col(keyCol).as("k"),
-        expr(s"CAST(round($valueCol * 100) AS BIGINT)").as("vq"),
-        row_number().over(Window.partitionBy(col(keyCol))
-          .orderBy(col(tsCol), col(idCol))).cast("long").as("pos"))
+    val base = events.repartition(col("user_id"))
+      .select(col("user_id").as("k"),
+        expr("CAST(round(value * 100) AS BIGINT)").as("vq"),
+        row_number().over(Window.partitionBy(col("user_id"))
+          .orderBy(col("ts"), col("event_id"))).cast("long").as("pos"))
     val leads: Seq[Column] =
       col("vq") +: (1 until w).map(i => lead(col("vq"), i).over(byKey))
     (base, leads)
@@ -56,14 +57,12 @@ object TimeSeriesOps {
       .select(col("k"), col("pos"), col("word"))
 
   /** One row per complete sliding window: (k, pos, word). */
-  def saxWords(events: DataFrame, valueCol: String = "value",
-               keyCol: String = "user_id", tsCol: String = "ts",
-               idCol: String = "event_id", w: Int = 8, segments: Int = 4,
+  def saxWords(events: DataFrame, w: Int = 8, segments: Int = 4,
                breaks: Seq[Long] = Seq(1500L, 3500L, 7000L)): DataFrame = {
     require(w % segments == 0, s"w must divide into segments: $w/$segments")
     require(breaks == breaks.sorted, "breakpoints must be ascending")
     val segLen = w / segments
-    val (base, leads) = windowed(events, valueCol, keyCol, tsCol, idCol, w)
+    val (base, leads) = windowed(events, w)
     def symbol(m: Column): Column =
       breaks.zipWithIndex.foldRight(lit(breaks.size): Column) {
         case ((b, i), rest) => when(m < b, i).otherwise(rest)
@@ -119,14 +118,11 @@ object TimeSeriesOps {
     *
     * Same scale shape as [[saxWords]]: the word stays a pure per-row
     * expression over the shared keyed-window leads. */
-  def saxWordsZNorm(events: DataFrame, valueCol: String = "value",
-                    keyCol: String = "user_id", tsCol: String = "ts",
-                    idCol: String = "event_id", w: Int = 8,
-                    segments: Int = 4,
+  def saxWordsZNorm(events: DataFrame, w: Int = 8, segments: Int = 4,
                     wideValues: Boolean = false): DataFrame = {
     require(w % segments == 0, s"w must divide into segments: $w/$segments")
     val segLen = w / segments
-    val (base, leads) = windowed(events, valueCol, keyCol, tsCol, idCol, w)
+    val (base, leads) = windowed(events, w)
     val dec = "decimal(38,0)"
     val s = leads.reduce(_ + _)
     val ss = leads.map(c => c * c).reduce(_ + _)
@@ -157,13 +153,10 @@ object TimeSeriesOps {
   }
 
   /** Motif roll-up over the z-normalized words ([[saxWordsZNorm]]). */
-  def saxMotifsZNorm(events: DataFrame, valueCol: String = "value",
-                     keyCol: String = "user_id", tsCol: String = "ts",
-                     idCol: String = "event_id", w: Int = 8,
-                     segments: Int = 4, minCount: Long = 2L,
+  def saxMotifsZNorm(events: DataFrame, w: Int = 8, segments: Int = 4,
+                     minCount: Long = 2L,
                      wideValues: Boolean = false): DataFrame =
-    saxWordsZNorm(events, valueCol, keyCol, tsCol, idCol, w, segments,
-        wideValues)
+    saxWordsZNorm(events, w, segments, wideValues)
       .groupBy(col("word"))
       .agg(count(lit(1)).as("n_windows"),
         countDistinct(col("k")).as("n_keys"))
@@ -171,11 +164,9 @@ object TimeSeriesOps {
 
   /** Motif roll-up: SAX words occurring in ≥ `minCount` windows, with the
     * number of windows and of distinct keys exhibiting them. */
-  def saxMotifs(events: DataFrame, valueCol: String = "value",
-                keyCol: String = "user_id", tsCol: String = "ts",
-                idCol: String = "event_id", w: Int = 8, segments: Int = 4,
+  def saxMotifs(events: DataFrame, w: Int = 8, segments: Int = 4,
                 minCount: Long = 2L): DataFrame =
-    saxWords(events, valueCol, keyCol, tsCol, idCol, w, segments)
+    saxWords(events, w, segments)
       .groupBy(col("word"))
       .agg(count(lit(1)).as("n_windows"),
         countDistinct(col("k")).as("n_keys"))

@@ -86,7 +86,7 @@ object MlQueries extends QuerySet {
     // stays MLSpec-verified); scored side bounded to vec_id % 50 = 0
     "ml_outlier_scores" -> ((s, dir) =>
       MLOps.knnDistOutlierScores(Tables.load(s, dir, "embeddings"),
-        "embedding", "vec_id", col("vec_id") % 50 === 0, k = 5))
+        col("vec_id") % 50 === 0, k = 5))
   )
 
   override def oracle: Map[String, String] = Map(

@@ -51,15 +51,17 @@ object Similarity extends QuerySet {
   /** Post-split IVF lake staged once per (app, fixture): bucketed lake
     * built, the 115 %-pressure split applied IN PLACE (only flagged cells'
     * partitions rewrite — dynamic partition overwrite), post-split
-    * centroids persisted next to it. Shared by the content row and the
-    * probe row. */
+    * centroids persisted next to it. A fresh lake's current centroids are
+    * the seeds it was built with, so the split starts from those. Shared
+    * by the content row and the probe row. */
   private def splitLakeStage(s: SparkSession, dir: String) = {
     val key = s.sparkContext.applicationId + "#" + dir + "#graft-ivf-lake-split"
     graft.sources.StagingFs.stageOnce(s, key, "graft-ivf-lake-split") { p =>
-      graft.operators.LayoutOps.writeIvfBucketed(embs(s, dir), cells = 16,
-        p + "/lake")
+      val all = embs(s, dir)
+      graft.operators.LayoutOps.writeIvfBucketed(all, cells = 16, p + "/lake")
       graft.operators.LayoutOps.applySplitToLake(s, p + "/lake",
-          cells = 16, splitIters = 1, splitThresholdPct = 115)
+          SimilarityOps.seedCells(all, 16), cells = 16, splitIters = 1,
+          splitThresholdPct = 115)
         .write.mode("overwrite").parquet(p + "/cents")
     }
   }
@@ -103,7 +105,8 @@ object Similarity extends QuerySet {
       val all = embs(s, dir)
       val q = all.filter(col("vec_id") % 100 === 0)
       SimilarityOps.recallAtK(
-        SimilarityOps.topKIvfProbe(all, q, 3, cells = 16, nprobe = 4)
+        SimilarityOps.topKIvfProbe(all, q, 3, SimilarityOps.seedCells(all, 16),
+            nprobe = 4)
           .select(col("qid"), col("nid")),
         SimilarityOps.topKBruteForce(all, q, 3).select(col("qid"), col("nid")))
     }),
@@ -143,8 +146,9 @@ object Similarity extends QuerySet {
       val all = embs(s, dir)
       val q = all.filter(col("vec_id") % 100 === 0)
       SimilarityOps.recallAtK(
-        SimilarityOps.ivfProjectedTopK(all, q, k = 3, cells = 16,
-          nprobe = 4, sprobe = 2, m = 10).select(col("qid"), col("nid")),
+        SimilarityOps.ivfProjectedTopK(all, q, k = 3,
+          SimilarityOps.seedCells(all, 16), nprobe = 4, sprobe = 2, m = 10)
+          .select(col("qid"), col("nid")),
         SimilarityOps.topKBruteForce(all, q, 3).select(col("qid"), col("nid")))
     }),
 
@@ -155,7 +159,7 @@ object Similarity extends QuerySet {
       val all = embs(s, dir)
       val q = all.filter(col("vec_id") % 100 === 0)
       SimilarityOps.recallAtK(
-        SimilarityOps.topKIvf(all, q, 3, cells = 16)
+        SimilarityOps.topKIvfSeeds(all, q, 3, SimilarityOps.seedCells(all, 16))
           .select(col("qid"), col("nid")),
         SimilarityOps.topKBruteForce(all, q, 3).select(col("qid"), col("nid")))
     }),
@@ -179,8 +183,8 @@ object Similarity extends QuerySet {
       val q = all.filter(col("vec_id") % 100 === 0)
       val trained = trainedCents16(s, dir)
       SimilarityOps.recallAtK(
-        SimilarityOps.topKIvfProbe(all, q, 3, cells = 16, nprobe = 4,
-          centroids = Some(trained)).select(col("qid"), col("nid")),
+        SimilarityOps.topKIvfProbe(all, q, 3, trained, nprobe = 4)
+          .select(col("qid"), col("nid")),
         SimilarityOps.topKBruteForce(all, q, 3).select(col("qid"), col("nid")))
     }),
 
@@ -193,8 +197,8 @@ object Similarity extends QuerySet {
 
     "sim_topk_ivf" -> ((s, dir) => {
       val all = embs(s, dir)
-      SimilarityOps.topKIvf(all, all.filter(col("vec_id") % 100 === 0),
-          k = 3, cells = 16)
+      SimilarityOps.topKIvfSeeds(all, all.filter(col("vec_id") % 100 === 0),
+          k = 3, seeds = SimilarityOps.seedCells(all, 16))
         .select(col("qid"), col("cell"), col("nid"), col("rank"), col("cos"))
     }),
 
@@ -203,7 +207,7 @@ object Similarity extends QuerySet {
     "sim_topk_ivf_probe" -> ((s, dir) => {
       val all = embs(s, dir)
       SimilarityOps.topKIvfProbe(all, all.filter(col("vec_id") % 100 === 0),
-          k = 3, cells = 16, nprobe = 4)
+          k = 3, SimilarityOps.seedCells(all, 16), nprobe = 4)
         .select(col("qid"), col("nid"), col("rank"), col("cos"))
     }),
 
@@ -213,7 +217,7 @@ object Similarity extends QuerySet {
     "sim_topk_ivf_pruned" -> ((s, dir) => {
       val all = embs(s, dir)
       SimilarityOps.topKIvfProbe(all, all.filter(col("vec_id") % 100 === 0),
-          k = 3, cells = 16, nprobe = 4, sprobe = Some(2))
+          k = 3, SimilarityOps.seedCells(all, 16), nprobe = 4, sprobe = Some(2))
         .select(col("qid"), col("nid"), col("rank"), col("cos"))
     }),
 
@@ -237,12 +241,13 @@ object Similarity extends QuerySet {
       val all = embs(s, dir)
       SimilarityOps.ivfProjectedTopK(all,
         all.filter(col("vec_id") % 100 === 0),
-        k = 3, cells = 16, nprobe = 4, sprobe = 2, m = 10)
+        k = 3, SimilarityOps.seedCells(all, 16), nprobe = 4, sprobe = 2,
+        m = 10)
     }),
 
     // the composed member in its PRODUCTION configuration (r11 verdict
-    // item 2): trained k-means centroids flow through the caller-supplied
-    // `centroids` parameter — balanced cells bound the worst-case probed
+    // item 2): trained k-means centroids are passed as the `seeds` —
+    // balanced cells bound the worst-case probed
     // candidate volume, both shortlist knobs unchanged (T=1 Lloyd keeps
     // the oracle's unrolled-iteration SQL at one round)
     "sim_topk_ivf_projected_trained" -> ((s, dir) => {
@@ -251,8 +256,7 @@ object Similarity extends QuerySet {
         iters = 1)
       SimilarityOps.ivfProjectedTopK(all,
         all.filter(col("vec_id") % 100 === 0),
-        k = 3, cells = 16, nprobe = 4, sprobe = 2, m = 10,
-        centroids = Some(trained))
+        k = 3, trained, nprobe = 4, sprobe = 2, m = 10)
     }),
 
     // INCREMENTAL IVF ingest (round 11): the vec_id%10==0 batch placed
@@ -262,9 +266,11 @@ object Similarity extends QuerySet {
     // on the ANN-index side
     "sim_ivf_incremental" -> ((s, dir) => {
       val all = embs(s, dir)
-      SimilarityOps.ivfAssignIncremental(
-        all.filter(col("vec_id") % 10 =!= 0),
-        all.filter(col("vec_id") % 10 === 0), cells = 16, iters = 1)
+      val stored = all.filter(col("vec_id") % 10 =!= 0)
+      val cents = graft.ml.MLOps.kmeansCentroidsExact(stored, k = 16,
+        iters = 1)
+      SimilarityOps.ivfAssignIncremental(SimilarityOps.ivfAssign(stored, cents),
+        all.filter(col("vec_id") % 10 === 0), cents, cells = 16)
     }),
 
     // the CONSUMER of needs_split (r11 verdict item 3): flagged cells
@@ -274,9 +280,11 @@ object Similarity extends QuerySet {
     // SF), so the detector's 2× default never fires here; 115 flags the
     // 4 densest cells at sf0.01 (and 1 at sf0.1), exercising the whole
     // flag → train → reassign → renumber path under the value oracle
-    "sim_ivf_split" -> ((s, dir) =>
-      SimilarityOps.ivfSplitCells(embs(s, dir), cells = 16, splitIters = 1,
-        splitThresholdPct = 115)),
+    "sim_ivf_split" -> ((s, dir) => {
+      val all = embs(s, dir)
+      SimilarityOps.ivfSplitCells(all, SimilarityOps.seedCells(all, 16),
+        cells = 16, splitIters = 1, splitThresholdPct = 115)
+    }),
 
     // the STREAM side of incremental IVF (round 12): embeddings replay as
     // 4 vec_id%4 micro-batches, each vector placed ROW-LOCALLY against a
@@ -284,7 +292,8 @@ object Similarity extends QuerySet {
     // per-cell occupancy as a complete-mode cells-sized aggregate; the
     // continuous front door the needs_split consumers watch
     "stream_ivf_ingest" -> ((s, dir) =>
-      graft.streaming.VecIngest.ingestCellCounts(s, dir, cells = 16)),
+      graft.streaming.VecIngest.ingestCellCounts(s, dir,
+        SimilarityOps.seedCells(embs(s, dir), 16))),
 
     // the EPOCH SWAP closing the streaming maintenance loop (round 13):
     // quarters 0-1 place against the seeded epoch, the lake split runs
@@ -292,8 +301,8 @@ object Similarity extends QuerySet {
     // table — per-epoch occupancy, both epochs value-oracled
     "stream_ivf_ingest_epoch" -> ((s, dir) => {
       val p = splitLakeStage(s, dir)
-      graft.streaming.VecIngest.ingestCellCountsEpochs(s, dir, cells = 16,
-        epoch1Centroids = s.read.parquet(p + "/cents"))
+      graft.streaming.VecIngest.ingestCellCountsEpochs(s, dir,
+        SimilarityOps.seedCells(embs(s, dir), 16), s.read.parquet(p + "/cents"))
     }),
 
     // the LAKE half of the split: flagged cells' partitions rewrite in
@@ -332,7 +341,7 @@ object Similarity extends QuerySet {
       }
       graft.operators.LayoutOps.ivfLakeTopK(s, path,
         all.filter(col("vec_id") % 100 === 0),
-        all.filter(col("vec_id") < 16), k = 3)
+        SimilarityOps.seedCells(all, 16), k = 3)
     }),
 
     // metadata-FILTERED IVF probe: search restricted to even-label
@@ -344,7 +353,8 @@ object Similarity extends QuerySet {
       val all = embs(s, dir)
       SimilarityOps.topKIvfFiltered(all,
           all.filter(col("vec_id") % 100 === 0),
-          k = 3, cells = 16, nprobe = 4, candPred = col("label") % 2 === 0)
+          k = 3, SimilarityOps.seedCells(all, 16), nprobe = 4,
+          candPred = col("label") % 2 === 0)
         .select(col("qid"), col("nid"), col("label"), col("rank"), col("cos"))
     }),
 
@@ -435,7 +445,8 @@ object Similarity extends QuerySet {
       val all = embs(s, dir)
       SimilarityOps.recallAtKSampled(all,
         all.filter(col("vec_id") % 10 === 0), sampleMod = 4)(q =>
-        SimilarityOps.topKIvfProbe(all, q, 3, cells = 16, nprobe = 4)
+        SimilarityOps.topKIvfProbe(all, q, 3, SimilarityOps.seedCells(all, 16),
+            nprobe = 4)
           .select(col("qid"), col("nid")))
     }),
 
@@ -454,8 +465,10 @@ object Similarity extends QuerySet {
 
     // product quantization: 4-byte codes per 64-dim vector (the standard
     // ANN compression — the corpus index stores codes, not floats)
-    "sim_pq_encode" -> ((s, dir) =>
-      SimilarityOps.pqEncode(embs(s, dir))),
+    "sim_pq_encode" -> ((s, dir) => {
+      val all = embs(s, dir)
+      SimilarityOps.pqEncode(all, SimilarityOps.pqCodebook(all))
+    }),
 
     // TRAINED-codebook ADC (round 11): per-subspace exact integer k-means
     // (T=1) replaces the smallest-id codewords — the FAISS-style codebook
@@ -463,35 +476,40 @@ object Similarity extends QuerySet {
     // unrolls the 4 per-subspace Lloyd iterations in SQL)
     "sim_pq_adc_trained" -> ((s, dir) => {
       val all = embs(s, dir)
-      val cb = SimilarityOps.pqCodebookTrained(all, "embedding", "vec_id",
-        iters = 1)
-      SimilarityOps.pqAdcTopK(all, k = 10, col("vec_id") % 100 === 0,
-        codebook = Some(cb))
+      val cb = SimilarityOps.pqCodebookTrained(all, iters = 1)
+      SimilarityOps.pqAdcTopK(all, k = 10, col("vec_id") % 100 === 0, cb)
     }),
 
     // asymmetric-distance top-k over the PQ codes: queries build a
     // distance table to the codebook; the corpus side is touched only
     // through its codes
-    "sim_pq_adc_topk" -> ((s, dir) =>
-      SimilarityOps.pqAdcTopK(embs(s, dir), k = 10,
-        col("vec_id") % 100 === 0)),
+    "sim_pq_adc_topk" -> ((s, dir) => {
+      val all = embs(s, dir)
+      SimilarityOps.pqAdcTopK(all, k = 10, col("vec_id") % 100 === 0,
+        SimilarityOps.pqCodebook(all))
+    }),
 
     // IVF-PQ composed index (FAISS IVFPQ shape): coarse cells bound WHICH
     // vectors are scored (nprobe=4 of 16), PQ-ADC bounds WHAT a score
     // costs (table lookups over 4-byte codes) — the 100 TB ANN
     // architecture, both approximation knobs value-oracled
-    "sim_ivf_pq_topk" -> ((s, dir) =>
-      SimilarityOps.ivfPqTopK(embs(s, dir), k = 10, cells = 16, nprobe = 4,
-        col("vec_id") % 100 === 0)),
+    "sim_ivf_pq_topk" -> ((s, dir) => {
+      val all = embs(s, dir)
+      SimilarityOps.ivfPqTopK(all, k = 10, cells = 16, nprobe = 4,
+        col("vec_id") % 100 === 0, SimilarityOps.pqCodebook(all))
+    }),
 
     // IVF-PQ with the PRUNED two-level cell placement (sprobe=2) — the
     // build path whose assign cost is sublinear in cells (the sf10 probe:
     // exact placement 189.8 s vs pruned 43.5 s at cells=1414); placement
     // divergence from the exact index is the recall knob, here pinned by
     // the value oracle itself
-    "sim_ivf_pq_pruned" -> ((s, dir) =>
-      SimilarityOps.ivfPqTopK(embs(s, dir), k = 10, cells = 16, nprobe = 4,
-        col("vec_id") % 100 === 0, assignSprobe = Some(2))),
+    "sim_ivf_pq_pruned" -> ((s, dir) => {
+      val all = embs(s, dir)
+      SimilarityOps.ivfPqTopK(all, k = 10, cells = 16, nprobe = 4,
+        col("vec_id") % 100 === 0, SimilarityOps.pqCodebook(all),
+        assignSprobe = Some(2))
+    }),
 
     // lexical counterpart of the dense ANN paths: TF-IDF weighted
     // inverted-index join with a df cap pruning hot posting lists, exact

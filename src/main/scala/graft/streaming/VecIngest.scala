@@ -129,34 +129,30 @@ object VecIngest {
 
   /** Per-cell occupancy after the full 4-batch vector replay: stateless
     * literal-centroid placement, complete-mode cells-sized count.
-    * Centroids default to the smallest-`cells`-id seeds (the oracle's
-    * seeded assignment); pass trained centroids for the production epoch. */
-  def ingestCellCounts(spark: SparkSession, dir: String, cells: Int = 16,
-                       centroids: Option[DataFrame] = None): DataFrame = {
-    val seedDf = centroids.getOrElse(
-      graft.Tables.load(spark, dir, "embeddings")
-        .filter(col("vec_id") < cells))
-    epochPass(spark, dir, "q[0-3].parquet", seedDf)
-  }
+    * `centroids` is a (vec_id, embedding) centroid set: the smallest-id
+    * seeds ([[graft.operators.SimilarityOps.seedCells]], the oracle's
+    * seeded assignment) or trained centroids for the production epoch. */
+  def ingestCellCounts(spark: SparkSession, dir: String,
+                       centroids: DataFrame): DataFrame =
+    epochPass(spark, dir, "q[0-3].parquet", centroids)
 
   /** The EPOCH SWAP the incremental-IVF maintenance loop runs (r12 verdict
     * item 3), demonstrated end to end: quarters 0–1 ingest against the
-    * SEEDED centroid epoch, the out-of-band lake split produces the
-    * post-split centroid table ([[graft.operators.LayoutOps
+    * `epoch0Centroids` epoch (the seeded one), the out-of-band lake split
+    * produces the post-split centroid table ([[graft.operators.LayoutOps
     * .applySplitToLake]]'s return), and quarters 2–3 resume against that
-    * new epoch. The swap is a query RESTART with a new centroid literal —
-    * deliberately: placement is stateless, the only streaming state is the
-    * cells-sized occupancy count, so an epoch swap costs one stop/start
-    * and no state migration (restarting with different state-shaping
-    * logic mid-checkpoint is exactly what Structured Streaming forbids).
+    * new epoch, `epoch1Centroids`. The swap is a query RESTART with a new
+    * centroid literal — deliberately: placement is stateless, the only
+    * streaming state is the cells-sized occupancy count, so an epoch swap
+    * costs one stop/start and no state migration (restarting with
+    * different state-shaping logic mid-checkpoint is exactly what
+    * Structured Streaming forbids).
     * Output: (epoch, cell, n) — each epoch's occupancy over ITS two
     * batches, value-oracled against the batch assignment per epoch. */
   def ingestCellCountsEpochs(spark: SparkSession, dir: String,
-                             cells: Int = 16,
+                             epoch0Centroids: DataFrame,
                              epoch1Centroids: DataFrame): DataFrame = {
-    val seedDf = graft.Tables.load(spark, dir, "embeddings")
-      .filter(col("vec_id") < cells)
-    val e0 = epochPass(spark, dir, "q[01].parquet", seedDf)
+    val e0 = epochPass(spark, dir, "q[01].parquet", epoch0Centroids)
       .select(lit(0).as("epoch"), col("cell"), col("n"))
     val e1 = epochPass(spark, dir, "q[23].parquet", epoch1Centroids)
       .select(lit(1).as("epoch"), col("cell"), col("n"))

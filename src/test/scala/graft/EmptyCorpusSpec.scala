@@ -4,13 +4,16 @@ import scala.util.Try
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import graft.operators.{DedupOps, SimilarityOps, TextOps}
+import graft.operators.{DedupOps, LayoutOps, SimilarityOps, TextOps}
 
 /** The dedup, similarity and text operators that take a staged input, run
-  * on a 0-row corpus and on the stages derived from it. The empty tables
-  * are parquet files, as a real empty corpus would be, so the optimizer
-  * cannot fold them away at plan time: every aggregate, broadcast and
-  * checkpoint runs over an empty relation. */
+  * on a 0-row corpus and on the stages derived from it; the IVF and PQ
+  * operators get their seeds and codebooks derived the way the query
+  * files derive them. The empty tables are parquet files, as a real empty
+  * corpus would be, so the optimizer cannot fold them away at plan time:
+  * every aggregate, broadcast and checkpoint runs over an empty relation.
+  * A derivation that cannot work on no rows (k-means training) must fail
+  * with the `require` message declared here. */
 class EmptyCorpusSpec extends SparkSpecBase {
 
   test("staged-input operators return 0 rows with their schema on an empty corpus") {
@@ -34,6 +37,10 @@ class EmptyCorpusSpec extends SparkSpecBase {
     lazy val graph = SimilarityOps.knnGraph(e, k = 3, bits = 4).localCheckpoint()
     lazy val storedCounts = grams.filter(col("gh").isNotNull).groupBy(col("gh"))
       .count().withColumnRenamed("count", "stored_cnt")
+    // the seeded IVF cells and PQ codebook of the sim_* rows
+    val qs = e.filter(col("vec_id") % 100 === 0)
+    val s16 = SimilarityOps.seedCells(e, 16)
+    lazy val cb = SimilarityOps.pqCodebook(e).localCheckpoint()
 
     val docCols = d.columns.toSeq
     val spanCols = Seq("doc_id", "span_start", "span_end", "span_tokens")
@@ -41,6 +48,8 @@ class EmptyCorpusSpec extends SparkSpecBase {
     val blockCols = Seq("doc_id", "blk", "n_block_tokens", "dup")
     val semCols = Seq("vec_id", "cell", "dup")
     val rankCols = Seq("qid", "nid", "score_i", "rank")
+    val annCols = Seq("qid", "nid", "cos", "rank")
+    val adcCols = Seq("qid", "nid", "adc_micro", "rank")
     val runs: Seq[(String, () => DataFrame, Seq[String])] = Seq(
       ("exact", () => DedupOps.exact(d), docCols ++ Seq("group_size", "is_kept")),
       ("minhashSignatures", () => sigs, Seq("id", "sig")),
@@ -110,7 +119,37 @@ class EmptyCorpusSpec extends SparkSpecBase {
         Seq("vec_id", "cluster_id", "cluster_size")),
       // an empty target slice of a NON-empty corpus raises (TextFuzzSpec)
       ("dsirSample", () => TextOps.dsirSample(d, tf, col("lang") === "en"),
-        Seq("doc_id", "n_feats", "weight", "u", "accepted")))
+        Seq("doc_id", "n_feats", "weight", "u", "accepted")),
+      ("topKIvfSeeds", () => SimilarityOps.topKIvfSeeds(e, qs, 3, s16),
+        Seq("qid", "cell", "nid", "cos", "rank")),
+      ("topKIvfProbe", () => SimilarityOps.topKIvfProbe(e, qs, 3, s16, nprobe = 4),
+        annCols),
+      ("topKIvfProbe sprobe", () => SimilarityOps.topKIvfProbe(e, qs, 3, s16,
+        nprobe = 4, sprobe = Some(2)), annCols),
+      ("topKIvfFiltered", () => SimilarityOps.topKIvfFiltered(e, qs, 3, s16,
+        nprobe = 4, candPred = col("label") % 2 === 0),
+        Seq("qid", "nid", "cos", "label", "rank")),
+      ("ivfProjectedTopK", () => SimilarityOps.ivfProjectedTopK(e, qs, 3, s16,
+        nprobe = 4), annCols),
+      ("ivfSplitCells", () => SimilarityOps.ivfSplitCells(e, s16, cells = 16,
+        splitThresholdPct = 115), Seq("vec_id", "cell", "needs_split", "new_cell")),
+      ("ivfAssignIncremental", () => SimilarityOps.ivfAssignIncremental(
+        SimilarityOps.ivfAssign(e, s16), e, s16, cells = 16),
+        Seq("vec_id", "cell", "stored_n", "batch_n", "needs_split")),
+      ("pqCodebook", () => cb, Seq("cid", "s", "cv")),
+      ("pqEncode", () => SimilarityOps.pqEncode(e, cb),
+        Seq("vec_id", "s", "code", "d2_micro")),
+      ("pqAdcTopK", () => SimilarityOps.pqAdcTopK(e, 10,
+        col("vec_id") % 100 === 0, cb), adcCols),
+      ("ivfPqTopK", () => SimilarityOps.ivfPqTopK(e, 10, cells = 16, nprobe = 4,
+        col("vec_id") % 100 === 0, cb), adcCols),
+      ("ivfPqTopK pruned", () => SimilarityOps.ivfPqTopK(e, 10, cells = 16,
+        nprobe = 4, col("vec_id") % 100 === 0, cb, assignSprobe = Some(2)),
+        adcCols),
+      ("writeIvfBucketed + ivfLakeTopK", () => {
+        LayoutOps.writeIvfBucketed(e, cells = 16, s"$dir/lake")
+        LayoutOps.ivfLakeTopK(spark, s"$dir/lake", qs, s16, k = 3)
+      }, Seq("qid", "cell", "nid", "rank", "cos")))
     val failed = runs.flatMap { case (name, run, cols) =>
       Try {
         val out = run()
@@ -119,5 +158,20 @@ class EmptyCorpusSpec extends SparkSpecBase {
       }.failed.toOption.map(t => s"$name: $t")
     }
     assert(failed.isEmpty, failed.mkString("\n"))
+    // trained seeds and codebooks: k-means has nothing to seed from
+    val noSeeds = "kmeansCentroidsExact: empty input"
+    val refused: Seq[(String, () => Any, String)] = Seq(
+      ("kmeansCentroidsExact", () =>
+        graft.ml.MLOps.kmeansCentroidsExact(e, k = 16, iters = 1), noSeeds),
+      ("pqCodebookTrained", () =>
+        SimilarityOps.pqCodebookTrained(e, iters = 1), noSeeds))
+    val wrong = refused.flatMap { case (name, run, msg) =>
+      Try(run()).failed.toOption match {
+        case Some(t: IllegalArgumentException)
+            if Option(t.getMessage).exists(_.contains(msg)) => None
+        case other => Some(s"$name: expected require '$msg', got $other")
+      }
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
   }
 }

@@ -73,10 +73,17 @@ class LayoutSpec extends SparkSpecBase {
         .toMap
     val before = partFiles()
     // near-uniform fixture: 103% of mean flags the densest cells without
-    // flagging everything (the spec exercises partial rewrite)
-    val cents = LayoutOps.applySplitToLake(spark, dir, cells = 8,
+    // flagging everything (the spec exercises partial rewrite); a fresh
+    // lake's current centroids are the seeds it was built with
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    assert(!spark.conf.getAll.contains(modeKey))
+    val cents = LayoutOps.applySplitToLake(spark, dir,
+      graft.operators.SimilarityOps.seedCells(embs, 8), cells = 8,
       splitIters = 1, splitThresholdPct = 103)
     val after = partFiles()
+    // the dynamic overwrite is a per-write option: the session stays unset
+    assert(!spark.conf.getAll.contains(modeKey),
+      s"applySplitToLake left $modeKey set on the session")
     val lake = spark.read.parquet(dir)
       .select(col("nid"), col("cell").cast("long").as("cell"))
       .localCheckpoint()
@@ -115,19 +122,20 @@ class LayoutSpec extends SparkSpecBase {
           .map(f => (f.getName, f.length(), f.lastModified()))
           .sortBy(_._1))
         .toMap
-    val cents1 = LayoutOps.applySplitToLake(spark, dir, cells = 8,
+    val cents1 = LayoutOps.applySplitToLake(spark, dir,
+      graft.operators.SimilarityOps.seedCells(embs, 8), cells = 8,
       splitIters = 1, splitThresholdPct = 103).localCheckpoint()
     val gen1Cells = cents1.count().toInt
     assert(gen1Cells > 8, "gen 1 must split on the fixture")
     val files1 = partFiles()
     // gen 2 — the real maintenance cadence: the lake already carries twin
     // partitions, the declared cell count is gen 1's centroid count, and
-    // the PREVIOUS centroid table rides in (twin cells have no nid==cell
-    // row, so the seeded invariant cannot rebuild them)
+    // the PREVIOUS centroid table rides in (twin cells have no seed, so
+    // the seeds cannot stand for them)
     val offset2 = files1.keySet.map(_.stripPrefix("cell=").toLong).max + 1
-    val cents2 = LayoutOps.applySplitToLake(spark, dir, cells = gen1Cells,
-      splitIters = 1, splitThresholdPct = 103,
-      centroids = Some(cents1)).localCheckpoint()
+    val cents2 = LayoutOps.applySplitToLake(spark, dir, cents1,
+      cells = gen1Cells, splitIters = 1,
+      splitThresholdPct = 103).localCheckpoint()
     val files2 = partFiles()
     val gen2Cells = cents2.count().toInt
     assert(gen2Cells > gen1Cells,

@@ -40,8 +40,8 @@ class MLFuzzSpec extends SparkSpecBase {
         .select(col("id"), col("d2"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       for (cells <- Seq(1, 4, 16, n + 5)) {
-        val pruned = MLOps.knnDistOutlierScores(df, "embedding", "vec_id",
-            pred, k = k, cells = cells)
+        val pruned = MLOps.knnDistOutlierScores(df, pred, k = k,
+            cells = cells)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         assert(pruned == exhaustive,
           s"trial $trial (n=$n dim=$dim k=$k cells=$cells): pruned scan " +
@@ -56,7 +56,7 @@ class MLFuzzSpec extends SparkSpecBase {
         (3L, Array(0f, 1f, 1f))).toDF("vec_id", "embedding")
     def scores(embs: org.apache.spark.sql.DataFrame,
                pred: org.apache.spark.sql.Column) =
-      MLOps.knnDistOutlierScores(embs, "embedding", "vec_id", pred, k = 1)
+      MLOps.knnDistOutlierScores(embs, pred, k = 1)
     val full = scores(df, lit(true))
     assert(full.count() == 3)
     val noCorpus = scores(df.filter(col("vec_id") < 0), lit(true))

@@ -22,12 +22,12 @@ class MLSpec extends SparkSpecBase {
 
   test("kmeans assigns every embedding to one of k clusters") {
     val embs = Tables.load(spark, sfDir, "embeddings")
-    val out = MLOps.kmeansAssign(embs, "embedding", k = 5)
+    val out = MLOps.kmeansAssign(embs, k = 5)
     assert(out.count() == embs.count())
     val clusters = out.select(col("cluster")).distinct().count()
     assert(clusters == 5)
     // deterministic under a fixed seed
-    val again = MLOps.kmeansAssign(embs, "embedding", k = 5)
+    val again = MLOps.kmeansAssign(embs, k = 5)
     assert(out.select("vec_id", "cluster")
       .exceptAll(again.select("vec_id", "cluster")).isEmpty)
   }
@@ -129,8 +129,8 @@ class MLSpec extends SparkSpecBase {
       (1L, Array(0.0, 0.1)), (2L, Array(0.1, 0.0)), (3L, Array(0.0, -0.1)),
       (4L, Array(-0.1, 0.0)), (5L, Array(0.05, 0.05)),
       (9L, Array(10.0, 10.0))) // far outlier
-      .toDF("vec_id", "v")
-    val out = MLOps.stochasticOutlierSelection(pts, "v", "vec_id")
+      .toDF("vec_id", "embedding")
+    val out = MLOps.stochasticOutlierSelection(pts)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val top = out.maxBy(_._2)._1
     assert(top == 9L, s"$out")
@@ -301,8 +301,7 @@ class MLSpec extends SparkSpecBase {
     val vecs = (0 to 9).map(i =>
       (i.toLong, Array(0.001f * i, 0.001f * i))) :+ (10L, Array(5f, 5f))
     val df = vecs.toDF("vec_id", "embedding")
-    val scores = MLOps.knnDistOutlierScores(df, "embedding", "vec_id",
-        lit(true), k = 3)
+    val scores = MLOps.knnDistOutlierScores(df, lit(true), k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(scores(10L) == scores.values.max)
     assert(scores(10L) > 100L * scores.filter(_._1 != 10L).values.max)

@@ -171,7 +171,8 @@ class PipelineOpsSpec extends SparkSpecBase {
     // force row for row — recall converges to 1 as nprobe → cells
     val qs = embs.filter(col("vec_id") % 100 === 0)
     val cells = 16
-    val ivf = SimilarityOps.topKIvfProbe(embs, qs, k = 3, cells, nprobe = cells)
+    val ivf = SimilarityOps.topKIvfProbe(embs, qs, k = 3,
+        SimilarityOps.seedCells(embs, cells), nprobe = cells)
       .select(col("qid"), col("nid"), col("rank"), col("cos"))
     val bf = SimilarityOps.topKBruteForce(embs, qs, 3)
       .select(col("qid"), col("nid"), col("rank"), col("cos"))
@@ -184,9 +185,11 @@ class PipelineOpsSpec extends SparkSpecBase {
     // the same degeneracy differential as the IVF/brute-force pair, now
     // for the composed index
     val cells = 16
+    val cb = SimilarityOps.pqCodebook(embs)
     val ivfpq = SimilarityOps.ivfPqTopK(embs, k = 10, cells, nprobe = cells,
-      col("vec_id") % 100 === 0)
-    val flat = SimilarityOps.pqAdcTopK(embs, k = 10, col("vec_id") % 100 === 0)
+      col("vec_id") % 100 === 0, cb)
+    val flat = SimilarityOps.pqAdcTopK(embs, k = 10, col("vec_id") % 100 === 0,
+      cb)
     assert(ivfpq.exceptAll(flat).isEmpty && flat.exceptAll(ivfpq).isEmpty)
   }
 
@@ -196,23 +199,25 @@ class PipelineOpsSpec extends SparkSpecBase {
     // index must return identical rows; at smaller sprobe only cell
     // PLACEMENT may differ (recall knob), which the ivfAssignPruned spec
     // covers
+    val cb = SimilarityOps.pqCodebook(embs)
     val exact = SimilarityOps.ivfPqTopK(embs, k = 10, cells = 16, nprobe = 4,
-      col("vec_id") % 100 === 0)
+      col("vec_id") % 100 === 0, cb)
     val pruned = SimilarityOps.ivfPqTopK(embs, k = 10, cells = 16, nprobe = 4,
-      col("vec_id") % 100 === 0, assignSprobe = Some(4))
+      col("vec_id") % 100 === 0, cb, assignSprobe = Some(4))
     assert(exact.exceptAll(pruned).isEmpty && pruned.exceptAll(exact).isEmpty)
   }
 
   test("filtered ivf: every neighbor satisfies the predicate; true predicate degenerates to the plain probe") {
     val qs = embs.filter(col("vec_id") % 100 === 0)
-    val f = SimilarityOps.topKIvfFiltered(embs, qs, k = 3, cells = 16,
+    val seeds = SimilarityOps.seedCells(embs, 16)
+    val f = SimilarityOps.topKIvfFiltered(embs, qs, k = 3, seeds,
       nprobe = 4, candPred = col("label") % 2 === 0)
     assert(f.filter(col("label") % 2 =!= 0).isEmpty,
       "pre-filter must remove non-qualifying candidates before ranking")
-    val noop = SimilarityOps.topKIvfFiltered(embs, qs, k = 3, cells = 16,
+    val noop = SimilarityOps.topKIvfFiltered(embs, qs, k = 3, seeds,
       nprobe = 4, candPred = lit(true))
       .select(col("qid"), col("nid"), col("rank"), col("cos"))
-    val plain = SimilarityOps.topKIvfProbe(embs, qs, k = 3, cells = 16,
+    val plain = SimilarityOps.topKIvfProbe(embs, qs, k = 3, seeds,
       nprobe = 4)
       .select(col("qid"), col("nid"), col("rank"), col("cos"))
     assert(noop.exceptAll(plain).isEmpty && plain.exceptAll(noop).isEmpty)
@@ -236,14 +241,15 @@ class PipelineOpsSpec extends SparkSpecBase {
   test("trained ivf at iters=0 with dense low ids equals the seeded ivf row-for-row") {
     // iters = 0 trained centroids ARE the lowest-16 vectors renumbered; on
     // the fixture (dense vec_ids from 0) the renumbering is the identity,
-    // so topKIvfSeeds over them must reproduce topKIvf(cells=16) exactly —
+    // so topKIvfSeeds over them must reproduce the seedCells(16) run exactly —
     // including the cell column. This pins the trained path's plumbing AND
     // the centroid double round-trip end-to-end.
     val qs = embs.filter(col("vec_id") % 100 === 0)
     val trained0 = graft.ml.MLOps.kmeansCentroidsExact(embs, k = 16, iters = 0)
     val viaTrained = SimilarityOps.topKIvfSeeds(embs, qs, k = 3, trained0)
       .select(col("qid"), col("cell"), col("nid"), col("rank"), col("cos"))
-    val seeded = SimilarityOps.topKIvf(embs, qs, k = 3, cells = 16)
+    val seeded = SimilarityOps.topKIvfSeeds(embs, qs, k = 3,
+        SimilarityOps.seedCells(embs, 16))
       .select(col("qid"), col("cell"), col("nid"), col("rank"), col("cos"))
     assert(viaTrained.exceptAll(seeded).isEmpty &&
       seeded.exceptAll(viaTrained).isEmpty)
@@ -260,37 +266,36 @@ class PipelineOpsSpec extends SparkSpecBase {
   }
 
   test("trained pq codebook: full shape, and ivf-pq at nprobe=cells degenerates to flat ADC under the SAME trained codebook") {
-    val cb = SimilarityOps.pqCodebookTrained(embs, "embedding", "vec_id",
-      iters = 1).localCheckpoint()
+    val cb = SimilarityOps.pqCodebookTrained(embs, iters = 1).localCheckpoint()
     assert(cb.count() == SimilarityOps.PqSub * SimilarityOps.PqK)
     cb.collect().foreach { r =>
       assert(r.getSeq[Double](2).length == SimilarityOps.PqDims)
       assert(r.getInt(0) >= 0 && r.getInt(0) < SimilarityOps.PqK)
     }
     val pred = col("vec_id") % 100 === 0
-    val flat = SimilarityOps.pqAdcTopK(embs, k = 5, pred,
-      codebook = Some(cb))
+    val flat = SimilarityOps.pqAdcTopK(embs, k = 5, pred, cb)
     flat.groupBy(col("qid"))
       .agg(count(lit(1)).as("n"), max(col("rank")).as("mx")).collect()
       .foreach(r => assert(r.getLong(1) <= 5 && r.getInt(2) <= 5))
     // the composed-index degeneracy must hold for ANY codebook — run it
     // under the trained one
     val ivfpq = SimilarityOps.ivfPqTopK(embs, k = 5, cells = 16,
-      nprobe = 16, pred, codebook = Some(cb))
+      nprobe = 16, pred, cb)
     assert(ivfpq.exceptAll(flat).isEmpty && flat.exceptAll(ivfpq).isEmpty)
   }
 
   test("ivf-projected with m >= corpus size equals the pruned ivf probe exactly") {
     // the projected shortlist passes every candidate through when m is the
     // corpus size, so the exact rerank must reproduce the pruned-index
-    // topKIvfProbe with the same (cells, nprobe, sprobe) row for row — the
+    // topKIvfProbe with the same (seeds, nprobe, sprobe) row for row — the
     // m degeneracy that pins the composed operator to its parent
     val qs = embs.filter(col("vec_id") % 100 === 0)
     val n = embs.count().toInt
-    val proj = SimilarityOps.ivfProjectedTopK(embs, qs, k = 3, cells = 16,
+    val seeds = SimilarityOps.seedCells(embs, 16)
+    val proj = SimilarityOps.ivfProjectedTopK(embs, qs, k = 3, seeds,
         nprobe = 4, sprobe = 2, m = n)
       .select(col("qid"), col("nid"), col("rank"), col("cos"))
-    val pruned = SimilarityOps.topKIvfProbe(embs, qs, k = 3, cells = 16,
+    val pruned = SimilarityOps.topKIvfProbe(embs, qs, k = 3, seeds,
         nprobe = 4, sprobe = Some(2))
       .select(col("qid"), col("nid"), col("rank"), col("cos"))
     assert(proj.exceptAll(pruned).isEmpty && pruned.exceptAll(proj).isEmpty)
@@ -298,7 +303,8 @@ class PipelineOpsSpec extends SparkSpecBase {
 
   test("ivf split: members conserved, unflagged cells map to 2c, flagged cells shard into at most two sub-cells") {
     val n = embs.count()
-    val out = SimilarityOps.ivfSplitCells(embs, cells = 16, splitIters = 1,
+    val out = SimilarityOps.ivfSplitCells(embs,
+      SimilarityOps.seedCells(embs, 16), cells = 16, splitIters = 1,
       splitThresholdPct = 115).localCheckpoint()
     assert(out.count() == n, "every corpus vector gets exactly one row")
     assert(out.select(col("vec_id")).distinct().count() == n)
@@ -323,7 +329,8 @@ class PipelineOpsSpec extends SparkSpecBase {
     // detector parity: the default threshold IS ivfAssignIncremental's
     // 2x-mean rule, and this fixture never trips it — every cell passes
     // through as 2c
-    val out = SimilarityOps.ivfSplitCells(embs, cells = 16)
+    val out = SimilarityOps.ivfSplitCells(embs,
+      SimilarityOps.seedCells(embs, 16), cells = 16)
     assert(out.filter(col("needs_split")).isEmpty)
     assert(out.filter(col("new_cell") =!= col("cell") * 2).isEmpty)
   }
@@ -331,44 +338,28 @@ class PipelineOpsSpec extends SparkSpecBase {
   test("composed ivf members with iters=0 trained centroids equal their seeded defaults") {
     // the r12 seeds plumbing: iters=0 trained centroids are the lowest-16
     // vectors renumbered (identity on the dense fixture), so every
-    // centroid-taking composed member must reproduce its smallest-id-seed
-    // default row for row — pins the new parameter end to end
+    // seeds-taking composed member must reproduce its seedCells run row
+    // for row — pins the trained derivation end to end
     val qs = embs.filter(col("vec_id") % 100 === 0)
     val t0 = graft.ml.MLOps.kmeansCentroidsExact(embs, k = 16, iters = 0)
       .localCheckpoint()
-    val projT = SimilarityOps.ivfProjectedTopK(embs, qs, k = 3, cells = 16,
-      nprobe = 4, sprobe = 2, m = 10, centroids = Some(t0))
-    val projS = SimilarityOps.ivfProjectedTopK(embs, qs, k = 3, cells = 16,
+    val s16 = SimilarityOps.seedCells(embs, 16)
+    val projT = SimilarityOps.ivfProjectedTopK(embs, qs, k = 3, t0,
+      nprobe = 4, sprobe = 2, m = 10)
+    val projS = SimilarityOps.ivfProjectedTopK(embs, qs, k = 3, s16,
       nprobe = 4, sprobe = 2, m = 10)
     assert(projT.exceptAll(projS).isEmpty && projS.exceptAll(projT).isEmpty)
-    val prunedT = SimilarityOps.topKIvfProbe(embs, qs, k = 3, cells = 16,
-      nprobe = 4, centroids = Some(t0), sprobe = Some(2))
-    val prunedS = SimilarityOps.topKIvfProbe(embs, qs, k = 3, cells = 16,
+    val prunedT = SimilarityOps.topKIvfProbe(embs, qs, k = 3, t0,
+      nprobe = 4, sprobe = Some(2))
+    val prunedS = SimilarityOps.topKIvfProbe(embs, qs, k = 3, s16,
       nprobe = 4, sprobe = Some(2))
     assert(prunedT.exceptAll(prunedS).isEmpty &&
       prunedS.exceptAll(prunedT).isEmpty)
-    val filtT = SimilarityOps.topKIvfFiltered(embs, qs, k = 3, cells = 16,
-      nprobe = 4, candPred = col("label") % 2 === 0, centroids = Some(t0))
-    val filtS = SimilarityOps.topKIvfFiltered(embs, qs, k = 3, cells = 16,
+    val filtT = SimilarityOps.topKIvfFiltered(embs, qs, k = 3, t0,
+      nprobe = 4, candPred = col("label") % 2 === 0)
+    val filtS = SimilarityOps.topKIvfFiltered(embs, qs, k = 3, s16,
       nprobe = 4, candPred = col("label") % 2 === 0)
     assert(filtT.exceptAll(filtS).isEmpty && filtS.exceptAll(filtT).isEmpty)
-  }
-
-  test("incremental ivf with explicit centroids equals the self-trained run") {
-    // the ADVICE contract: (centroids, storedIndex) travel together; the
-    // explicit pair must reproduce the self-training path exactly
-    val stored = embs.filter(col("vec_id") % 10 =!= 0)
-    val batch = embs.filter(col("vec_id") % 10 === 0)
-    val cents = graft.ml.MLOps.kmeansCentroidsExact(stored, k = 16,
-      iters = 1).localCheckpoint()
-    val idx = SimilarityOps.ivfAssign(stored, cents).localCheckpoint()
-    val explicit = SimilarityOps.ivfAssignIncremental(stored, batch,
-      cells = 16, iters = 1, storedIndex = Some(idx),
-      centroids = Some(cents))
-    val selfTrained = SimilarityOps.ivfAssignIncremental(stored, batch,
-      cells = 16, iters = 1)
-    assert(explicit.exceptAll(selfTrained).isEmpty &&
-      selfTrained.exceptAll(explicit).isEmpty)
   }
 
   test("native graft_jl projection equals the unrolled plan-time chain") {
@@ -572,7 +563,8 @@ class PipelineOpsSpec extends SparkSpecBase {
     // would leave a mod-4 lottery empty)
     val qs = embs.filter(col("vec_id") % 10 === 0)
     def member(q: org.apache.spark.sql.DataFrame) =
-      SimilarityOps.topKIvfProbe(embs, q, 3, cells = 16, nprobe = 4)
+      SimilarityOps.topKIvfProbe(embs, q, 3, SimilarityOps.seedCells(embs, 16),
+          nprobe = 4)
         .select(col("qid"), col("nid"))
     val full = SimilarityOps.recallAtKSampled(embs, qs, 1)(member)
       .localCheckpoint()
@@ -675,8 +667,10 @@ class PipelineOpsSpec extends SparkSpecBase {
   test("incremental ivf ingest: every batch vector placed once, split rule exact") {
     val stored = embs.filter(col("vec_id") % 10 =!= 0)
     val batch = embs.filter(col("vec_id") % 10 === 0)
+    val cents = graft.ml.MLOps.kmeansCentroidsExact(stored, k = 8, iters = 1)
     val out = graft.operators.SimilarityOps.ivfAssignIncremental(
-      stored, batch, cells = 8, iters = 1).localCheckpoint()
+      graft.operators.SimilarityOps.ivfAssign(stored, cents), batch, cents,
+      cells = 8).localCheckpoint()
     assert(out.count() == batch.count(), "one placement per batch vector")
     assert(out.select(col("vec_id")).distinct().count() == batch.count())
     // the split flag must satisfy its own integer rule over the output

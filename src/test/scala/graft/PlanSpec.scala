@@ -67,8 +67,9 @@ class PlanSpec extends SparkSpecBase {
     val dir = java.nio.file.Files.createTempDirectory("graft-lake-spec").toString
     graft.operators.LayoutOps.writeIvfBucketed(all, cells = 16, dir)
     val one = all.filter(col("vec_id") === 77)
+    val seeds = graft.operators.SimilarityOps.seedCells(all, 16)
     val probe = graft.operators.LayoutOps.ivfLakeTopK(spark, dir, one,
-      all.filter(col("vec_id") < 16), k = 3)
+      seeds, k = 3)
     probe.collect() // finalize AQE so the real scan is reachable
     def scans(p: org.apache.spark.sql.execution.SparkPlan)
         : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
@@ -88,7 +89,7 @@ class PlanSpec extends SparkSpecBase {
     assert(scan.selectedPartitions.partitionCount == 1,
       s"expected 1 of 16 cells read, got ${scan.selectedPartitions.partitionCount}")
     // and the values still match the in-memory probe
-    val mem = graft.operators.SimilarityOps.topKIvf(all, one, k = 3, cells = 16)
+    val mem = graft.operators.SimilarityOps.topKIvfSeeds(all, one, k = 3, seeds)
       .select(col("qid"), col("cell"), col("nid"), col("rank"), col("cos"))
     val got = probe.select(col("qid"), col("cell"), col("nid"), col("rank"), col("cos"))
     assert(got.exceptAll(mem).isEmpty && mem.exceptAll(got).isEmpty)
@@ -102,7 +103,8 @@ class PlanSpec extends SparkSpecBase {
     val dir = java.nio.file.Files.createTempDirectory("graft-slake-spec").toString
     graft.operators.LayoutOps.writeIvfBucketed(all, cells = 8, dir)
     val cents = graft.operators.LayoutOps.applySplitToLake(spark, dir,
-      cells = 8, splitIters = 1, splitThresholdPct = 103).localCheckpoint()
+      graft.operators.SimilarityOps.seedCells(all, 8), cells = 8,
+      splitIters = 1, splitThresholdPct = 103).localCheckpoint()
     assert(cents.count() > 8, "103% must split at least one cell")
     val one = all.filter(col("vec_id") === 77)
     val probe = graft.operators.LayoutOps.ivfLakeTopK(spark, dir, one,

@@ -186,11 +186,13 @@ class StreamingSpec extends SparkSpecBase {
   }
 
   test("vector ingest: 4 micro-batch replay, cells-sized state, batch parity") {
+    val embs = Tables.load(spark, sfDir, "embeddings")
+    val seeds = graft.operators.SimilarityOps.seedCells(embs, 8)
     val streams = StreamProgress.attach(spark)
     val (out, runs) = try {
       val mark = streams.mark()
       val out = graft.streaming.VecIngest
-        .ingestCellCounts(spark, sfDir, cells = 8).localCheckpoint()
+        .ingestCellCounts(spark, sfDir, seeds).localCheckpoint()
       (out, streams.since(mark))
     } finally streams.detach()
     assert(out.count() <= 8, "state is cells-sized")
@@ -198,9 +200,7 @@ class StreamingSpec extends SparkSpecBase {
     assert(runs.size == 1 && batches >= 4,
       s"expected >= 4 micro-batches (one per staged quarter), got $batches")
     // end-of-replay snapshot equals the batch seeded assignment's counts
-    val embs = Tables.load(spark, sfDir, "embeddings")
-    val batch = graft.operators.SimilarityOps
-      .ivfAssign(embs, embs.filter(col("vec_id") < 8))
+    val batch = graft.operators.SimilarityOps.ivfAssign(embs, seeds)
       .groupBy(col("cell")).agg(count(lit(1)).as("n"))
     assert(out.exceptAll(batch).isEmpty && batch.exceptAll(out).isEmpty)
   }

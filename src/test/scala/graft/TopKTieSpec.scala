@@ -76,9 +76,10 @@ class TopKTieSpec extends SparkSpecBase {
       "topKPrefix" -> SimilarityOps.topKPrefix(embs, queries, k, m = n),
       "sq8TopK" -> SimilarityOps.sq8TopK(embs, queries, k, m = n),
       "topKIvfProbe" -> SimilarityOps.topKIvfProbe(embs, queries, k,
-        cells = cells, nprobe = cells),
+        SimilarityOps.seedCells(embs, cells), nprobe = cells),
       "topKIvfProbe(sprobe)" -> SimilarityOps.topKIvfProbe(embs, queries, k,
-        cells = cells, nprobe = cells, sprobe = Some(1)))
+        SimilarityOps.seedCells(embs, cells), nprobe = cells,
+        sprobe = Some(1)))
     for ((name, df) <- members)
       assert(ranks(df) == expected, s"$name breaks cosine ties differently")
   }

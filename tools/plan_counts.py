@@ -11,11 +11,12 @@ node headers of `explain("formatted")` (`(12) HashAggregate [codegen id : 3]`
 counts one `HashAggregate`).
 
 Exit status: 0 when every row is identical; 1 when a row's operator counts
-or row count differ (or a row is missing from one log); 2 when only `jobs=`
-differs. Job counts are reported apart because they are not always
-reproducible: when AQE propagates an empty relation, the number of
-shuffle-stage jobs a row submits can vary from run to run with the same
-physical plan.
+or row count differ, a row is missing from one log, a log holds no `[probe]`
+row at all, or a `[probe]` row has no `[probe-parts]` line (a crashed or
+truncated Probe run); 2 when only `jobs=` differs. Job counts are reported
+apart because they are not always reproducible: when AQE propagates an
+empty relation, the number of shuffle-stage jobs a row submits can vary
+from run to run with the same physical plan.
 """
 import collections
 import re
@@ -57,6 +58,14 @@ def main(argv):
         print(__doc__.strip().splitlines()[2], file=sys.stderr)
         return 64
     before, after = parse(argv[1]), parse(argv[2])
+    broken = []
+    for path, rows in ((argv[1], before), (argv[2], after)):
+        if not rows:
+            broken.append(f"{path}: no [probe] row")
+        broken += [f"{path}: {name} rep{rep}: no [probe-parts] line"
+                   for (name, rep), row in rows.items() if row["jobs"] is None]
+    for line in broken:
+        print(line)
     keys = list(before) + [k for k in after if k not in before]
     plan_diffs, job_diffs = [], []
     for key in keys:
@@ -83,7 +92,7 @@ def main(argv):
           f"{len(plan_diffs)} {' '.join(plan_diffs)}".rstrip())
     print(f"jobs= differences only: {len(job_diffs)} "
           f"{' '.join(job_diffs)}".rstrip())
-    return 1 if plan_diffs else 2 if job_diffs else 0
+    return 1 if plan_diffs or broken else 2 if job_diffs else 0
 
 
 if __name__ == "__main__":
