@@ -147,9 +147,9 @@ object Bench {
     // records parsed=null (observed in BENCH_r01/r02). Round 9 makes the
     // parsed line SELF-SUFFICIENT anyway (the r8 verdict's top item):
     //  - "queries": a small named headline subset (human-readable anchors);
-    //  - "qcs": EVERY per-query time as centi-second ints, positionally
-    //    keyed by the ascii-sorted query-name list ("qcs_order") — ~4 chars
-    //    per query instead of ~28, so all 270+ rows fit the window;
+    //  - "qds": EVERY per-query time as decisecond ints, positionally
+    //    keyed by the ascii-sorted query-name list ("qds_order") — ~3 chars
+    //    per query instead of ~28, so all 341 rows fit the window;
     //  - "phases": the streaming cost splits of `streamTags` and tf_stage.
     // The full name→sec map additionally lands in BENCH_DETAIL.json next to
     // the repo sources (and on stderr) for offline reads.
@@ -196,7 +196,7 @@ object Bench {
       System.err.println(s"[bench-detail] write failed: $e")
     }
     // headline anchors trimmed to 5 (socket family closed-by-attribution in
-    // r9; its rows stay fully visible in qcs + BENCH_DETAIL) — the stdout
+    // r9; its rows stay fully visible in qds + BENCH_DETAIL) — the stdout
     // line budget went to the interval_mb/cep phase splits and qprev
     val headline = Seq(
       "q01_pricing_summary", "q09_product_type_profit", "graph_pagerank",
@@ -207,14 +207,13 @@ object Bench {
       s"headline names missing from query map: ${headline.filterNot(results.contains)}")
     val qs = headline.flatMap(k => results.get(k).map(v => "\"" + k + "\":" + f"$v%.3f"))
       .mkString("{", ",", "}")
-    // every query, fixed-point ints, ascii-sorted by name
-    val sortedNames = results.keys.toSeq.sorted
-    def qArr(perSec: Long): String = sortedNames
-      .map(k => math.round(results(k) * perSec).toString)
+    // every query in deciseconds, ascii-sorted by name
+    val qds = results.keys.toSeq.sorted
+      .map(k => math.round(results(k) * 10L).toString)
       .mkString("[", ",", "]")
     // Near-zero phases (< 5 ms) and the `_overhead` fields are dropped
-    // from STDOUT (they stay in BENCH_DETAIL.json) — the line must fit the
-    // driver's 2000-char stdout tail with the full qcs array intact.
+    // from STDOUT (they stay in BENCH_DETAIL.json) — the line, full qds
+    // array included, must fit the 2000-char stdout tail kept of a run.
     // Integral values (batch counts) print as ints.
     def fmtSec(v: Double): String =
       if (v == math.rint(v) && v < 1e6) math.round(v).toString else f"$v%.2f"
@@ -228,16 +227,13 @@ object Bench {
     // replay quarters): excluded from per-query best-of-2 timings above,
     // reported here so the total work is fully accounted for
     val stageTotal = graft.sources.StagingFs.buildCosts.values.sum
-    def mkLine(qcsPart: String): String =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"stage_sec":$stageTotal%.2f,${qprev.map(_ + ",").getOrElse("")}"phases":$phases,"queries":$qs$qcsPart,"sf":"$sfDir"}"""
-    // stay safely inside the driver's 2000-char stdout tail: centi-second
-    // array first, decisecond array next, no array as the last resort. At
-    // 341 rows the centi-second form (~4 chars per row) never fits, so the
-    // line carries the decisecond array (1669 and 1750 chars measured at
+    def mkLine(qdsPart: String): String =
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"stage_sec":$stageTotal%.2f,${qprev.map(_ + ",").getOrElse("")}"phases":$phases,"queries":$qs$qdsPart,"sf":"$sfDir"}"""
+    // stay safely inside the 2000-char stdout tail: the decisecond
+    // array, else no array (1669 and 1750 chars measured at
     // sf0.01 on 4 CPUs)
     val line = Seq(
-      mkLine(s""","qcs_order":"name-asc","qcs":${qArr(100L)}"""),
-      mkLine(s""","qds_order":"name-asc","qds":${qArr(10L)}"""),
+      mkLine(s""","qds_order":"name-asc","qds":$qds"""),
       mkLine("")).find(_.length < 1950).get
     require(line.length < 1950,
       s"bench JSON line ${line.length} chars — would overflow the driver's 2000-char stdout tail")

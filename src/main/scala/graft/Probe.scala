@@ -20,8 +20,9 @@ import org.apache.spark.sql.SparkSession
   * `[probe-parts] <name> rep<r> build=… count=… jobs=<build>/<count>`
   * lists, per phase, the distinct task counts of the stages that read a
   * shuffle (stages with a parent stage): the effective reducer count of
-  * every exchange the phase ran, after any `withShufflePartitions` cap and
-  * AQE coalescing; `jobs=` is the number of Spark jobs each phase started.
+  * every exchange the phase ran, after AQE coalescing and any cap (a batch
+  * loop's `withShufflePartitions` clone, a stream's `statePartitions`);
+  * `jobs=` is the number of Spark jobs each phase started.
   *
   * For a row that runs streaming queries, its [[StreamProgress]] records
   * print as one `[probe-stream] <name> rep<r> q=<query> b=<batchId>

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SessionClones}
 import org.apache.spark.sql.functions._
 import graft.operators.{Iterate, PartitionOps}
 
@@ -342,8 +342,9 @@ object GraphAlgorithms {
     * counts the RDD: one job, where `Dataset.count`'s exchange makes two. */
   def clusterComponents(g: Graph): DataFrame = {
     val parts = math.max(8, math.min(2048, (g.edges.rdd.count() / 250000L).toInt + 1))
-    PartitionOps.withShufflePartitions(g.edges.sparkSession, parts) {
-      connectedComponentsFast(g).localCheckpoint()
+    PartitionOps.withShufflePartitions(g.edges.sparkSession, parts) { c =>
+      connectedComponentsFast(Graph(SessionClones.rebind(g.vertices, c),
+        SessionClones.rebind(g.edges, c))).localCheckpoint()
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SessionClones}
 
 /** Explicit partitioning directives (reference SURVEY §2.1:
   * `partitionByHash/ByRange/Custom` `DataSet.java:1257-1372`, `rebalance`
@@ -126,20 +126,22 @@ object PartitionOps {
       pmod(monotonically_increasing_id(), lit(saltBuckets)))
   }
 
-  /** Run `body` with `spark.sql.shuffle.partitions` capped at `n`, restoring
-    * the previous value afterwards. Exchanges are planned when an action
-    * runs, so the cap reaches only the jobs run inside `body` (a
-    * `localCheckpoint`, a collect, a stage write, a streaming query's
-    * `start()`); a DataFrame built inside and run after it plans with the
-    * restored value. Batch callers therefore wrap the loops that run jobs:
-    * superstep iterations and per-round checkpoints. */
-  def withShufflePartitions[T](spark: org.apache.spark.sql.SparkSession,
-                               n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    try { spark.conf.set(key, math.min(n, prev.toInt)); body }
-    finally spark.conf.set(key, prev)
-  }
+  /** Run `body` on a clone of `spark` whose `spark.sql.shuffle.partitions`
+    * is capped at `n` (one kept per session and conf state, see
+    * `SessionClones.cloneOf`), and return `body`'s frame rebound to `spark`.
+    * Exchanges are planned when an action runs, so the cap reaches the
+    * jobs `body` runs on the clone (a `localCheckpoint`, a collect, a stage
+    * write); the returned frame plans with `spark`'s count when it runs
+    * later. Batch callers therefore wrap the loops that run jobs: superstep
+    * iterations and per-round checkpoints. `spark`'s conf is never
+    * written, so scopes on concurrent threads cannot leave it at another
+    * scope's value. A frame built on `spark` that `body` reads must be
+    * rebound to the clone first (`SessionClones.rebind`), or its jobs run
+    * uncapped. */
+  def withShufflePartitions(spark: org.apache.spark.sql.SparkSession, n: Int)
+                           (body: org.apache.spark.sql.SparkSession => DataFrame)
+      : DataFrame =
+    SessionClones.rebind(body(SessionClones.cloneOf(spark, n)), spark)
 
   // memoized fixture row counts (metadata-only count through Tables.load;
   // keyed on the file's mtime:size stamp so an in-place regeneration
@@ -170,18 +172,5 @@ object PartitionOps {
     val rows = if (!graft.sources.StagingFs.exists(spark, probe)) 0L
       else fixtureRows(spark, dir, table)
     math.max(8L, math.min(4L * cores, rows / 6250L)).toInt
-  }
-
-  /** Scope an arbitrary SQL conf to `body`, restoring the previous value
-    * (or unsetting if it was unset) — the generic form of
-    * [[withShufflePartitions]] for per-query streaming knobs. */
-  def withConf[T](spark: org.apache.spark.sql.SparkSession,
-                  key: String, value: String)(body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    try { spark.conf.set(key, value); body }
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
   }
 }

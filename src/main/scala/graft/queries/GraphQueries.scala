@@ -35,9 +35,21 @@ object GraphQueries extends QuerySet {
     Graph(vertices, edges)
   }
 
+  /** the bipartite star with edge weight (custkey % 5) + 1 */
+  private def weightedStarGraph(s: SparkSession, dir: String): Graph = {
+    val cust = Tables.load(s, dir, "customer")
+    val vertices = cust.select(col("c_custkey").as("vid"))
+      .union(cust.select((col("c_nationkey") + 1000000L).as("vid")).distinct())
+    val edges = cust.select(col("c_custkey").as("src"),
+      (col("c_nationkey") + 1000000L).as("dst"),
+      (col("c_custkey") % 5 + 1).cast("long").as("weight"))
+    Graph(vertices, edges)
+  }
+
   /** Caps the superstep loop's per-round checkpoint jobs, which pay a
-    * fixed cost per shuffle partition on thousands of rows of state. */
-  private def capped[A](s: SparkSession, dir: String)(f: => A): A =
+    * fixed cost per shuffle partition on thousands of rows of state. `f`
+    * builds its graph on the capped session it is given. */
+  private def capped(s: SparkSession, dir: String)(f: SparkSession => DataFrame): DataFrame =
     graft.operators.PartitionOps.withShufflePartitions(s,
       graft.operators.PartitionOps.derivedShufflePartitions(s, dir))(f)
 
@@ -45,27 +57,26 @@ object GraphQueries extends QuerySet {
     // pointer-jumping CC down 10-chains: log-depth convergence (5 rounds
     // reach offset 8; plain propagation needs 10)
     "graph_cc_chain" -> ((s, dir) =>
-      capped(s, dir)(GraphAlgorithms.connectedComponentsFast(chainGraph(s, dir), maxIter = 8))),
+      capped(s, dir)(c => GraphAlgorithms.connectedComponentsFast(chainGraph(c, dir), maxIter = 8))),
 
     // star components around nation hubs
     "graph_cc_bipartite" -> ((s, dir) =>
-      capped(s, dir)(GraphAlgorithms.connectedComponents(bipartiteGraph(s, dir), maxIter = 5))),
+      capped(s, dir)(c => GraphAlgorithms.connectedComponents(bipartiteGraph(c, dir), maxIter = 5))),
 
     // multi-source SSSP from every block head
-    "graph_sssp_chain" -> ((s, dir) => {
-      val g = chainGraph(s, dir)
+    "graph_sssp_chain" -> ((s, dir) => capped(s, dir) { c =>
+      val g = chainGraph(c, dir)
       val sources = g.vertices.filter(col("vid") % 10 === 0)
       // chain graph: degree ≤ 2, diameter 9 — exactly the shape the
       // 2-hop closure halves the superstep count for (same fixpoint)
-      capped(s, dir)(GraphAlgorithms.shortestPaths(g, sources, maxIter = 15,
-        doubleHops = true))
+      GraphAlgorithms.shortestPaths(g, sources, maxIter = 15, doubleHops = true)
     }),
 
     // PageRank on the chain graph, integer-quantized so long sums are
     // associative and the DuckDB oracle hash-matches exactly (the chain's
     // in-degree ≤ 1 lets the oracle unroll the 5 iterations as CTEs)
     "graph_pagerank" -> ((s, dir) =>
-      capped(s, dir)(GraphAlgorithms.pageRankExact(chainGraph(s, dir), iters = 5))),
+      capped(s, dir)(c => GraphAlgorithms.pageRankExact(chainGraph(c, dir), iters = 5))),
 
     // degree statistics of the undirected chain graph
     // neighborhood aggregation (reduceOnNeighbors, direction ALL): per
@@ -90,38 +101,24 @@ object GraphQueries extends QuerySet {
     // labels are closed-form — customers carry the nation's max custkey,
     // hubs their own vid
     "graph_label_propagation" -> ((s, dir) =>
-      capped(s, dir)(GraphAlgorithms.labelPropagation(bipartiteGraph(s, dir), maxIter = 4))),
+      capped(s, dir)(c => GraphAlgorithms.labelPropagation(bipartiteGraph(c, dir), maxIter = 4))),
 
     // weighted community detection on the same star, edge weight
     // (custkey % 5) + 1: hubs vote for the max-weight (then max-id) customer
-    "graph_community" -> ((s, dir) => {
-      val cust = Tables.load(s, dir, "customer")
-      val vertices = cust.select(col("c_custkey").as("vid"))
-        .union(cust.select((col("c_nationkey") + 1000000L).as("vid")).distinct())
-      val edges = cust.select(col("c_custkey").as("src"),
-        (col("c_nationkey") + 1000000L).as("dst"),
-        (col("c_custkey") % 5 + 1).cast("long").as("weight"))
-      capped(s, dir)(GraphAlgorithms.communityDetection(Graph(vertices, edges), maxIter = 4))
-    }),
+    "graph_community" -> ((s, dir) =>
+      capped(s, dir)(c => GraphAlgorithms.communityDetection(weightedStarGraph(c, dir), maxIter = 4))),
 
     // FULL-score community detection (hop attenuation, quantized), 2
     // supersteps on the weighted star: customers adopt the nation's lowest
     // max-weight custkey, hubs bounce back to their own id; scores are
     // closed-form in the nation's max weight w*
-    "graph_community_exact" -> ((s, dir) => {
-      val cust = Tables.load(s, dir, "customer")
-      val vertices = cust.select(col("c_custkey").as("vid"))
-        .union(cust.select((col("c_nationkey") + 1000000L).as("vid")).distinct())
-      val edges = cust.select(col("c_custkey").as("src"),
-        (col("c_nationkey") + 1000000L).as("dst"),
-        (col("c_custkey") % 5 + 1).cast("long").as("weight"))
-      capped(s, dir)(GraphAlgorithms.communityDetectionExact(Graph(vertices, edges), maxIter = 2))
-    }),
+    "graph_community_exact" -> ((s, dir) =>
+      capped(s, dir)(c => GraphAlgorithms.communityDetectionExact(weightedStarGraph(c, dir), maxIter = 2))),
 
     // HITS on the star graph, 2 unnormalized iterations: authority mass
     // concentrates on hubs (= nation size squared), hub mass on customers
     "graph_hits" -> ((s, dir) =>
-      capped(s, dir)(GraphAlgorithms.hits(bipartiteGraph(s, dir), iters = 2))),
+      capped(s, dir)(c => GraphAlgorithms.hits(bipartiteGraph(c, dir), iters = 2))),
 
     // neighborhood Jaccard on chain + skip-2 edges
     "graph_jaccard" -> ((s, dir) =>

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SessionClones, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.sources.StagingFs
@@ -560,8 +560,8 @@ object Similarity extends QuerySet {
       val tf = bigramTf(s, dir)
       // caps the postings localCheckpoint job that feeds both passes
       graft.operators.PartitionOps.withShufflePartitions(s,
-          graft.operators.PartitionOps.derivedShufflePartitions(s, dir)) {
-        SimilarityOps.bm25Prf(tf)
+          graft.operators.PartitionOps.derivedShufflePartitions(s, dir)) { c =>
+        SimilarityOps.bm25Prf(SessionClones.rebind(tf, c))
       }
     }),
 
@@ -587,8 +587,8 @@ object Similarity extends QuerySet {
     "sim_mmr_rerank" -> ((s, dir) =>
       graft.operators.PartitionOps.withShufflePartitions(s,
           graft.operators.PartitionOps.derivedShufflePartitions(s, dir,
-            table = "embeddings")) {
-        SimilarityOps.mmrRerank(embs(s, dir))
+            table = "embeddings")) { c =>
+        SimilarityOps.mmrRerank(embs(c, dir))
       })
   )
 

@@ -138,14 +138,7 @@ object Streaming extends QuerySet {
         .select(col("session_window.start").as("w_start"),
           col("session_window.end").as("w_end"),
           col("user_id"), col("n"), col("sum_cents"))
-      // local pre-merge before the keyed exchange (r14, see
-      // stream_session_append) — merged count/sum are associative,
-      // result identical
-      graft.operators.PartitionOps.withConf(s,
-        "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition",
-        "true") {
-        EventStream.runToTable(s, agg, "complete")
-      }
+      EventStream.runToTable(s, agg, "complete")
     }),
 
     // APPEND-mode merging session windows over the REAL 4-batch replay:
@@ -167,18 +160,14 @@ object Streaming extends QuerySet {
       // rule as code: rows/62.5k clamped to [4, 2·cores]); at fixture
       // scale this derives the same 4 the row was tuned to, at 1M/10M it
       // derives the ladder optimum (16/32) instead of throttling at 4.
-      // Local pre-merge (r14): merge sessions inside each input partition
-      // BEFORE the keyed exchange (guide §2.3 "aggregate before you
+      // Every stream start merges sessions inside each input partition
+      // BEFORE the keyed exchange (r14; guide §2.3 "aggregate before you
       // shuffle" for merging windows) — fewer rows shuffled and fewer
       // session-store merge rows per batch; count/sum are associative so
       // the merged result is identical (oracle-pinned).
-      graft.operators.PartitionOps.withConf(s,
-        "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition",
-        "true") {
-        EventStream.runToTable(s, agg, "append",
-          statePartitions = EventStream.derivedStatePartitions("session",
-            graft.operators.PartitionOps.fixtureRows(s, dir, "events")))
-      }
+      EventStream.runToTable(s, agg, "append",
+        statePartitions = EventStream.derivedStatePartitions("session",
+          graft.operators.PartitionOps.fixtureRows(s, dir, "events")))
     }),
 
     // keyed side input (PROTEUS): stream–static equi join enrichment
@@ -241,10 +230,8 @@ object Streaming extends QuerySet {
       // watermark for state EVICTION (no outer side to emit) and the query
       // terminates right after — skipping it drops a full state-commit
       // round with identical output (the multibatch row's argument, r13/r14)
-      graft.operators.PartitionOps.withConf(s,
-        "spark.sql.streaming.noDataMicroBatches.enabled", "false") {
-        EventStream.runToTable(s, joined, "append")
-      }
+      EventStream.runToTable(s, joined, "append",
+        noDataMicroBatches = false)
     }),
 
     // stream-stream LEFT OUTER interval join (Flink CoGroupedStreams outer
@@ -448,10 +435,8 @@ object Streaming extends QuerySet {
       // partitions enter the fixed-cost product at 4× weight — the r11
       // ladder holds p=4 optimal through 10M events/replay, hence the
       // join family's CONSTANT derived default (no count scan needed).
-      graft.operators.PartitionOps.withConf(s,
-        "spark.sql.streaming.noDataMicroBatches.enabled", "false") {
-        EventStream.runToTable(s, joined, "append", statePartitions = 4)
-      }
+      EventStream.runToTable(s, joined, "append", statePartitions = 4,
+        noDataMicroBatches = false)
     }),
 
     // cross-micro-batch dedup state, same oracle as the single-batch form
@@ -692,12 +677,7 @@ object Streaming extends QuerySet {
         .agg(count(lit(1)).as("n"))
         .select(col("session_window.start").as("w_start"),
           col("session_window.end").as("w_end"), col("user_id"), col("n"))
-      // local pre-merge (r14, see stream_session_append)
-      graft.operators.PartitionOps.withConf(s,
-        "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition",
-        "true") {
-        EventStream.runToTable(s, agg, "complete")
-      }
+      EventStream.runToTable(s, agg, "complete")
     })
   )
 

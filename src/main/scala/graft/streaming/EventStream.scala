@@ -272,8 +272,6 @@ object EventStream {
                    sourcePartitions: Int = 1,
                    sampleMod: Long = 1L): DataFrame = {
     require(sampleMod >= 1, s"sampleMod must be >= 1: $sampleMod")
-    val t0 = System.nanoTime()
-    def sinceS: Double = (System.nanoTime() - t0) / 1e9
     val srcStamp = dir + "|mod" + sampleMod + "|" +
       StagingFs.fileStamp(spark, new Path(dir, "events.parquet"))
     val userIds = feedIdsCache.computeIfAbsent(srcStamp, _ => {
@@ -285,7 +283,6 @@ object EventStream {
                 else ev.filter(col("event_id") % sampleMod === 0L)
       sub.select(col("user_id")).collect().map(_.getLong(0))
     })
-    val tIds = sinceS
     val server = new java.net.ServerSocket(0, 8,
       java.net.InetAddress.getByName("127.0.0.1"))
     // PrintWriter never throws — a broken pipe mid-feed would silently drop
@@ -351,7 +348,6 @@ object EventStream {
         // mode micro-batch pays a full state commit + sink rewrite)
         while (feedsDone.get == 0 && feedError.get == null &&
                System.nanoTime() < deadline) Thread.sleep(10)
-        val tFeed = sinceS
         while (feedError.get == null && total() < userIds.length &&
                System.nanoTime() < deadline) {
           q.processAllAvailable()
@@ -359,15 +355,6 @@ object EventStream {
           // gently — stragglers are the exception, not the steady state
           if (total() < userIds.length) Thread.sleep(100)
         }
-        // one-line cost attribution (profiled round 7): the data batch's
-        // addBatch inside Spark's socket micro-batch machinery is the
-        // floor (~2.3 s warm for 100k rows at sf0.1); ids/feed/empty-batch
-        // are the variable parts this harness can and does minimize
-        val tDone = sinceS
-        System.err.println(f"[socket-cost] ids=$tIds%.2fs feed=$tFeed%.2fs " +
-          f"done=$tDone%.2fs batches=${q.recentProgress.map(p =>
-            s"${p.batchId}:${p.numInputRows}:${p.durationMs.get("addBatch")}ms")
-            .mkString(",")}")
       } finally {
         q.stop()
         server.close() // idempotent; unblocks a feeder still in accept()
@@ -440,40 +427,72 @@ object EventStream {
     * `stream_allowed_lateness` commits its 5 batches × 4 state stores in
     * ~0.3 s instead of ~1.9 s through Spark's default manager. */
   def runToTable(spark: SparkSession, df: DataFrame, mode: String,
-                 statePartitions: Int = 4): DataFrame = {
+                 statePartitions: Int = 4,
+                 noDataMicroBatches: Boolean = true): DataFrame = {
     val name = s"graft_stream_${runId.incrementAndGet()}"
     start(spark, df.writeStream.format("memory").queryName(name)
-      .outputMode(mode).trigger(Trigger.AvailableNow()), statePartitions)(
-      _.awaitTermination())
+      .outputMode(mode).trigger(Trigger.AvailableNow()), statePartitions,
+      noDataMicroBatches = noDataMicroBatches)(_.awaitTermination())
     spark.table(name)
   }
 
+  // guards the one scope in which a stream's confs sit on its caller's session
+  private val confScope = new Object
+
   /** Start `writer`'s query, checkpointed at `checkpoint` (a temp dir when
-    * `None`), and drive it with `use` (await it, poll it), with its state
-    * sized to `statePartitions` and its checkpoint I/O picked from where the
-    * checkpoint lives. Every stream the engine runs starts here. Both confs
-    * hold until `use` returns: `start()` clones the session for the state
-    * stores, but the offset and commit logs and a file source's metadata log
-    * are built lazily on the stream thread, from the session that started
-    * or read the stream.
+    * `None`), and drive it with `use` (await it, poll it). Every stream the
+    * engine runs starts here, on the calling session: a query started from
+    * a child session reports its progress to the child's listeners only,
+    * so [[graft.StreamProgress]] on the caller would not see it. This is
+    * the one scope in `src/main` that writes its caller's session conf, and
+    * one lock guards it, so streams started on concurrent threads run one
+    * at a time and never restore each other's values.
     *
+    * `start()` clones the session into the stream's own, so these SQL confs
+    * are set for the `start()` call only:
     *  - `spark.sql.shuffle.partitions`, capped at `statePartitions`, fixes
     *    the number of state-store instances (see [[runToTable]]);
-    *  - `spark.sql.streaming.checkpointFileManagerClass` is the FileSystem
-    *    manager when the checkpoint is on the local `file:` scheme
-    *    ([[checkpointFileManager]]). */
+    *  - `spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition`
+    *    is `true`: session windows merge inside each input partition before
+    *    the keyed exchange (count/sum merge associatively, so results are
+    *    unchanged); no other stream plan reads it;
+    *  - `spark.sql.streaming.noDataMicroBatches.enabled` is
+    *    `noDataMicroBatches`. `false` skips the trailing batch that only
+    *    advances the watermark, for queries that emit nothing on it.
+    *
+    * `spark.sql.streaming.checkpointFileManagerClass` holds until `use`
+    * returns: the offset and commit logs and a file source's metadata log
+    * are built lazily on the stream thread, from the session that started
+    * or read the stream. It is the FileSystem manager when the checkpoint
+    * is on the local `file:` scheme ([[checkpointFileManager]]). */
   private[graft] def start[R, T](spark: SparkSession, writer: DataStreamWriter[R],
                                  statePartitions: Int,
-                                 checkpoint: Option[String] = None)
-                                (use: StreamingQuery => T): T = {
+                                 checkpoint: Option[String] = None,
+                                 noDataMicroBatches: Boolean = true)
+                                (use: StreamingQuery => T): T = confScope.synchronized {
     val w = checkpoint.fold(writer)(writer.option("checkpointLocation", _))
-    graft.operators.PartitionOps.withShufflePartitions(spark, statePartitions) {
-      checkpointFileManager(resolvedCheckpoint(spark, checkpoint)) match {
-        case Some(manager) => graft.operators.PartitionOps.withConf(spark,
-          "spark.sql.streaming.checkpointFileManagerClass", manager)(use(w.start()))
-        case None => use(w.start())
+    val shuffle = "spark.sql.shuffle.partitions"
+    val atStart = Seq(
+      shuffle -> math.min(statePartitions, spark.conf.get(shuffle).toInt).toString,
+      "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition" -> "true",
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataMicroBatches.toString)
+    val forRun = checkpointFileManager(resolvedCheckpoint(spark, checkpoint))
+      .map("spark.sql.streaming.checkpointFileManagerClass" -> _).toSeq
+    def set(confs: Seq[(String, String)]): Seq[(String, Option[String])] =
+      confs.map { case (k, v) =>
+        val prev = spark.conf.getOption(k)
+        spark.conf.set(k, v)
+        k -> prev
       }
+    def restore(prev: Seq[(String, Option[String])]): Unit = prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
+    val runPrev = set(forRun)
+    try {
+      val startPrev = set(atStart)
+      use(try w.start() finally restore(startPrev))
+    } finally restore(runPrev)
   }
 
   /** The checkpoint root Spark resolves for a query started with

@@ -21,7 +21,7 @@ import scala.collection.mutable.ArrayBuffer
   * Spark's built-in socket source is a single-partition testing-grade
   * reader (documented "not for production"): each micro-batch converts its
   * buffered lines driver-side, one row at a time, on one task — measured at
-  * ~2.7 s per 100k-line batch in this repo's bench ([socket-cost] marker).
+  * ~2.7 s per 100k-line batch in this repo's bench.
   * This source shows the custom-source API doing it properly:
   *
   *  - a reader thread drains the TCP stream into a line buffer off the

@@ -569,8 +569,7 @@ class DedupFuzzSpec extends SparkSpecBase {
     // it to turn such a predicate back into a key equality
     val all = docsDf
     val g = DedupOps.gramHashTable(all, k = 3).localCheckpoint()
-    val staged = graft.operators.PartitionOps.withConf(spark,
-        "spark.sql.selfJoinAutoResolveAmbiguity", "false") {
+    val staged = withConf("spark.sql.selfJoinAutoResolveAmbiguity" -> "false") {
       DedupOps.cutDuplicateSpans(all, g, k = 3)
     }
     val selfEq = staged.queryExecution.analyzed.collect {

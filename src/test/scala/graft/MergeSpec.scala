@@ -117,9 +117,7 @@ class MergeSpec extends SparkSpecBase {
     // closed, RightOuter for opened); under sort-merge the identical
     // child exchanges are reused, so each side shuffles once. Locked
     // with broadcast off — the shape that matters at 100 TB.
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val target = Seq(
         (1L, "a", "2023-01-01", Option.empty[String]),
         (1L, "a0", "2022-01-01", Option("2023-01-01"))).toDF("k", "v", "f", "t")
@@ -135,7 +133,7 @@ class MergeSpec extends SparkSpecBase {
       assert("SortMergeJoin".r.findAllIn(plan).size == 3, plan.take(2000))
       assert(plan.contains("ReusedExchange"),
         s"branch joins must reuse the shared child exchanges:\n${plan.take(2500)}")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("plan: one shuffle resolves the fold (keyed aggregate, no join)") {

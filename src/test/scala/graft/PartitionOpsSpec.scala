@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SessionClones
 import org.apache.spark.sql.functions._
 import graft.operators.PartitionOps
 
@@ -47,9 +48,7 @@ class PartitionOpsSpec extends SparkSpecBase {
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    withConf(confs: _*) {
       val skewed = ((1 to 60000).map(i => (7L, i.toLong)) ++
         (1 to 3000).map(i => (i.toLong % 64, i.toLong))).toDF("k", "payload")
       val dim = (0L to 64L).map(k => (k, s"dim$k")).toDF("k", "name")
@@ -61,9 +60,6 @@ class PartitionOpsSpec extends SparkSpecBase {
         .split("== Initial Plan ==")(0)
       assert(plan.contains("skew=true"),
         s"AQE did not split the hot partition:\n${plan.take(2500)}")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -201,10 +197,10 @@ class PartitionOpsSpec extends SparkSpecBase {
   }
 
   test("withShufflePartitions: a plan built inside the scope and run after it uses the session's count") {
-    PartitionOps.withConf(spark, "spark.sql.adaptive.enabled", "false") {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
-      val agg = PartitionOps.withShufflePartitions(spark, 2) {
-        orders.groupBy(col("o_custkey")).count()
+      val agg = PartitionOps.withShufflePartitions(spark, 2) { c =>
+        SessionClones.rebind(orders, c).groupBy(col("o_custkey")).count()
       }
       agg.collect()
       val parts = agg.queryExecution.executedPlan.collect {
@@ -215,9 +211,9 @@ class PartitionOpsSpec extends SparkSpecBase {
   }
 
   test("withShufflePartitions: a localCheckpoint taken inside the scope keeps the cap") {
-    PartitionOps.withConf(spark, "spark.sql.adaptive.enabled", "false") {
-      val cp = PartitionOps.withShufflePartitions(spark, 2) {
-        orders.groupBy(col("o_custkey")).count().localCheckpoint()
+    withConf("spark.sql.adaptive.enabled" -> "false") {
+      val cp = PartitionOps.withShufflePartitions(spark, 2) { c =>
+        SessionClones.rebind(orders, c).groupBy(col("o_custkey")).count().localCheckpoint()
       }
       assert(cp.rdd.getNumPartitions == 2)
       assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")

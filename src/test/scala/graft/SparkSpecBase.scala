@@ -47,6 +47,19 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** Run `body` with `confs` set on the shared session, then restore each
+    * key's previous value (or unset a key that was unset). */
+  protected def withConf[T](confs: (String, String)*)(body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   override def afterAll(): Unit = {
     // keep the session alive across suites; sbt's forked JVM exits at the end
     super.afterAll()

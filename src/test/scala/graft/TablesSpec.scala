@@ -11,7 +11,6 @@ import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-import graft.operators.PartitionOps
 
 /** Pins the fixture schema memo of [[Tables]]: a repeated load runs no
   * Spark job, the memoized schema is the one `spark.read.parquet` infers,
@@ -81,7 +80,7 @@ class TablesSpec extends SparkSpecBase {
     assert(Tables.schema(spark, dir, "events")("ts").dataType == LongType)
     def outcome[T](f: => T): Either[(Class[_], String), T] =
       Try(f).toEither.left.map(e => (e.getClass, e.getMessage))
-    val (direct, viaLoad) = PartitionOps.withConf(spark, nanos, "false") {
+    val (direct, viaLoad) = withConf(nanos -> "false") {
       (outcome(rows(spark.read.parquet(s"$dir/events.parquet"))),
         outcome(rows(Tables.load(spark, dir, "events"))))
     }
@@ -95,7 +94,7 @@ class TablesSpec extends SparkSpecBase {
   test("inferTimestampNTZ=false re-infers the µs fixture's ts as TIMESTAMP") {
     val ntz = "spark.sql.parquet.inferTimestampNTZ.enabled"
     assert(Tables.schema(spark, sfDir, "events")("ts").dataType == TimestampNTZType)
-    val ltz = PartitionOps.withConf(spark, ntz, "false") {
+    val ltz = withConf(ntz -> "false") {
       val direct = spark.read.parquet(fixture("events"))
       assert(Tables.schema(spark, sfDir, "events") == direct.schema)
       assert(rows(Tables.load(spark, sfDir, "events")) == rows(direct))
