@@ -6,14 +6,6 @@ object Bench {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // measurement hygiene (r14, declared in OPTIMIZATION_r14.md): drop the
-    // stamped cross-run stage caches (verbatim fixture copies) from the
-    // local scratch root BEFORE the session starts, so every bench pass
-    // builds staged inputs from the same cold state and stage_sec is
-    // comparable run over run. Timing methodology is unchanged.
-    // Assumes one Bench process at a time: a concurrent one's caches go too.
-    graft.sources.StagingFs.cleanLocalScratch(
-      new java.io.File(sys.props("java.io.tmpdir")))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -55,8 +55,7 @@ object Similarity extends QuerySet {
     * the seeds it was built with, so the split starts from those. Shared
     * by the content row and the probe row. */
   private def splitLakeStage(s: SparkSession, dir: String) = {
-    val key = s.sparkContext.applicationId + "#" + dir + "#graft-ivf-lake-split"
-    graft.sources.StagingFs.stageOnce(s, key, "graft-ivf-lake-split") { p =>
+    StagingFs.stage(s, dir, "graft-ivf-lake-split") { p =>
       val all = embs(s, dir)
       graft.operators.LayoutOps.writeIvfBucketed(all, cells = 16, p + "/lake")
       graft.operators.LayoutOps.applySplitToLake(s, p + "/lake",
@@ -334,9 +333,7 @@ object Similarity extends QuerySet {
     // which is the point at 100 TB (a probe reads nprobe/cells of disk)
     "sim_topk_ivf_lake" -> ((s, dir) => {
       val all = embs(s, dir)
-      val path = graft.sources.StagingFs.stageOnce(s,
-        s.sparkContext.applicationId + "#" + dir + "#graft-ivf-lake",
-        "graft-ivf-lake") { p =>
+      val path = StagingFs.stage(s, dir, "graft-ivf-lake") { p =>
         graft.operators.LayoutOps.writeIvfBucketed(all, cells = 16, p)
       }
       graft.operators.LayoutOps.ivfLakeTopK(s, path,

@@ -23,8 +23,7 @@ object TextAnalysis extends QuerySet {
     * dedup shingle chain uses, via the same [[graft.sources.StagingFs]]
     * ledger (build cost lands in the bench's stage_sec, not per-query). */
   private def bpeStage(s: SparkSession, dir: String): String = {
-    val key = s.sparkContext.applicationId + "#" + dir + "#graft-bpe3"
-    graft.sources.StagingFs.stageOnce(s, key, "graft-bpe3") { p =>
+    graft.sources.StagingFs.stage(s, dir, "graft-bpe3") { p =>
       val (state, merges) = TextOps.bpeMergeLoop(docs(s, dir), rounds = 3)
       state.write.mode("overwrite").parquet(p + "/state")
       import s.implicits._

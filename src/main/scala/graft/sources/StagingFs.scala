@@ -47,12 +47,6 @@ object StagingFs {
     p.toString
   }
 
-  /** Fixed-name staging directory under the root (for stamped caches that
-    * outlive a session, e.g. the multi-batch replay quarters). NOT
-    * delete-on-exit — the caller owns invalidation via [[readStamp]]. */
-  def namedStageDir(spark: SparkSession, name: String): Path =
-    new Path(root(spark), name)
-
   // one holder per stage key; the lazy val inside the closure gives
   // exactly-once build semantics without holding a ConcurrentHashMap bin
   // lock for the duration of an expensive distributed write
@@ -72,7 +66,7 @@ object StagingFs {
     buildLedger.asScala.toMap
   }
 
-  // explicit nesting attribution: each in-flight stageOnce build pushes an
+  // explicit nesting attribution: each in-flight stage build pushes an
   // accumulator; a child build adds its WALL seconds to its immediate
   // parent's accumulator, so the parent records exclusive time. Replaces
   // the r13 global-ledger diff, which misattributed a concurrent unrelated
@@ -82,33 +76,28 @@ object StagingFs {
     override def initialValue() = new java.util.ArrayDeque[Array[Double]]()
   }
 
-  /** Record a one-time build that happened OUTSIDE [[stageOnce]] (the
-    * streaming replay-quarter copies use their own stamp-invalidated
-    * fixed-name staging) so it still lands in the bench's stage ledger. */
-  def recordBuild(key: String, seconds: Double): Unit = {
-    buildLedger.put(key, seconds)
-    val parent = buildStack.get().peek()
-    if (parent != null) parent(0) += seconds
-    System.err.println(f"[stage-build] key=$key $seconds%.2fs")
-  }
-
-  /** Build-once-per-key staging: the first caller for `key` creates a stage
-    * dir and runs `build` into it; every caller (including concurrent first
-    * callers) gets the same directory back once the build completes.
+  /** The stage `prefix` of fixture `dir`, in a fresh [[newStageDir]] that
+    * `build` fills once per (application, fixture, prefix); every caller,
+    * concurrent first callers included, gets that directory back once the
+    * build completes. Every staged input is built here — the parquet stages
+    * of [[readStage]], the IVF lakes, the BPE merges and the streaming
+    * replay copies and splits — so each lands once in [[buildCosts]], and
+    * none outlives the JVM.
     *
     * Ledger accounting is EXCLUSIVE of nested builds (measurement-bug fix,
     * optimization round 13): a chained stage whose build function itself
-    * calls stageOnce (minhash pairs → sigs → shingles) used to record the
+    * builds a stage (minhash pairs → sigs → shingles) used to record the
     * whole nested chain in EVERY enclosing entry, so the bench's stage_sec
     * summed the shingle scan three times (r12: ledger 31.6 s for a chain
     * whose true wall cost was 14 s) and the triggering query's
     * stage-adjusted time was over-subtracted to ~0. Each entry now records
     * only its own exclusive seconds: child-ledger deltas observed during
     * the build are subtracted. */
-  def stageOnce(spark: SparkSession, key: String, prefix: String)
-               (build: String => Unit): String = {
+  def stage(spark: SparkSession, dir: String, prefix: String)
+           (build: String => Unit): String = {
+    val key = spark.sparkContext.applicationId + "#" + dir + "#" + prefix
     val thunk = stages.computeIfAbsent(key, _ => {
-      lazy val dir: String = {
+      lazy val path: String = {
         val d = newStageDir(spark, prefix)
         val acc = Array(0.0)
         buildStack.get().push(acc)
@@ -126,7 +115,7 @@ object StagingFs {
           f"[stage-build] key=$key prefix=$prefix ${sec}%.2fs (wall $wall%.2fs, nested $nested%.2fs)")
         d
       }
-      () => dir
+      () => path
     })
     thunk()
   }
@@ -136,44 +125,15 @@ object StagingFs {
   private val stageSchemas = new ConcurrentHashMap[String, StructType]()
 
   /** Read the parquet stage `prefix` of fixture `dir`, built once per
-    * (app, fixture) by [[stageOnce]] — the shared-materialization shape a
+    * (app, fixture) by [[stage]] — the shared-materialization shape a
     * real pipeline uses (parquet, not cached blocks, so per-query storage
     * cleanup cannot drop it). The stage's schema is inferred once per
     * stage path, so only the first construction pays the inference job. */
   def readStage(spark: SparkSession, dir: String, prefix: String)
                (build: String => Unit): DataFrame = {
-    val key = spark.sparkContext.applicationId + "#" + dir + "#" + prefix
-    val path = stageOnce(spark, key, prefix)(build)
+    val path = stage(spark, dir, prefix)(build)
     spark.read.schema(stageSchemas.computeIfAbsent(path,
       _ => spark.read.parquet(path).schema)).parquet(path)
-  }
-
-  /** Remove the stamped named caches from a LOCAL scratch root (bench
-    * comparability hygiene, r14): cross-run named stages (replay quarters,
-    * event-source copies — verbatim fixture copies, not results) survive
-    * JVM restarts keyed on fixture stamps, so a warm second bench pass
-    * would report smaller stage_sec than a cold one. [[graft.Bench]]
-    * clears them at startup so every bench pass builds from the same cold
-    * state. Only a `graft-*` directory with a sibling `<name>.stamp` (the
-    * [[namedStageDir]] convention) is removed, together with that stamp;
-    * a live JVM's [[newStageDir]] dirs carry no stamp and are left alone,
-    * as is Spark's own scratch. */
-  def cleanLocalScratch(rootDir: java.io.File): Unit = {
-    def rm(x: java.io.File): Unit = {
-      if (x.isDirectory)
-        Option(x.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rm)
-      x.delete()
-    }
-    Option(rootDir.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(d => d.getName.startsWith("graft-") && d.isDirectory)
-      .foreach { d =>
-        val stamp = new java.io.File(rootDir, d.getName + ".stamp")
-        if (stamp.isFile) {
-          System.err.println(s"[scratch-clean] removing $d")
-          rm(d)
-          stamp.delete()
-        }
-      }
   }
 
   /** Committed `.parquet` part files of `srcDir`, in name order. */
@@ -210,25 +170,11 @@ object StagingFs {
 
   def mkdirs(spark: SparkSession, p: Path): Unit = fs(spark, p).mkdirs(p)
 
-  /** mtime:size stamp of a source file — the staged-copy invalidation key. */
+  /** mtime:size stamp of a source file — the key of the in-JVM memos of
+    * fixture-derived values (schemas, row counts, the socket feed). */
   def fileStamp(spark: SparkSession, p: Path): String = {
     val st = fs(spark, p).getFileStatus(p)
     s"${st.getModificationTime}:${st.getLen}"
-  }
-
-  def readStamp(spark: SparkSession, p: Path): Option[String] = {
-    val f = fs(spark, p)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8"))
-      finally in.close()
-    }
-  }
-
-  def writeStamp(spark: SparkSession, p: Path, value: String): Unit = {
-    val out = fs(spark, p).create(p, true)
-    try out.write(value.getBytes("UTF-8")) finally out.close()
   }
 
   /** Copy one file (used to stage a read-only fixture file into a listable

@@ -1,11 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.ListenerBuses
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryListenerBus
 import graft.sources.StagingFs
 
 import java.sql.Timestamp
@@ -47,9 +49,10 @@ object EventStream {
     * the NTZ→LTZ cast is value-faithful.
     *
     * The file streaming source requires a directory; the fixture is a single
-    * read-only file, so it is staged once as a stamped copy in the staging
-    * root (a copy, not a symlink — symlinks don't exist on HDFS/S3, and the
-    * copy works across schemes: local fixture → cluster staging root). */
+    * read-only file, so it is copied into a stage directory once per
+    * (application, fixture) by [[StagingFs.stage]] (a copy, not a symlink —
+    * symlinks don't exist on HDFS/S3, and the copy works across schemes:
+    * local fixture → cluster staging root). */
   def read(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftExtensions.install(spark)
     // physical `ts` type from the memoized fixture schema, as the batch
@@ -66,47 +69,9 @@ object EventStream {
   }
 
   private def stageDir(spark: SparkSession, dir: String): String =
-    synchronized {
-      val src = new Path(dir, "events.parquet")
-      val stage = StagingFs.namedStageDir(spark,
-        "graft-stream-src-" + Integer.toHexString(dir.hashCode))
-      // mtime/size stamp invalidates the copy if the fixture regenerates at
-      // the same path; stamp lives OUTSIDE the dir the file source lists
-      val stampFile = new Path(stage.getParent, stage.getName + ".stamp")
-      val stampNow = StagingFs.fileStamp(spark, src)
-      val fresh = StagingFs.exists(spark, new Path(stage, "events.parquet")) &&
-        StagingFs.readStamp(spark, stampFile).contains(stampNow)
-      if (!fresh) {
-        StagingFs.mkdirs(spark, stage)
-        // copy to a temp name OUTSIDE the listed dir, then rename into
-        // place: a second JVM sharing the staging root can never list a
-        // partially written events.parquet (the synchronized block only
-        // serializes within one JVM); stamp written only after the rename.
-        // Stale .tmp- copies from a crashed earlier attempt are swept
-        // first (age-gated so a CONCURRENT JVM's live copy is left alone).
-        val fsys = StagingFs.fs(spark, stage)
-        val tmpPrefix = stage.getName + ".tmp-"
-        if (fsys.exists(stage.getParent))
-          fsys.listStatus(stage.getParent)
-            .filter(st => st.getPath.getName.startsWith(tmpPrefix) &&
-              st.getModificationTime < System.currentTimeMillis() - 600000L)
-            .foreach(st => fsys.delete(st.getPath, false))
-        val tmp = new Path(stage.getParent,
-          tmpPrefix + java.util.UUID.randomUUID().toString.take(8))
-        StagingFs.copyFile(spark, src, tmp)
-        val dst = new Path(stage, "events.parquet")
-        StagingFs.delete(spark, dst)
-        if (!fsys.rename(tmp, dst)) {
-          // a concurrent JVM's rename can win between our delete and
-          // rename — that copy is byte-identical (same stamp), so losing
-          // the race is success; anything else is a real failure
-          require(StagingFs.exists(spark, dst),
-            s"rename $tmp -> $dst failed and no staged copy exists")
-          fsys.delete(tmp, false)
-        }
-        StagingFs.writeStamp(spark, stampFile, stampNow)
-      }
-      stage.toString
+    StagingFs.stage(spark, dir, "graft-stream-src") { p =>
+      StagingFs.copyFile(spark, new Path(dir, "events.parquet"),
+        new Path(p, "events.parquet"))
     }
 
   /** Deterministic MULTI-batch replay: the events fixture split into 4
@@ -124,12 +89,9 @@ object EventStream {
       .parquet(stageQuarters(spark, dir))
   }
 
-  /** Stamp format version: bumped when the staged layout changes meaning
-    * (v3 = quarters store normalized LTZ TimestampType ts), so stages
-    * produced by an older build are invalidated even if the fixture itself
-    * did not change. */
-  private val stampVersion = "v3|"
-
+  /** The stage directory of the time-quarter split: `q0.parquet` …
+    * `q3.parquet`, one per 8 days of `ts`, built once per (application,
+    * fixture) by [[writeSplits]]. */
   private[graft] def stageQuarters(spark: SparkSession, dir: String): String =
     stageSplit(spark, dir, "graft-stream-quarters",
       ((dayofmonth(col("ts")) - 1) / 8).cast("int"))
@@ -149,65 +111,46 @@ object EventStream {
         pmod(col("event_id"), lit(4)).cast("int")))
   }
 
+  // the batch loader already normalizes ts for any fixture format; writing
+  // its output makes the splits format-independent
   private def stageSplit(spark: SparkSession, dir: String, prefix: String,
-                         splitCol: org.apache.spark.sql.Column): String =
-    synchronized {
-      val stage = StagingFs.namedStageDir(spark,
-        prefix + "-" + Integer.toHexString(dir.hashCode))
-      // the staged quarters are COPIES — invalidate them when the source
-      // fixture was regenerated at the same path (mtime/size stamp),
-      // otherwise multi-batch queries would silently replay stale data
-      val src = new Path(dir, "events.parquet")
-      val stampNow = stampVersion + StagingFs.fileStamp(spark, src)
-      // sibling of the staged dir — the file streaming source lists every
-      // file inside it, so the stamp must live outside
-      val stampFile = new Path(stage.getParent, stage.getName + ".stamp")
-      val fresh = StagingFs.exists(spark, new Path(stage, "q3.parquet")) &&
-        StagingFs.readStamp(spark, stampFile).contains(stampNow)
-      if (!fresh) {
-        val t0 = System.nanoTime()
-        StagingFs.mkdirs(spark, stage)
-        // the batch loader already normalizes ts for any fixture format;
-        // writing its output makes the quarters format-independent
-        // persisted across the count + 4 quarter writes — without it the
-        // full fixture scan + normalization re-executes 5×
-        val raw = graft.Tables.load(spark, dir, "events")
-          .select(rawSchema(LongType).fieldNames.toSeq.map(col): _*)
-          .withColumn("ts", col("ts").cast(TimestampType))
-          .withColumn("__q", splitCol)
-          .persist()
-        try {
-          // a batch with zero rows means the replay silently degenerates
-          // to fewer real micro-batches (r5 failure mode) — fail loudly
-          val qCounts = raw.groupBy(col("__q")).count().collect()
-            .map(r => r.getInt(0) -> r.getLong(1)).toMap
-          require((0 to 3).forall(q => qCounts.getOrElse(q, 0L) > 0L),
-            s"degenerate batch split (rows per batch: $qCounts) — " +
-              "fixture no longer populates all 4 split buckets")
-          (0 to 3).foreach { q =>
-            val tmpOut = new Path(stage, s"tmp_q$q")
-            raw.filter(col("__q") === q).drop("__q")
-              .coalesce(1).write.mode("overwrite").parquet(tmpOut.toString)
-            val part = StagingFs.listParts(spark, tmpOut.toString).head.getPath
-            val dst = new Path(stage, s"q$q.parquet")
-            StagingFs.delete(spark, dst)
-            require(StagingFs.fs(spark, part).rename(part, dst),
-              s"rename $part -> $dst failed")
-            // strictly increasing mtimes pin the micro-batch order
-            StagingFs.setMtime(spark, dst, 1700000000000L + q * 60000L)
-            StagingFs.delete(spark, tmpOut)
-          }
-        } finally raw.unpersist()
-        StagingFs.writeStamp(spark, stampFile, stampNow)
-        // replay-quarter copies are cross-query one-time builds exactly
-        // like the stageOnce dedup stages — ledger them so the bench's
-        // stage attribution covers them too (persistent across JVMs via
-        // the stamp, so a warm stage records nothing)
-        StagingFs.recordBuild(s"$dir#$prefix",
-          (System.nanoTime() - t0) / 1e9)
-      }
-      stage.toString
+                         split: Column): String =
+    StagingFs.stage(spark, dir, prefix) { p =>
+      writeSplits(spark, p, graft.Tables.load(spark, dir, "events")
+        .select(rawSchema(LongType).fieldNames.toSeq.map(col): _*)
+        .withColumn("ts", col("ts").cast(TimestampType)), split)
     }
+
+  /** Write `rows` into the stage directory `p` as `q0.parquet` …
+    * `q3.parquet`, one single-file split per value 0–3 of `split`, with
+    * strictly increasing mtimes: read with `maxFilesPerTrigger = 1`, the
+    * file source replays one split per micro-batch, in split order. */
+  private[streaming] def writeSplits(spark: SparkSession, p: String,
+                                     rows: DataFrame, split: Column): Unit = {
+    // persisted across the count + 4 split writes — without it the full
+    // fixture scan re-executes 5×
+    val raw = rows.withColumn("__q", split).persist()
+    try {
+      // a batch with zero rows means the replay silently degenerates to
+      // fewer real micro-batches (r5 failure mode) — fail loudly
+      val qCounts = raw.groupBy(col("__q")).count().collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      require((0 to 3).forall(q => qCounts.getOrElse(q, 0L) > 0L),
+        s"degenerate batch split (rows per batch: $qCounts) — " +
+          "fixture no longer populates all 4 split buckets")
+      (0 to 3).foreach { q =>
+        val tmpOut = new Path(p, s"tmp_q$q")
+        raw.filter(col("__q") === q).drop("__q")
+          .coalesce(1).write.parquet(tmpOut.toString)
+        val part = StagingFs.listParts(spark, tmpOut.toString).head.getPath
+        val dst = new Path(p, s"q$q.parquet")
+        require(StagingFs.fs(spark, part).rename(part, dst),
+          s"rename $part -> $dst failed")
+        StagingFs.setMtime(spark, dst, 1700000000000L + q * 60000L)
+        StagingFs.delete(spark, tmpOut)
+      }
+    } finally raw.unpersist()
+  }
 
   /** Stop/restore across a REAL restart — the reference's savepoint →
     * resume contract (`flink-runtime` checkpointing; `SavepointV2`):
@@ -261,8 +204,8 @@ object EventStream {
     * collect is the test harness, not the operator. */
   // feeder payload cache: the socket FEEDER (test harness, not the
   // operator) replays the fixture's user_id column; memoized per
-  // (dir, fixture stamp) like the staged file copies, so a best-of-2
-  // bench pass doesn't re-scan the fixture to refill the feed
+  // (dir, fixture stamp), so a best-of-2 bench pass doesn't re-scan the
+  // fixture to refill the feed
   private val feedIdsCache =
     new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
 
@@ -464,7 +407,14 @@ object EventStream {
     * returns: the offset and commit logs and a file source's metadata log
     * are built lazily on the stream thread, from the session that started
     * or read the stream. It is the FileSystem manager when the checkpoint
-    * is on the local `file:` scheme ([[checkpointFileManager]]). */
+    * is on the local `file:` scheme ([[checkpointFileManager]]).
+    *
+    * The query's own session clone registers one more
+    * `StreamingQueryListenerBus` on the SparkContext when a stateful
+    * operator reaches its `streams` (through `stateStoreCoordinator`), and
+    * nothing else removes it. So every bus that appeared by the time `use`
+    * returns is removed; the caller's own bus is made before the snapshot,
+    * and every caller runs its query to termination inside `use`. */
   private[graft] def start[R, T](spark: SparkSession, writer: DataStreamWriter[R],
                                  statePartitions: Int,
                                  checkpoint: Option[String] = None,
@@ -488,11 +438,17 @@ object EventStream {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+    spark.streams // the caller's own bus, so the snapshot keeps it
+    def buses = ListenerBuses.of[StreamingQueryListenerBus](spark.sparkContext)
+    val before = buses.toSet
     val runPrev = set(forRun)
     try {
       val startPrev = set(atStart)
       use(try w.start() finally restore(startPrev))
-    } finally restore(runPrev)
+    } finally {
+      restore(runPrev)
+      buses.filterNot(before).foreach(spark.sparkContext.removeSparkListener)
+    }
   }
 
   /** The checkpoint root Spark resolves for a query started with

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -37,46 +36,15 @@ object VecIngest {
     StructField("embedding", ArrayType(DoubleType))))
 
   /** Embeddings staged as 4 single-file vec_id%4 quarters with strictly
-    * increasing mtimes (the micro-batch order pin), stamped against the
-    * source fixture like the events quarters. */
-  private[graft] def stageVecQuarters(spark: SparkSession,
-                                      dir: String): String = synchronized {
-    val stage = StagingFs.namedStageDir(spark,
-      "graft-vec-quarters-" + Integer.toHexString(dir.hashCode))
-    val src = new Path(dir, "embeddings.parquet")
-    val stampNow = "v1|" + StagingFs.fileStamp(spark, src)
-    val stampFile = new Path(stage.getParent, stage.getName + ".stamp")
-    val fresh = StagingFs.exists(spark, new Path(stage, "q3.parquet")) &&
-      StagingFs.readStamp(spark, stampFile).contains(stampNow)
-    if (!fresh) {
-      StagingFs.mkdirs(spark, stage)
-      val raw = graft.Tables.load(spark, dir, "embeddings")
+    * increasing mtimes (the micro-batch order pin), like the events
+    * quarters ([[EventStream.writeSplits]]). */
+  private def stageVecQuarters(spark: SparkSession, dir: String): String =
+    StagingFs.stage(spark, dir, "graft-vec-quarters") { p =>
+      EventStream.writeSplits(spark, p, graft.Tables.load(spark, dir, "embeddings")
         .select(col("vec_id").cast("long").as("vec_id"),
-          col("embedding").cast("array<double>").as("embedding"))
-        .withColumn("__q", pmod(col("vec_id"), lit(4)).cast("int"))
-        .persist()
-      try {
-        val qCounts = raw.groupBy(col("__q")).count().collect()
-          .map(r => r.getInt(0) -> r.getLong(1)).toMap
-        require((0 to 3).forall(q => qCounts.getOrElse(q, 0L) > 0L),
-          s"degenerate vector-batch split (rows per batch: $qCounts)")
-        (0 to 3).foreach { q =>
-          val tmpOut = new Path(stage, s"tmp_q$q")
-          raw.filter(col("__q") === q).drop("__q")
-            .coalesce(1).write.mode("overwrite").parquet(tmpOut.toString)
-          val part = StagingFs.listParts(spark, tmpOut.toString).head.getPath
-          val dst = new Path(stage, s"q$q.parquet")
-          StagingFs.delete(spark, dst)
-          require(StagingFs.fs(spark, part).rename(part, dst),
-            s"rename $part -> $dst failed")
-          StagingFs.setMtime(spark, dst, 1700000000000L + q * 60000L)
-          StagingFs.delete(spark, tmpOut)
-        }
-      } finally raw.unpersist()
-      StagingFs.writeStamp(spark, stampFile, stampNow)
+          col("embedding").cast("array<double>").as("embedding")),
+        pmod(col("vec_id"), lit(4)).cast("int"))
     }
-    stage.toString
-  }
 
   /** Row-local nearest-cell id over a LITERAL centroid set — the native
     * [[graft.functions.ArgminCell]] kernel (`graft_cell`): one codegen'd

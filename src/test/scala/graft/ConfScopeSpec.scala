@@ -93,10 +93,10 @@ class ConfScopeSpec extends SparkSpecBase {
 
   test("streams report to the calling session's listeners and add at most one listener bus per run") {
     // Spark's per-query session clone registers a StreamingQueryListenerBus
-    // that outlives the query (one per stateful run, whichever session
-    // starts it). A stream started from a child session would add the
-    // child's bus on top, and report its progress to the child's
-    // StreamingQueryManager only
+    // on every stateful run, and `EventStream.start` removes it once the
+    // run is over, so the runs leave the bus count as it was. A stream
+    // started from a child session would add the child's bus on top, and
+    // report its progress to the child's StreamingQueryManager only
     val streams = StreamProgress.attach(spark)
     try {
       def buses = ListenerBuses.count[StreamingQueryListenerBus](spark.sparkContext)
@@ -109,7 +109,7 @@ class ConfScopeSpec extends SparkSpecBase {
         assert(runs.size == 1 && runs.head.terminated, s"run $i: ${runs.map(_.name)}")
         assert(runs.head.progress.size == 5, s"run $i: ${runs.head.progress.map(_.batchId)}")
       }
-      assert(buses - before <= 3, s"listener buses: $before -> $buses")
+      assert(buses == before, s"listener buses: $before -> $buses")
     } finally streams.detach()
   }
 }

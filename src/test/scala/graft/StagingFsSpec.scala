@@ -1,32 +1,47 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.Executors
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+
 import graft.sources.StagingFs
 
-/** [[StagingFs.cleanLocalScratch]] removes only stamped named caches, and a
-  * staged table is read without re-inferring its schema. */
+/** Every staged input is built once per (application, fixture) and lands in
+  * the build ledger, and a staged table is read without re-inferring its
+  * schema. */
 class StagingFsSpec extends SparkSpecBase {
 
-  test("cleanLocalScratch removes stamped caches and leaves unstamped dirs and other files") {
-    val root = Files.createTempDirectory("scratch-clean-spec")
-    def dir(name: String): Path = {
-      val d = Files.createDirectory(root.resolve(name))
-      Files.writeString(d.resolve("part-0.parquet"), "x")
-      d
+  test("replay stages of rows built twice on 4 threads are each built and ledgered once") {
+    // a private copy of the fixture and a private staging root, so every
+    // stage below is first built in this case
+    val dir = Files.createTempDirectory("staging-spec-fixture")
+    Files.list(Paths.get(sfDir)).iterator.asScala
+      .foreach(f => Files.copy(f, dir.resolve(f.getFileName)))
+    val root = Files.createTempDirectory("staging-spec-root")
+    val stages = Seq(
+      "stream_static_join" -> "graft-stream-src",
+      "stream_interval_join_multibatch" -> "graft-stream-quarters",
+      "stream_allowed_lateness" -> "graft-stream-rrobin",
+      "stream_ivf_ingest" -> "graft-vec-quarters")
+    withConf("spark.graft.staging.root" -> ("file:" + root)) {
+      val pool = Executors.newFixedThreadPool(4)
+      try {
+        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+        val rows = stages.map(_._1)
+        Await.result(Future.traverse(rows ++ rows)(r =>
+          Future(SparkEntry.queries(r)(spark, dir.toString))), 10.minutes)
+      } finally pool.shutdown()
     }
-    def file(name: String): Path = Files.writeString(root.resolve(name), "x")
-    val cache = dir("graft-stream-src-1a2b")
-    val stamp = file("graft-stream-src-1a2b.stamp")
-    // a live JVM's unique stage dir: no stamp, must survive
-    val live = dir("graft-ckpt-state-0f1e2d3c-4b5a")
-    val other = file("notes.txt")
-    val looseStamp = file("graft-orphan.stamp")
-
-    StagingFs.cleanLocalScratch(root.toFile)
-
-    assert(!Files.exists(cache) && !Files.exists(stamp))
-    assert(Files.exists(live.resolve("part-0.parquet")))
-    assert(Files.exists(other) && Files.exists(looseStamp))
+    val ledger = StagingFs.buildCosts.keys.toSeq
+    val built = Files.list(root).iterator.asScala.filter(Files.isDirectory(_))
+      .map(_.getFileName.toString).toSeq
+    stages.foreach { case (row, prefix) =>
+      assert(ledger.count(_.endsWith(s"$dir#$prefix")) == 1, s"$row: $ledger")
+      assert(built.count(_.startsWith(prefix + "-")) == 1, s"$row: $built")
+    }
   }
 
   test("constructing a stage-reading query a second time submits no Spark job") {

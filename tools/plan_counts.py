@@ -8,7 +8,10 @@ row's formatted plan, the `rows=` value of its `[probe]` line and the
 `jobs=<build>/<count>` value of its `[probe-parts]` line, marking what
 differs between the two logs. Operator counts are taken from the numbered
 node headers of `explain("formatted")` (`(12) HashAggregate [codegen id : 3]`
-counts one `HashAggregate`).
+counts one `HashAggregate`). A staging directory named in a node label,
+`graft-<prefix>-<suffix>`, has its random suffix replaced by a fixed token
+first, so two runs of the same plan count the same operator
+(`stream_queryable_state` scans `…/graft-qstate-<suffix>`).
 
 Exit status: 0 when every row is identical; 1 when a row's operator counts
 or row count differ, a row is missing from one log, a log holds no `[probe]`
@@ -25,6 +28,8 @@ import sys
 NODE = re.compile(r"^\((\d+)\) (.+?)(?: \[codegen id : \d+\])?\s*$")
 PROBE = re.compile(r"^\[probe\] (\S+) rep(\d+) rows=(\d+) ")
 PARTS = re.compile(r"^\[probe-parts\] (\S+) rep(\d+) .* jobs=(\S+)\s*$")
+# the random suffix `StagingFs.newStageDir` gives a staging directory
+STAGE_DIR = re.compile(r"(graft-[\w-]+?)-[0-9a-f]{8}-[0-9a-f]{4}(?![0-9A-Za-z])")
 
 
 def parse(path):
@@ -35,7 +40,7 @@ def parse(path):
         for line in f:
             m = NODE.match(line)
             if m:
-                ops[m.group(2)] += 1
+                ops[STAGE_DIR.sub(r"\1-*", m.group(2))] += 1
                 continue
             m = PROBE.match(line)
             if m:

@@ -14,9 +14,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 import plan_counts  # noqa: E402
 
 
-def row(name, exchanges=1, rows=10, jobs="0/4"):
+def row(name, exchanges=1, rows=10, jobs="0/4", scan="Scan parquet "):
     """One row of a `graft.Probe … explain 1` log."""
-    plan = ["(1) Scan parquet ", "(2) HashAggregate [codegen id : 1]"]
+    plan = [f"(1) {scan}", "(2) HashAggregate [codegen id : 1]"]
     plan += [f"({3 + i}) Exchange" for i in range(exchanges)]
     return plan + [
         f"[probe] {name} rep1 rows={rows} build=0.10s count=0.20s",
@@ -52,6 +52,18 @@ class PlanCounts(unittest.TestCase):
 
     def test_jobs_difference_alone_is_reported_apart(self):
         self.assertEqual(self.status(row("q01"), row("q01", jobs="1/4")), 2)
+
+    def test_stage_dir_suffix_is_normalized(self):
+        def scan(suffix):
+            return f"BatchScan StateTable [stateCkptLocation=file:/tmp/graft-qstate-{suffix}]"
+        self.assertEqual(self.status(row("q01", scan=scan("0f1e2d3c-4b5a")),
+                                     row("q01", scan=scan("9a8b7c6d-5e4f"))), 0)
+
+    def test_stage_dir_prefix_still_counts(self):
+        def scan(prefix):
+            return f"BatchScan StateTable [stateCkptLocation=file:/tmp/graft-{prefix}-0f1e2d3c-4b5a]"
+        self.assertEqual(self.status(row("q01", scan=scan("qstate")),
+                                     row("q01", scan=scan("qstate-b"))), 1)
 
     def test_empty_logs_fail(self):
         self.assertEqual(self.status([], []), 1)
