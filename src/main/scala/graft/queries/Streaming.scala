@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.streaming.{BroadcastedSideInput, EventStream, ForwardedSideInput, KeyedSideInput, SideInput, StatefulOps}
+import graft.streaming.StatefulOps.{CountEvictor, CountFireTrigger, CountSumCents, DeltaEvictor, Frame, Order, Peer, TimeEvictor}
 import Exact.dec2
 
 /** Structured Streaming inventory (SURVEY §2.2 / M3-M4) — every query runs a
@@ -22,6 +23,19 @@ object Streaming extends QuerySet {
     EventStream.read(s, dir)
 
   private def cents(c: String) = expr(s"CAST(round($c * 100) AS BIGINT)")
+
+  /** Event-time streaming OVER with the built-in (count, sum) aggregate,
+    * renamed to the row's oracle columns: `cnt` maps `row_no` (the running
+    * row number) or `agg._1` (the frame count) to its name, `sumAs` names
+    * the frame sum. */
+  private def overCountSum(s: SparkSession, dir: String, frame: Frame,
+                           cnt: (String, String), sumAs: String): DataFrame = {
+    import s.implicits._
+    StatefulOps.over(events(s, dir).as[EventRow], Order.EventTime, frame,
+      CountSumCents)
+      .select(col("event_id"), col("user_id"), col(cnt._1).as(cnt._2),
+        col("agg._2").as(sumAs))
+  }
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // tumbling event-time window aggregate (DataStreamGroupWindowAggregate)
@@ -448,11 +462,12 @@ object Streaming extends QuerySet {
     }),
 
     // custom count windows over flatMapGroupsWithState (KeyedStream
-    // .countWindow — no Spark equivalent)
+    // .countWindow(size) = GlobalWindows + purging CountTrigger(size) — no
+    // Spark equivalent)
     "stream_count_window" -> ((s, dir) => {
       import s.implicits._
-      val out = StatefulOps.countWindows(
-        events(s, dir).as[EventRow], size = 10).toDF()
+      val out = StatefulOps.triggeredGlobalWindows(
+        events(s, dir).as[EventRow], CountFireTrigger(10)).toDF()
       EventStream.runToTable(s, out, "append")
     }),
 
@@ -501,8 +516,7 @@ object Streaming extends QuerySet {
     "stream_count_trigger_fire" -> ((s, dir) => {
       import s.implicits._
       val out = StatefulOps.triggeredGlobalWindows(
-        events(s, dir).as[EventRow],
-        StatefulOps.CountFireTrigger(5, purge = false)).toDF()
+        events(s, dir).as[EventRow], CountFireTrigger(5, purge = false)).toDF()
       EventStream.runToTable(s, out, "append")
     }),
 
@@ -515,9 +529,9 @@ object Streaming extends QuerySet {
     // partial and no-op outcomes.
     "stream_time_evictor" -> ((s, dir) => {
       import s.implicits._
-      val out = StatefulOps.countWindows(
-        events(s, dir).as[EventRow], size = 10,
-        evictor = Some(StatefulOps.TimeEvictor(48L * 3600 * 1000))).toDF()
+      val out = StatefulOps.triggeredGlobalWindows(
+        events(s, dir).as[EventRow], CountFireTrigger(10),
+        Some(TimeEvictor(48L * 3600 * 1000))).toDF()
       EventStream.runToTable(s, out, "append")
     }),
 
@@ -526,9 +540,9 @@ object Streaming extends QuerySet {
     // last 4 elements
     "stream_count_evictor" -> ((s, dir) => {
       import s.implicits._
-      val out = StatefulOps.countWindows(
-        events(s, dir).as[EventRow], size = 10,
-        evictor = Some(StatefulOps.CountEvictor(4))).toDF()
+      val out = StatefulOps.triggeredGlobalWindows(
+        events(s, dir).as[EventRow], CountFireTrigger(10),
+        Some(CountEvictor(4))).toDF()
       EventStream.runToTable(s, out, "append")
     }),
 
@@ -538,52 +552,52 @@ object Streaming extends QuerySet {
     // before the aggregate (avg 8.8 of 10 kept on the fixture)
     "stream_delta_evictor" -> ((s, dir) => {
       import s.implicits._
-      val out = StatefulOps.countWindows(
-        events(s, dir).as[EventRow], size = 10,
-        evictor = Some(StatefulOps.DeltaEvictor(10000L))).toDF()
+      val out = StatefulOps.triggeredGlobalWindows(
+        events(s, dir).as[EventRow], CountFireTrigger(10),
+        Some(DeltaEvictor(10000L))).toDF()
       EventStream.runToTable(s, out, "append")
     }),
 
     // sliding count windows: every 4th arrival aggregates the last ≤10
-    // (KeyedStream.countWindow(size, slide))
+    // (KeyedStream.countWindow(size, slide) = GlobalWindows +
+    // CountTrigger(slide) + CountEvictor(size))
     "stream_count_window_slide" -> ((s, dir) => {
       import s.implicits._
-      val out = StatefulOps.slidingCountWindows(
-        events(s, dir).as[EventRow], size = 10, slide = 4).toDF()
+      val out = StatefulOps.triggeredGlobalWindows(
+        events(s, dir).as[EventRow], CountFireTrigger(4, purge = false),
+        Some(CountEvictor(10))).toDF()
       EventStream.runToTable(s, out, "append")
     }),
 
     // custom streaming OVER: per-row running aggregates in event-time order
     // (DataStreamOverAggregate / RowTimeUnboundedOver)
     "stream_over_rows" -> ((s, dir) => {
-      import s.implicits._
-      val out = StatefulOps.overRowsUnbounded(events(s, dir).as[EventRow]).toDF()
+      val out = overCountSum(s, dir, Frame(Peer.Row, None),
+        "row_no" -> "run_cnt", "run_cents")
       EventStream.runToTable(s, out, "append")
     }),
 
     // bounded ROWS frame streaming OVER (RowTimeBoundedRowsOver): sum over
     // the last 5 rows per key
     "stream_over_rows_bounded" -> ((s, dir) => {
-      import s.implicits._
-      val out = StatefulOps.overRowsBounded(events(s, dir).as[EventRow], 5).toDF()
+      val out = overCountSum(s, dir, Frame(Peer.Row, Some(5)),
+        "row_no" -> "run_cnt", "win_cents")
       EventStream.runToTable(s, out, "append")
     }),
 
     // unbounded RANGE: running aggregate with peer semantics (rows at the
     // same ts share one result) — RowTimeUnboundedOver RANGE variant
     "stream_over_range_unbounded" -> ((s, dir) => {
-      import s.implicits._
-      val out = StatefulOps.overRangeUnbounded(
-        events(s, dir).as[EventRow]).toDF()
+      val out = overCountSum(s, dir, Frame(Peer.Timestamp, None),
+        "agg._1" -> "win_cnt", "win_cents")
       EventStream.runToTable(s, out, "append")
     }),
 
     // time-bounded RANGE frame streaming OVER (RowTimeBoundedRangeOver):
     // count+sum over the trailing 10 minutes per key, peer rows equal
     "stream_over_range" -> ((s, dir) => {
-      import s.implicits._
-      val out = StatefulOps.overRangeBounded(
-        events(s, dir).as[EventRow], 10 * 60 * 1000L).toDF()
+      val out = overCountSum(s, dir, Frame(Peer.Timestamp, Some(10 * 60 * 1000L)),
+        "agg._1" -> "win_cnt", "win_cents")
       EventStream.runToTable(s, out, "append")
     }),
 
@@ -598,8 +612,8 @@ object Streaming extends QuerySet {
     // exclusive upper frame bound over that order.
     "stream_punctuated_watermark" -> ((s, dir) => {
       import s.implicits._
-      val out = StatefulOps.punctuatedLateTagOrdered(
-        EventStream.readLateBatches(s, dir).as[EventRow]) { e =>
+      val out = StatefulOps.punctuatedLateTag(
+        EventStream.readLateBatches(s, dir).as[EventRow], Order.EventTime) { e =>
           if (e.event_id % 7 == 0) Some(e.ts.getTime - 120000L) else None
         }.toDF()
       EventStream.runToTable(s, out, "append")

@@ -1,24 +1,33 @@
 package graft.streaming
 
+import scala.collection.mutable
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import EventStream.EventRow
 
 /** Custom stateful operators over `flatMapGroupsWithState` — the pieces
-  * Structured Streaming lacks natively (SURVEY §7.4 "custom" rows):
+  * Structured Streaming lacks natively (SURVEY §7.4 "custom" rows). The
+  * reference's custom windowing surface runs on three per-key runtimes:
   *
-  *  - count windows (reference `KeyedStream.countWindow`,
-  *    `KeyedStream.java:403`): fixed-size per-key windows by arrival count;
-  *  - streaming OVER aggregation (reference `DataStreamOverAggregate`,
-  *    `DataStreamOverAggregate.scala:45`, runtime `RowTimeUnboundedOver`):
-  *    per-row running aggregates in event-time order.
+  *  - [[triggeredGlobalWindows]]: GlobalWindows + [[WindowTrigger]] +
+  *    [[Evictor]]. Count windows (reference `KeyedStream.countWindow`,
+  *    `KeyedStream.java:403`/`:425`) are its count trigger/evictor
+  *    compositions;
+  *  - [[over]]: streaming OVER aggregation (reference
+  *    `DataStreamOverAggregate`, `DataStreamOverAggregate.scala:45`), the
+  *    {Rows,Range} × {Bounded,Unbounded} × {row-time,proc-time} matrix as
+  *    an [[Order]] and a [[Frame]];
+  *  - [[punctuatedLateTag]]: punctuated watermarks.
   *
-  * Determinism contract: within each micro-batch, a key's new events are
-  * sorted by (ts, event_id) before entering the state machine; results equal
-  * the batch computation when input batches arrive in event-time order (or
-  * in a single batch). State is O(1) per key for OVER (running counters) and
-  * O(window) for count windows — spillable-safe at scale.
+  * Determinism contract: under [[Order.EventTime]] a key's new events are
+  * sorted by (ts, event_id) within each micro-batch before entering the
+  * state machine; results equal the batch computation when input batches
+  * arrive in event-time order (or in a single batch). Per-key state is
+  * O(1) for unbounded OVER frames (counters + accumulator), O(frame) for
+  * bounded ones and O(window) for the triggered windows.
   */
 object StatefulOps {
 
@@ -27,10 +36,9 @@ object StatefulOps {
     * createAccumulator/accumulate/retract/getValue; `retract` is what the
     * bounded-OVER and retract-stream runtimes demand of a UDAGG). The
     * contract: retraction must be exact under add-then-subtract, so
-    * accumulator state should be integer/decimal, never floats. The
-    * accumulator never crosses a micro-batch boundary — runtimes rebuild
-    * it from the persisted frame contents — so implementations need no
-    * Spark Encoder. */
+    * accumulator state should be integer/decimal, never floats. [[over]]
+    * keeps the accumulator in its per-key state, so `Acc` and `Out` must
+    * be Spark-encodable (a primitive, tuple or case class). */
   trait RetractableAggregateFunction[In, Acc, Out] extends Serializable {
     def createAccumulator(): Acc
     def accumulate(acc: Acc, in: In): Acc
@@ -38,8 +46,8 @@ object StatefulOps {
     def getValue(acc: Acc): Out
   }
 
-  /** (count, sum) over integer cents — the instance backing the built-in
-    * RANGE frame (reference CountAggFunction + SumAggFunction pairing in
+  /** (count, sum) over integer cents — the built-in OVER aggregate
+    * (reference CountAggFunction + SumAggFunction pairing in
     * `RowTimeBoundedRangeOver`). */
   object CountSumCents
     extends RetractableAggregateFunction[Long, (Long, Long), (Long, Long)] {
@@ -51,13 +59,32 @@ object StatefulOps {
     override def getValue(acc: (Long, Long)): (Long, Long) = acc
   }
 
-  // ---- count windows ------------------------------------------------------
+  /** Per-key processing order within a micro-batch. */
+  sealed trait Order
+  object Order {
+    /** Sorted by (ts, event_id): results are a pure function of the data. */
+    case object EventTime extends Order
+    /** As the rows arrive: processing-time semantics, spec-verified under
+      * controlled MemoryStream batches rather than by the value oracle. */
+    case object Arrival extends Order
+  }
 
-  /** Per-key buffer of not-yet-complete window events + windows emitted. */
-  case class CountWindowState(pendingTs: List[Long], pendingCents: List[Long],
-                              emitted: Long)
-  case class CountWindowOut(user_id: Long, win_idx: Long, n_events: Int,
-                            sum_cents: Long)
+  private def inOrder(order: Order, it: Iterator[EventRow]): Vector[EventRow] =
+    order match {
+      case Order.EventTime => it.toVector.sortBy(e => (e.ts.getTime, e.event_id))
+      case Order.Arrival   => it.toVector
+    }
+
+  private def cents(e: EventRow): Long = math.round(e.value * 100)
+
+  // ---- GlobalWindows + Trigger + Evictor ----------------------------------
+
+  /** Per-key window contents (event-time ms, cents), windows fired so far
+    * and arrivals since the last fire. */
+  case class WindowState(ts: List[Long], cents: List[Long], fired: Long,
+                         sinceFire: Long)
+  case class WindowOut(user_id: Long, win_idx: Long, n_events: Int,
+                       sum_cents: Long)
 
   /** Pre-aggregation window evictors (reference `windowing/evictors/` —
     * `Evictor.java`, `TimeEvictor.java`, `CountEvictor.java`,
@@ -79,6 +106,7 @@ object StatefulOps {
   /** Keep only the LAST maxCount elements (reference CountEvictor keeps
     * from the end of the buffer). */
   final case class CountEvictor(maxCount: Int) extends Evictor {
+    require(maxCount >= 1, s"CountEvictor maxCount must be >= 1, got $maxCount")
     override def evict(win: Seq[(Long, Long)]): Seq[(Long, Long)] =
       win.takeRight(maxCount)
   }
@@ -93,66 +121,31 @@ object StatefulOps {
     }
   }
 
-  /** Tumbling count windows of `size` events per key; only complete windows
-    * are emitted (Flink countWindow semantics). The optional [[Evictor]]
-    * runs before the window aggregate, so the emitted aggregate may cover
-    * fewer than `size` elements. */
-  def countWindows(events: Dataset[EventRow], size: Int,
-                   evictor: Option[Evictor] = None): Dataset[CountWindowOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, it: Iterator[EventRow], state: GroupState[CountWindowState]) =>
-          val prev = state.getOption.getOrElse(CountWindowState(Nil, Nil, 0L))
-          val fresh = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-          var ts = prev.pendingTs ++ fresh.map(_.ts.getTime)
-          var cents = prev.pendingCents ++
-            fresh.map(e => math.round(e.value * 100))
-          val out = scala.collection.mutable.ArrayBuffer[CountWindowOut]()
-          var emitted = prev.emitted
-          while (ts.length >= size) {
-            val (wTs, restTs) = ts.splitAt(size)
-            val (wCents, restCents) = cents.splitAt(size)
-            val (keptTs, keptCents) = evictor match {
-              case Some(ev) => ev.evict(wTs.zip(wCents)).unzip
-              case None     => (wTs, wCents)
-            }
-            out += CountWindowOut(key, emitted, keptTs.length, keptCents.sum)
-            emitted += 1
-            ts = restTs; cents = restCents
-          }
-          state.update(CountWindowState(ts.toList, cents.toList, emitted))
-          out.iterator
-      }
-  }
-
   /** Per-element trigger decisions (reference `windowing/triggers/
     * Trigger.java` → `TriggerResult.java`: CONTINUE / FIRE /
-    * FIRE_AND_PURGE / PURGE). `onElement` sees the window contents with
-    * the new element already appended, exactly the reference's
-    * element-then-decide order. */
+    * FIRE_AND_PURGE / PURGE). */
   sealed trait TriggerResult
   case object Continue extends TriggerResult
   case object Fire extends TriggerResult
   case object FireAndPurge extends TriggerResult
   case object Purge extends TriggerResult
 
+  /** `onElement` sees the window contents with the new element already
+    * appended — the reference's element-then-decide order — and the
+    * number of arrivals since the last fire, the new one included. */
   trait WindowTrigger extends Serializable {
-    def onElement(win: Seq[(Long, Long)]): TriggerResult
+    def onElement(win: Seq[(Long, Long)], sinceFire: Long): TriggerResult
   }
 
-  /** reference `CountTrigger.java` — fire every n-th element: the
-    * reference keeps a ReducingState arrival counter that CLEARS on fire
-    * while the window contents stay (GlobalWindows + CountTrigger grows
-    * unboundedly). Purged windows restart the count at the purge, so the
-    * window length IS the since-last-fire counter in both modes —
-    * `length % n == 0` reproduces the counter-clear exactly. */
+  /** reference `CountTrigger.java` — fire every n-th element: the count is
+    * the reference's arrival counter, which clears on fire while a
+    * non-purged window keeps its contents (GlobalWindows + CountTrigger
+    * grows unboundedly unless an evictor trims it). */
   final case class CountFireTrigger(n: Int, purge: Boolean = true)
     extends WindowTrigger {
-    override def onElement(win: Seq[(Long, Long)]): TriggerResult =
-      if (win.length >= n && win.length % n == 0) {
-        if (purge) FireAndPurge else Fire
-      } else Continue
+    require(n >= 1, s"CountFireTrigger n must be >= 1, got $n")
+    override def onElement(win: Seq[(Long, Long)], sinceFire: Long): TriggerResult =
+      if (sinceFire < n) Continue else if (purge) FireAndPurge else Fire
   }
 
   /** reference `DeltaTrigger.java` — fire when the arriving element's
@@ -162,7 +155,7 @@ object StatefulOps {
     * element). */
   final case class DeltaFireTrigger(thresholdCents: Long)
     extends WindowTrigger {
-    override def onElement(win: Seq[(Long, Long)]): TriggerResult =
+    override def onElement(win: Seq[(Long, Long)], sinceFire: Long): TriggerResult =
       if ((win.last._2 - win.head._2).abs >= thresholdCents) FireAndPurge
       else Continue
   }
@@ -170,308 +163,151 @@ object StatefulOps {
   /** GlobalWindows + custom [[WindowTrigger]] (+ optional [[Evictor]]) —
     * the reference's fully-custom windowing triple
     * (`GlobalWindows.java` assigner, `Trigger.java`, `Evictor.java`):
-    * elements accumulate per key until the trigger fires; FIRE emits the
-    * (evicted) window aggregate and keeps the contents, FIRE_AND_PURGE
-    * emits and clears, PURGE clears silently. Per-element decisions are
-    * arrival-order-defined, so this is spec-verified under controlled
-    * MemoryStream batches like the proc-time operators. State is the
-    * window contents + firing counter. */
+    * elements accumulate per key in (ts, event_id) order until the trigger
+    * fires; FIRE emits the (evicted) window aggregate and keeps the
+    * contents, FIRE_AND_PURGE emits and clears, PURGE clears silently.
+    * Evicted elements leave the window state too, as in the reference's
+    * evicting window operator (FLINK-4369).
+    *
+    * Count windows are compositions: tumbling `countWindow(size)` is
+    * `CountFireTrigger(size)`; sliding `countWindow(size, slide)` is
+    * `CountFireTrigger(slide, purge = false)` + `CountEvictor(size)`, whose
+    * state stays at most size + slide − 1 elements per key. */
   def triggeredGlobalWindows(events: Dataset[EventRow],
                              trigger: WindowTrigger,
                              evictor: Option[Evictor] = None)
-      : Dataset[CountWindowOut] = {
+      : Dataset[WindowOut] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, it: Iterator[EventRow], state: GroupState[CountWindowState]) =>
-          val prev = state.getOption.getOrElse(CountWindowState(Nil, Nil, 0L))
-          var win = prev.pendingTs.zip(prev.pendingCents)
-          var fired = prev.emitted
-          val out = scala.collection.mutable.ArrayBuffer[CountWindowOut]()
-          def emit(): Unit = {
-            val kept = evictor.map(_.evict(win)).getOrElse(win)
-            out += CountWindowOut(key, fired, kept.length, kept.map(_._2).sum)
+        (key: Long, it: Iterator[EventRow], state: GroupState[WindowState]) =>
+          val prev = state.getOption.getOrElse(WindowState(Nil, Nil, 0L, 0L))
+          var win = prev.ts.zip(prev.cents).toVector
+          var fired = prev.fired
+          var since = prev.sinceFire
+          val out = Vector.newBuilder[WindowOut]
+          def fire(): Unit = {
+            evictor.foreach(ev => win = ev.evict(win).toVector)
+            out += WindowOut(key, fired, win.length, win.map(_._2).sum)
             fired += 1
+            since = 0
           }
-          it.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-            win = win :+ (e.ts.getTime -> math.round(e.value * 100))
-            trigger.onElement(win) match {
+          inOrder(Order.EventTime, it).foreach { e =>
+            win :+= (e.ts.getTime -> cents(e))
+            since += 1
+            trigger.onElement(win, since) match {
               case Continue     =>
-              case Purge        => win = Nil
-              case Fire         => emit()
-              case FireAndPurge => emit(); win = Nil
+              case Purge        => win = Vector.empty
+              case Fire         => fire()
+              case FireAndPurge => fire(); win = Vector.empty
             }
           }
-          state.update(CountWindowState(win.map(_._1).toList,
-            win.map(_._2).toList, fired))
-          out.iterator
+          state.update(WindowState(win.map(_._1).toList, win.map(_._2).toList,
+            fired, since))
+          out.result().iterator
       }
   }
 
-  /** Sliding count windows (reference `KeyedStream.countWindow(size,
-    * slide)` `KeyedStream.java:425` = GlobalWindows + CountTrigger(slide)
-    * + CountEvictor(size)): every `slide` arrivals per key, emit the
-    * aggregate of the last min(size, seen) elements. State = the last
-    * `size` elements + the arrival counter — O(size) per key. */
-  def slidingCountWindows(events: Dataset[EventRow], size: Int,
-                          slide: Int): Dataset[CountWindowOut] = {
+  // ---- streaming OVER -----------------------------------------------------
+
+  /** What shares one aggregate in an OVER frame. */
+  sealed trait Peer
+  object Peer {
+    /** ROWS frames: every row is its own peer group. */
+    case object Row extends Peer
+    /** RANGE over event time: rows sharing a timestamp are peers
+      * (standard SQL RANGE CURRENT ROW; the reference emits per timestamp
+      * too). Needs [[Order.EventTime]]. */
+    case object Timestamp extends Peer
+    /** RANGE over processing time: a key's processing time is its
+      * micro-batch number (counted over the batches that carry the key),
+      * so all its rows of one batch are peers — the reference registers
+      * one timer per proctime value and emits that timestamp's rows
+      * together. Aging quiet keys would need a processing-time timeout. */
+    case object MicroBatch extends Peer
+  }
+
+  /** OVER frame ending at the current peer group. `extent` is how far back
+    * it reaches; None is UNBOUNDED PRECEDING. For [[Peer.Row]] it is the
+    * number of rows in the frame, the current one included (≥ 1); for
+    * [[Peer.Timestamp]] the milliseconds before the current timestamp
+    * (≥ 0); for [[Peer.MicroBatch]] the micro-batches before the current
+    * one (≥ 0). */
+  final case class Frame(peer: Peer, extent: Option[Long]) {
+    private def least = if (peer == Peer.Row) 1L else 0L
+    extent.foreach(n =>
+      require(n >= least, s"Frame($peer) extent must be >= $least, got $n"))
+    /** How far a frame row's peer key may trail the current peer's. */
+    private[StatefulOps] def reach: Option[Long] = extent.map(_ - least)
+  }
+
+  /** Per-key OVER state: rows and micro-batches seen, the accumulator and,
+    * for bounded frames only, the frame's rows as (peer key, cents). */
+  case class OverState[A](rows: Long, batches: Long, acc: A,
+                          frameKeys: List[Long], frameCents: List[Long])
+  /** `row_no` numbers the key's rows in processing order from 1; `agg` is
+    * the aggregate over the row's frame. */
+  case class OverOut[V](event_id: Long, user_id: Long, row_no: Long, agg: V)
+
+  /** Per-row aggregate over a per-key [[Frame]] in the given [[Order]] —
+    * the reference's OVER runtimes (`flink-table/.../runtime/aggregate/`
+    * RowTime{Unbounded,BoundedRows,BoundedRange}Over and
+    * ProcTime{Unbounded,BoundedRows,BoundedRange}Over) as one state
+    * machine. Each peer group's rows `accumulate` into the running
+    * accumulator, rows that fall out of a bounded frame `retract` (integer
+    * arithmetic, so add-then-subtract is exact), and every row of the
+    * group gets the same value. Per-row cost is O(1 + evicted). State is
+    * the accumulator and two counters for unbounded frames, plus the frame
+    * rows — O(frame) — for bounded ones. */
+  def over[Acc: TypeTag, Out: TypeTag](
+      events: Dataset[EventRow], order: Order, frame: Frame,
+      agg: RetractableAggregateFunction[Long, Acc, Out]): Dataset[OverOut[Out]] = {
+    require(frame.peer != Peer.Timestamp || order == Order.EventTime,
+      "over: Timestamp peers need Order.EventTime")
     import events.sparkSession.implicits._
     events.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, it: Iterator[EventRow], state: GroupState[CountWindowState]) =>
-          val prev = state.getOption.getOrElse(CountWindowState(Nil, Nil, 0L))
-          var bufTs = prev.pendingTs
-          var bufCents = prev.pendingCents
-          var seen = prev.emitted // reuse the counter slot: arrivals seen
-          val out = scala.collection.mutable.ArrayBuffer[CountWindowOut]()
-          it.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-            bufTs = (bufTs :+ e.ts.getTime).takeRight(size)
-            bufCents = (bufCents :+ math.round(e.value * 100)).takeRight(size)
-            seen += 1
-            if (seen % slide == 0)
-              out += CountWindowOut(key, seen / slide - 1,
-                bufCents.length, bufCents.sum)
+        (key: Long, it: Iterator[EventRow], state: GroupState[OverState[Acc]]) =>
+          val prev = state.getOption
+            .getOrElse(OverState(0L, 0L, agg.createAccumulator(), Nil, Nil))
+          var rows = prev.rows
+          var acc = prev.acc
+          val batch = prev.batches + 1
+          val buf = mutable.Queue.from(prev.frameKeys.zip(prev.frameCents))
+          val sorted = inOrder(order, it)
+          // peer groups in processing order, each with its peer key
+          val groups = frame.peer match {
+            case Peer.Row        =>
+              sorted.zipWithIndex.map { case (e, i) => (rows + 1 + i, Vector(e)) }
+            case Peer.Timestamp  => sorted.groupBy(_.ts.getTime).toVector.sortBy(_._1)
+            case Peer.MicroBatch => Vector(batch -> sorted)
           }
-          state.update(CountWindowState(bufTs, bufCents, seen))
-          out.iterator
-      }
-  }
-
-  // ---- streaming OVER (unbounded preceding, event-time rows) --------------
-
-  case class OverState(cnt: Long, cents: Long)
-  case class OverOut(event_id: Long, user_id: Long, run_cnt: Long,
-                     run_cents: Long)
-
-  /** Per-row running count + sum over everything seen so far for the key, in
-    * event-time order — the RowTimeUnboundedOver subset. State is two
-    * counters per key. */
-  def overRowsUnbounded(events: Dataset[EventRow]): Dataset[OverOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, it: Iterator[EventRow], state: GroupState[OverState]) =>
-          var s = state.getOption.getOrElse(OverState(0L, 0L))
-          val out = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).map { e =>
-            s = OverState(s.cnt + 1, s.cents + math.round(e.value * 100))
-            OverOut(e.event_id, key, s.cnt, s.cents)
+          val out = Vector.newBuilder[OverOut[Out]]
+          groups.foreach { case (cur, peers) =>
+            peers.foreach { e =>
+              acc = agg.accumulate(acc, cents(e))
+              if (frame.extent.isDefined) buf += (cur -> cents(e))
+            }
+            frame.reach.foreach { r =>
+              while (buf.nonEmpty && cur - buf.head._1 > r)
+                acc = agg.retract(acc, buf.dequeue()._2)
+            }
+            val v = agg.getValue(acc)
+            peers.foreach { e => rows += 1; out += OverOut(e.event_id, key, rows, v) }
           }
-          state.update(s)
-          out.iterator
-      }
-  }
-
-  // ---- streaming OVER, bounded ROWS frame ---------------------------------
-
-  case class BoundedOverState(window: List[Long], cnt: Long)
-  case class BoundedOverOut(event_id: Long, user_id: Long, run_cnt: Long,
-                            win_cents: Long)
-
-  /** Per-row sum over the last `frame` rows (inclusive) per key in
-    * event-time order — the RowTimeBoundedRowsOver subset
-    * (`flink-table/.../runtime/aggregate/RowTimeBoundedRowsOver`). State is
-    * the sliding frame contents: O(frame) per key. */
-  def overRowsBounded(events: Dataset[EventRow], frame: Int): Dataset[BoundedOverOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, it: Iterator[EventRow], state: GroupState[BoundedOverState]) =>
-          var s = state.getOption.getOrElse(BoundedOverState(Nil, 0L))
-          val out = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).map { e =>
-            val w = (s.window :+ math.round(e.value * 100)).takeRight(frame)
-            s = BoundedOverState(w, s.cnt + 1)
-            BoundedOverOut(e.event_id, key, s.cnt, w.sum)
-          }
-          state.update(s)
-          out.iterator
-      }
-  }
-
-  // ---- streaming OVER, time-bounded RANGE frame ---------------------------
-
-  case class RangeOverState(winTs: List[Long], winCents: List[Long])
-  case class RangeOverOut(event_id: Long, user_id: Long, win_cnt: Long,
-                          win_cents: Long)
-
-  /** Per-row count + sum over events within [ts − rangeMs, ts] per key in
-    * event-time order — the RowTimeBoundedRangeOver subset
-    * (`flink-table/.../runtime/aggregate/RowTimeBoundedRangeOver.scala`).
-    *
-    * RANGE-frame peer semantics: all rows sharing a timestamp get the SAME
-    * aggregate, including one another (standard SQL RANGE CURRENT ROW =
-    * current peer group; the reference emits per-timestamp too). Rows are
-    * therefore processed one timestamp at a time.
-    *
-    * The accumulator is RETRACTABLE (reference `AggregateFunction
-    * .retract`, used by exactly these bounded-OVER runtimes): entering
-    * rows `accumulate` into the running (count, sum), rows leaving the
-    * frame `retract` — integer arithmetic, so add-then-subtract is exact.
-    * Per-emission cost is O(evicted), not O(frame). State is the frame
-    * contents: O(rows in range) per key. */
-  def overRangeBounded(events: Dataset[EventRow], rangeMs: Long): Dataset[RangeOverOut] = {
-    import events.sparkSession.implicits._
-    overRangeBoundedAgg(events, rangeMs, CountSumCents) {
-      (e, key, v) => RangeOverOut(e.event_id, key, v._1, v._2)
-    }
-  }
-
-  /** RANGE frame over an arbitrary [[RetractableAggregateFunction]] — the
-    * user-facing UDAGG-with-retract surface. The accumulator is rebuilt
-    * from the persisted frame once per batch, then maintained
-    * incrementally: entering rows `accumulate`, rows leaving the frame
-    * `retract` — per-emission cost O(evicted), not O(frame). */
-  def overRangeBoundedAgg[Acc, Out, R: org.apache.spark.sql.Encoder](
-      events: Dataset[EventRow], rangeMs: Long,
-      agg: RetractableAggregateFunction[Long, Acc, Out])(
-      emit: (EventRow, Long, Out) => R): Dataset[R] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, it: Iterator[EventRow], state: GroupState[RangeOverState]) =>
-          var s = state.getOption.getOrElse(RangeOverState(Nil, Nil))
-          // accumulator rebuilt from the frame once per batch, then
-          // maintained incrementally (accumulate/retract) per timestamp
-          var acc = s.winCents.foldLeft(agg.createAccumulator())(agg.accumulate)
-          val out = scala.collection.mutable.ArrayBuffer[R]()
-          val byTs = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-            .groupBy(_.ts.getTime).toSeq.sortBy(_._1)
-          byTs.foreach { case (ts, peers) =>
-            val entering = peers.map(e => math.round(e.value * 100))
-            entering.foreach(c => acc = agg.accumulate(acc, c))
-            val wTs = s.winTs ++ peers.map(_ => ts)
-            val wCents = s.winCents ++ entering
-            val (evict, keep) = wTs.zip(wCents).span(_._1 < ts - rangeMs)
-            evict.foreach { case (_, c) => acc = agg.retract(acc, c) }
-            s = RangeOverState(keep.map(_._1), keep.map(_._2))
-            peers.foreach(e => out += emit(e, key, agg.getValue(acc)))
-          }
-          state.update(s)
-          out.iterator
-      }
-  }
-
-  case class RangeUnbState(cnt: Long, cents: Long)
-
-  /** Per-row running count + sum over ALL prior events per key in event-time
-    * order, with RANGE peer semantics: rows sharing a timestamp receive the
-    * SAME aggregate, each including all of its peers — the
-    * RowTimeUnboundedRangeOver runtime (`flink-table/.../runtime/aggregate/
-    * RowTimeUnboundedOver.scala` RANGE variant; completes the row-time
-    * {Rows,Range} × {Bounded,Unbounded} matrix). O(1) state per key: only
-    * the running accumulator survives, no frame buffer — the unbounded
-    * frame never retracts. */
-  def overRangeUnbounded(events: Dataset[EventRow]): Dataset[RangeOverOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, it: Iterator[EventRow], state: GroupState[RangeUnbState]) =>
-          var s = state.getOption.getOrElse(RangeUnbState(0L, 0L))
-          val out = scala.collection.mutable.ArrayBuffer[RangeOverOut]()
-          val byTs = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-            .groupBy(_.ts.getTime).toSeq.sortBy(_._1)
-          byTs.foreach { case (_, peers) =>
-            s = RangeUnbState(s.cnt + peers.size,
-              s.cents + peers.map(e => math.round(e.value * 100)).sum)
-            peers.foreach(e => out += RangeOverOut(e.event_id, key, s.cnt, s.cents))
-          }
-          state.update(s)
-          out.iterator
-      }
-  }
-
-  // ---- streaming OVER, processing-time rows -------------------------------
-
-  /** Per-row running count + sum in ARRIVAL order — the ProcTimeUnboundedOver
-    * subset (`flink-table/.../runtime/aggregate/ProcTimeUnboundedOver.scala`).
-    * Processing-time results depend on arrival order by definition, so this
-    * is spec-verified with controlled MemoryStream batches rather than the
-    * value oracle. */
-  def overRowsProcTime(events: Dataset[EventRow]): Dataset[OverOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, it: Iterator[EventRow], state: GroupState[OverState]) =>
-          var s = state.getOption.getOrElse(OverState(0L, 0L))
-          val out = it.map { e =>
-            s = OverState(s.cnt + 1, s.cents + math.round(e.value * 100))
-            OverOut(e.event_id, key, s.cnt, s.cents)
-          }.toVector
-          state.update(s)
-          out.iterator
-      }
-  }
-
-  /** Last-`frame` rows in ARRIVAL order per key — the ProcTimeBoundedRowsOver
-    * runtime (`flink-table/.../runtime/aggregate/ProcTimeBoundedRowsOver
-    * .scala`). Completes the proc-time ROWS column of the OVER matrix; like
-    * [[overRowsProcTime]], results are arrival-order-defined (verified by
-    * spec under a controlled MemoryStream, not by the value oracle). State
-    * is the O(frame) sliding window per key. */
-  def overRowsProcTimeBounded(events: Dataset[EventRow],
-                              frame: Int): Dataset[BoundedOverOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, it: Iterator[EventRow], state: GroupState[BoundedOverState]) =>
-          var s = state.getOption.getOrElse(BoundedOverState(Nil, 0L))
-          val out = it.map { e =>
-            val w = (s.window :+ math.round(e.value * 100)).takeRight(frame)
-            s = BoundedOverState(w, s.cnt + 1)
-            BoundedOverOut(e.event_id, key, s.cnt, w.sum)
-          }.toVector
-          state.update(s)
-          out.iterator
-      }
-  }
-
-  case class ProcRangeState(batchNo: Long, winBatch: List[Long],
-                            winCents: List[Long])
-
-  /** Count + sum over rows that ARRIVED within the last `rangeBatches`
-    * per-key micro-batches (inclusive) — the ProcTimeBoundedRangeOver
-    * runtime (`flink-table/.../runtime/aggregate/ProcTimeBoundedRangeOver
-    * .scala`) under the micro-batch model, completing the reference's
-    * {Rows,Range} × {Bounded,Unbounded} × {row-time,proc-time} matrix.
-    *
-    * Pinned processing-time model: a key's processing time is its
-    * micro-batch sequence number, so all rows of one batch are PEERS —
-    * they receive the same aggregate, including one another (the
-    * reference registers one timer per proctime value and emits that
-    * timestamp's rows together). The accumulator is RETRACTABLE: entering
-    * rows `accumulate`, rows older than the range `retract` — per-batch
-    * cost O(entering + evicted), state O(rows in range). The per-key
-    * clock advances only when the key receives data; aging quiet keys
-    * needs a processing-time timeout (the reference's timer service).
-    * Arrival-order-defined, so spec-verified under controlled MemoryStream
-    * batches like the proc-time ROWS pair. */
-  def overRangeProcTimeBounded(events: Dataset[EventRow],
-                               rangeBatches: Long): Dataset[RangeOverOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, it: Iterator[EventRow], state: GroupState[ProcRangeState]) =>
-          val prev = state.getOption.getOrElse(ProcRangeState(-1L, Nil, Nil))
-          val now = prev.batchNo + 1
-          var acc = prev.winCents
-            .foldLeft(CountSumCents.createAccumulator())(CountSumCents.accumulate)
-          // deterministic order within the batch for the emitted rows
-          val entering = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-          val cents = entering.map(e => math.round(e.value * 100))
-          cents.foreach(c => acc = CountSumCents.accumulate(acc, c))
-          val wBatch = prev.winBatch ++ entering.map(_ => now)
-          val wCents = prev.winCents ++ cents
-          val (evict, keep) = wBatch.zip(wCents).span(_._1 < now - rangeBatches + 1)
-          evict.foreach { case (_, c) => acc = CountSumCents.retract(acc, c) }
-          state.update(ProcRangeState(now, keep.map(_._1), keep.map(_._2)))
-          val v = CountSumCents.getValue(acc)
-          entering.iterator.map(e => RangeOverOut(e.event_id, key, v._1, v._2))
+          state.update(OverState(rows, batch, acc, buf.map(_._1).toList,
+            buf.map(_._2).toList))
+          out.result().iterator
       }
   }
 
   // ---- punctuated watermarks ----------------------------------------------
 
-  case class PunctOut(event_id: Long, user_id: Long, ts_ms: Long,
-                      wm_ms: Long, is_late: Boolean)
+  /** `wm_ms` is the watermark the row was judged against, None before the
+    * key's first marker (the reference starts at Long.MIN_VALUE: nothing
+    * is late). */
+  case class PunctOut(event_id: Long, user_id: Long, wm_ms: Option[Long],
+                      is_late: Boolean)
 
   /** Punctuated watermarks (reference `AssignerWithPunctuatedWatermarks` /
     * `TimestampsAndPunctuatedWatermarksOperator.java`): `punct` inspects
@@ -481,49 +317,20 @@ object StatefulOps {
     * established by the records BEFORE it. Spark's own watermark stays
     * the derived global bound; what it cannot express is exactly this
     * per-record decision, reproduced here as a per-key state machine
-    * (O(1) state: the current watermark). Records are processed in
-    * arrival order within each micro-batch, so results are
-    * arrival-order-defined and spec-verified under controlled
-    * MemoryStream batches, like the proc-time operators. */
-  def punctuatedLateTag(events: Dataset[EventRow])
+    * (O(1) state: the current watermark). Under [[Order.EventTime]] the
+    * watermark each record is judged against is a pure function of the
+    * data, stateable as a SQL window with an exclusive upper frame bound;
+    * under [[Order.Arrival]] it is arrival-order-defined. */
+  def punctuatedLateTag(events: Dataset[EventRow], order: Order)
                        (punct: EventRow => Option[Long]): Dataset[PunctOut] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (key: Long, it: Iterator[EventRow], state: GroupState[Long]) =>
           var wm = state.getOption.getOrElse(Long.MinValue)
-          val out = it.map { e =>
-            val row = PunctOut(e.event_id, key, e.ts.getTime, wm,
-              e.ts.getTime < wm)
-            punct(e).foreach(w => wm = math.max(wm, w))
-            row
-          }.toVector
-          state.update(wm)
-          out.iterator
-      }
-  }
-
-  case class PunctTagOut(event_id: Long, user_id: Long, wm_ms: Option[Long],
-                         is_late: Boolean)
-
-  /** Value-oracle-able variant of [[punctuatedLateTag]]: per-key processing
-    * order is pinned to (ts, event_id) — the same deterministic order every
-    * other oracled count/trigger operator uses — so the watermark each
-    * record is judged against (the max over marker records strictly BEFORE
-    * it) is a pure function of the data, stateable as a SQL window with an
-    * exclusive upper frame bound. `wm_ms` is None until the first marker
-    * (the reference starts at Long.MIN_VALUE: nothing is late). */
-  def punctuatedLateTagOrdered(events: Dataset[EventRow])
-                              (punct: EventRow => Option[Long]): Dataset[PunctTagOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, it: Iterator[EventRow], state: GroupState[Long]) =>
-          var wm = state.getOption.getOrElse(Long.MinValue)
-          val out = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).map { e =>
-            val row = PunctTagOut(e.event_id, key,
-              if (wm == Long.MinValue) None else Some(wm),
-              wm != Long.MinValue && e.ts.getTime < wm)
+          val out = inOrder(order, it).map { e =>
+            val row = PunctOut(e.event_id, key,
+              Some(wm).filter(_ != Long.MinValue), e.ts.getTime < wm)
             punct(e).foreach(w => wm = math.max(wm, w))
             row
           }

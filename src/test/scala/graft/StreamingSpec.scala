@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.streaming.{EventStream, RetractStream, StatefulOps}
+import graft.streaming.StatefulOps.{CountEvictor, CountFireTrigger, CountSumCents, DeltaEvictor, DeltaFireTrigger, Frame, Order, Peer, TimeEvictor}
 import EventStream.EventRow
 
 /** Incremental (multi-micro-batch) Structured Streaming behavior: watermarks
@@ -19,6 +20,9 @@ class StreamingSpec extends SparkSpecBase {
   private def ev(id: Long, minute: Int, user: Long, typ: String = "click",
                  value: Double = 1.0): EventRow =
     EventRow(id, new Timestamp(3600000L + minute * 60000L), user, typ, value, "{}")
+
+  /** [[StatefulOps.over]]'s rows under the built-in (count, sum) aggregate. */
+  private type CountSumOut = StatefulOps.OverOut[(Long, Long)]
 
   private def mem(): MemoryStream[EventRow] = {
     implicit val sqlCtx = spark.sqlContext
@@ -238,7 +242,7 @@ class StreamingSpec extends SparkSpecBase {
   test("count windows maintain state across micro-batches") {
     import spark.implicits._
     val input = mem()
-    val out = StatefulOps.countWindows(input.toDS(), size = 3)
+    val out = StatefulOps.triggeredGlobalWindows(input.toDS(), CountFireTrigger(3))
     val q = out.toDF().writeStream.format("memory").queryName("cw_test")
       .outputMode("append").start()
     try {
@@ -247,11 +251,11 @@ class StreamingSpec extends SparkSpecBase {
       assert(spark.table("cw_test").count() == 0)
       input.addData(ev(3, 3, 5), ev(4, 4, 5))     // completes window 0
       q.processAllAvailable()
-      val w0 = spark.table("cw_test").as[StatefulOps.CountWindowOut].collect()
+      val w0 = spark.table("cw_test").as[StatefulOps.WindowOut].collect()
       assert(w0.length == 1 && w0.head.win_idx == 0 && w0.head.n_events == 3)
       input.addData(ev(5, 5, 5), ev(6, 6, 5))     // completes window 1
       q.processAllAvailable()
-      val all = spark.table("cw_test").as[StatefulOps.CountWindowOut].collect()
+      val all = spark.table("cw_test").as[StatefulOps.WindowOut].collect()
       assert(all.map(_.win_idx).sorted.toSeq == Seq(0L, 1L))
     } finally q.stop()
   }
@@ -260,8 +264,8 @@ class StreamingSpec extends SparkSpecBase {
     import spark.implicits._
     val input = mem()
     // windows of 3; evict elements older than 5 min behind the window max
-    val out = StatefulOps.countWindows(input.toDS(), size = 3,
-      evictor = Some(StatefulOps.TimeEvictor(5 * 60000L)))
+    val out = StatefulOps.triggeredGlobalWindows(input.toDS(),
+      CountFireTrigger(3), Some(TimeEvictor(5 * 60000L)))
     val q = out.toDF().writeStream.format("memory").queryName("cwe_test")
       .outputMode("append").start()
     try {
@@ -270,7 +274,7 @@ class StreamingSpec extends SparkSpecBase {
       input.addData(ev(1, 1, 8, value = 1.0), ev(2, 19, 8, value = 2.0),
         ev(3, 20, 8, value = 4.0))
       q.processAllAvailable()
-      val w = spark.table("cwe_test").as[StatefulOps.CountWindowOut].collect()
+      val w = spark.table("cwe_test").as[StatefulOps.WindowOut].collect()
       assert(w.length == 1)
       assert(w.head.n_events == 2, s"evictor must drop the stale row: ${w.toSeq}")
       assert(w.head.sum_cents == 600L)
@@ -312,7 +316,9 @@ class StreamingSpec extends SparkSpecBase {
   test("sliding count windows emit every slide arrivals across batches") {
     import spark.implicits._
     val input = mem()
-    val out = StatefulOps.slidingCountWindows(input.toDS(), size = 3, slide = 2)
+    // countWindow(size = 3, slide = 2)
+    val out = StatefulOps.triggeredGlobalWindows(input.toDS(),
+      CountFireTrigger(2, purge = false), Some(CountEvictor(3)))
     val q = out.toDF().writeStream.format("memory").queryName("scw_test")
       .outputMode("append").start()
     try {
@@ -321,7 +327,7 @@ class StreamingSpec extends SparkSpecBase {
       q.processAllAvailable()
       input.addData(ev(84, 4, 9, value = 8.0)) // 4th arrival: window = last 3
       q.processAllAvailable()
-      val r = spark.table("scw_test").as[StatefulOps.CountWindowOut]
+      val r = spark.table("scw_test").as[StatefulOps.WindowOut]
         .collect().map(w => w.win_idx -> ((w.n_events, w.sum_cents))).toMap
       assert(r(0L) == ((2, 300L)), s"$r")   // arrivals 1,2
       assert(r(1L) == ((3, 1400L)), s"$r")  // arrivals 2,3,4 (last 3)
@@ -332,29 +338,29 @@ class StreamingSpec extends SparkSpecBase {
     import spark.implicits._
     // CountEvictor(2): windows of 3 keep only their last 2 elements
     val in1 = mem()
-    val q1 = StatefulOps.countWindows(in1.toDS(), size = 3,
-        evictor = Some(StatefulOps.CountEvictor(2)))
+    val q1 = StatefulOps.triggeredGlobalWindows(in1.toDS(),
+        CountFireTrigger(3), Some(CountEvictor(2)))
       .toDF().writeStream.format("memory").queryName("cwe_count")
       .outputMode("append").start()
     try {
       in1.addData(ev(61, 1, 7, value = 1.0), ev(62, 2, 7, value = 2.0),
         ev(63, 3, 7, value = 4.0), ev(64, 4, 7, value = 8.0))
       q1.processAllAvailable()
-      val r = spark.table("cwe_count").as[StatefulOps.CountWindowOut]
+      val r = spark.table("cwe_count").as[StatefulOps.WindowOut]
         .collect().map(w => w.win_idx -> ((w.n_events, w.sum_cents))).toMap
       assert(r(0L) == ((2, 600L)), s"$r") // 2.00+4.00, 1.00 evicted
     } finally q1.stop()
     // DeltaEvictor(300 cents): elements ≥3.00 away from the last are evicted
     val in2 = mem()
-    val q2 = StatefulOps.countWindows(in2.toDS(), size = 3,
-        evictor = Some(StatefulOps.DeltaEvictor(300L)))
+    val q2 = StatefulOps.triggeredGlobalWindows(in2.toDS(),
+        CountFireTrigger(3), Some(DeltaEvictor(300L)))
       .toDF().writeStream.format("memory").queryName("cwe_delta")
       .outputMode("append").start()
     try {
       in2.addData(ev(71, 1, 8, value = 9.0), ev(72, 2, 8, value = 1.5),
         ev(73, 3, 8, value = 2.0))
       q2.processAllAvailable()
-      val r = spark.table("cwe_delta").as[StatefulOps.CountWindowOut]
+      val r = spark.table("cwe_delta").as[StatefulOps.WindowOut]
         .collect().map(w => w.win_idx -> ((w.n_events, w.sum_cents))).toMap
       assert(r(0L) == ((2, 350L)), s"$r") // 9.00 is 7.00 from last → evicted
     } finally q2.stop()
@@ -363,7 +369,8 @@ class StreamingSpec extends SparkSpecBase {
   test("streaming OVER continues running totals across batches") {
     import spark.implicits._
     val input = mem()
-    val out = StatefulOps.overRowsUnbounded(input.toDS())
+    val out = StatefulOps.over(input.toDS(), Order.EventTime,
+      Frame(Peer.Row, None), CountSumCents)
     val q = out.toDF().writeStream.format("memory").queryName("over_test")
       .outputMode("append").start()
     try {
@@ -371,9 +378,9 @@ class StreamingSpec extends SparkSpecBase {
       q.processAllAvailable()
       input.addData(ev(3, 3, 9, value = 5.0))
       q.processAllAvailable()
-      val rows = spark.table("over_test").as[StatefulOps.OverOut].collect()
-        .sortBy(_.run_cnt)
-      assert(rows.map(_.run_cents).toSeq == Seq(200L, 500L, 1000L))
+      val rows = spark.table("over_test").as[CountSumOut].collect()
+        .sortBy(_.row_no)
+      assert(rows.map(_.agg._2).toSeq == Seq(200L, 500L, 1000L))
     } finally q.stop()
   }
 
@@ -451,7 +458,8 @@ class StreamingSpec extends SparkSpecBase {
   test("proc-time bounded ROWS OVER keeps the last-N arrival window across batches") {
     import spark.implicits._
     val input = mem()
-    val out = StatefulOps.overRowsProcTimeBounded(input.toDS(), frame = 2)
+    val out = StatefulOps.over(input.toDS(), Order.Arrival,
+      Frame(Peer.Row, Some(2)), CountSumCents)
     val q = out.toDF().writeStream.format("memory")
       .queryName("proc_over_bounded_test").outputMode("append").start()
     try {
@@ -461,8 +469,8 @@ class StreamingSpec extends SparkSpecBase {
       input.addData(ev(33, 5, 5, value = 4.0))
       q.processAllAvailable()
       val rows = spark.table("proc_over_bounded_test")
-        .as[StatefulOps.BoundedOverOut].collect().sortBy(_.run_cnt)
-      assert(rows.map(r => (r.event_id, r.run_cnt, r.win_cents)).toSeq ==
+        .as[CountSumOut].collect().sortBy(_.row_no)
+      assert(rows.map(r => (r.event_id, r.row_no, r.agg._2)).toSeq ==
         Seq((31L, 1L, 100L), (32L, 2L, 300L), (33L, 3L, 600L)),
         s"got ${rows.toSeq}")
     } finally q.stop()
@@ -471,8 +479,9 @@ class StreamingSpec extends SparkSpecBase {
   test("proc-time bounded RANGE OVER ages out whole arrival batches; peers share the aggregate") {
     import spark.implicits._
     val input = mem()
-    // range = last 2 per-key micro-batches (inclusive)
-    val out = StatefulOps.overRangeProcTimeBounded(input.toDS(), rangeBatches = 2)
+    // range = last 2 per-key micro-batches (the current one and 1 before)
+    val out = StatefulOps.over(input.toDS(), Order.Arrival,
+      Frame(Peer.MicroBatch, Some(1)), CountSumCents)
     val q = out.toDF().writeStream.format("memory")
       .queryName("proc_range_over_test").outputMode("append").start()
     try {
@@ -486,8 +495,8 @@ class StreamingSpec extends SparkSpecBase {
       input.addData(ev(44, 2, 7, value = 0.25))
       q.processAllAvailable()
       val rows = spark.table("proc_range_over_test")
-        .as[StatefulOps.RangeOverOut].collect().sortBy(_.event_id)
-      assert(rows.map(r => (r.event_id, r.win_cnt, r.win_cents)).toSeq ==
+        .as[CountSumOut].collect().sortBy(_.event_id)
+      assert(rows.map(r => (r.event_id, r.agg._1, r.agg._2)).toSeq ==
         Seq((41L, 2L, 300L), (42L, 2L, 300L), (43L, 3L, 350L), (44L, 2L, 75L)),
         s"got ${rows.toSeq}")
     } finally q.stop()
@@ -496,19 +505,20 @@ class StreamingSpec extends SparkSpecBase {
   test("proc-time OVER accumulates in arrival order across batches") {
     import spark.implicits._
     val input = mem()
-    val out = StatefulOps.overRowsProcTime(input.toDS())
+    val out = StatefulOps.over(input.toDS(), Order.Arrival,
+      Frame(Peer.Row, None), CountSumCents)
     val q = out.toDF().writeStream.format("memory").queryName("proc_over_test")
       .outputMode("append").start()
     try {
       // arrival order deliberately DISAGREES with event time: the minute-9
-      // row arrives first and must get run_cnt 1
+      // row arrives first and must get row_no 1
       input.addData(ev(21, 9, 4, value = 1.0))
       q.processAllAvailable()
       input.addData(ev(22, 2, 4, value = 2.0))
       q.processAllAvailable()
-      val rows = spark.table("proc_over_test").as[StatefulOps.OverOut]
-        .collect().sortBy(_.run_cnt)
-      assert(rows.map(r => (r.event_id, r.run_cnt, r.run_cents)).toSeq ==
+      val rows = spark.table("proc_over_test").as[CountSumOut]
+        .collect().sortBy(_.row_no)
+      assert(rows.map(r => (r.event_id, r.row_no, r.agg._2)).toSeq ==
         Seq((21L, 1L, 100L), (22L, 2L, 300L)))
     } finally q.stop()
   }
@@ -516,7 +526,8 @@ class StreamingSpec extends SparkSpecBase {
   test("range-frame OVER gives peer rows the same aggregate across batches") {
     import spark.implicits._
     val input = mem()
-    val out = StatefulOps.overRangeBounded(input.toDS(), 5 * 60000L)
+    val out = StatefulOps.over(input.toDS(), Order.EventTime,
+      Frame(Peer.Timestamp, Some(5 * 60000L)), CountSumCents)
     val q = out.toDF().writeStream.format("memory").queryName("range_over_test")
       .outputMode("append").start()
     try {
@@ -527,8 +538,8 @@ class StreamingSpec extends SparkSpecBase {
       // batch 2: minute 8 — rows at minute 1 (older than 8−5) fall out
       input.addData(ev(34, 8, 6, value = 8.0))
       q.processAllAvailable()
-      val rows = spark.table("range_over_test").as[StatefulOps.RangeOverOut]
-        .collect().map(r => r.event_id -> (r.win_cnt, r.win_cents)).toMap
+      val rows = spark.table("range_over_test").as[CountSumOut]
+        .collect().map(r => r.event_id -> r.agg).toMap
       assert(rows(31L) == (2L, 300L) && rows(32L) == (2L, 300L),
         s"peers must share the aggregate: $rows")
       assert(rows(33L) == (3L, 700L))
@@ -547,9 +558,10 @@ class StreamingSpec extends SparkSpecBase {
       override def getValue(acc: Long): Long = acc
     }
     val input = mem()
-    val out = StatefulOps.overRangeBoundedAgg(input.toDS(), 5 * 60000L,
-      SumSquares) { (e, k, v) => (e.event_id, k, v) }
-    val q = out.toDF("event_id", "user_id", "ssq").writeStream
+    val out = StatefulOps.over(input.toDS(), Order.EventTime,
+      Frame(Peer.Timestamp, Some(5 * 60000L)), SumSquares)
+    val q = out.select(col("event_id"), col("user_id"), col("agg").as("ssq"))
+      .writeStream
       .format("memory").queryName("range_udagg_test")
       .outputMode("append").start()
     try {
@@ -590,7 +602,6 @@ class StreamingSpec extends SparkSpecBase {
 
   test("custom window triggers: count equivalence, delta firing, non-purging growth") {
     import spark.implicits._
-    import StatefulOps.{CountFireTrigger, DeltaFireTrigger}
     // CountFireTrigger(2) must reproduce tumbling count windows of 2
     val in1 = mem()
     val q1 = StatefulOps.triggeredGlobalWindows(in1.toDS(), CountFireTrigger(2))
@@ -602,7 +613,7 @@ class StreamingSpec extends SparkSpecBase {
       q1.processAllAvailable()
       in1.addData(ev(4, 4, 1, value = 4.0)) // completes the second window
       q1.processAllAvailable()
-      val rows = spark.table("trig_count").as[StatefulOps.CountWindowOut]
+      val rows = spark.table("trig_count").as[StatefulOps.WindowOut]
         .collect().sortBy(_.win_idx)
       assert(rows.map(r => (r.win_idx, r.n_events, r.sum_cents)).toSeq ==
         Seq((0L, 2, 300L), (1L, 2, 700L)), s"${rows.toSeq}")
@@ -617,7 +628,7 @@ class StreamingSpec extends SparkSpecBase {
       in2.addData(ev(11, 1, 2, value = 1.0), ev(12, 2, 2, value = 1.5),
         ev(13, 3, 2, value = 3.2), ev(14, 4, 2, value = 3.3))
       q2.processAllAvailable()
-      val rows = spark.table("trig_delta").as[StatefulOps.CountWindowOut]
+      val rows = spark.table("trig_delta").as[StatefulOps.WindowOut]
         .collect()
       // fires once at 3.2 (|320-100| >= 200), window {1.0,1.5,3.2}; 3.3
       // starts the next window and stays pending
@@ -636,7 +647,7 @@ class StreamingSpec extends SparkSpecBase {
       q3.processAllAvailable()
       in3.addData(ev(24, 4, 3, value = 1.0))
       q3.processAllAvailable()
-      val rows = spark.table("trig_grow").as[StatefulOps.CountWindowOut]
+      val rows = spark.table("trig_grow").as[StatefulOps.WindowOut]
         .collect().sortBy(_.win_idx)
       // reference CountTrigger: fires at every n-th arrival (counter
       // clears on fire) while the un-purged window keeps growing — the
@@ -646,11 +657,45 @@ class StreamingSpec extends SparkSpecBase {
     } finally q3.stop()
   }
 
+  test("degenerate window sizes and frame extents fail by name before any stream starts") {
+    import spark.implicits._
+    val streams = StreamProgress.attach(spark)
+    try {
+      val mark = streams.mark()
+      val in = mem().toDS()
+      def fails(name: String)(build: => Any): Unit = {
+        val e = intercept[IllegalArgumentException](build)
+        assert(e.getMessage.contains(name), e.getMessage)
+      }
+      // countWindow(size = 0) and countWindow(size, slide = 0)
+      fails("CountFireTrigger n must be >= 1")(
+        StatefulOps.triggeredGlobalWindows(in, CountFireTrigger(0)))
+      fails("CountFireTrigger n must be >= 1")(StatefulOps.triggeredGlobalWindows(
+        in, CountFireTrigger(0, purge = false), Some(CountEvictor(3))))
+      fails("CountEvictor maxCount must be >= 1")(StatefulOps.triggeredGlobalWindows(
+        in, CountFireTrigger(2, purge = false), Some(CountEvictor(0))))
+      // a ROWS frame of 0 rows would aggregate nothing
+      fails("Frame(Row) extent must be >= 1")(StatefulOps.over(in,
+        Order.EventTime, Frame(Peer.Row, Some(0)), CountSumCents))
+      fails("Frame(Timestamp) extent must be >= 0")(StatefulOps.over(in,
+        Order.EventTime, Frame(Peer.Timestamp, Some(-1)), CountSumCents))
+      fails("Frame(MicroBatch) extent must be >= 0")(StatefulOps.over(in,
+        Order.Arrival, Frame(Peer.MicroBatch, Some(-1)), CountSumCents))
+      fails("Timestamp peers need Order.EventTime")(StatefulOps.over(in,
+        Order.Arrival, Frame(Peer.Timestamp, Some(0)), CountSumCents))
+      // the least legal sizes build
+      StatefulOps.triggeredGlobalWindows(in, CountFireTrigger(1), Some(CountEvictor(1)))
+      StatefulOps.over(in, Order.EventTime, Frame(Peer.Row, Some(1)), CountSumCents)
+      StatefulOps.over(in, Order.EventTime, Frame(Peer.Timestamp, Some(0)), CountSumCents)
+      assert(streams.since(mark).isEmpty, "no stream may start")
+    } finally streams.detach()
+  }
+
   test("punctuated watermarks: marker records advance the per-key watermark") {
     import spark.implicits._
     val input = mem()
     // records of type "wm" are punctuations carrying their own timestamp
-    val out = StatefulOps.punctuatedLateTag(input.toDS()) { e =>
+    val out = StatefulOps.punctuatedLateTag(input.toDS(), Order.Arrival) { e =>
       if (e.event_type == "wm") Some(e.ts.getTime) else None
     }
     val q = out.toDF().writeStream.format("memory").queryName("punct_test")
@@ -678,7 +723,7 @@ class StreamingSpec extends SparkSpecBase {
   test("punctuated watermarks (ordered): out-of-order arrivals are judged in (ts, event_id) order") {
     import spark.implicits._
     val input = mem()
-    val out = StatefulOps.punctuatedLateTagOrdered(input.toDS()) { e =>
+    val out = StatefulOps.punctuatedLateTag(input.toDS(), Order.EventTime) { e =>
       if (e.event_type == "wm") Some(e.ts.getTime) else None
     }
     val q = out.toDF().writeStream.format("memory").queryName("punct_ord")
@@ -694,7 +739,7 @@ class StreamingSpec extends SparkSpecBase {
       // marker applies to ev(5) only after ev(4) was judged
       input.addData(ev(5, 12, 9), ev(3, 8, 9), ev(4, 11, 9, typ = "wm"))
       q.processAllAvailable()
-      val rows = spark.table("punct_ord").as[StatefulOps.PunctTagOut]
+      val rows = spark.table("punct_ord").as[StatefulOps.PunctOut]
         .collect().sortBy(_.event_id)
       assert(rows.map(r => r.event_id -> r.is_late).toSeq == Seq(
         1L -> false, // first in (ts, id) order: no watermark yet

@@ -14,14 +14,23 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 import plan_counts  # noqa: E402
 
 
-def row(name, exchanges=1, rows=10, jobs="0/4", scan="Scan parquet "):
-    """One row of a `graft.Probe … explain 1` log."""
+def row(name, exchanges=1, rows=10, jobs="0/4", scan="Scan parquet ",
+        batches=None):
+    """One row of a `graft.Probe … explain 1` log; `batches` adds the
+    `[probe-stream]` lines of a row that ran one stream."""
     plan = [f"(1) {scan}", "(2) HashAggregate [codegen id : 1]"]
     plan += [f"({3 + i}) Exchange" for i in range(exchanges)]
-    return plan + [
+    out = plan + [
         f"[probe] {name} rep1 rows={rows} build=0.10s count=0.20s",
         f"[probe-parts] {name} rep1 build=- count=1 jobs={jobs}",
     ]
+    if batches is not None:
+        out += [f"[probe-stream] {name} rep1 q=q b={b} rows=5 addBatch=10 | "
+                f"flatMapGroupsWithState:rows=3:commit=1ms" for b in range(batches)]
+        out.append(f"[probe-stream] {name} rep1 queries=1 batches={batches} "
+                   f"addbatch=0.10s overhead=0.05s statecommit=0.01s "
+                   f"instances=4 late=0 forks=0")
+    return out
 
 
 class PlanCounts(unittest.TestCase):
@@ -59,11 +68,26 @@ class PlanCounts(unittest.TestCase):
         self.assertEqual(self.status(row("q01", scan=scan("0f1e2d3c-4b5a")),
                                      row("q01", scan=scan("9a8b7c6d-5e4f"))), 0)
 
+    def test_stage_dir_parent_path_is_normalized(self):
+        def scan(parent):
+            return ("BatchScan StateTable [stateCkptLocation=file:"
+                    f"{parent}/graft-qstate-0f1e2d3c-4b5a/state]")
+        self.assertEqual(self.status(row("q01", scan=scan("/tmp/probetmp.dmlc")),
+                                     row("q01", scan=scan("/tmp/probetmp.KkMp"))), 0)
+
     def test_stage_dir_prefix_still_counts(self):
         def scan(prefix):
             return f"BatchScan StateTable [stateCkptLocation=file:/tmp/graft-{prefix}-0f1e2d3c-4b5a]"
         self.assertEqual(self.status(row("q01", scan=scan("qstate")),
                                      row("q01", scan=scan("qstate-b"))), 1)
+
+    def test_identical_batches_pass(self):
+        lines = row("q01", batches=5) + row("q02")
+        self.assertEqual(self.status(lines, lines), 0)
+
+    def test_batches_difference_alone_is_reported_apart(self):
+        self.assertEqual(self.status(row("q01", batches=5),
+                                     row("q01", batches=6)), 2)
 
     def test_empty_logs_fail(self):
         self.assertEqual(self.status([], []), 1)
